@@ -2389,11 +2389,12 @@ def q_incremental_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The persisted EXACT-dedup index (functions/exact_index.py) —
     the first stage of incremental dedup, ahead of the MinHash index:
     fingerprint the corpus once (md5 of whitespace/case-normalized
-    text, bucket-partitioned), then probe a daily batch with bucket
-    pruning + fingerprint IN pushdown. The batch mixes whitespace/case
-    mutations of corpus docs (must be caught: dup_of = the corpus id)
-    with genuinely novel docs (keep=true). Index built once per
-    (process, sf_dir) — bench measures the PROBE."""
+    text, one flat table range-sorted by fingerprint), then probe a
+    daily batch (fingerprint IN footer pushdown past the index-size
+    floor, one broadcast-join action below it). The batch mixes
+    whitespace/case mutations of corpus docs (must be caught: dup_of =
+    the corpus id) with genuinely novel docs (keep=true). Index built
+    once per (process, sf_dir) — bench measures the PROBE."""
     from avro_spark.functions import exact_index as X
 
     docs = _read(spark, sf_dir, "documents", split=True).select(

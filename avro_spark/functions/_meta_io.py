@@ -52,15 +52,17 @@ __all__ = [
 _CANONICAL = "part-00000-meta.parquet"
 
 
-#: fs.defaultFS locality per session (py4j round-trip amortized to one
-#: per session; keyed on the JVM SparkContext id so a restarted session
-#: with a different default FS re-detects)
+#: fs.defaultFS locality per Spark application (py4j round-trip
+#: amortized to one per application; keyed on the applicationId — an
+#: object id can be reused by a restarted context with a different
+#: default FS, an application id cannot)
 _DEFAULT_FS_LOCAL: dict = {}
 
 
 def _default_fs_is_local() -> bool:
-    """True iff the active session's Hadoop ``fs.defaultFS`` is the
-    local filesystem (or no session exists — plain-driver tooling).
+    """True iff the active SparkContext's Hadoop ``fs.defaultFS`` is the
+    local filesystem (or no SparkContext exists at all — plain-driver
+    tooling).
 
     Spark resolves BARE paths against the default FS, so on a cluster
     whose default FS is HDFS/S3 a bare index path names a REMOTE
@@ -71,20 +73,23 @@ def _default_fs_is_local() -> bool:
     default FS really is file:// — otherwise they fall back to the
     Spark route, which resolves them exactly as the data tables are.
     Explicit ``file:`` URIs are unambiguous and skip this check.
+
+    The SparkContext, not the calling thread's active session, is
+    asked: foreachBatch and thread-pool callers often run with no
+    active session, and must neither be guessed local nor lose the
+    fast path when the default FS really is local.
     """
     try:
-        from pyspark.sql import SparkSession
+        from pyspark import SparkContext
 
-        spark = SparkSession.getActiveSession()
-        if spark is None:
+        sc = SparkContext._active_spark_context
+        if sc is None:
             return True
-        key = id(spark.sparkContext._jsc)
+        key = sc.applicationId
         hit = _DEFAULT_FS_LOCAL.get(key)
         if hit is None:
-            fs = (
-                spark.sparkContext._jsc.hadoopConfiguration()
-                .get("fs.defaultFS") or "file:///"
-            )
+            fs = sc._jsc.hadoopConfiguration().get("fs.defaultFS") \
+                or "file:///"
             hit = _DEFAULT_FS_LOCAL[key] = fs.startswith("file:")
         return hit
     except Exception:

@@ -605,8 +605,13 @@ def _write_minhash_index_unlocked(
 
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark.util import inheritable_thread_target
+
+        # the pool threads inherit the caller's job group, description
+        # and tags; one wrap per target (each clones the properties)
         with ThreadPoolExecutor(max_workers=2) as ex:
-            futs = [ex.submit(_write_shingles), ex.submit(_write_bands)]
+            futs = [ex.submit(inheritable_thread_target(spark)(f))
+                    for f in (_write_shingles, _write_bands)]
             # surface the FIRST failure (both futures always complete —
             # the with-block joins the pool), leaving the in-flight
             # marker in place so probes fail loudly, as before
@@ -1102,7 +1107,10 @@ def _read_batch_registry(spark, uri: str) -> "set[int]":
     from pyspark.errors import AnalysisException
 
     try:
-        return {r[0] for r in spark.read.parquet(uri).collect()}
+        # by NAME, like the driver-side route: a file with extra or
+        # reordered columns must not be misread, a missing one fails
+        return {r[0] for r in
+                spark.read.parquet(uri).select("batch_id").collect()}
     except AnalysisException as e:
         if "UNABLE_TO_INFER_SCHEMA" in str(e):
             return set()  # dir created, no file ever committed

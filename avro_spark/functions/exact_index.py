@@ -9,20 +9,30 @@ persisted incremental index since r7 (:mod:`dedup`,
 shape, so a daily batch never re-hashes the corpus:
 
 * ``{path}/meta`` — ONE row: layout pins (``n_buckets``, the id column
-  name), corpus count, status marker, last/pending append tokens.
-* ``{path}/fps`` — (fingerprint, <id>) partitioned by
-  ``bucket = pmod(xxhash64(fingerprint), n_buckets)`` and range-sorted
-  by (fingerprint, id) within buckets. The fingerprint is
+  name), corpus count, status marker, last/pending append tokens, the
+  fps version pointer and the fps ``layout``.
+* ``{path}/fps`` — ONE flat parquet table of (fingerprint, <id>),
+  range-partitioned on fingerprint and sorted by (fingerprint, id):
+  the MinHash ``shingles/`` store's layout. A build or compaction
+  writes ``n_buckets`` range files with disjoint fingerprint ranges;
+  an append adds its batch as its own range-sorted file(s) — AQE
+  coalesces a daily batch into ONE file. The fingerprint is
   :func:`dedup.content_fingerprint` — md5 of whitespace/case-normalized
   text — so decisions agree row-for-row with :func:`dedup.exact_dedup`
   and a plain SQL oracle.
 
 Probe (:func:`dedup_exact_against_index`) = batch fingerprints →
-bucket partition pruning + ``fingerprint IN (...)`` footer pushdown
-against the sorted layout → min index id per fingerprint → one
-broadcast join back to the batch. Probe IO is bounded by the BATCH's
-distinct fingerprints, never the corpus; driver state likewise (with a
-broadcast-join fallback past ``max_pushdown_fps``).
+``fingerprint IN (...)`` footer pushdown against the sorted files →
+min index id per fingerprint → one broadcast join back to the batch.
+Driver state is bounded by the BATCH's distinct fingerprints (a
+broadcast-join fallback past ``max_literal_fps``).
+
+Indexes written before the flat layout (meta row without ``layout``)
+keep fps as Hive ``bucket=<pmod(xxhash64(fp), n_buckets)>`` dirs.
+Probes read them exactly (the partition column is ignored); the next
+append or compaction rewrites the table flat into ``fps_v<N+1>`` and
+the meta-row pointer flip commits the move — the pre-r10 ``versions``
+compatibility pattern.
 
 Crash discipline and concurrency are the family's shared contract
 (identical to the text/IVF-PQ indexes): ``'__appending__'`` marker
@@ -49,6 +59,11 @@ from .dedup import (
     content_fingerprint,
 )
 
+#: meta ``layout`` of the one fps table this module writes; a meta row
+#: without the column is a pre-flat index (Hive ``bucket=`` dirs)
+_FLAT = "flat"
+_BUCKETED = "bucketed"
+
 
 def _checked_fp(text_col: str) -> "F.Column":
     """:func:`dedup.content_fingerprint` with a row-local NULL guard.
@@ -70,17 +85,12 @@ def _checked_fp(text_col: str) -> "F.Column":
     ).otherwise(content_fingerprint(c))
 
 
-def _bucket_expr(fp: "F.Column", n_buckets: int) -> "F.Column":
-    """Pinned fingerprint→bucket routing (deterministic across
-    sessions; identical at build, append, and probe time)."""
-    return F.pmod(F.xxhash64(fp), F.lit(n_buckets)).cast("int")
-
-
 def _write_exact_meta(
     spark, path: str, n_buckets: int, id_col: str, status: str,
     n_docs: int, token: "Optional[str]" = None,
     pending_token: "Optional[str]" = None,
     versions: "Optional[dict]" = None,
+    layout: str = _FLAT,
 ) -> None:
     from ._meta_io import try_write_meta_row
 
@@ -93,6 +103,7 @@ def _write_exact_meta(
         ("token", "string", token),
         ("pending_token", "string", pending_token),
         ("versions", "string", _versions_json(versions)),
+        ("layout", "string", layout),
     ]):
         return
     spark.range(1).select(
@@ -103,6 +114,7 @@ def _write_exact_meta(
         F.lit(token).cast("string").alias("token"),
         F.lit(pending_token).cast("string").alias("pending_token"),
         F.lit(_versions_json(versions)).cast("string").alias("versions"),
+        F.lit(layout).alias("layout"),
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
 
 
@@ -129,6 +141,7 @@ def _read_exact_meta(spark, path: str) -> dict:
         "status": d["status"], "n_docs": d["n_docs"],
         "token": d.get("token"), "pending_token": d.get("pending_token"),
         "versions": _versions_of(d),
+        "layout": d.get("layout") or _BUCKETED,
     }
 
 
@@ -136,6 +149,40 @@ def _fps_dir(path: str, m: dict) -> str:
     """Current physical dir of the fps table (version pointer in the
     meta row — :func:`dedup._vdir`)."""
     return _vdir(path, "fps", m["versions"].get("fps", 0))
+
+
+def _write_fps(fps: DataFrame, fps_dir: str, id_col: str, mode: str,
+               n_files: "Optional[int]") -> None:
+    """The ONE fps writer: range-partition on fingerprint, sort by
+    (fingerprint, id) within each file. ``n_files`` range partitions
+    for a build or rewrite (disjoint fingerprint ranges per file);
+    ``None`` for an append, so AQE coalesces a small batch into one
+    file instead of one tiny file per partition. Partition 0 always
+    writes a file, so an EMPTY frame still pins the schema (incl. the
+    native id type) and later reads never hit UNABLE_TO_INFER_SCHEMA."""
+    part = (fps.repartitionByRange(n_files, "fingerprint") if n_files
+            else fps.repartitionByRange("fingerprint"))
+    part.sortWithinPartitions("fingerprint", id_col) \
+        .write.mode(mode).parquet(fps_dir)
+
+
+def _rewrite_flat(spark, path: str, m: dict,
+                  batch: "Optional[DataFrame]" = None) -> dict:
+    """Rewrite the whole fps table — plus ``batch`` rows, if given —
+    flat into the NEXT version dir (``fps_v<N+1>``), dropping
+    retry-duplicate (fingerprint, id) rows. Returns the versions dict
+    whose meta-row commit flips the pointer; until then probes keep
+    reading the current version. Compaction and the first append to a
+    pre-flat (bucketed) index both go through here."""
+    id_col = m["id_col"]
+    rows = spark.read.parquet(_fps_dir(path, m)).select("fingerprint", id_col)
+    if batch is not None:
+        rows = rows.unionByName(batch)
+    new_v = m["versions"].get("fps", 0) + 1
+    _write_fps(rows.dropDuplicates(["fingerprint", id_col]),
+               _vdir(path, "fps", new_v), id_col, "overwrite",
+               m["n_buckets"])
+    return {**m["versions"], "fps": new_v}
 
 
 def _write_exact_index_unlocked(
@@ -180,9 +227,8 @@ def _write_exact_index_unlocked(
         if n_buckets not in (None, m["n_buckets"]):
             raise ValueError(
                 f"append n_buckets={n_buckets} does not match the "
-                f"index's pinned bucket count {m['n_buckets']} — "
-                "drifted bucketing would hide fingerprints from "
-                "probes; pass n_buckets=None"
+                f"index's pinned range-file count {m['n_buckets']} — "
+                "pass n_buckets=None"
             )
         if id_col != m["id_col"]:
             raise ValueError(
@@ -193,7 +239,8 @@ def _write_exact_index_unlocked(
         prev_docs = m["n_docs"]
         prev_token = m["token"]
         _write_exact_meta(spark, path, n_buckets, id_col, "__appending__",
-                          prev_docs, prev_token, append_token, versions)
+                          prev_docs, prev_token, append_token, versions,
+                          m["layout"])
     elif mode == "overwrite":
         if not n_buckets or n_buckets < 1:
             raise ValueError("n_buckets must be a positive int")
@@ -207,9 +254,8 @@ def _write_exact_index_unlocked(
     fps = docs.select(
         _checked_fp(text_col).alias("fingerprint"),
         _native_id(id_col).alias(id_col),
-    ).withColumn(
-        "bucket", _bucket_expr(F.col("fingerprint"), n_buckets)
     ).persist()
+    migrated = mode == "append" and m["layout"] != _FLAT
     try:
         # count FIRST: it materializes the cache as a PRE-WRITE
         # snapshot. A batch whose plan PROBES this same index (a
@@ -219,25 +265,23 @@ def _write_exact_index_unlocked(
         # the index — here it silently returned n_batch=0 because
         # every admitted doc suddenly "was" a duplicate of itself.
         n_batch = fps.count()
-        fps_dir = _vdir(path, "fps", versions.get("fps", 0))
-        fps.repartition(n_buckets, "bucket") \
-            .sortWithinPartitions("bucket", "fingerprint", id_col) \
-            .write.mode(mode).partitionBy("bucket") \
-            .parquet(fps_dir)
-        if mode == "overwrite" and n_batch == 0:
-            # an empty corpus writes NO part files; pin the schema on
-            # disk (incl. the native id type) so later reads never hit
-            # UNABLE_TO_INFER_SCHEMA — same hazard as the text index
-            fps.drop("bucket").limit(0).coalesce(1) \
-                .write.mode("overwrite").parquet(f"{fps_dir}/bucket=0")
+        if migrated:
+            # flat files cannot join bucket= dirs in one table: move the
+            # whole pre-flat table, this batch included, to fps_v<N+1>
+            versions = _rewrite_flat(spark, path, m, fps)
+        elif mode == "overwrite":
+            _write_fps(fps, _vdir(path, "fps", 0), id_col, mode, n_buckets)
+        elif n_batch:
+            _write_fps(fps, _vdir(path, "fps", versions.get("fps", 0)),
+                       id_col, mode, None)
     finally:
         fps.unpersist()
     _write_exact_meta(spark, path, n_buckets, id_col, "committed",
                       prev_docs + n_batch,
                       append_token if mode == "append" else None,
                       versions=versions)
-    if mode == "overwrite":
-        _gc_table_versions(path, "fps", 0)
+    if mode == "overwrite" or migrated:
+        _gc_table_versions(path, "fps", versions.get("fps", 0))
 
 
 def write_exact_index(
@@ -250,7 +294,9 @@ def write_exact_index(
     append_token: "Optional[str]" = None,
 ) -> None:
     """Public face of :func:`_write_exact_index_unlocked` (see its
-    docstring), under the index's single-writer lease."""
+    docstring), under the index's single-writer lease. ``n_buckets`` is
+    the number of range files a build (and every compaction) writes;
+    appends must pass it unchanged or ``None``."""
     from .dedup import acquire_index_lease, release_index_lease
 
     lt = acquire_index_lease(path, f"exact-{mode}")
@@ -279,18 +325,17 @@ def dedup_exact_against_index(
     :func:`dedup.exact_dedup` on the batch first — the streaming sink
     does).
 
-    Scale shape, two independent pruning levers (identical answers):
-    up to ``max_pushdown_fps`` distinct batch fingerprints (bounded
-    driver state), the touched BUCKET list — at most ``n_buckets``
-    small int literals — always prunes the fps scan at the Hive
-    partition level; the fingerprint list itself is additionally
-    pushed to the parquet footer level only while it stays at or under
-    ``max_literal_fps`` literals, because a thousands-literal string
-    ``IN`` costs Catalyst seconds of optimization PER ACTION regardless
-    of data size (measured 3.4-6.3 s at ~2.5k md5 literals vs 1.1 s on
-    the join path, r10). Bigger batches keep the bucket prune and
-    attach fingerprints with a broadcast hash join instead — footer
-    pruning lost, partition pruning kept, plan cost flat. Raise
+    Scale shape (identical answers on every route): the batch's
+    distinct fingerprints are collected to the driver — at most
+    ``min(max_pushdown_fps, max_literal_fps)`` of them, bounded driver
+    state — and pushed as ``fingerprint IN (...)`` to the parquet
+    footers of the range-sorted fps files, so the scan reads only the
+    row groups whose fingerprint range holds a batch fingerprint. The
+    literal cap exists because a thousands-literal string ``IN`` costs
+    Catalyst seconds of optimization PER ACTION regardless of data size
+    (measured 3.4-6.3 s at ~2.5k md5 literals vs 1.1 s on the join
+    path, r10). Bigger batches attach fingerprints with a broadcast
+    hash join instead — footer pruning lost, plan cost flat. Raise
     ``max_literal_fps`` when probing a HUGE index with a mid-sized
     batch and the footer pruning is worth seconds of driver time."""
     m = _read_exact_meta(spark, path)
@@ -309,46 +354,31 @@ def dedup_exact_against_index(
         _native_id(id_col).alias(id_col),
         _checked_fp(text_col).alias("fingerprint"),
     )
+    # a pre-flat index carries a 'bucket' partition column: ignored
     idx = spark.read.parquet(_fps_dir(path, m))
     from .dedup import _PUSHDOWN_MIN_INDEX_BYTES, _dir_bytes_at_least
 
     if pushdown_min_index_bytes is None:
         pushdown_min_index_bytes = _PUSHDOWN_MIN_INDEX_BYTES
-    if not _dir_bytes_at_least(_fps_dir(path, m), pushdown_min_index_bytes):
-        # SCALE-ADAPTIVE (r11, guide §1.2): below one scan task's worth
-        # of fps store neither pruning lever can cut IO, and the
-        # fingerprint collect is an extra action per probe — attach the
-        # batch fingerprints with the broadcast join and run the whole
-        # probe as ONE action. Identical answers (pinned by
-        # test_pushdown_and_fallback).
-        fpb = None
+    fplist = None
+    # SCALE-ADAPTIVE (r11, guide §1.2): below one scan task's worth of
+    # fps store footer pruning cannot cut IO, and the fingerprint
+    # collect is an extra action per probe — attach the batch
+    # fingerprints with the broadcast join and run the whole probe as
+    # ONE action. Identical answers (pinned by test_pushdown_and_fallback).
+    if _dir_bytes_at_least(_fps_dir(path, m), pushdown_min_index_bytes):
+        cap = min(max_pushdown_fps, max_literal_fps)
+        got = (bf.select("fingerprint").distinct()
+               .limit(cap + 1).collect())
+        if len(got) <= cap:
+            fplist = [r["fingerprint"] for r in got]
+    if fplist is None:
         idx = idx.join(
             F.broadcast(bf.select("fingerprint").distinct()), "fingerprint")
+    elif fplist:
+        idx = idx.where(F.col("fingerprint").isin(fplist))
     else:
-        fpb = (
-            bf.select("fingerprint").distinct()
-            .select("fingerprint",
-                    _bucket_expr(F.col("fingerprint"), m["n_buckets"])
-                    .alias("bucket"))
-            .limit(max_pushdown_fps + 1).collect()
-        )
-    if fpb is None:
-        pass
-    elif len(fpb) <= max_pushdown_fps:
-        fplist = [r["fingerprint"] for r in fpb]
-        buckets = sorted({int(r["bucket"]) for r in fpb})
-        if not fplist:
-            idx = idx.limit(0)
-        elif len(fplist) <= max_literal_fps:
-            idx = idx.where(F.col("bucket").isin(buckets)
-                            & F.col("fingerprint").isin(fplist))
-        else:
-            idx = idx.where(F.col("bucket").isin(buckets)).join(
-                F.broadcast(bf.select("fingerprint").distinct()),
-                "fingerprint")
-    else:
-        idx = idx.join(
-            F.broadcast(bf.select("fingerprint").distinct()), "fingerprint")
+        idx = idx.limit(0)
     hits = (
         idx.select("fingerprint", F.col(id_col).alias("_idx_id"))
         .dropDuplicates(["fingerprint", "_idx_id"])  # retry residue
@@ -378,9 +408,10 @@ def compact_exact_index(spark, path: str) -> None:
 
 def _compact_exact_index_unlocked(spark, path: str) -> None:
     """Collapse append-accumulated small files, drop retry-duplicate
-    rows, restore the sorted layout. The compacted table is written to
-    the NEXT version dir (``fps_v<N+1>``, :func:`dedup._vdir`) and the
-    commit is ONE meta-row overwrite flipping the pointer — no
+    rows, restore ``n_buckets`` disjoint range files (and move a
+    pre-flat index to the flat layout). The compacted table is written
+    to the NEXT version dir (``fps_v<N+1>``, :func:`dedup._vdir`) and
+    the commit is ONE meta-row overwrite flipping the pointer — no
     remove-then-move window, so the swap is crash-safe on stores
     without atomic rename and probes keep working THROUGHOUT (token
     preserved). A pre-r10 index left mid-swap (``'__compacting__'``)
@@ -396,7 +427,8 @@ def _compact_exact_index_unlocked(spark, path: str) -> None:
             _rm_dir(f"{path}/fps")
             _mv_dir(comp, f"{path}/fps")
         _write_exact_meta(spark, path, m["n_buckets"], m["id_col"],
-                          "committed", m["n_docs"], m["token"])
+                          "committed", m["n_docs"], m["token"],
+                          layout=m["layout"])
         return
     if m["status"] != "committed":
         raise ValueError(
@@ -404,36 +436,20 @@ def _compact_exact_index_unlocked(spark, path: str) -> None:
             "in-flight append first (re-run the same append), then "
             "compact"
         )
-    idx = spark.read.parquet(_fps_dir(path, m))
-    id_col = m["id_col"]
-    new_v = m["versions"].get("fps", 0) + 1
-    new_dir = _vdir(path, "fps", new_v)
-    deduped = idx.dropDuplicates(["fingerprint", id_col])
-    deduped.repartition(m["n_buckets"], F.col("bucket")) \
-        .sortWithinPartitions("bucket", "fingerprint", id_col) \
-        .write.mode("overwrite").partitionBy("bucket") \
-        .parquet(new_dir)
-    if m["n_docs"] == 0:
-        # empty seed index (a supported state — dedup_exact_stream
-        # starts from one): the compacted table would be FILELESS and
-        # every later probe would die with UNABLE_TO_INFER_SCHEMA.
-        # Re-pin the schema (incl. the native id type) — the
-        # build-time hazard at compact time, same guard as
-        # compact_text_index's sum_dl==0 branch (r9 ADVICE medium).
-        deduped.drop("bucket").limit(0).coalesce(1) \
-            .write.mode("overwrite").parquet(f"{new_dir}/bucket=0")
+    versions = _rewrite_flat(spark, path, m)
     # THE commit: one meta overwrite flips the fps pointer
     _write_exact_meta(spark, path, m["n_buckets"], m["id_col"],
                       "committed", m["n_docs"], m["token"],
-                      versions={**m["versions"], "fps": new_v})
-    _gc_table_versions(path, "fps", new_v)
+                      versions=versions)
+    _gc_table_versions(path, "fps", versions["fps"])
 
 
 def exact_index_stats(spark, path: str) -> dict:
     """Health report (footer-only except one count-vs-distinct job):
-    meta status/count, fps file count + footer rows + bytes, bucket
-    skew, duplicate (fingerprint, id) rows (append-retry residue)."""
-    import collections
+    meta status/count, fps file count + footer rows + bytes, duplicate
+    (fingerprint, id) rows (append-retry residue) and a maintenance
+    hint — ``"compact"`` on duplicates or once appends have left more
+    than 8 files per range file of a build."""
     import os
 
     import pyarrow.parquet as pq
@@ -441,40 +457,27 @@ def exact_index_stats(spark, path: str) -> dict:
     from .dedup import _list_parquet_files, _open_listed
 
     m = _read_exact_meta(spark, path)
-    out = {
-        "status": m["status"], "n_buckets": m["n_buckets"],
-        "n_docs": m["n_docs"],
-    }
-    rows = 0
-    size = 0
-    part_rows: collections.Counter = collections.Counter()
     fps_dir = _fps_dir(path, m)
+    # recursive: a pre-flat index nests its files in bucket= dirs
     files = _list_parquet_files(fps_dir, recursive=True)
+    rows = size = 0
     for fs_, fp in files:
         with _open_listed(fs_, fp) as fh:
-            nr = pq.ParquetFile(fh).metadata.num_rows
-        rows += nr
-        part_rows[os.path.dirname(fp)] += nr
+            rows += pq.ParquetFile(fh).metadata.num_rows
         size += (os.path.getsize(fp) if fs_ is None
                  else fs_.get_file_info(fp).size)
-    out["fps_files"] = len(files)
-    out["fps_rows"] = rows
-    out["fps_bytes"] = size
-    max_pr = max(part_rows.values()) if part_rows else 0
-    mean_pr = (rows / len(part_rows)) if part_rows else 0.0
-    out["max_rows_per_bucket"] = int(max_pr)
-    out["bucket_row_skew"] = round(max_pr / mean_pr, 2) if mean_pr else 0.0
     df = spark.read.parquet(fps_dir)
     dup = df.count() - df.dropDuplicates(
         ["fingerprint", m["id_col"]]).count()
-    out["duplicate_rows"] = int(dup)
-    # maintenance advisory (family symmetry with ivf_index_stats):
-    # bucket routing is hash-pinned, so compaction is the one remedy
-    n_buckets = max(len(part_rows), 1)
-    out["maintenance_hint"] = (
-        "compact" if dup > 0 or len(files) > 8 * n_buckets else None
-    )
-    return out
+    return {
+        "status": m["status"], "n_buckets": m["n_buckets"],
+        "n_docs": m["n_docs"],
+        "fps_files": len(files), "fps_rows": rows, "fps_bytes": size,
+        "duplicate_rows": int(dup),
+        "maintenance_hint": (
+            "compact" if dup > 0 or len(files) > 8 * m["n_buckets"]
+            else None),
+    }
 
 
 # --------------------------------- streaming face of exact incremental dedup

@@ -306,8 +306,13 @@ def _write_ivfpq_index_unlocked(
 
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark.util import inheritable_thread_target
+
+        # the pool threads inherit the caller's job group, description
+        # and tags; one wrap per target (each clones the properties)
         with ThreadPoolExecutor(max_workers=2) as ex:
-            for f in [ex.submit(_write_codes), ex.submit(_write_raw)]:
+            for f in [ex.submit(inheritable_thread_target(spark)(w))
+                      for w in (_write_codes, _write_raw)]:
                 f.result()
     finally:
         enc.unpersist()

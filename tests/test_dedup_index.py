@@ -96,6 +96,37 @@ def test_append_grows_index_equivalently(spark, tmp_path):
                               num_hashes=32, bands=4, mode="append")
 
 
+def test_append_write_jobs_carry_the_callers_job_group(spark, tmp_path):
+    """The shingle and band tables are written from a thread pool; the
+    pool threads must inherit the caller's job group and description,
+    so every job of the append — both table writes included — is
+    labelled (an unlabelled write job cannot be attributed)."""
+    corpus, batch = _docs(spark)
+    idx = str(tmp_path / "grp")
+    kw = dict(num_hashes=16, bands=4, shingle_n=3)
+    D.write_minhash_index(corpus, idx, "doc_id", "text", **kw)
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+
+    def settled(ids_of):
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(ids_of())
+
+    before = settled(lambda: st.getJobIdsForGroup(None))
+    sc.setJobGroup("minhash-append-test", "minhash append under test")
+    try:
+        D.write_minhash_index(batch, idx, "doc_id", "text", mode="append",
+                              **kw)
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(k, None)
+    grouped = settled(lambda: st.getJobIdsForGroup("minhash-append-test"))
+    unlabelled = settled(lambda: st.getJobIdsForGroup(None)) - before
+    assert not unlabelled, f"jobs without the caller's group: {unlabelled}"
+    # the hashing count plus at least one job per table write
+    assert len(grouped) >= 3, grouped
+
+
 def test_probe_parameters_come_from_meta(spark, tmp_path):
     """The probe has NO banding parameters — a probe against an index
     written with non-default parameters still pairs correctly because it

@@ -187,3 +187,69 @@ def test_bare_paths_respect_default_fs(spark, tmp_path):
         else:
             hconf.set("fs.defaultFS", old)
         M._DEFAULT_FS_LOCAL.clear()
+
+
+def test_default_fs_resolved_without_active_session(spark, tmp_path,
+                                                    monkeypatch):
+    """A thread with no active session (foreachBatch, thread pools)
+    must resolve fs.defaultFS from the SparkContext, not assume local:
+    with a remote default FS the fast path declines a bare path; with
+    the local one it stays on. The cache is keyed on the application
+    id."""
+    import threading
+
+    from pyspark.sql import SparkSession
+
+    monkeypatch.setattr(SparkSession, "getActiveSession",
+                        classmethod(lambda cls: None))
+
+    def in_thread(f):
+        out = []
+        t = threading.Thread(target=lambda: out.append(f()))
+        t.start()
+        t.join(timeout=60)
+        assert not t.is_alive() and len(out) == 1
+        return out[0]
+
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    old = hconf.get("fs.defaultFS")
+    bare = str(tmp_path / "idx" / "meta")
+    M._DEFAULT_FS_LOCAL.clear()
+    try:
+        hconf.set("fs.defaultFS", "hdfs://nn:9000/")
+        assert M._default_fs_is_local() is False
+        assert in_thread(lambda: M.try_write_meta_row(
+            bare, [("status", "string", "committed")])) is False
+        assert set(M._DEFAULT_FS_LOCAL) == {spark.sparkContext.applicationId}
+        hconf.set("fs.defaultFS", "file:///")
+        M._DEFAULT_FS_LOCAL.clear()
+        assert in_thread(lambda: M.try_write_meta_row(
+            bare, [("status", "string", "committed")])) is True
+    finally:
+        if old is None:
+            hconf.unset("fs.defaultFS")
+        else:
+            hconf.set("fs.defaultFS", old)
+        M._DEFAULT_FS_LOCAL.clear()
+
+
+def test_spark_registry_route_reads_batch_id_by_name(spark, tmp_path,
+                                                     monkeypatch):
+    """The Spark fallback of _read_batch_registry (remote registries)
+    resolves 'batch_id' by NAME too: reordered columns read correctly,
+    a missing column fails loudly."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.errors import AnalysisException
+
+    monkeypatch.setattr(M, "try_read_registry", lambda uri: None)
+    reg = tmp_path / "reg"
+    os.makedirs(reg)
+    pq.write_table(pa.table({"junk": [999], "batch_id": [7]}),
+                   str(reg / "part-a.parquet"))
+    assert D._read_batch_registry(spark, str(reg)) == {7}
+    bad = tmp_path / "bad"
+    os.makedirs(bad)
+    pq.write_table(pa.table({"junk": [1]}), str(bad / "part-b.parquet"))
+    with pytest.raises(AnalysisException, match="batch_id"):
+        D._read_batch_registry(spark, str(bad))

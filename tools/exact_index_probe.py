@@ -2,8 +2,8 @@
 ×{1, 4, 16}, compare resolving a FIXED daily batch's exact dups
 
   (a) against the persisted fingerprint index
-      (dedup_exact_against_index: bucket pruning + fingerprint IN
-      pushdown — IO bounded by the batch), vs
+      (dedup_exact_against_index: fingerprint IN footer pushdown on
+      the flat range-sorted fps table — IO bounded by the batch), vs
   (b) by re-running exact_dedup_groups over corpus ∪ batch (the
       no-index alternative: re-hashes everything, every day).
 
