@@ -1,40 +1,48 @@
-"""Driver-local fast path for the persisted indexes' tiny metadata
-tables (the one-row ``meta/`` dir and the one-row-per-batch ``batches/``
-registry).
+"""The persisted indexes' meta/lifecycle kernel.
 
-Every index family committed these through a full Spark job
-(``spark.range(1).select(lits...).coalesce(1).write.parquet`` for a
-write, ``spark.read.parquet(...).head()`` for a read). That is the
-right shape for REMOTE storage — the cluster's credentials and
-FileSystem live JVM-side — but on a local filesystem each call pays a
-job submit + task launch + committer round-trip (~0.1-0.3 s) to move a
-few hundred bytes, and the index gates do it 5-12 times per lifecycle
-(guide §5: the driver should do almost no data work — and conversely,
-one metadata row IS driver work, not a distributed job).
+All five index families (MinHash, exact, IVF, IVF-PQ, text) share ONE
+crash/concurrency contract (SCALE.md §3b), and this module is the one
+place that knows its storage side:
 
-The fast path writes/reads the same parquet bytes with pyarrow on the
-driver:
+* ``write_meta`` / ``read_meta``: the one-row ``{path}/meta`` table.
+  A family declares its row as ``(name, kind, value)`` fields (kind =
+  a Spark DDL type); the reader adds the two loud errors ("no <family>
+  index meta", "meta is empty") and fills the lifecycle columns older
+  layouts lack (:data:`LIFECYCLE`).
+* ``admit_append``: the ``__building__`` / ``__appending__`` /
+  append-token admission check every ``mode="append"`` runs first.
+* ``finish_legacy_swap``: the pre-r10 ``'__compacting__'`` dir moves.
+* ``_versions_json`` / ``_versions_of``: the table-version pointer map
+  a compaction commits by overwriting the meta row.
+* the ``batches/`` registry rows of the streaming sinks.
+
+Local paths take a driver-side fast path: one metadata row IS driver
+work, not a distributed job (each Spark round-trip costs a job submit,
+task launch and committer, ~0.1-0.3 s, and the index gates make 5-12
+of them per lifecycle). It writes/reads the same parquet bytes with
+pyarrow:
 
 * ``try_write_meta_row``: writes ``part-00000-meta.parquet`` via a
   tmp-file + ``os.replace`` — an ATOMIC single-file commit, strictly
-  stronger than the Spark overwrite it replaces (which deletes the old
-  file before moving the new one in). Any stale part files from a
-  previous Spark-written incarnation are removed first (same
-  crash-window as Spark's own overwrite: a reader sees old meta, or
-  no meta + a loud error, never two rows).
+  stronger than a Spark overwrite (which deletes the old file before
+  moving the new one in). Any stale part files from a previous
+  Spark-written incarnation are removed first (same crash-window as
+  Spark's own overwrite: a reader sees old meta, or no meta + a loud
+  error, never two rows).
 * ``try_read_meta_row``: reads the dir's parquet files driver-side.
 * ``try_read_registry`` / ``try_append_registry_row``: the batch-id
   registry equivalents (append = one new uniquely-named file, exactly
   what Spark's append mode produces).
 
-All four return ``None``/``False`` for non-local URIs — callers keep
-their original Spark route as the fallback, so remote stores behave
-exactly as before (including error classes on missing dirs).
+All four return ``None``/``False`` for non-local URIs, and the callers
+fall back to Spark, where the cluster's credentials and FileSystem
+live. ``write_meta``'s Spark route is ``spark.range(1).select`` of
+plan literals, one parser-built literal per array: pure JVM, no
+Python-worker job.
 
 Type parity matters: the driver's oracle hash is type-sensitive and the
-tests read these tables through Spark, so the pyarrow schema mirrors
-the Spark literals each family wrote (int→int32, long→int64,
-string→utf8, arrays likewise).
+tests read these tables through Spark, so both routes write the same
+column types (int→int32, long→int64, string→utf8, arrays likewise).
 """
 
 from __future__ import annotations
@@ -43,6 +51,11 @@ import os
 import uuid
 
 __all__ = [
+    "LIFECYCLE",
+    "admit_append",
+    "finish_legacy_swap",
+    "read_meta",
+    "write_meta",
     "try_write_meta_row",
     "try_read_meta_row",
     "try_read_registry",
@@ -270,3 +283,181 @@ def try_append_registry_row(dir_uri: str, batch_id: int) -> bool:
         if os.path.exists(tmp):
             os.remove(tmp)
     return True
+
+
+#: the lifecycle columns of every family's meta row; ``read_meta``
+#: fills them for rows that predate them (pre-r8: no status, so a
+#: readable row is committed; pre-r9: no tokens; pre-r10: no versions)
+LIFECYCLE = ("status", "token", "pending_token", "versions")
+
+
+def _versions_of(meta_dict: dict) -> "dict[str, int]":
+    """Parse the meta row's ``versions`` JSON pointer column (absent on
+    pre-r10 indexes → every table at version 0)."""
+    import json
+
+    raw = meta_dict.get("versions")
+    if not raw:
+        return {}
+    return {k: int(v) for k, v in json.loads(raw).items()}
+
+
+def _versions_json(versions: "dict[str, int] | None") -> "str | None":
+    import json
+
+    if not versions:
+        return None
+    return json.dumps(versions, sort_keys=True, separators=(",", ":"))
+
+
+def _spark_lit(kind: str, value):
+    """One meta column as a plan literal of Spark type ``kind``."""
+    from pyspark.sql import functions as F
+
+    if value is not None and kind.startswith("array<"):
+        from .similarity import _array_lit
+
+        return _array_lit(value, kind.count("array<")).cast(kind)
+    return F.lit(value).cast(kind)
+
+
+def write_meta(spark, path: str, fields) -> None:
+    """Overwrite the index's ONE meta row at ``{path}/meta``.
+
+    ``fields``: sequence of ``(name, kind, value)``. Local paths commit
+    driver-side (:func:`try_write_meta_row`); other URIs write the same
+    columns through ``spark.range(1)``, where the parser builds each
+    array literal (``F.lit`` over a nested list costs one py4j round
+    trip per element)."""
+    if try_write_meta_row(f"{path}/meta", fields):
+        return
+    spark.range(1).select(
+        *[_spark_lit(k, v).alias(n) for n, k, v in fields]
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+
+
+def read_meta(spark, path: str, what: str, writer: str) -> dict:
+    """The index's meta row as a dict, with :data:`LIFECYCLE` filled.
+
+    ``what`` names the family in the errors (``"IVF-PQ"``), ``writer``
+    its build function. A missing meta dir — not an index of this
+    family — and a readable dir holding zero rows — a crash during the
+    meta overwrite — both raise ``ValueError``."""
+    d = try_read_meta_row(f"{path}/meta")
+    if d is None:
+        from pyspark.errors import AnalysisException
+
+        try:
+            row = spark.read.parquet(f"{path}/meta").head()
+        except AnalysisException as e:  # no meta dir, or no files in it
+            raise ValueError(
+                f"no {what} index meta at {path!r}/meta — not a "
+                f"{writer} index; rebuild it with {writer}"
+            ) from e
+        d = row.asDict() if row is not None else {}
+    if not d:
+        raise ValueError(
+            f"{what} index meta is empty — the index is mid-rebuild or "
+            f"corrupt; rebuild it with {writer}"
+        )
+    d.setdefault("status", "committed")
+    d.setdefault("token", None)
+    d.setdefault("pending_token", None)
+    d["versions"] = _versions_of(d)
+    return d
+
+
+def admit_append(m: dict, path: str, append_token, writer: str) -> bool:
+    """May an ``append_token`` append run against meta row ``m``?
+
+    True: this token's append already COMMITTED — the caller returns
+    without touching data (exactly-once blind retries). False: go
+    ahead — the index is committed, or its in-flight append is this
+    same batch's dead attempt (the documented recovery). Raises on a
+    dead rebuild, on an in-flight append of a DIFFERENT batch (running
+    now would interleave two batches' rows under one recovery), and on
+    any maintenance marker (``'__compacting__'``: committing an append
+    would cancel the pending recovery, whose finish-the-swap would then
+    discard the appended rows). Writes nothing."""
+    status = m["status"]
+    if status == "__building__":
+        raise ValueError(
+            "index is mid-rebuild (status '__building__') — rebuild it "
+            f"with {writer}(mode='overwrite')"
+        )
+    if append_token is not None and m["token"] == append_token:
+        return True
+    if status == "__appending__":
+        pending = m["pending_token"]
+        if (pending is not None and append_token is not None
+                and pending != append_token):
+            raise ValueError(
+                f"index at {path!r} has an in-flight append with token "
+                f"{pending!r}; refusing append with token "
+                f"{append_token!r} — re-run the dead append to "
+                "completion first (appends are sequential)"
+            )
+    elif status != "committed":
+        raise ValueError(
+            f"index at {path!r} has status {status!r} — finish the "
+            "in-flight maintenance first (re-running it recovers its "
+            "own crash), then append"
+        )
+    return False
+
+
+def finish_legacy_swap(path: str, tables) -> None:
+    """Finish a pre-r10 compaction left mid-swap (``'__compacting__'``):
+    its marker guarantees each ``{table}_compact`` dir was whole before
+    it landed, so move every remaining one over its base dir. The
+    caller commits the meta row at version 0."""
+    from .dedup import _dir_exists, _mv_dir, _rm_dir
+
+    for t in tables:
+        comp = f"{path}/{t}_compact"
+        if _dir_exists(comp):
+            _rm_dir(f"{path}/{t}")
+            _mv_dir(comp, f"{path}/{t}")
+
+
+def _read_batch_registry(spark, uri: str) -> "set[int]":
+    """Applied batch ids from an index's ``batches/`` registry.
+
+    Three states, three behaviors: a MISSING dir is first-batch-ever
+    (empty set); a dir that exists but holds ZERO committed parquet
+    files is a crash DURING the very first batch-record write (Spark's
+    output committer creates the directory at job setup before any
+    file commits) — also an empty set, and safe to treat as such
+    because the append-token machinery makes the replay a structural
+    no-op (without this case the stream would fail on every replay
+    forever, needing a manual dir delete); a dir whose files exist but
+    cannot be read is CORRUPT and must fail the query loudly, never
+    silently replay every batch."""
+    got = try_read_registry(uri)  # driver-side for local; loud on corrupt
+    if got is not None:
+        return got
+    from pyspark.errors import AnalysisException
+
+    from .dedup import _dir_exists
+
+    if not _dir_exists(uri):
+        return set()
+    try:
+        # by NAME, like the driver-side route: a file with extra or
+        # reordered columns must not be misread, a missing one fails
+        return {r[0] for r in
+                spark.read.parquet(uri).select("batch_id").collect()}
+    except AnalysisException as e:
+        if "UNABLE_TO_INFER_SCHEMA" in str(e):
+            return set()  # dir created, no file ever committed
+        raise
+
+
+def _append_batch_registry(spark, uri: str, batch_id: int) -> None:
+    """Record one applied batch id — one new file in the registry dir
+    (driver-side for local paths, Spark append otherwise)."""
+    if try_append_registry_row(uri, batch_id):
+        return
+    spark.range(1).select(
+        _spark_lit("long", int(batch_id)).alias("batch_id")
+    ).write.mode("append").parquet(uri)

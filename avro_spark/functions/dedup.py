@@ -24,9 +24,21 @@ functions over arrays; xxhash64) — no Python UDFs anywhere.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._meta_io import (
+    LIFECYCLE,
+    _append_batch_registry,
+    _read_batch_registry,
+    _versions_json,
+    admit_append,
+    finish_legacy_swap,
+    read_meta,
+    write_meta,
+)
 from .text import let, normalize_text, ws_tokens
 
 # Mersenne-31 prime: keeps a*h + b < 2^62, safely inside signed int64
@@ -478,14 +490,12 @@ def _write_minhash_index_unlocked(
         )
     fn = _index_hash(hash_fn)
     spark = df.sparkSession
-    prev_token = pending = None
+    prev_token = None
     versions: "dict[str, int]" = {}
     if mode == "append":
         stored = _read_index_meta(spark, path)
-        status = stored.pop("status", "committed")
-        prev_token = stored.pop("token", None)
-        pending = stored.pop("pending_token", None)
-        versions = stored.pop("versions", {})
+        m = {k: stored.pop(k) for k in LIFECYCLE}
+        prev_token, versions = m["token"], m["versions"]
         given = dict(num_hashes=num_hashes, bands=bands,
                      shingle_n=shingle_n, seed=seed, hash_fn=hash_fn)
         if stored != given:
@@ -493,29 +503,8 @@ def _write_minhash_index_unlocked(
                 f"append parameters {given} do not match the index's "
                 f"stored meta {stored}"
             )
-        if append_token is not None and prev_token == append_token:
+        if admit_append(m, path, append_token, "write_minhash_index"):
             return  # this batch's append already committed — a retry
-        if status == "__appending__":
-            # the documented same-append retry — but a retry carrying a
-            # DIFFERENT token is a different batch: appending it now
-            # would interleave two batches' rows under one recovery
-            if (pending is not None and append_token is not None
-                    and pending != append_token):
-                raise ValueError(
-                    f"index at {path!r} has an in-flight append with "
-                    f"token {pending!r}; refusing append with token "
-                    f"{append_token!r} — re-run the dead append to "
-                    "completion first (appends are sequential)"
-                )
-        elif status != "committed":
-            # '__compacting__' (or any future marker): committing an
-            # append here would cancel the pending recovery, and a later
-            # finish-the-swap would discard this append's rows
-            raise ValueError(
-                f"index at {path!r} has status {status!r} — finish the "
-                "in-flight maintenance first (compact_minhash_index "
-                "recovers its own crashes), then append"
-            )
 
     def _write_meta(marker: str, status: str = "committed",
                     token: "str | None" = None,
@@ -680,12 +669,8 @@ def _write_index_meta_row(
     (:func:`_vdir`): overwriting this row IS the atomic commit of a
     compaction's table swap. Local paths commit driver-side via an
     atomic single-file replace (:mod:`._meta_io` — no Spark job for one
-    metadata row); non-local URIs keep the Spark route below, where
-    ``spark.range`` keeps it pure-JVM (createDataFrame over a local
-    Python list launches a Python-worker job, ~6 s cold, for ONE row)."""
-    from ._meta_io import try_write_meta_row
-
-    if try_write_meta_row(f"{path}/meta", [
+    metadata row)."""
+    write_meta(spark, path, [
         ("num_hashes", "int", int(num_hashes)),
         ("bands", "int", int(bands)),
         ("shingle_n", "int", int(shingle_n)),
@@ -695,52 +680,13 @@ def _write_index_meta_row(
         ("token", "string", token),
         ("pending_token", "string", pending_token),
         ("versions", "string", _versions_json(versions)),
-    ]):
-        return
-    spark.range(1).select(
-        F.lit(num_hashes).cast("int").alias("num_hashes"),
-        F.lit(bands).cast("int").alias("bands"),
-        F.lit(shingle_n).cast("int").alias("shingle_n"),
-        F.lit(seed).cast("int").alias("seed"),
-        F.lit(hash_fn_marker).alias("hash_fn"),
-        F.lit(status).alias("status"),
-        F.lit(token).cast("string").alias("token"),
-        F.lit(pending_token).cast("string").alias("pending_token"),
-        F.lit(_versions_json(versions)).cast("string").alias("versions"),
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    ])
 
 
 def _read_index_meta(spark, path: str) -> dict:
-    from ._meta_io import try_read_meta_row
-
-    # local fast path (driver-side, no Spark job); None falls through to
-    # the Spark read, which keeps the exact error classes for missing or
-    # fileless meta dirs
-    d = try_read_meta_row(f"{path}/meta")
-    if d is None:
-        row = spark.read.parquet(f"{path}/meta").head()
-        d = row.asDict() if row is not None else {}
-    if not d:
-        # a meta dir that exists but holds zero rows = a crash during
-        # the meta overwrite commit — diagnosable, not a TypeError
-        raise ValueError(
-            "index meta is empty — the index is mid-rebuild or corrupt; "
-            "rebuild it with write_minhash_index"
-        )
-    return {
-        "num_hashes": d["num_hashes"], "bands": d["bands"],
-        "shingle_n": d["shingle_n"], "seed": d["seed"],
-        "hash_fn": d["hash_fn"],
-        # pre-r8 indexes have no status column: they committed via the
-        # hash_fn marker alone, so a readable row means committed
-        "status": d.get("status", "committed"),
-        # pre-r9 indexes have no token columns: read as never-appended-
-        # by-token / nothing-in-flight
-        "token": d.get("token"),
-        "pending_token": d.get("pending_token"),
-        # pre-r10 indexes have no versions column: every table at v0
-        "versions": _versions_of(d),
-    }
+    d = read_meta(spark, path, "MinHash", "write_minhash_index")
+    return {k: d[k] for k in (
+        "num_hashes", "bands", "shingle_n", "seed", "hash_fn", *LIFECYCLE)}
 
 
 def dedup_against_index(
@@ -897,25 +843,6 @@ def _vdir(path: str, table: str, version: int) -> str:
     """Physical directory of logical ``table`` at ``version`` (0 = the
     unversioned base layout)."""
     return f"{path}/{table}" if not version else f"{path}/{table}_v{int(version)}"
-
-
-def _versions_of(meta_dict: dict) -> "dict[str, int]":
-    """Parse the meta row's ``versions`` JSON pointer column (absent on
-    pre-r10 indexes → every table at version 0)."""
-    import json as _json
-
-    raw = meta_dict.get("versions")
-    if not raw:
-        return {}
-    return {k: int(v) for k, v in _json.loads(raw).items()}
-
-
-def _versions_json(versions: "dict[str, int] | None") -> "str | None":
-    import json as _json
-
-    if not versions:
-        return None
-    return _json.dumps(versions, sort_keys=True, separators=(",", ":"))
 
 
 def _list_child_dirs(uri: str, prefix: str = "") -> "list[str]":
@@ -1082,51 +1009,6 @@ def _list_parquet_files(
          if i.is_file and i.path.endswith(".parquet")),
         key=lambda t: t[1],
     )
-
-
-def _read_batch_registry(spark, uri: str) -> "set[int]":
-    """Applied batch ids from an index's ``batches/`` registry.
-
-    Three states, three behaviors: a MISSING dir is first-batch-ever
-    (empty set); a dir that exists but holds ZERO committed parquet
-    files is a crash DURING the very first batch-record write (Spark's
-    output committer creates the directory at job setup before any
-    file commits) — also an empty set, and safe to treat as such
-    because the append-token machinery makes the replay a structural
-    no-op (without this case the stream would fail on every replay
-    forever, needing a manual dir delete); a dir whose files exist but
-    cannot be read is CORRUPT and must fail the query loudly, never
-    silently replay every batch."""
-    from ._meta_io import try_read_registry
-
-    got = try_read_registry(uri)  # driver-side for local; loud on corrupt
-    if got is not None:
-        return got
-    if not _dir_exists(uri):
-        return set()
-    from pyspark.errors import AnalysisException
-
-    try:
-        # by NAME, like the driver-side route: a file with extra or
-        # reordered columns must not be misread, a missing one fails
-        return {r[0] for r in
-                spark.read.parquet(uri).select("batch_id").collect()}
-    except AnalysisException as e:
-        if "UNABLE_TO_INFER_SCHEMA" in str(e):
-            return set()  # dir created, no file ever committed
-        raise
-
-
-def _append_batch_registry(spark, uri: str, batch_id: int) -> None:
-    """Record one applied batch id — one new file in the registry dir
-    (driver-side for local paths, Spark append otherwise)."""
-    from ._meta_io import try_append_registry_row
-
-    if try_append_registry_row(uri, batch_id):
-        return
-    spark.range(1).select(
-        F.lit(int(batch_id)).cast("long").alias("batch_id")
-    ).write.mode("append").parquet(uri)
 
 
 def _open_listed(fs, path: str):
@@ -1316,6 +1198,18 @@ def release_index_lease(path: str, token: str) -> bool:
     return _compare_and_delete_lease(_lease_uri(path), token)
 
 
+@contextmanager
+def index_lease(path: str, op: str):
+    """``with index_lease(path, op):`` — the body runs holding the
+    index's single-writer lease (:func:`acquire_index_lease`), released
+    on exit whether the body returns or raises."""
+    token = acquire_index_lease(path, op)
+    try:
+        yield
+    finally:
+        release_index_lease(path, token)
+
+
 def minhash_index_stats(spark, path: str) -> dict:
     """Health report for a persisted MinHash index — the
     "do I need :func:`compact_minhash_index`?" signal. Footer-only
@@ -1405,14 +1299,7 @@ def _compact_minhash_index_unlocked(spark, path: str) -> None:
     m = _read_index_meta(spark, path)
 
     if m["status"] == "__compacting__":
-        # legacy (pre-r10) mid-swap recovery: the marker guarantees the
-        # *_compact dirs were whole before it landed — finish the move
-        # into the base dirs, then commit at version 0
-        for t in ("shingles", "bands"):
-            comp = f"{path}/{t}_compact"
-            if _dir_exists(comp):
-                _rm_dir(f"{path}/{t}")
-                _mv_dir(comp, f"{path}/{t}")
+        finish_legacy_swap(path, ("shingles", "bands"))
         _write_index_meta_row(
             spark, path, m["num_hashes"], m["bands"], m["shingle_n"],
             m["seed"], m["hash_fn"], "committed", m["token"],
@@ -1473,24 +1360,18 @@ def write_minhash_index(
     rebuild/append/compaction is refused loudly instead of interleaving
     meta overwrites; a dead writer's stale lease is taken over after
     its ttl and healed by the normal marker recovery."""
-    lt = acquire_index_lease(path, f"minhash-{mode}")
-    try:
+    with index_lease(path, f"minhash-{mode}"):
         _write_minhash_index_unlocked(
             df, path, id_col, text_col, num_hashes, bands, shingle_n,
             seed, hash_fn, mode, append_token, _hdocs=_hdocs,
         )
-    finally:
-        release_index_lease(path, lt)
 
 
 def compact_minhash_index(spark, path: str) -> None:
     """Public face of :func:`_compact_minhash_index_unlocked`, under
     the single-writer lease (see :func:`write_minhash_index`)."""
-    lt = acquire_index_lease(path, "minhash-compact")
-    try:
+    with index_lease(path, "minhash-compact"):
         _compact_minhash_index_unlocked(spark, path)
-    finally:
-        release_index_lease(path, lt)
 
 
 def _token_registry_sink(index_path: str, append_fn):
@@ -1570,15 +1451,9 @@ def _stream_dedup_sink(
         m = _read_index_meta(spark, index_path)
         token = f"batch{batch_id}"
         pairs_dir = f"{pairs_path}/batch={batch_id}"
-        if m["status"] == "__appending__" and (
-            m["pending_token"] is not None and m["pending_token"] != token
-        ):
-            raise ValueError(
-                f"index at {index_path!r} has an in-flight append with "
-                f"token {m['pending_token']!r} that is not this batch's "
-                f"{token!r} — another writer died mid-append; re-run it "
-                "to completion first (one streaming query per index)"
-            )
+        # refuse another batch's dead append BEFORE probing; this
+        # batch's own committed or in-flight append is handled below
+        admit_append(m, index_path, token, "write_minhash_index")
         # hash the batch text ONCE per micro-batch: the probe and the
         # append both need the hashed shingle sets, and each would
         # otherwise re-shingle and re-hash the whole batch (at scale
@@ -1658,15 +1533,10 @@ def dedup_stream_against_index(
     design). Returns the started ``StreamingQuery``."""
     sink = _stream_dedup_sink(
         index_path, pairs_path, id_col, text_col, threshold, admit)
-    writer = (
-        df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if query_name:
-        writer = writer.queryName(query_name)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    from ..streaming.pipeline import start_foreach_batch
+
+    return start_foreach_batch(df, sink, checkpoint_dir, query_name,
+                               trigger_available_now)
 
 
 # ------------------------------------------------------------------- SimHash

@@ -50,14 +50,17 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import (
-    _gc_table_versions,
-    _native_id,
-    _vdir,
+from ._meta_io import (
+    LIFECYCLE,
+    _append_batch_registry,
+    _read_batch_registry,
     _versions_json,
-    _versions_of,
-    content_fingerprint,
+    admit_append,
+    finish_legacy_swap,
+    read_meta,
+    write_meta,
 )
+from .dedup import _gc_table_versions, _native_id, _vdir, content_fingerprint
 
 #: meta ``layout`` of the one fps table this module writes; a meta row
 #: without the column is a pre-flat index (Hive ``bucket=`` dirs)
@@ -92,10 +95,7 @@ def _write_exact_meta(
     versions: "Optional[dict]" = None,
     layout: str = _FLAT,
 ) -> None:
-    from ._meta_io import try_write_meta_row
-
-    # local: one driver-side atomic file replace, no Spark job
-    if try_write_meta_row(f"{path}/meta", [
+    write_meta(spark, path, [
         ("n_buckets", "int", int(n_buckets)),
         ("id_col", "string", id_col),
         ("status", "string", status),
@@ -104,45 +104,14 @@ def _write_exact_meta(
         ("pending_token", "string", pending_token),
         ("versions", "string", _versions_json(versions)),
         ("layout", "string", layout),
-    ]):
-        return
-    spark.range(1).select(
-        F.lit(int(n_buckets)).cast("int").alias("n_buckets"),
-        F.lit(id_col).alias("id_col"),
-        F.lit(status).alias("status"),
-        F.lit(int(n_docs)).cast("long").alias("n_docs"),
-        F.lit(token).cast("string").alias("token"),
-        F.lit(pending_token).cast("string").alias("pending_token"),
-        F.lit(_versions_json(versions)).cast("string").alias("versions"),
-        F.lit(layout).alias("layout"),
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    ])
 
 
 def _read_exact_meta(spark, path: str) -> dict:
-    from ._meta_io import try_read_meta_row
-
-    d = try_read_meta_row(f"{path}/meta")
-    if d is None:
-        try:
-            row = spark.read.parquet(f"{path}/meta").head()
-        except Exception as e:
-            raise ValueError(
-                f"no exact-dedup index meta at {path!r}/meta — not a "
-                "write_exact_index index; rebuild it with write_exact_index"
-            ) from e
-        d = row.asDict() if row is not None else {}
-    if not d:
-        raise ValueError(
-            "exact-dedup index meta is empty — the index is mid-rebuild "
-            "or corrupt; rebuild it with write_exact_index"
-        )
-    return {
-        "n_buckets": d["n_buckets"], "id_col": d["id_col"],
-        "status": d["status"], "n_docs": d["n_docs"],
-        "token": d.get("token"), "pending_token": d.get("pending_token"),
-        "versions": _versions_of(d),
-        "layout": d.get("layout") or _BUCKETED,
-    }
+    d = read_meta(spark, path, "exact-dedup", "write_exact_index")
+    return {**{k: d[k] for k in ("n_buckets", "id_col", "n_docs",
+                                 *LIFECYCLE)},
+            "layout": d.get("layout") or _BUCKETED}
 
 
 def _fps_dir(path: str, m: dict) -> str:
@@ -203,27 +172,8 @@ def _write_exact_index_unlocked(
     if mode == "append":
         m = _read_exact_meta(spark, path)
         versions = m["versions"]
-        if m["status"] == "__building__":
-            raise ValueError(
-                "index is mid-rebuild (status '__building__') — rebuild "
-                "it with write_exact_index(mode='overwrite')"
-            )
-        if append_token is not None and m["token"] == append_token:
+        if admit_append(m, path, append_token, "write_exact_index"):
             return  # committed retry: structural no-op
-        if m["status"] == "__appending__":
-            if (m["pending_token"] is not None and append_token is not None
-                    and m["pending_token"] != append_token):
-                raise ValueError(
-                    f"index at {path!r} has an in-flight append with "
-                    f"token {m['pending_token']!r}; refusing append "
-                    f"with token {append_token!r} — re-run the dead "
-                    "append to completion first (appends are sequential)"
-                )
-        elif m["status"] != "committed":
-            raise ValueError(
-                f"index at {path!r} has status {m['status']!r} — finish "
-                "the in-flight maintenance first, then append"
-            )
         if n_buckets not in (None, m["n_buckets"]):
             raise ValueError(
                 f"append n_buckets={n_buckets} does not match the "
@@ -297,14 +247,11 @@ def write_exact_index(
     docstring), under the index's single-writer lease. ``n_buckets`` is
     the number of range files a build (and every compaction) writes;
     appends must pass it unchanged or ``None``."""
-    from .dedup import acquire_index_lease, release_index_lease
+    from .dedup import index_lease
 
-    lt = acquire_index_lease(path, f"exact-{mode}")
-    try:
+    with index_lease(path, f"exact-{mode}"):
         _write_exact_index_unlocked(
             docs, path, id_col, text_col, n_buckets, mode, append_token)
-    finally:
-        release_index_lease(path, lt)
 
 
 def dedup_exact_against_index(
@@ -397,13 +344,10 @@ def dedup_exact_against_index(
 def compact_exact_index(spark, path: str) -> None:
     """Public face of :func:`_compact_exact_index_unlocked`, under the
     single-writer lease."""
-    from .dedup import acquire_index_lease, release_index_lease
+    from .dedup import index_lease
 
-    lt = acquire_index_lease(path, "exact-compact")
-    try:
+    with index_lease(path, "exact-compact"):
         _compact_exact_index_unlocked(spark, path)
-    finally:
-        release_index_lease(path, lt)
 
 
 def _compact_exact_index_unlocked(spark, path: str) -> None:
@@ -416,16 +360,10 @@ def _compact_exact_index_unlocked(spark, path: str) -> None:
     without atomic rename and probes keep working THROUGHOUT (token
     preserved). A pre-r10 index left mid-swap (``'__compacting__'``)
     is finished with the legacy move-based recovery."""
-    from .dedup import _dir_exists, _mv_dir, _rm_dir
-
     m = _read_exact_meta(spark, path)
 
     if m["status"] == "__compacting__":
-        # legacy (pre-r10) mid-swap recovery
-        comp = f"{path}/fps_compact"
-        if _dir_exists(comp):
-            _rm_dir(f"{path}/fps")
-            _mv_dir(comp, f"{path}/fps")
+        finish_legacy_swap(path, ("fps",))
         _write_exact_meta(spark, path, m["n_buckets"], m["id_col"],
                           "committed", m["n_docs"], m["token"],
                           layout=m["layout"])
@@ -513,7 +451,7 @@ def _stream_exact_sink(
     if admit not in ("novel", "all"):
         raise ValueError(f"bad admit: {admit}")
 
-    from .dedup import _append_batch_registry, _read_batch_registry, exact_dedup
+    from .dedup import exact_dedup
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -566,12 +504,7 @@ def dedup_exact_stream(
     ``StreamingQuery``."""
     sink = _stream_exact_sink(index_path, decisions_path, id_col,
                               text_col, admit)
-    writer = (
-        df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if query_name:
-        writer = writer.queryName(query_name)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    from ..streaming.pipeline import start_foreach_batch
+
+    return start_foreach_batch(df, sink, checkpoint_dir, query_name,
+                               trigger_available_now)

@@ -49,10 +49,17 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._meta_io import (
+    LIFECYCLE,
+    _versions_json,
+    admit_append,
+    finish_legacy_swap,
+    read_meta,
+    write_meta,
+)
 from .similarity import (
     _argmax_centroid,
-    _cube_lit,
-    _matrix_lit,
+    _array_lit,
     _normalize_rows,
     as_double,
     dot,
@@ -76,21 +83,16 @@ def _write_ivfpq_meta(
     versions: "Optional[dict]" = None,
     dir_ids: "Optional[Sequence[int]]" = None,
 ) -> None:
-    """The index's ONE meta row: centroid matrix + PQ codebooks as plan
-    literals (pure JVM — no Python-worker job), marker discipline as in
-    the IVF/MinHash indexes. ``split_cid`` rides only in the legacy
-    ``'__splitting__'`` marker (pre-r10 splits). ``versions`` /
+    """The index's ONE meta row: centroid matrix + PQ codebooks, marker
+    discipline as in the IVF/MinHash indexes. ``split_cid`` rides only
+    in the legacy ``'__splitting__'`` marker (pre-r10 splits). ``versions`` /
     ``dir_ids`` are the table-version pointers and the matrix-position
     → physical-partition indirection whose single overwrite here IS
     the atomic commit of a compaction/split (see
     :func:`similarity._write_ivf_meta`)."""
-    from ._meta_io import try_write_meta_row
-    from .dedup import _versions_json
-
     if dir_ids is None:
         dir_ids = list(range(len(centroids)))
-    # local: one driver-side atomic file replace, no Spark job
-    if try_write_meta_row(f"{path}/meta", [
+    write_meta(spark, path, [
         ("centroids", "array<array<double>>",
          [[float(x) for x in c] for c in centroids]),
         ("codebooks", "array<array<array<double>>>",
@@ -107,44 +109,11 @@ def _write_ivfpq_meta(
          int(split_cid) if split_cid is not None else None),
         ("versions", "string", _versions_json(versions)),
         ("dir_ids", "array<int>", [int(d) for d in dir_ids]),
-    ]):
-        return
-    spark.range(1).select(
-        _matrix_lit(centroids).alias("centroids"),
-        _cube_lit(codebooks).alias("codebooks"),
-        F.lit(len(centroids[0])).cast("int").alias("dim"),
-        F.lit(len(codebooks)).cast("int").alias("m"),
-        F.lit(len(codebooks[0])).cast("int").alias("ksub"),
-        F.lit("l2-cosine").alias("norm"),
-        F.lit(status).alias("status"),
-        F.lit(int(rows)).cast("long").alias("rows"),
-        F.lit(token).cast("string").alias("token"),
-        F.lit(pending_token).cast("string").alias("pending_token"),
-        F.lit(split_cid).cast("int").alias("split_cid"),
-        F.lit(_versions_json(versions)).cast("string").alias("versions"),
-        F.lit([int(d) for d in dir_ids]).alias("dir_ids"),
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    ])
 
 
 def _read_ivfpq_meta(spark, path: str) -> dict:
-    from ._meta_io import try_read_meta_row
-
-    d = try_read_meta_row(f"{path}/meta")
-    if d is None:
-        try:
-            row = spark.read.parquet(f"{path}/meta").head()
-        except Exception as e:  # AnalysisException: no meta dir at all
-            raise ValueError(
-                f"no IVF-PQ index meta at {path!r}/meta — not a "
-                "write_ivfpq_index index; rebuild it with write_ivfpq_index"
-            ) from e
-        d = row.asDict() if row is not None else {}
-    if not d:
-        raise ValueError(
-            "IVF-PQ index meta is empty — the index is mid-rebuild or "
-            "corrupt; rebuild it with write_ivfpq_index"
-        )
-    from .dedup import _versions_of
+    d = read_meta(spark, path, "IVF-PQ", "write_ivfpq_index")
     cents = [[float(x) for x in c] for c in d["centroids"]]
     dir_ids = d.get("dir_ids")
     return {
@@ -153,12 +122,10 @@ def _read_ivfpq_meta(spark, path: str) -> dict:
             [[float(x) for x in c] for c in book] for book in d["codebooks"]
         ],
         "dim": d["dim"], "m": d["m"], "ksub": d["ksub"], "norm": d["norm"],
-        "status": d["status"], "rows": d["rows"],
-        "token": d.get("token"),
-        "pending_token": d.get("pending_token"),
+        "rows": d["rows"],
+        **{k: d[k] for k in LIFECYCLE},
         "split_cid": d.get("split_cid"),
-        # pre-r10 meta rows: tables at v0, position i == centroid_id i
-        "versions": _versions_of(d),
+        # pre-r10 meta rows: position i == centroid_id i
         "dir_ids": ([int(x) for x in dir_ids] if dir_ids is not None
                     else list(range(len(cents)))),
     }
@@ -198,27 +165,8 @@ def _write_ivfpq_index_unlocked(
     prev_token = None
     if mode == "append":
         m = _read_ivfpq_meta(spark, path)
-        if m["status"] == "__building__":
-            raise ValueError(
-                "index is mid-rebuild (status '__building__') — rebuild "
-                "it with write_ivfpq_index(mode='overwrite')"
-            )
-        if append_token is not None and m["token"] == append_token:
+        if admit_append(m, path, append_token, "write_ivfpq_index"):
             return  # this batch's append already committed — a retry
-        if m["status"] == "__appending__":
-            if (m["pending_token"] is not None and append_token is not None
-                    and m["pending_token"] != append_token):
-                raise ValueError(
-                    f"index at {path!r} has an in-flight append with "
-                    f"token {m['pending_token']!r}; refusing append "
-                    f"with token {append_token!r} — re-run the dead "
-                    "append to completion first (appends are sequential)"
-                )
-        elif m["status"] != "committed":
-            raise ValueError(
-                f"index at {path!r} has status {m['status']!r} — finish "
-                "the in-flight maintenance first, then append"
-            )
         if centroids is None:
             centroids = m["centroids"]
         elif [[float(x) for x in c] for c in centroids] != m["centroids"]:
@@ -281,8 +229,9 @@ def _write_ivfpq_index_unlocked(
         # the count the parallel writes would race to compute the
         # unmaterialized cache and encode the corpus twice; with it,
         # wall = encode + max(write) and the count doubles as this
-        # batch's row tally
-        n_batch = enc.count()
+        # batch's tally of LIVE rows: a null vector has no centroid, and
+        # its row lands in the default partition no probe scans
+        n_live = enc.agg(F.count("centroid_id")).head()[0]
 
         def _write_codes() -> None:
             # codes: the probe's scan side — m smallints/row, partition-
@@ -318,7 +267,7 @@ def _write_ivfpq_index_unlocked(
         enc.unpersist()
     if mode == "overwrite":
         # a fresh build wrote exactly the encoded rows — no re-read
-        total = n_batch
+        total = n_live
     else:
         # append totals stay authoritative from disk: a RETRIED append
         # re-appends its rows, and the committed count must reflect
@@ -352,28 +301,22 @@ def write_ivfpq_index(
     rebuild/append/compaction is refused loudly instead of interleaving
     meta overwrites; a dead writer's stale lease is taken over after
     its ttl."""
-    from .dedup import acquire_index_lease, release_index_lease
+    from .dedup import index_lease
 
-    lt = acquire_index_lease(path, f"ivfpq-{mode}")
-    try:
+    with index_lease(path, f"ivfpq-{mode}"):
         _write_ivfpq_index_unlocked(
             vectors, centroids, codebooks, path, id_col, vec_col, mode,
             append_token,
         )
-    finally:
-        release_index_lease(path, lt)
 
 
 def compact_ivfpq_index(spark, path: str) -> None:
     """Public face of :func:`_compact_ivfpq_index_unlocked`, under the
     single-writer lease (see :func:`write_ivfpq_index`)."""
-    from .dedup import acquire_index_lease, release_index_lease
+    from .dedup import index_lease
 
-    lt = acquire_index_lease(path, "ivfpq-compact")
-    try:
+    with index_lease(path, "ivfpq-compact"):
         _compact_ivfpq_index_unlocked(spark, path)
-    finally:
-        release_index_lease(path, lt)
 
 
 def knn_ivfpq_indexed(
@@ -435,7 +378,7 @@ def knn_ivfpq_indexed(
         )
     centroids, codebooks = m["centroids"], m["codebooks"]
     dim = len(centroids[0])
-    cmat = _matrix_lit(_normalize_rows(centroids))
+    cmat = _array_lit(_normalize_rows(centroids))
     nprobe = min(nprobe, len(centroids))
     rerank = max(rerank, k)
 
@@ -736,14 +679,11 @@ def split_ivfpq_centroid(
 ) -> "list[list[float]]":
     """Public face of :func:`_split_ivfpq_centroid_unlocked`, under the
     single-writer lease (see :func:`write_ivfpq_index`)."""
-    from .dedup import acquire_index_lease, release_index_lease
+    from .dedup import index_lease
 
-    lt = acquire_index_lease(path, "ivfpq-split")
-    try:
+    with index_lease(path, "ivfpq-split"):
         return _split_ivfpq_centroid_unlocked(spark, path, cid, k_sub,
                                               iters)
-    finally:
-        release_index_lease(path, lt)
 
 
 def _retrain_ivfpq_index_unlocked(
@@ -818,13 +758,10 @@ def retrain_ivfpq_index(
 ) -> "list[list[float]]":
     """Public face of :func:`_retrain_ivfpq_index_unlocked`, under the
     single-writer lease (see :func:`write_ivfpq_index`)."""
-    from .dedup import acquire_index_lease, release_index_lease
+    from .dedup import index_lease
 
-    lt = acquire_index_lease(path, "ivfpq-retrain")
-    try:
+    with index_lease(path, "ivfpq-retrain"):
         return _retrain_ivfpq_index_unlocked(spark, path, k, iters)
-    finally:
-        release_index_lease(path, lt)
 
 
 # ------------------------------------- streaming face of the PQ index
@@ -871,15 +808,10 @@ def index_vectors_stream(
     design, enforced by the writer lease). Returns the started
     ``StreamingQuery``."""
     sink = _stream_ivfpq_sink(index_path, id_col, vec_col)
-    writer = (
-        df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if query_name:
-        writer = writer.queryName(query_name)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    from ..streaming.pipeline import start_foreach_batch
+
+    return start_foreach_batch(df, sink, checkpoint_dir, query_name,
+                               trigger_available_now)
 
 
 def ivfpq_index_stats(spark, path: str) -> dict:
@@ -977,17 +909,12 @@ def _compact_ivfpq_index_unlocked(spark, path: str) -> None:
     (garbage-collected with the old version dirs). A pre-r10 index
     left mid-swap (``'__compacting__'``) is finished with the legacy
     move-based recovery."""
-    from .dedup import _dir_exists, _gc_table_versions, _mv_dir, _rm_dir
+    from .dedup import _gc_table_versions
 
     m = _read_ivfpq_meta(spark, path)
 
     if m["status"] == "__compacting__":
-        # legacy (pre-r10) mid-swap recovery
-        for main, comp in [(f"{path}/codes", f"{path}/codes_compact"),
-                           (f"{path}/raw", f"{path}/raw_compact")]:
-            if _dir_exists(comp):
-                _rm_dir(main)
-                _mv_dir(comp, main)
+        finish_legacy_swap(path, ("codes", "raw"))
         rows = spark.read.parquet(f"{path}/codes").count()
         _write_ivfpq_meta(spark, path, m["centroids"], m["codebooks"],
                           "committed", rows, m["token"])

@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 
 from .similarity import (
     _argmax_centroid,
-    _matrix_lit,
+    _array_lit,
     _normalize_rows,
     as_double,
     dot,
@@ -61,7 +61,7 @@ def _probe_positions(vec, centroids, nprobe: int):
     """Top-``nprobe`` centroid positions by cosine for ``vec`` — the
     IVF probe expression (sim desc, ties → lowest position, matching
     :func:`similarity._argmax_centroid`'s assignment tie-break)."""
-    cmat = _matrix_lit(_normalize_rows(centroids))
+    cmat = _array_lit(_normalize_rows(centroids))
     scored = F.transform(
         cmat,
         lambda c, i: F.struct(
@@ -256,7 +256,7 @@ def _stream_semantic_sink(
     if admit not in ("novel", "all"):
         raise ValueError(f"bad admit: {admit}")
 
-    from .dedup import _append_batch_registry, _read_batch_registry
+    from ._meta_io import _append_batch_registry, _read_batch_registry
     from .similarity import _read_ivf_meta, write_ivf_index
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -322,15 +322,10 @@ def semantic_dedup_stream(
     index (writer lease). Returns the started ``StreamingQuery``."""
     sink = _stream_semantic_sink(index_path, decisions_path, threshold,
                                  id_col, vec_col, admit, nprobe)
-    writer = (
-        df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if query_name:
-        writer = writer.queryName(query_name)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    from ..streaming.pipeline import start_foreach_batch
+
+    return start_foreach_batch(df, sink, checkpoint_dir, query_name,
+                               trigger_available_now)
 
 
 def semantic_dedup_keepers(

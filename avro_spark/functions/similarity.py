@@ -109,17 +109,21 @@ def cosine(a: Column, b: Column, dim: Optional[int] = None) -> Column:
 from .text import let as _let  # bind-once helper (ONE definition)
 
 
-def _matrix_lit(rows: Sequence[Sequence[float]]) -> Column:
-    """A list-of-vectors as ONE plan literal (array<array<double>>).
+def _array_lit(v, depth: int = 2) -> Column:
+    """A ``depth``-deep nested list of floats (2 = a list of vectors,
+    3 = PQ codebooks) as ONE plan literal (``array<array<double>>``...).
 
     Built via a SQL string rather than ``F.lit`` — PySpark's nested-list
     lit makes one py4j round trip per element (~1s of driver time for a
     16×64 matrix), while the parser ingests the same literal in
     milliseconds. ``repr(float)`` round-trips exactly."""
-    body = ",".join(
-        "array(" + ",".join(f"{float(x)!r}D" for x in r) + ")" for r in rows
-    )
-    return F.expr(f"array({body})")
+
+    def sql(x, d: int) -> str:
+        if not d:
+            return f"{float(x)!r}D"
+        return "array(" + ",".join(sql(y, d - 1) for y in x) + ")"
+
+    return F.expr(sql(v, depth))
 
 
 def _normalize_rows(rows: Sequence[Sequence[float]]) -> list[list[float]]:
@@ -333,7 +337,7 @@ def _argmax_centroid(vec: Column, centroids: Sequence[Sequence[float]]) -> Colum
         # per-row interpreted lambda cost AND the per-action Catalyst
         # cost of a centroid-matrix literal tree
         return jvm_col
-    cmat = _matrix_lit(rows)
+    cmat = _array_lit(rows)
 
     def pick(v: Column) -> Column:
         scored = F.transform(
@@ -446,7 +450,7 @@ def knn_ivf(
         l2_norm(vec_col, dim).alias("_nv"),
         _argmax_centroid(F.col(vec_col), centroids).alias("centroid_id"),
     )
-    cmat = _matrix_lit(_normalize_rows(centroids))
+    cmat = _array_lit(_normalize_rows(centroids))
 
     def probes(q: Column) -> Column:
         # middle field -cid: after reverse (sim desc) ties prefer the
@@ -529,15 +533,12 @@ def _write_ivf_meta(
     the indirection that lets a split write its new partitions under
     FRESH ids and commit with this one overwrite (a partition id named
     by no committed meta row is invisible to probes and dead by
-    construction). Written via ``spark.range`` + plan literals — pure
-    JVM, no Python-worker job."""
-    from ._meta_io import try_write_meta_row
-    from .dedup import _versions_json
+    construction). Committed through :func:`._meta_io.write_meta`."""
+    from ._meta_io import _versions_json, write_meta
 
     if dir_ids is None:
         dir_ids = list(range(len(centroids)))
-    # local: one driver-side atomic file replace, no Spark job
-    if try_write_meta_row(f"{path}/meta", [
+    write_meta(spark, path, [
         ("centroids", "array<array<double>>",
          [[float(x) for x in c] for c in centroids]),
         ("dim", "int", int(len(centroids[0]))),
@@ -550,55 +551,22 @@ def _write_ivf_meta(
          int(split_cid) if split_cid is not None else None),
         ("versions", "string", _versions_json(versions)),
         ("dir_ids", "array<int>", [int(d) for d in dir_ids]),
-    ]):
-        return
-    spark.range(1).select(
-        _matrix_lit(centroids).alias("centroids"),
-        F.lit(len(centroids[0])).cast("int").alias("dim"),
-        F.lit("l2-cosine").alias("norm"),
-        F.lit(status).alias("status"),
-        F.lit(int(rows)).cast("long").alias("rows"),
-        F.lit(token).cast("string").alias("token"),
-        F.lit(pending_token).cast("string").alias("pending_token"),
-        F.lit(split_cid).cast("int").alias("split_cid"),
-        F.lit(_versions_json(versions)).cast("string").alias("versions"),
-        F.lit([int(d) for d in dir_ids]).alias("dir_ids"),
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    ])
 
 
 def _read_ivf_meta(spark: "SparkSession", path: str) -> dict:
-    from ._meta_io import try_read_meta_row
+    from ._meta_io import LIFECYCLE, read_meta
 
-    d = try_read_meta_row(f"{path}/meta")
-    if d is None:
-        try:
-            row = spark.read.parquet(f"{path}/meta").head()
-        except Exception as e:  # AnalysisException: no meta dir at all
-            raise ValueError(
-                f"no IVF index meta at {path!r}/meta — not a "
-                "write_ivf_index index (or a pre-r8 layout); rebuild it "
-                "with write_ivf_index"
-            ) from e
-        d = row.asDict() if row is not None else {}
-    if not d:
-        raise ValueError(
-            "IVF index meta is empty — the index is mid-rebuild or "
-            "corrupt; rebuild it with write_ivf_index"
-        )
-    from .dedup import _versions_of
+    d = read_meta(spark, path, "IVF", "write_ivf_index")
     cents = [[float(x) for x in c] for c in d["centroids"]]
     dir_ids = d.get("dir_ids")
     return {
         "centroids": cents,
-        "dim": d["dim"], "norm": d["norm"],
-        "status": d["status"], "rows": d["rows"],
-        # pre-token meta rows (early r8) read as never-appended-by-token
-        "token": d.get("token"),
-        "pending_token": d.get("pending_token"),
+        "dim": d["dim"], "norm": d["norm"], "rows": d["rows"],
+        **{k: d[k] for k in LIFECYCLE},
         "split_cid": d.get("split_cid"),
-        # pre-r10 meta rows: tables at v0, position i stored under
-        # centroid_id=i (the identity mapping)
-        "versions": _versions_of(d),
+        # pre-r10 meta rows: position i stored under centroid_id=i
+        # (the identity mapping)
         "dir_ids": ([int(x) for x in dir_ids] if dir_ids is not None
                     else list(range(len(cents)))),
     }
@@ -615,11 +583,16 @@ def _ivf_data_dir(path: str, m: dict) -> str:
 def _dir_of_position(dir_ids: "Sequence[int]"):
     """Column fn: matrix position → physical ``centroid_id`` partition
     value, via the meta row's ``dir_ids`` indirection (an int-array
-    literal lookup — codegen'd, no join)."""
+    literal lookup — codegen'd, no join). A null position (a null
+    vector has no centroid) stays null: its row lands in the default
+    partition, which no probe scans and no row count includes."""
     arr = F.lit([int(d) for d in dir_ids])
 
     def to_dir(pos: Column) -> Column:
-        return F.element_at(arr, pos.cast("int") + F.lit(1))
+        # guarded: element_at with a NULL index column returns the
+        # array's LAST element here (Spark 4.1), not null
+        return F.when(pos.isNotNull(),
+                      F.element_at(arr, pos.cast("int") + F.lit(1)))
 
     return to_dir
 
@@ -668,36 +641,11 @@ def _write_ivf_index_unlocked(
     still reads data mid-replacement."""
     spark = vectors.sparkSession
     if mode == "append":
+        from ._meta_io import admit_append
+
         m = _read_ivf_meta(spark, path)
-        if m["status"] == "__building__":
-            raise ValueError(
-                "index is mid-rebuild (status '__building__') — rebuild "
-                "it with write_ivf_index(mode='overwrite')"
-            )
-        if append_token is not None and m["token"] == append_token:
+        if admit_append(m, path, append_token, "write_ivf_index"):
             return  # this batch's append already committed — a retry
-        if m["status"] == "__appending__":
-            # the documented same-append retry — a retry carrying a
-            # DIFFERENT token is a different batch, and letting it run
-            # would silently adopt (or interleave with) the dead
-            # attempt's data as its own
-            if (m["pending_token"] is not None and append_token is not None
-                    and m["pending_token"] != append_token):
-                raise ValueError(
-                    f"index at {path!r} has an in-flight append with "
-                    f"token {m['pending_token']!r}; refusing append "
-                    f"with token {append_token!r} — re-run the dead "
-                    "append to completion first (appends are sequential)"
-                )
-        elif m["status"] != "committed":
-            # '__compacting__': committing an append here would cancel
-            # the pending recovery, and the later finish-the-swap would
-            # discard this append's rows
-            raise ValueError(
-                f"index at {path!r} has status {m['status']!r} — finish "
-                "the in-flight maintenance first (compact_ivf_index "
-                "recovers its own crashes), then append"
-            )
         if centroids is None:
             centroids = m["centroids"]
         elif [[float(x) for x in c] for c in centroids] != m["centroids"]:
@@ -796,15 +744,10 @@ def index_vectors_stream(
     per index (appends are sequential by design). Returns the started
     ``StreamingQuery``."""
     sink = _stream_ivf_sink(index_path, id_col, vec_col)
-    writer = (
-        df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if query_name:
-        writer = writer.queryName(query_name)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    from ..streaming.pipeline import start_foreach_batch
+
+    return start_foreach_batch(df, sink, checkpoint_dir, query_name,
+                               trigger_available_now)
 
 
 def ivf_index_stats(spark: "SparkSession", path: str) -> dict:
@@ -911,17 +854,14 @@ def _compact_ivf_index_unlocked(spark: "SparkSession", path: str) -> None:
     (``'__compacting__'``) is finished with the legacy move-based
     recovery. Concurrent writers are refused by the single-writer
     lease (public wrapper)."""
-    from .dedup import _dir_exists, _gc_table_versions, _mv_dir, _rm_dir
+    from ._meta_io import finish_legacy_swap
+    from .dedup import _gc_table_versions
 
     m = _read_ivf_meta(spark, path)
 
     if m["status"] == "__compacting__":
-        # legacy (pre-r10) mid-swap recovery
-        data, comp = f"{path}/data", f"{path}/data_compact"
-        if _dir_exists(comp):
-            _rm_dir(data)
-            _mv_dir(comp, data)
-        rows = spark.read.parquet(data).count()
+        finish_legacy_swap(path, ("data",))
+        rows = spark.read.parquet(f"{path}/data").count()
         _write_ivf_meta(spark, path, m["centroids"], "committed", rows,
                         m["token"])
         return
@@ -968,27 +908,21 @@ def write_ivf_index(
     SINGLE-WRITER lease: a concurrent rebuild/append/compaction is
     refused loudly instead of interleaving meta overwrites; a dead
     writer's stale lease is taken over after its ttl."""
-    from .dedup import acquire_index_lease, release_index_lease
+    from .dedup import index_lease
 
-    lt = acquire_index_lease(path, f"ivf-{mode}")
-    try:
+    with index_lease(path, f"ivf-{mode}"):
         _write_ivf_index_unlocked(
             vectors, centroids, path, id_col, vec_col, mode, append_token
         )
-    finally:
-        release_index_lease(path, lt)
 
 
 def compact_ivf_index(spark: "SparkSession", path: str) -> None:
     """Public face of :func:`_compact_ivf_index_unlocked`, under the
     single-writer lease (see :func:`write_ivf_index`)."""
-    from .dedup import acquire_index_lease, release_index_lease
+    from .dedup import index_lease
 
-    lt = acquire_index_lease(path, "ivf-compact")
-    try:
+    with index_lease(path, "ivf-compact"):
         _compact_ivf_index_unlocked(spark, path)
-    finally:
-        release_index_lease(path, lt)
 
 
 # --------------------------------------- hot-centroid split maintenance
@@ -1151,14 +1085,11 @@ def split_ivf_centroid(
 ) -> "list[list[float]]":
     """Public face of :func:`_split_ivf_centroid_unlocked`, under the
     single-writer lease (see :func:`write_ivf_index`)."""
-    from .dedup import acquire_index_lease, release_index_lease
+    from .dedup import index_lease
 
-    lt = acquire_index_lease(path, "ivf-split")
-    try:
+    with index_lease(path, "ivf-split"):
         return _split_ivf_centroid_unlocked(
             spark, path, cid, k_sub, iters, id_col, vec_col)
-    finally:
-        release_index_lease(path, lt)
 
 
 def _retrain_ivf_index_unlocked(
@@ -1230,14 +1161,11 @@ def retrain_ivf_index(
 ) -> "list[list[float]]":
     """Public face of :func:`_retrain_ivf_index_unlocked`, under the
     single-writer lease (see :func:`write_ivf_index`)."""
-    from .dedup import acquire_index_lease, release_index_lease
+    from .dedup import index_lease
 
-    lt = acquire_index_lease(path, "ivf-retrain")
-    try:
+    with index_lease(path, "ivf-retrain"):
         return _retrain_ivf_index_unlocked(
             spark, path, k, iters, id_col, vec_col)
-    finally:
-        release_index_lease(path, lt)
 
 
 def knn_ivf_indexed(
@@ -1296,7 +1224,7 @@ def knn_ivf_indexed(
         )
     centroids = m["centroids"]
     dim = len(centroids[0])
-    cmat = _matrix_lit(_normalize_rows(centroids))
+    cmat = _array_lit(_normalize_rows(centroids))
     nprobe = min(nprobe, len(centroids))
 
     def probes(q: Column) -> Column:
@@ -1418,7 +1346,7 @@ def hyperplane_signature(
     codegen-friendly tree (the per-plane inline-literal formulation is
     ~dim×num_planes Literal nodes duplicated per reference and falls out
     of whole-stage codegen)."""
-    pmat = _matrix_lit(hyperplane_planes(dim, num_planes, seed))
+    pmat = _array_lit(hyperplane_planes(dim, num_planes, seed))
     weights = F.lit([1 << i for i in range(num_planes)])
 
     def sig(v: Column) -> Column:
@@ -1603,20 +1531,6 @@ def _decontaminate_embeddings_arrow(
 # broadcast codebook literal.
 
 
-def _cube_lit(books: Sequence[Sequence[Sequence[float]]]) -> Column:
-    """codebooks as ONE plan literal (array<array<array<double>>>); same
-    parser-side construction rationale as _matrix_lit."""
-    body = ",".join(
-        "array("
-        + ",".join(
-            "array(" + ",".join(f"{float(x)!r}D" for x in c) + ")" for c in book
-        )
-        + ")"
-        for book in books
-    )
-    return F.expr(f"array({body})")
-
-
 def pq_codebooks(
     vectors: DataFrame,
     m: int = 8,
@@ -1709,7 +1623,7 @@ def pq_codes(vec: Column, codebooks: Sequence[Sequence[Sequence[float]]]) -> Col
         # lowest code; pinned by test_jvm_vector_udfs_match_hof)
         return jvm_col
     sub = len(codebooks[0][0])
-    cb = _cube_lit(codebooks)
+    cb = _array_lit(codebooks, 3)
 
     def enc(v: Column) -> Column:
         def per_sub(book: Column, si: Column) -> Column:
@@ -1752,7 +1666,7 @@ def pq_reconstruct(
     jvm_col = _vec_jvm("avsp_jvm_pq_reconstruct", _json.dumps(books), codes)
     if jvm_col is not None:
         return jvm_col
-    cb = _cube_lit(codebooks)
+    cb = _array_lit(codebooks, 3)
     return F.flatten(
         F.zip_with(
             cb, codes, lambda book, c: F.element_at(book, c.cast("int") + 1)
@@ -1856,7 +1770,7 @@ def knn_ivfpq(
         F.col(id_col), F.col("_cid"), F.col("_rv"), l2_norm("_rv").alias("_nv")
     )
 
-    cmat = _matrix_lit(_normalize_rows(centroids))
+    cmat = _array_lit(_normalize_rows(centroids))
     nprobe = min(nprobe, len(centroids))
 
     def probes(q: Column) -> Column:

@@ -84,10 +84,9 @@ def _write_text_meta(
     compaction's atomic commit). Local paths commit driver-side
     (:mod:`._meta_io`, no Spark job); otherwise pure JVM — no
     Python-worker job."""
-    from ._meta_io import try_write_meta_row
-    from .dedup import _versions_json
+    from ._meta_io import _versions_json, write_meta
 
-    if try_write_meta_row(f"{path}/meta", [
+    write_meta(spark, path, [
         ("n_buckets", "int", int(n_buckets)),
         ("id_col", "string", id_col),
         ("status", "string", status),
@@ -97,48 +96,15 @@ def _write_text_meta(
         ("token", "string", token),
         ("pending_token", "string", pending_token),
         ("versions", "string", _versions_json(versions)),
-    ]):
-        return
-    spark.range(1).select(
-        F.lit(int(n_buckets)).cast("int").alias("n_buckets"),
-        F.lit(id_col).alias("id_col"),
-        F.lit(status).alias("status"),
-        F.lit(int(n_docs)).cast("long").alias("n_docs"),
-        F.lit(int(n_docs_tok)).cast("long").alias("n_docs_tok"),
-        F.lit(int(sum_dl)).cast("long").alias("sum_dl"),
-        F.lit(token).cast("string").alias("token"),
-        F.lit(pending_token).cast("string").alias("pending_token"),
-        F.lit(_versions_json(versions)).cast("string").alias("versions"),
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+    ])
 
 
 def _read_text_meta(spark, path: str) -> dict:
-    from ._meta_io import try_read_meta_row
+    from ._meta_io import LIFECYCLE, read_meta
 
-    d = try_read_meta_row(f"{path}/meta")
-    if d is None:
-        try:
-            row = spark.read.parquet(f"{path}/meta").head()
-        except Exception as e:  # AnalysisException: no meta dir at all
-            raise ValueError(
-                f"no text index meta at {path!r}/meta — not a "
-                "write_text_index index; rebuild it with write_text_index"
-            ) from e
-        d = row.asDict() if row is not None else {}
-    if not d:
-        raise ValueError(
-            "text index meta is empty — the index is mid-rebuild or "
-            "corrupt; rebuild it with write_text_index"
-        )
-    from .dedup import _versions_of
-    return {
-        "n_buckets": d["n_buckets"], "id_col": d["id_col"],
-        "status": d["status"], "n_docs": d["n_docs"],
-        "n_docs_tok": d["n_docs_tok"], "sum_dl": d["sum_dl"],
-        "token": d.get("token"),
-        "pending_token": d.get("pending_token"),
-        "versions": _versions_of(d),
-    }
+    d = read_meta(spark, path, "text", "write_text_index")
+    return {k: d[k] for k in ("n_buckets", "id_col", "n_docs",
+                              "n_docs_tok", "sum_dl", *LIFECYCLE)}
 
 
 def _tdir(path: str, versions: dict, table: str) -> str:
@@ -171,28 +137,11 @@ def _write_text_index_unlocked(
     prev_token = None
     versions: dict = {}
     if mode == "append":
+        from ._meta_io import admit_append
+
         m = _read_text_meta(spark, path)
-        if m["status"] == "__building__":
-            raise ValueError(
-                "index is mid-rebuild (status '__building__') — rebuild "
-                "it with write_text_index(mode='overwrite')"
-            )
-        if append_token is not None and m["token"] == append_token:
+        if admit_append(m, path, append_token, "write_text_index"):
             return  # this batch's append already committed — a retry
-        if m["status"] == "__appending__":
-            if (m["pending_token"] is not None and append_token is not None
-                    and m["pending_token"] != append_token):
-                raise ValueError(
-                    f"index at {path!r} has an in-flight append with "
-                    f"token {m['pending_token']!r}; refusing append "
-                    f"with token {append_token!r} — re-run the dead "
-                    "append to completion first (appends are sequential)"
-                )
-        elif m["status"] != "committed":
-            raise ValueError(
-                f"index at {path!r} has status {m['status']!r} — finish "
-                "the in-flight maintenance first, then append"
-            )
         if n_buckets not in (None, m["n_buckets"]):
             raise ValueError(
                 f"append n_buckets={n_buckets} does not match the "
@@ -323,14 +272,11 @@ def write_text_index(
 ) -> None:
     """Public face of :func:`_write_text_index_unlocked` (see its
     docstring), under the index's single-writer lease."""
-    from .dedup import acquire_index_lease, release_index_lease
+    from .dedup import index_lease
 
-    lt = acquire_index_lease(path, f"text-{mode}")
-    try:
+    with index_lease(path, f"text-{mode}"):
         _write_text_index_unlocked(
             docs, path, id_col, text_col, n_buckets, mode, append_token)
-    finally:
-        release_index_lease(path, lt)
 
 
 def bm25_indexed(
@@ -501,13 +447,10 @@ def bm25_indexed(
 def compact_text_index(spark, path: str) -> None:
     """Public face of :func:`_compact_text_index_unlocked`, under the
     single-writer lease."""
-    from .dedup import acquire_index_lease, release_index_lease
+    from .dedup import index_lease
 
-    lt = acquire_index_lease(path, "text-compact")
-    try:
+    with index_lease(path, "text-compact"):
         _compact_text_index_unlocked(spark, path)
-    finally:
-        release_index_lease(path, lt)
 
 
 def _compact_text_index_unlocked(spark, path: str) -> None:
@@ -521,17 +464,13 @@ def _compact_text_index_unlocked(spark, path: str) -> None:
     append token preserved). A pre-r10 index left mid-swap
     (``'__compacting__'``) is finished with the legacy move-based
     recovery."""
-    from .dedup import _dir_exists, _gc_table_versions, _mv_dir, _rm_dir
+    from ._meta_io import finish_legacy_swap
+    from .dedup import _gc_table_versions
 
     m = _read_text_meta(spark, path)
 
     if m["status"] == "__compacting__":
-        # legacy (pre-r10) mid-swap recovery
-        for table in ("postings", "termstats"):
-            comp = f"{path}/{table}_compact"
-            if _dir_exists(comp):
-                _rm_dir(f"{path}/{table}")
-                _mv_dir(comp, f"{path}/{table}")
+        finish_legacy_swap(path, ("postings", "termstats"))
         _write_text_meta(spark, path, m["n_buckets"], m["id_col"],
                          "committed", m["n_docs"], m["n_docs_tok"],
                          m["sum_dl"], m["token"])
@@ -683,12 +622,7 @@ def index_documents_stream(
     are sequential by design, enforced by the writer lease). Returns
     the started ``StreamingQuery``."""
     sink = _stream_text_sink(index_path, id_col, text_col)
-    writer = (
-        df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if query_name:
-        writer = writer.queryName(query_name)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    from ..streaming.pipeline import start_foreach_batch
+
+    return start_foreach_batch(df, sink, checkpoint_dir, query_name,
+                               trigger_available_now)

@@ -1933,12 +1933,7 @@ def write_avro_stream(
     sink = _stream_batch_writer(
         schema, path, codec, block_records, block_bytes, codec_level, engine
     )
-    writer = (
-        df.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if query_name:
-        writer = writer.queryName(query_name)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    from ..streaming.pipeline import start_foreach_batch
+
+    return start_foreach_batch(df, sink, checkpoint_dir, query_name,
+                               trigger_available_now)

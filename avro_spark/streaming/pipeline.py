@@ -46,15 +46,65 @@ def stream_source(
     read of the same path (cheap: parquet footers only).
     ``path_glob_filter`` selects matching files inside the directory —
     the way to stream ONE table file out of a directory of tables (the
-    file source refuses a bare file path: 'basePath' must be a dir)."""
+    file source refuses a bare file path: 'basePath' must be a dir).
+    A filter that matches no file raises ``ValueError``: the stream
+    would otherwise read zero rows without error."""
     if schema is None:
         schema = spark.read.format(fmt).load(path).schema
     reader = spark.readStream.format(fmt).schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     if path_glob_filter is not None:
+        if not _glob_matches_a_file(spark, path, path_glob_filter):
+            raise ValueError(
+                f"stream_source: pathGlobFilter {path_glob_filter!r} "
+                f"matches no file under {path!r} — the stream would "
+                "read zero rows (the filter matches FILE names, so a "
+                "directory-style table such as "
+                "'events.parquet/part-0.parquet' never matches it)"
+            )
         reader = reader.option("pathGlobFilter", path_glob_filter)
     return reader.load(path)
+
+
+def _glob_matches_a_file(spark: SparkSession, path: str, glob: str) -> bool:
+    """True iff some file under ``path`` (recursively, as the file
+    source lists it) has a name Hadoop's ``GlobFilter`` — the filter
+    behind the ``pathGlobFilter`` option — accepts."""
+    sc = spark.sparkContext
+    hadoop_fs = sc._jvm.org.apache.hadoop.fs
+    root = hadoop_fs.Path(path)
+    accept = hadoop_fs.GlobFilter(glob)
+    files = root.getFileSystem(sc._jsc.hadoopConfiguration()) \
+        .listFiles(root, True)
+    while files.hasNext():
+        if accept.accept(files.next().getPath()):
+            return True
+    return False
+
+
+def start_foreach_batch(
+    df: DataFrame,
+    sink,
+    checkpoint_dir: str,
+    query_name: Optional[str],
+    trigger_available_now: bool,
+):
+    """Start ``df.writeStream.foreachBatch(sink)`` checkpointed at
+    ``checkpoint_dir`` — the start of every exactly-once sink (the
+    index-ingest and incremental-dedup streams, the OCF writer).
+    ``trigger_available_now`` drains what is available, then stops;
+    otherwise the default micro-batch trigger runs until
+    ``query.stop()``. Returns the started ``StreamingQuery``."""
+    writer = (
+        df.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if query_name:
+        writer = writer.queryName(query_name)
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def stream_transform(df: DataFrame, compiled, which: str = "flatten") -> DataFrame:

@@ -285,6 +285,15 @@ def test_empty_meta_probes_loudly(spark, tmp_path):
         D.dedup_against_index(spark, batch, idx, "doc_id", "text")
 
 
+def test_missing_meta_probes_loudly(spark, tmp_path):
+    """A path that is not a MinHash index fails with the same ValueError
+    as the other four families, not a raw AnalysisException."""
+    _, batch = _docs(spark)
+    with pytest.raises(ValueError, match="no MinHash index meta"):
+        D.dedup_against_index(spark, batch, str(tmp_path / "nope"),
+                              "doc_id", "text")
+
+
 def test_candidate_pushdown_prunes_the_shingle_scan(spark, tmp_path):
     """r8 (VERDICT #2): the probe's verify stage pushes the bounded
     candidate-id set into the shingles parquet scan (`In(id, ...)` in

@@ -463,3 +463,20 @@ def test_retrain_ivfpq_index(spark, tmp_path):
     # stats see a healthy index (no orphans, no duplicates)
     st = Q.ivfpq_index_stats(spark, path)
     assert st["orphan_partitions"] == 0 and st["duplicate_rows"] == 0
+
+
+def test_committed_rows_leave_out_null_vectors(spark, tmp_path):
+    """A null vector has no centroid: its row lands in the default
+    partition, which no probe scans, and the committed row count is the
+    count of probe-visible rows."""
+    emb, cents, books, q, path = _setup(spark, tmp_path)
+    live = emb.select("vec_id", "embedding")
+    dead = live.limit(1).select(
+        (F.col("vec_id") + 1_000_000).alias("vec_id"),
+        F.lit(None).cast(emb.schema["embedding"].dataType)
+        .alias("embedding"))
+    Q.write_ivfpq_index(live.unionByName(dead), cents, books, path)
+    m = Q._read_ivfpq_meta(spark, path)
+    visible = spark.read.parquet(f"{path}/codes").where(
+        F.col("centroid_id").isin(m["dir_ids"])).count()
+    assert m["rows"] == visible == emb.count()

@@ -253,3 +253,69 @@ def test_spark_registry_route_reads_batch_id_by_name(spark, tmp_path,
     pq.write_table(pa.table({"junk": [1]}), str(bad / "part-b.parquet"))
     with pytest.raises(AnalysisException, match="batch_id"):
         D._read_batch_registry(spark, str(bad))
+
+
+_CENTS = [[1.0, 0.5], [-2.25, 3.0]]
+_BOOKS = [[[0.1], [0.2]], [[1.5], [-1.0]]]
+
+
+def _minhash_meta(spark, p):
+    D._write_index_meta_row(spark, p, 16, 4, 3, 1, "xxhash64",
+                            "__appending__", None, "batch3",
+                            {"shingles": 2, "bands": 1})
+    return D._read_index_meta(spark, p)
+
+
+def _exact_meta(spark, p):
+    from avro_spark.functions import exact_index as X
+
+    X._write_exact_meta(spark, p, 8, "doc_id", "committed", 90, None,
+                        None, {"fps": 1})
+    return X._read_exact_meta(spark, p)
+
+
+def _text_meta(spark, p):
+    from avro_spark.functions import text_index as T
+
+    T._write_text_meta(spark, p, 8, "doc_id", "committed", 10, 9, 123,
+                       "b0", None, {"postings": 1, "termstats": 1})
+    return T._read_text_meta(spark, p)
+
+
+def _ivf_meta(spark, p):
+    from avro_spark.functions import similarity as S
+
+    S._write_ivf_meta(spark, p, _CENTS, "committed", 7, None, None, None,
+                      {"data": 1}, [0, 5])
+    return S._read_ivf_meta(spark, p)
+
+
+def _ivfpq_meta(spark, p):
+    from avro_spark.functions import ivfpq_index as Q
+
+    Q._write_ivfpq_meta(spark, p, _CENTS, _BOOKS, "__splitting__", 7,
+                        "b1", None, 1, None, [0, 5])
+    return Q._read_ivfpq_meta(spark, p)
+
+
+@pytest.mark.parametrize("write_and_read", [
+    _minhash_meta, _exact_meta, _text_meta, _ivf_meta, _ivfpq_meta,
+], ids=["minhash", "exact", "text", "ivf", "ivfpq"])
+def test_family_meta_row_same_on_both_routes(spark, tmp_path, monkeypatch,
+                                             write_and_read):
+    """Each family's meta row, committed through the driver-local fast
+    path and through the Spark route non-local URIs take, has the same
+    column types and values (nested arrays and null tokens included),
+    and the family reader returns the same dict from either route."""
+    local, remote = str(tmp_path / "local"), str(tmp_path / "spark")
+    got_local = write_and_read(spark, local)
+    with monkeypatch.context() as mp:
+        mp.setattr(M, "_local_dir", lambda uri: None)
+        got_remote = write_and_read(spark, remote)
+    a = spark.read.parquet(f"{local}/meta")
+    b = spark.read.parquet(f"{remote}/meta")
+    assert a.dtypes == b.dtypes
+    assert a.head().asDict() == b.head().asDict()
+    assert got_local == got_remote
+    # the Spark route really ran: Spark part files, no fast-path file
+    assert "part-00000-meta.parquet" not in os.listdir(f"{remote}/meta")

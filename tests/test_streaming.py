@@ -474,3 +474,18 @@ def test_stream_avro_ocf_sink_exactly_once(spark, tmp_path):
     sink(extra.repartition(2), 8)
     assert not os.path.exists(stale)
     assert read_avro_files(spark, out, sch).count() == 300
+
+
+def test_stream_source_glob_matching_no_file_raises(spark, tmp_path):
+    """pathGlobFilter matches FILE names: against a directory-style
+    table ('events.parquet/part-0.parquet') it matches nothing and the
+    stream would read zero rows — stream_source refuses instead."""
+    ev = spark.read.parquet(f"{SF_DIR}/events.parquet").limit(5)
+    ev.write.parquet(str(tmp_path / "events.parquet"))
+    with pytest.raises(ValueError, match="matches no file"):
+        ST.stream_source(spark, str(tmp_path), schema=ev.schema,
+                         path_glob_filter="events.parquet")
+    # a glob that names the part files is accepted
+    src = ST.stream_source(spark, str(tmp_path), schema=ev.schema,
+                           path_glob_filter="part-*.parquet")
+    assert src.isStreaming

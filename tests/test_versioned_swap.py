@@ -11,7 +11,9 @@ build / append / compact / split / probe across all five index
 families must complete without ever wanting a move. (The legacy
 ``'__compacting__'``/``'__splitting__'`` recovery paths for indexes
 left mid-swap by pre-r10 code still move — they are exercised by the
-per-family tests, not here.)
+per-family tests, not here.) The three lifecycle tests run on both
+meta-row routes: the driver-local fast path and the Spark route every
+non-local URI takes.
 """
 
 from __future__ import annotations
@@ -21,6 +23,7 @@ from pyspark.sql import functions as F
 
 import avro_spark.functions.dedup as D
 import avro_spark.functions.similarity as S
+from avro_spark.functions import _meta_io as M
 from avro_spark.functions import exact_index as X
 from avro_spark.functions import ivfpq_index as Q
 from avro_spark.functions import text_index as T
@@ -42,12 +45,22 @@ def no_rename(monkeypatch):
     monkeypatch.setattr(D, "_mv_dir", _refuse)
 
 
+@pytest.fixture(params=["local", "spark"])
+def meta_route(request, monkeypatch):
+    """The route every meta row commits through: the driver-local fast
+    path, or the Spark route a non-local URI takes."""
+    if request.param == "spark":
+        monkeypatch.setattr(M, "_local_dir", lambda uri: None)
+    return request.param
+
+
 def _docs(spark, lo, hi):
     return spark.read.parquet(f"{SF_DIR}/documents.parquet") \
         .where(f"doc_id >= {lo} and doc_id < {hi}").select("doc_id", "text")
 
 
-def test_minhash_lifecycle_never_renames(spark, tmp_path, no_rename):
+def test_minhash_lifecycle_never_renames(spark, tmp_path, no_rename,
+                                         meta_route):
     idx = str(tmp_path / "mh")
     kw = dict(num_hashes=16, bands=4, shingle_n=3)
     D.write_minhash_index(_docs(spark, 0, 60), idx, "doc_id", "text", **kw)
@@ -70,7 +83,8 @@ def test_minhash_lifecycle_never_renames(spark, tmp_path, no_rename):
         "shingles": 2, "bands": 2}
 
 
-def test_text_and_exact_lifecycle_never_rename(spark, tmp_path, no_rename):
+def test_text_and_exact_lifecycle_never_rename(spark, tmp_path, no_rename,
+                                               meta_route):
     ti = str(tmp_path / "ti")
     T.write_text_index(_docs(spark, 0, 60), ti, n_buckets=8)
     T.write_text_index(_docs(spark, 60, 90), ti, n_buckets=None,
@@ -101,7 +115,8 @@ def test_text_and_exact_lifecycle_never_rename(spark, tmp_path, no_rename):
         spark, batch, xi).collect()} == before_x
 
 
-def test_vector_lifecycle_never_renames(spark, tmp_path, no_rename):
+def test_vector_lifecycle_never_renames(spark, tmp_path, no_rename,
+                                        meta_route):
     """IVF + IVF-PQ: append → split (fresh dir ids) → compact
     (version flip) → probe, all with renames forbidden."""
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
