@@ -11,6 +11,8 @@ place that knows its storage side:
   layouts lack (:data:`LIFECYCLE`).
 * ``admit_append``: the ``__building__`` / ``__appending__`` /
   append-token admission check every ``mode="append"`` runs first.
+* ``require_committed``: the refusal every probe, compaction, split
+  and retrain runs first.
 * ``finish_legacy_swap``: the pre-r10 ``'__compacting__'`` dir moves.
 * ``_versions_json`` / ``_versions_of``: the table-version pointer map
   a compaction commits by overwriting the meta row.
@@ -55,6 +57,7 @@ __all__ = [
     "admit_append",
     "finish_legacy_swap",
     "read_meta",
+    "require_committed",
     "write_meta",
     "try_write_meta_row",
     "try_read_meta_row",
@@ -404,6 +407,25 @@ def admit_append(m: dict, path: str, append_token, writer: str) -> bool:
             "own crash), then append"
         )
     return False
+
+
+def require_committed(m: dict, path: str, then: str) -> None:
+    """Refuse to ``then`` (``"compact"``, ``"split"``, ``"retrain"``,
+    ``"probe"``) an index whose meta row ``m`` is not committed: a dead
+    rebuild, append or maintenance operation must be re-run to
+    completion first (each recovers its own crash). Writes nothing."""
+    status = m["status"]
+    if status == "committed":
+        return
+    op = {"__appending__": "append",
+          "__building__": "rebuild"}.get(status, "maintenance operation")
+    if then == "probe":
+        what = f"{'an' if op == 'append' else 'a'} {op} died part-way; " \
+               f"re-run the SAME {op} to completion"
+    else:
+        what = f"finish the in-flight {op} first (re-run the SAME {op})"
+    raise ValueError(
+        f"index at {path!r} has status {status!r} — {what}, then {then}")
 
 
 def finish_legacy_swap(path: str, tables) -> None:

@@ -37,6 +37,7 @@ from ._meta_io import (
     admit_append,
     finish_legacy_swap,
     read_meta,
+    require_committed,
     write_meta,
 )
 from .text import let, normalize_text, ws_tokens
@@ -729,20 +730,8 @@ def dedup_against_index(
     computed over FULL-WIDTH hashed shingle sets (equal to gram Jaccard
     up to ~2^-60 collisions per pair)."""
     m = _read_index_meta(spark, path)
-    if m["status"] == "__appending__":
-        raise ValueError(
-            f"index at {path!r} has status '__appending__' — an append "
-            "died between its table writes, so probes would silently "
-            "under-recall the half-appended docs; re-run the SAME "
-            "append to completion, then probe"
-        )
-    if m["status"] != "committed":
-        raise ValueError(
-            f"index at {path!r} has status {m['status']!r} — a "
-            "maintenance operation died mid-way; re-run it to "
-            "completion (compact_minhash_index recovers its own "
-            "crashes), then probe"
-        )
+    # a half-applied append would silently under-recall its docs
+    require_committed(m, path, "probe")
     fn = _index_hash(m["hash_fn"])
     # ``_hdocs``: internal — a precomputed/persisted _hashed_docs frame
     # for THIS batch with THIS index's (shingle_n, hash_fn), so a caller
@@ -1305,12 +1294,7 @@ def _compact_minhash_index_unlocked(spark, path: str) -> None:
             m["seed"], m["hash_fn"], "committed", m["token"],
         )
         return
-    if m["status"] != "committed":
-        raise ValueError(
-            f"index at {path!r} has status {m['status']!r} — finish the "
-            "in-flight append first (re-run the same append), then "
-            "compact"
-        )
+    require_committed(m, path, "compact")
     _index_hash(m["hash_fn"])  # a dead REBUILD marker refuses here
     vers = m["versions"]
     new_vers = {"shingles": vers.get("shingles", 0) + 1,

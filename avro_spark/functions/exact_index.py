@@ -58,6 +58,7 @@ from ._meta_io import (
     admit_append,
     finish_legacy_swap,
     read_meta,
+    require_committed,
     write_meta,
 )
 from .dedup import _gc_table_versions, _native_id, _vdir, content_fingerprint
@@ -286,12 +287,7 @@ def dedup_exact_against_index(
     ``max_literal_fps`` when probing a HUGE index with a mid-sized
     batch and the footer pruning is worth seconds of driver time."""
     m = _read_exact_meta(spark, path)
-    if m["status"] != "committed":
-        raise ValueError(
-            f"exact-dedup index at {path!r} has status {m['status']!r} "
-            "— a rebuild or append died part-way; re-run it to "
-            "completion, then probe"
-        )
+    require_committed(m, path, "probe")
     if id_col != m["id_col"]:
         raise ValueError(
             f"probe id_col={id_col!r} does not match the index's "
@@ -368,12 +364,7 @@ def _compact_exact_index_unlocked(spark, path: str) -> None:
                           "committed", m["n_docs"], m["token"],
                           layout=m["layout"])
         return
-    if m["status"] != "committed":
-        raise ValueError(
-            f"index at {path!r} has status {m['status']!r} — finish the "
-            "in-flight append first (re-run the same append), then "
-            "compact"
-        )
+    require_committed(m, path, "compact")
     versions = _rewrite_flat(spark, path, m)
     # THE commit: one meta overwrite flips the fps pointer
     _write_exact_meta(spark, path, m["n_buckets"], m["id_col"],

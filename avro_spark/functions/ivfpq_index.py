@@ -38,36 +38,51 @@ retry of a COMMITTED batch no-ops on the token, a different batch
 against a dead append is refused loudly, and appends against a
 ``'__compacting__'`` index are refused.
 
-No Python UDFs anywhere: encode/reconstruct/score are the codegen'd
-higher-order-function expressions from :mod:`similarity`.
+Encode/reconstruct/score are :mod:`similarity`'s vector scorers —
+compiled JVM UDFs when the codec jar is available, float-identical
+higher-order-function expressions otherwise; no Python worker runs.
+The inverted-file machinery itself — probe ranking, candidate join,
+split, retrain, compaction and footer stats — is :mod:`similarity`'s
+IVF kernel over the table tuple ``("codes", "raw")``; this module adds
+the PQ payload, the shortlist rerank and its own meta row.
 """
 
 from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._meta_io import (
-    LIFECYCLE,
-    _versions_json,
-    admit_append,
-    finish_legacy_swap,
-    read_meta,
-    write_meta,
-)
+from ._meta_io import admit_append, read_meta, require_committed, write_meta
 from .similarity import (
     _argmax_centroid,
-    _array_lit,
-    _normalize_rows,
+    _compact_tables,
+    _dir_of_position,
+    _ivf_candidates,
+    _ivf_meta,
+    _ivf_meta_fields,
+    _live,
+    _partition_footers,
+    _partition_health,
+    _probe_dirs,
+    _require_pinned,
+    _retrain_tables,
+    _scan_parts,
+    _split_tables,
+    _stored_id_col,
+    _table_dir,
+    _topk,
     as_double,
-    dot,
     dot_fast,
     l2_norm,
     pq_codes,
     pq_reconstruct,
 )
+
+#: the index's tables — the vectors live in the LAST one (the kernel's
+#: convention); the codes relabel through an id join
+_TABLES = ("codes", "raw")
 
 
 def _write_ivfpq_meta(
@@ -90,53 +105,37 @@ def _write_ivfpq_meta(
     → physical-partition indirection whose single overwrite here IS
     the atomic commit of a compaction/split (see
     :func:`similarity._write_ivf_meta`)."""
-    if dir_ids is None:
-        dir_ids = list(range(len(centroids)))
-    write_meta(spark, path, [
-        ("centroids", "array<array<double>>",
-         [[float(x) for x in c] for c in centroids]),
+    fields = _ivf_meta_fields(centroids, status, rows, token,
+                              pending_token, split_cid, versions, dir_ids)
+    # column order: centroids, codebooks, dim, m, ksub, norm, ...
+    fields[1:2] = [
         ("codebooks", "array<array<array<double>>>",
          [[[float(x) for x in c] for c in book] for book in codebooks]),
-        ("dim", "int", int(len(centroids[0]))),
+        fields[1],
         ("m", "int", int(len(codebooks))),
         ("ksub", "int", int(len(codebooks[0]))),
-        ("norm", "string", "l2-cosine"),
-        ("status", "string", status),
-        ("rows", "long", int(rows)),
-        ("token", "string", token),
-        ("pending_token", "string", pending_token),
-        ("split_cid", "int",
-         int(split_cid) if split_cid is not None else None),
-        ("versions", "string", _versions_json(versions)),
-        ("dir_ids", "array<int>", [int(d) for d in dir_ids]),
-    ])
+    ]
+    write_meta(spark, path, fields)
 
 
 def _read_ivfpq_meta(spark, path: str) -> dict:
     d = read_meta(spark, path, "IVF-PQ", "write_ivfpq_index")
-    cents = [[float(x) for x in c] for c in d["centroids"]]
-    dir_ids = d.get("dir_ids")
     return {
-        "centroids": cents,
+        **_ivf_meta(d),
         "codebooks": [
             [[float(x) for x in c] for c in book] for book in d["codebooks"]
         ],
-        "dim": d["dim"], "m": d["m"], "ksub": d["ksub"], "norm": d["norm"],
-        "rows": d["rows"],
-        **{k: d[k] for k in LIFECYCLE},
-        "split_cid": d.get("split_cid"),
-        # pre-r10 meta rows: position i == centroid_id i
-        "dir_ids": ([int(x) for x in dir_ids] if dir_ids is not None
-                    else list(range(len(cents)))),
+        "m": d["m"], "ksub": d["ksub"],
     }
 
 
-def _pq_dir(path: str, m: dict, table: str) -> str:
-    """Current physical dir of ``table`` (``codes``/``raw``) per the
-    meta row's version pointers (:func:`dedup._vdir`)."""
-    from .dedup import _vdir
-
-    return _vdir(path, table, m["versions"].get(table, 0))
+def _pq_committer(spark, path: str, m: dict):
+    """The IVF-PQ family's commit for the shared kernel: one committed
+    meta row keeping ``m``'s codebooks and token, written through this
+    module's ``_write_ivfpq_meta`` as looked up at call time."""
+    return lambda cents, rows, **kw: _write_ivfpq_meta(
+        spark, path, cents, m["codebooks"], "committed", rows, m["token"],
+        **kw)
 
 
 def _write_ivfpq_index_unlocked(
@@ -167,27 +166,13 @@ def _write_ivfpq_index_unlocked(
         m = _read_ivfpq_meta(spark, path)
         if admit_append(m, path, append_token, "write_ivfpq_index"):
             return  # this batch's append already committed — a retry
-        if centroids is None:
-            centroids = m["centroids"]
-        elif [[float(x) for x in c] for c in centroids] != m["centroids"]:
-            raise ValueError(
-                "append centroids do not match the index's pinned "
-                "centroid matrix — drifted centroids would assign new "
-                "vectors to the wrong partitions; pass centroids=None"
-            )
-        if codebooks is None:
-            codebooks = m["codebooks"]
-        elif [
-            [[float(x) for x in c] for c in b] for b in codebooks
-        ] != m["codebooks"]:
-            raise ValueError(
-                "append codebooks do not match the index's pinned PQ "
-                "codebooks — drifted codebooks decode stored codes "
-                "against the wrong entries; pass codebooks=None"
-            )
+        centroids = _require_pinned("append centroids", centroids,
+                                    m["centroids"])
+        codebooks = _require_pinned("append codebooks", codebooks,
+                                    m["codebooks"])
         prev_token = m["token"]
         versions, dir_ids = m["versions"], m["dir_ids"]
-        codes_dir, raw_dir = _pq_dir(path, m, "codes"), _pq_dir(path, m, "raw")
+        codes_dir, raw_dir = (_table_dir(path, m, t) for t in _TABLES)
         # in-flight marker FIRST (carries the PREVIOUS committed token +
         # this attempt's pending_token), commit LAST — a crash between
         # the codes and raw writes fails probes loudly, and recovery is
@@ -207,8 +192,6 @@ def _write_ivfpq_index_unlocked(
                           "__building__", 0)
     else:
         raise ValueError(f"bad mode: {mode}")
-    from .similarity import _dir_of_position
-
     to_dir = _dir_of_position(dir_ids)
     # ONE pass computes assignment + codes + norms (all narrow); persist
     # so the two table writes don't re-encode the corpus from source
@@ -281,7 +264,7 @@ def _write_ivfpq_index_unlocked(
     if mode == "overwrite":
         from .dedup import _gc_table_versions
 
-        for t in ("codes", "raw"):
+        for t in _TABLES:
             _gc_table_versions(path, t, 0)
 
 
@@ -354,123 +337,40 @@ def knn_ivfpq_indexed(
     the nested-loop broadcast to exploding probe sets and hash-joining
     on ``centroid_id`` at fleet size (identical results)."""
     m = _read_ivfpq_meta(spark, path)
-    if m["status"] != "committed":
-        raise ValueError(
-            f"IVF-PQ index at {path!r} has status {m['status']!r} — a "
-            "rebuild or append died part-way; re-run it to completion, "
-            "then probe"
-        )
-    if centroids is not None and (
-        [[float(x) for x in c] for c in centroids] != m["centroids"]
-    ):
-        raise ValueError(
-            "supplied centroids do not match the matrix this index was "
-            "built with — pass centroids=None to use the pinned matrix"
-        )
-    if codebooks is not None and (
-        [[[float(x) for x in c] for c in b] for b in codebooks]
-        != m["codebooks"]
-    ):
-        raise ValueError(
-            "supplied codebooks do not match the PQ codebooks this "
-            "index was built with — pass codebooks=None to use the "
-            "pinned ones"
-        )
-    centroids, codebooks = m["centroids"], m["codebooks"]
-    dim = len(centroids[0])
-    cmat = _array_lit(_normalize_rows(centroids))
-    nprobe = min(nprobe, len(centroids))
+    require_committed(m, path, "probe")
+    dim = len(_require_pinned("supplied centroids", centroids,
+                              m["centroids"])[0])
+    codebooks = _require_pinned("supplied codebooks", codebooks,
+                                m["codebooks"])
     rerank = max(rerank, k)
-
-    def probes(q):
-        # sim desc, ties → LOWEST cid (matches _argmax_centroid)
-        scored = F.transform(
-            cmat,
-            lambda c, i: F.struct(
-                dot(q, c).alias("sim"),
-                (-i).cast("int").alias("ncid"),
-                i.cast("int").alias("cid"),
-            ),
-        )
-        return F.transform(
-            F.slice(F.reverse(F.array_sort(scored)), 1, nprobe),
-            lambda s: s["cid"],
-        )
-
-    from .similarity import (
-        _BROADCAST_FLEET_CAP,
-        _EQUIJOIN_FLEET,
-        _dir_of_position,
-    )
-    from .text import let as _let
-
-    to_dir = _dir_of_position(m["dir_ids"])
     probe_sets = queries.select(
         F.col(query_id_col),
         as_double(F.col(query_vec_col)).alias("_qv"),
         l2_norm(query_vec_col, dim).alias("_nq"),
-        F.transform(
-            _let(as_double(F.col(query_vec_col)), probes),
-            lambda p: to_dir(p),
-        ).alias("_probe_cids"),
+        _probe_dirs(query_vec_col, m, nprobe).alias("_probe_cids"),
         # checkpoint: this small frame feeds the driver-side probe
         # collect, the approx broadcast join, AND the rerank join —
         # without truncation an expensive upstream `queries` plan would
         # execute three times per probe
     ).localCheckpoint(eager=True)
-    from .dedup import _PUSHDOWN_MIN_INDEX_BYTES, _dir_bytes_at_least
+    codes_dir, raw_dir = (_table_dir(path, m, t) for t in _TABLES)
 
-    if prune_min_index_bytes is None:
-        prune_min_index_bytes = _PUSHDOWN_MIN_INDEX_BYTES
-    # SCALE-ADAPTIVE (r11): below one scan task's worth of codes+raw the
-    # centroid prune and the rerank id-pushdown cannot cut IO, and their
-    # probe-set/shortlist collects are extra actions per probe — skip
-    # both (identical results; at corpus scale both engage as before)
-    small_index = probe_join == "auto" and not (
-        _dir_bytes_at_least(_pq_dir(path, m, "codes"),
-                            prune_min_index_bytes)
-        or _dir_bytes_at_least(_pq_dir(path, m, "raw"),
-                               prune_min_index_bytes)
-    )
-    if small_index:
-        probed = None
-        probe_rows = []
-    else:
-        # bounded driver state: |queries| × nprobe ints — the scan filter
-        probe_rows = probe_sets.select("_probe_cids").collect()
-        probed = sorted({int(c) for r in probe_rows for c in r[0]})
-    # dropDuplicates: a retried append re-appends its rows; one code row
-    # per id keeps the shortlist window from double-counting
-    codes = spark.read.parquet(_pq_dir(path, m, "codes"))
-    if probed is not None:
-        codes = codes.where(F.col("centroid_id").isin(probed))
-    codes = codes.dropDuplicates([id_col])
-    recon = pq_reconstruct(F.col("codes"), codebooks)
-    big = codes.select(
-        F.col(id_col), F.col("centroid_id"), recon.alias("_rv")
-    ).select(
-        id_col, "centroid_id", "_rv", l2_norm("_rv").alias("_nr")
-    )
-    if probe_join not in ("auto", "broadcast", "equi"):
-        raise ValueError(f"bad probe_join: {probe_join}")
-    use_equi = probe_join == "equi" or (
-        probe_join == "auto" and not small_index
-        and len(probe_rows) >= _EQUIJOIN_FLEET)
-    if use_equi:
-        exploded = probe_sets.select(
-            query_id_col, "_qv", "_nq",
-            F.explode("_probe_cids").alias("centroid_id"),
-        )
-        if len(probe_rows) < _BROADCAST_FLEET_CAP:
-            exploded = F.broadcast(exploded)
-        cand = big.join(exploded, "centroid_id")
-        if exclude_self:
-            cand = cand.where(F.col(id_col) != F.col(query_id_col))
-    else:
-        cond = F.array_contains(F.col("_probe_cids"), F.col("centroid_id"))
-        if exclude_self:
-            cond = cond & (F.col(id_col) != F.col(query_id_col))
-        cand = big.join(F.broadcast(probe_sets), cond)
+    def scan(probed):
+        # dropDuplicates: a retried append re-appends its rows; one code
+        # row per id keeps the shortlist window from double-counting
+        codes = _scan_parts(spark, codes_dir, probed) \
+            .dropDuplicates([id_col])
+        recon = pq_reconstruct(F.col("codes"), codebooks)
+        return codes.select(
+            F.col(id_col), F.col("centroid_id"), recon.alias("_rv")
+        ).select(id_col, "centroid_id", "_rv", l2_norm("_rv").alias("_nr"))
+
+    # the prune (and the rerank's id pushdown below) engage once either
+    # table outgrows one scan task's worth of bytes
+    cand, probed = _ivf_candidates(
+        probe_sets, scan, (codes_dir, raw_dir), probe_join,
+        prune_min_index_bytes, exclude_self, id_col, query_id_col,
+        (query_id_col, "_qv", "_nq"), "_probe_cids")
     denom = F.col("_nr") * F.col("_nq")
     approx = cand.select(
         F.col(query_id_col),
@@ -479,18 +379,12 @@ def knn_ivfpq_indexed(
         .otherwise(F.lit(0.0))
         .alias("_ac"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("_ac"), F.col(id_col))
-    shortlist = (
-        approx.withColumn("_arank", F.row_number().over(w))
-        .where(F.col("_arank") <= rerank)
-        .select(query_id_col, id_col)
-        # the shortlist is |queries|·rerank rows — what the rerank
-        # exists to score; checkpoint so the code scan never re-runs
-        .localCheckpoint(eager=True)
-    )
-    raw = spark.read.parquet(_pq_dir(path, m, "raw"))
+    # the shortlist is |queries|·rerank rows — what the rerank exists
+    # to score; checkpoint so the code scan never re-runs
+    shortlist = _topk(approx, rerank, query_id_col, id_col, "_ac") \
+        .select(query_id_col, id_col).localCheckpoint(eager=True)
+    raw = _scan_parts(spark, raw_dir, probed)
     if probed is not None:
-        raw = raw.where(F.col("centroid_id").isin(probed))
         ids = [
             r[0]
             for r in shortlist.select(id_col).distinct()
@@ -514,41 +408,10 @@ def knn_ivfpq_indexed(
             .alias("cosine"),
         )
     )
-    w2 = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine"), F.col(id_col))
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, "rank", id_col, "cosine")
-    )
+    return _topk(exact, k, query_id_col, id_col, "cosine")
 
 
 # --------------------------------------- hot-centroid split maintenance
-def _finish_pq_split(spark, path: str, m: dict) -> None:
-    """LEGACY recovery only (pre-r10 ``'__splitting__'`` indexes) — the
-    two-table cousin of :func:`similarity._finish_split`: per table,
-    the old split partition's dir is removed only while its replacement
-    still waits in the ``*_split`` staging dir, so re-running after a
-    crash converges to the same end state. New splits never enter this
-    state (fresh-dir-id allocation + one meta flip)."""
-    from .dedup import _dir_exists, _list_split_dirs, _mv_dir, _rm_dir
-
-    cid = m["split_cid"]
-    for table in ("codes", "raw"):
-        data, split = f"{path}/{table}", f"{path}/{table}_split"
-        cid_pending = f"{split}/centroid_id={cid}"
-        if _dir_exists(cid_pending):
-            _rm_dir(f"{data}/centroid_id={cid}")
-            _mv_dir(cid_pending, f"{data}/centroid_id={cid}")
-        for name in _list_split_dirs(split):
-            _rm_dir(f"{data}/{name}")  # a crashed previous move's residue
-            _mv_dir(f"{split}/{name}", f"{data}/{name}")
-        _rm_dir(split)
-    rows = spark.read.parquet(f"{path}/codes").count()
-    _write_ivfpq_meta(spark, path, m["centroids"], m["codebooks"],
-                      "committed", rows, m["token"])
-
-
 def _split_ivfpq_centroid_unlocked(
     spark,
     path: str,
@@ -578,96 +441,8 @@ def _split_ivfpq_centroid_unlocked(
     index left mid-split (``'__splitting__'``) is finished with the
     legacy move-based recovery. Returns the new centroid matrix."""
     m = _read_ivfpq_meta(spark, path)
-    if m["status"] == "__splitting__":
-        # legacy (pre-r10) mid-split recovery
-        if m["split_cid"] != cid:
-            raise ValueError(
-                f"index at {path!r} is mid-split of centroid "
-                f"{m['split_cid']} — re-run split_ivfpq_centroid with "
-                f"that cid to finish it (got cid={cid})"
-            )
-        _finish_pq_split(spark, path, m)
-        return m["centroids"]
-    if m["status"] != "committed":
-        raise ValueError(
-            f"index at {path!r} has status {m['status']!r} — finish the "
-            "in-flight operation first, then split"
-        )
-    n = len(m["centroids"])
-    if not (0 <= cid < n):
-        raise ValueError(f"cid {cid} out of range for {n} centroids")
-    if k_sub < 2:
-        raise ValueError("k_sub must be at least 2")
-    from .similarity import kmeans_centroids
-
-    dir_ids = m["dir_ids"]
-    old_dir = dir_ids[cid]
-    codes_dir, raw_dir = _pq_dir(path, m, "codes"), _pq_dir(path, m, "raw")
-    raw_part = spark.read.parquet(raw_dir).where(
-        F.col("centroid_id") == old_dir)
-    id_col = [c for c in raw_part.columns
-              if c not in ("_v", "_nv", "centroid_id")][0]
-    n_part = raw_part.count()
-    if n_part < k_sub:
-        raise ValueError(
-            f"partition {cid} holds {n_part} vectors — cannot split "
-            f"into {k_sub} sub-centroids"
-        )
-    sub = kmeans_centroids(raw_part, k_sub, iters=iters, id_col=id_col,
-                           vec_col="_v")
-    new_cents = [list(c) for c in m["centroids"]]
-    new_cents[cid] = list(sub[0])
-    new_cents.extend(list(c) for c in sub[1:])
-    # FRESH physical partition ids across BOTH tables (deterministic:
-    # max+1..) — invisible until the meta flip names them in dir_ids
-    fresh = max(dir_ids) + 1
-    new_dirs = list(range(fresh, fresh + k_sub))
-    new_dir_ids = list(dir_ids)
-    new_dir_ids[cid] = new_dirs[0]
-    new_dir_ids.extend(new_dirs[1:])
-    local = _argmax_centroid(F.col("_v"), sub)
-    gid = F.when(local == 0, F.lit(new_dirs[0]))
-    for j in range(1, k_sub):
-        gid = gid.when(local == j, F.lit(new_dirs[j]))
-    reassigned = raw_part.select(
-        F.col(id_col), F.col("_v"), F.col("_nv"),
-        gid.cast("int").alias("centroid_id"),
-    ).localCheckpoint(eager=True)  # ONE assignment pass routes BOTH tables
-    # dynamic partition overwrite: each job replaces exactly the
-    # touched (fresh) partition dirs — a crashed attempt's residue
-    # included — and never touches a live partition; an empty
-    # sub-centroid simply writes no dir (the probe filter finds no
-    # rows, the right answer)
-    reassigned.repartition("centroid_id") \
-        .sortWithinPartitions("centroid_id", id_col) \
-        .write.mode("overwrite") \
-        .option("partitionOverwriteMode", "dynamic") \
-        .partitionBy("centroid_id").parquet(raw_dir)
-    # codes rows relabel by id against the new assignment — the m-byte
-    # codes themselves are codebook-pinned and never recomputed
-    codes_part = spark.read.parquet(codes_dir).where(
-        F.col("centroid_id") == old_dir).drop("centroid_id")
-    routing = reassigned.select(id_col, "centroid_id")
-    codes_part.join(F.broadcast(routing), id_col) \
-        .write.mode("overwrite") \
-        .option("partitionOverwriteMode", "dynamic") \
-        .partitionBy("centroid_id").parquet(codes_dir)
-    # THE commit: one meta overwrite installs matrix + indirection
-    # (token preserved — a split never consumes or produces a batch)
-    _write_ivfpq_meta(spark, path, new_cents, m["codebooks"],
-                      "committed", m["rows"], m["token"],
-                      versions=m["versions"], dir_ids=new_dir_ids)
-    # the old fat partitions are now orphaned — best-effort GC (the
-    # next compaction retires them regardless)
-    from .dedup import _rm_dir
-
-    for d in (f"{codes_dir}/centroid_id={old_dir}",
-              f"{raw_dir}/centroid_id={old_dir}"):
-        try:
-            _rm_dir(d)
-        except Exception:
-            pass
-    return new_cents
+    return _split_tables(spark, path, m, cid, k_sub, iters, _TABLES,
+                         _pq_committer(spark, path, m), "_v")
 
 
 def split_ivfpq_centroid(
@@ -703,51 +478,8 @@ def _retrain_ivfpq_index_unlocked(
     probes work throughout; pre-retrain matrices refused by the pin).
     Returns the new matrix."""
     m = _read_ivfpq_meta(spark, path)
-    if m["status"] != "committed":
-        raise ValueError(
-            f"index at {path!r} has status {m['status']!r} — finish the "
-            "in-flight operation first, then retrain"
-        )
-    from .dedup import _gc_table_versions, _vdir
-    from .similarity import kmeans_centroids
-
-    raw = spark.read.parquet(_pq_dir(path, m, "raw")).where(
-        F.col("centroid_id").isin(m["dir_ids"]))
-    id_col = [c for c in raw.columns
-              if c not in ("_v", "_nv", "centroid_id")][0]
-    k = k if k is not None else len(m["centroids"])
-    seed = m["centroids"] if k == len(m["centroids"]) else None
-    new_cents = kmeans_centroids(raw, k, iters=iters, id_col=id_col,
-                                 vec_col="_v", seed_centroids=seed)
-    new_vers = {
-        "codes": m["versions"].get("codes", 0) + 1,
-        "raw": m["versions"].get("raw", 0) + 1,
-    }
-    reassigned = raw.select(
-        F.col(id_col), F.col("_v"), F.col("_nv"),
-        _argmax_centroid(F.col("_v"), new_cents).alias("centroid_id"),
-    )
-    reassigned.repartition(len(new_cents), F.col("centroid_id")) \
-        .sortWithinPartitions("centroid_id", id_col) \
-        .write.mode("overwrite").partitionBy("centroid_id") \
-        .parquet(_vdir(path, "raw", new_vers["raw"]))
-    routing = spark.read.parquet(_vdir(path, "raw", new_vers["raw"])) \
-        .select(id_col, "centroid_id")
-    codes = spark.read.parquet(_pq_dir(path, m, "codes")).where(
-        F.col("centroid_id").isin(m["dir_ids"])).drop("centroid_id")
-    codes.join(routing, id_col) \
-        .repartition(len(new_cents), F.col("centroid_id")) \
-        .write.mode("overwrite").partitionBy("centroid_id") \
-        .parquet(_vdir(path, "codes", new_vers["codes"]))
-    rows = spark.read.parquet(
-        _vdir(path, "codes", new_vers["codes"])).count()
-    _write_ivfpq_meta(spark, path, new_cents, m["codebooks"],
-                      "committed", rows, m["token"],
-                      versions={**m["versions"], **new_vers},
-                      dir_ids=list(range(len(new_cents))))
-    for t in ("codes", "raw"):
-        _gc_table_versions(path, t, new_vers[t])
-    return new_cents
+    return _retrain_tables(spark, path, m, k, iters, _TABLES,
+                           _pq_committer(spark, path, m), "_v")
 
 
 def retrain_ivfpq_index(
@@ -816,83 +548,32 @@ def index_vectors_stream(
 
 def ivfpq_index_stats(spark, path: str) -> dict:
     """Health report (footer-only except one count-vs-distinct job):
-    meta status/dims, per-table file counts + footer rows, duplicate
-    rows (retry residue), and the measured codes:raw size ratio — the
-    compression claim as a number."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    from .dedup import _list_parquet_files, _open_listed
-
+    meta status/dims, per-table file counts, footer rows and bytes,
+    duplicate ids (retry residue), the measured codes:raw size ratio —
+    the compression claim as a number — and the codes table's
+    partition skew and ``maintenance_hint``, by the IVF index's rules
+    (:func:`similarity._partition_health`)."""
     m = _read_ivfpq_meta(spark, path)
     out = {
         "status": m["status"], "dim": m["dim"], "m": m["m"],
         "ksub": m["ksub"], "rows": m["rows"],
         "n_centroids": len(m["centroids"]),
+        "orphan_partitions": 0,
     }
-    import collections
-
-    live = {f"centroid_id={d}" for d in m["dir_ids"]}
-    orphan_dirs = set()
-    for table in ("codes", "raw"):
-        rows = 0
-        size = 0
-        n_files = 0
-        part_rows: collections.Counter = collections.Counter()
-        files = _list_parquet_files(_pq_dir(path, m, table),
-                                    recursive=True)
-        for fs_, fp in files:
-            d = os.path.dirname(fp)
-            part = d.rstrip("/").rsplit("/", 1)[-1]
-            if part not in live:
-                # residue of a crashed (never-committed) split —
-                # invisible to probes, collected by the next compact
-                orphan_dirs.add(f"{table}:{part}")
-                continue
-            n_files += 1
-            with _open_listed(fs_, fp) as fh:
-                md = pq.ParquetFile(fh).metadata
-                nr = md.num_rows
-            rows += nr
-            part_rows[d] += nr
-            size += (os.path.getsize(fp) if fs_ is None
-                     else fs_.get_file_info(fp).size)
-        out[f"{table}_files"] = n_files
-        out[f"{table}_rows"] = rows
-        out[f"{table}_bytes"] = size
+    for table in _TABLES:
+        parts, orphans = _partition_footers(_table_dir(path, m, table),
+                                            m["dir_ids"])
+        out["orphan_partitions"] += len(orphans)
+        for i, what in enumerate(("files", "rows", "bytes")):
+            out[f"{table}_{what}"] = sum(s[i] for s in parts.values())
         if table == "codes":
-            # the split_ivfpq_centroid trigger, footer-only as always
-            max_pr = max(part_rows.values()) if part_rows else 0
-            mean_pr = (rows / len(part_rows)) if part_rows else 0.0
-            out["max_rows_per_partition"] = int(max_pr)
-            out["partition_row_skew"] = (
-                round(max_pr / mean_pr, 2) if mean_pr else 0.0)
-            # maintenance advisory, as ivf_index_stats: many fat
-            # partitions → retrain; one → split that matrix position;
-            # many small files → compact
-            hot = [d for d, r in part_rows.items()
-                   if mean_pr and r > 2 * mean_pr]
-            out["hot_partitions"] = len(hot)
-            n_parts = len(part_rows)
-            if len(hot) > max(1, n_parts // 4):
-                out["maintenance_hint"] = "retrain"
-            elif len(hot) == 1:
-                phys = int(hot[0].rsplit("=", 1)[-1])
-                out["maintenance_hint"] = (
-                    f"split:{m['dir_ids'].index(phys)}")
-            elif part_rows and n_files > 8 * n_parts:
-                out["maintenance_hint"] = "compact"
-            else:
-                out["maintenance_hint"] = None
+            out.update(_partition_health(parts, m["dir_ids"]))
     out["codes_to_raw_ratio"] = (
         round(out["raw_bytes"] / out["codes_bytes"], 2)
         if out["codes_bytes"] else None
     )
-    out["orphan_partitions"] = len(orphan_dirs)
-    df = spark.read.parquet(_pq_dir(path, m, "codes")).where(
-        F.col("centroid_id").isin(m["dir_ids"]))
-    dup = df.count() - df.dropDuplicates([df.columns[0]]).count()
+    df = _live(spark, path, m, "codes")
+    dup = df.count() - df.dropDuplicates([_stored_id_col(df)]).count()
     out["duplicate_rows"] = int(dup)
     return out
 
@@ -909,49 +590,5 @@ def _compact_ivfpq_index_unlocked(spark, path: str) -> None:
     (garbage-collected with the old version dirs). A pre-r10 index
     left mid-swap (``'__compacting__'``) is finished with the legacy
     move-based recovery."""
-    from .dedup import _gc_table_versions
-
     m = _read_ivfpq_meta(spark, path)
-
-    if m["status"] == "__compacting__":
-        finish_legacy_swap(path, ("codes", "raw"))
-        rows = spark.read.parquet(f"{path}/codes").count()
-        _write_ivfpq_meta(spark, path, m["centroids"], m["codebooks"],
-                          "committed", rows, m["token"])
-        return
-    if m["status"] != "committed":
-        raise ValueError(
-            f"index at {path!r} has status {m['status']!r} — finish the "
-            "in-flight append first (re-run the same append), then "
-            "compact"
-        )
-    from .dedup import _vdir
-
-    n_cents = len(m["centroids"])
-    new_vers = {
-        "codes": m["versions"].get("codes", 0) + 1,
-        "raw": m["versions"].get("raw", 0) + 1,
-    }
-    codes = spark.read.parquet(_pq_dir(path, m, "codes")).where(
-        F.col("centroid_id").isin(m["dir_ids"]))
-    id_col = codes.columns[0]
-    codes.dropDuplicates([id_col]) \
-        .repartition(n_cents, F.col("centroid_id")) \
-        .write.mode("overwrite").partitionBy("centroid_id") \
-        .parquet(_vdir(path, "codes", new_vers["codes"]))
-    spark.read.parquet(_pq_dir(path, m, "raw")).where(
-        F.col("centroid_id").isin(m["dir_ids"])) \
-        .dropDuplicates([id_col]) \
-        .repartition(n_cents, F.col("centroid_id")) \
-        .sortWithinPartitions("centroid_id", id_col) \
-        .write.mode("overwrite").partitionBy("centroid_id") \
-        .parquet(_vdir(path, "raw", new_vers["raw"]))
-    rows = spark.read.parquet(
-        _vdir(path, "codes", new_vers["codes"])).count()
-    # THE commit: one meta overwrite flips both pointers
-    _write_ivfpq_meta(spark, path, m["centroids"], m["codebooks"],
-                      "committed", rows, m["token"],
-                      versions={**m["versions"], **new_vers},
-                      dir_ids=m["dir_ids"])
-    for t in ("codes", "raw"):
-        _gc_table_versions(path, t, new_vers[t])
+    _compact_tables(spark, path, m, _TABLES, _pq_committer(spark, path, m))

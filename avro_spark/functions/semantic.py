@@ -48,32 +48,11 @@ from pyspark.sql import functions as F
 
 from .similarity import (
     _argmax_centroid,
-    _array_lit,
-    _normalize_rows,
+    _probe_positions,
     as_double,
-    dot,
     dot_fast,
     l2_norm,
 )
-
-
-def _probe_positions(vec, centroids, nprobe: int):
-    """Top-``nprobe`` centroid positions by cosine for ``vec`` — the
-    IVF probe expression (sim desc, ties → lowest position, matching
-    :func:`similarity._argmax_centroid`'s assignment tie-break)."""
-    cmat = _array_lit(_normalize_rows(centroids))
-    scored = F.transform(
-        cmat,
-        lambda c, i: F.struct(
-            dot(vec, c).alias("sim"),
-            (-i).cast("int").alias("ncid"),
-            i.cast("int").alias("cid"),
-        ),
-    )
-    return F.transform(
-        F.slice(F.reverse(F.array_sort(scored)), 1, nprobe),
-        lambda s: s["cid"],
-    )
 
 
 def semantic_dedup(

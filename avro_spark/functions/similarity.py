@@ -26,7 +26,20 @@ drop the whole projection into interpreted mode. Centroids are
 L2-normalized driver-side so nearest-by-cosine is just argmax of a dot
 product (row norms are positive constants w.r.t. the argmax).
 
-No Python UDFs anywhere — higher-order functions keep it codegen'd.
+Execution routes: the vector scorers (dot, centroid argmax, PQ
+encode/decode) run as compiled JVM UDFs when the codec jar is
+available and fall back to float-identical higher-order-function
+expressions otherwise; ``engine="arrow"`` (brute-force kNN,
+decontamination) scores Arrow batches with numpy in Python workers
+via ``mapInArrow``.
+
+The persisted IVF index below is also the inverted-file kernel of the
+IVF-PQ index (:mod:`.ivfpq_index`): both families keep
+``centroid_id``-partitioned tables — IVF ``("data",)``, IVF-PQ
+``("codes", "raw")`` with the vectors in the LAST table — and share
+the probe ranking, the candidate join, the split, retrain and
+compaction passes and the footer stats, each committing through its
+own meta writer.
 """
 
 from __future__ import annotations
@@ -36,6 +49,16 @@ from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ._meta_io import (
+    LIFECYCLE,
+    _versions_json,
+    admit_append,
+    finish_legacy_swap,
+    read_meta,
+    require_committed,
+    write_meta,
+)
 
 
 def as_double(vec: Column) -> Column:
@@ -195,12 +218,7 @@ def knn_bruteforce(
         .otherwise(F.lit(0.0))
         .alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, "rank", id_col, "cosine")
-    )
+    return _topk(scored, k, query_id_col, id_col, "cosine")
 
 
 def _knn_bruteforce_arrow(
@@ -292,11 +310,19 @@ def _knn_bruteforce_arrow(
                     )
 
         scored = src.mapInArrow(score, schema=out_t)
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.col(id_col))
+    return _topk(scored, k, query_id_col, id_col, "cosine")
+
+
+def _topk(scored: DataFrame, k: int, query_id_col: str, id_col: str,
+          score_col: str) -> DataFrame:
+    """Per-query top-``k`` of ``scored`` by ``score_col`` desc, ties →
+    id asc: (query_id, rank, id, score)."""
+    w = Window.partitionBy(query_id_col).orderBy(F.desc(score_col),
+                                                 F.col(id_col))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select(query_id_col, "rank", id_col, "cosine")
+        .select(query_id_col, "rank", id_col, score_col)
     )
 
 
@@ -325,7 +351,8 @@ def _argmax_centroid(vec: Column, centroids: Sequence[Sequence[float]]) -> Colum
     """Nearest centroid id by cosine (ties → lowest id), as argmax of
     dot(vec, normalized_centroid): the vector's own norm is a positive
     per-row constant, so it never changes the argmax; zero-norm rows tie
-    everywhere and resolve to id 0, matching the cosine()==0.0 contract."""
+    everywhere and resolve to id 0, matching the cosine()==0.0 contract.
+    A null vector has no centroid (null), on both routes."""
     import json as _json
 
     rows = _normalize_rows(centroids)
@@ -348,7 +375,7 @@ def _argmax_centroid(vec: Column, centroids: Sequence[Sequence[float]]) -> Colum
         )
         return (-F.array_max(scored)["negid"]).cast("int")
 
-    return _let(as_double(vec), pick)
+    return F.when(vec.isNotNull(), _let(as_double(vec), pick))
 
 
 def assign_centroids(
@@ -450,29 +477,13 @@ def knn_ivf(
         l2_norm(vec_col, dim).alias("_nv"),
         _argmax_centroid(F.col(vec_col), centroids).alias("centroid_id"),
     )
-    cmat = _array_lit(_normalize_rows(centroids))
-
-    def probes(q: Column) -> Column:
-        # middle field -cid: after reverse (sim desc) ties prefer the
-        # LOWEST centroid id — matching _argmax_centroid's assignment
-        # tie-break, so tied rows are always in some probe's scan set
-        scored = F.transform(
-            cmat,
-            lambda c, i: F.struct(
-                dot(q, c).alias("sim"),
-                (-i).cast("int").alias("ncid"),
-                i.cast("int").alias("cid"),
-            ),
-        )
-        return F.transform(
-            F.slice(F.reverse(F.array_sort(scored)), 1, nprobe), lambda s: s["cid"]
-        )
-
     probe_sets = queries.select(
         F.col(query_id_col),
         F.col(query_vec_col),
         l2_norm(query_vec_col, dim).alias("_nq"),
-        _let(as_double(F.col(query_vec_col)), probes).alias("probe_cids"),
+        _let(as_double(F.col(query_vec_col)),
+             lambda q: _probe_positions(q, centroids, nprobe))
+        .alias("probe_cids"),
     )
     cond = F.array_contains(F.col("probe_cids"), F.col("centroid_id"))
     if exclude_self:
@@ -489,11 +500,28 @@ def knn_ivf(
         .otherwise(F.lit(0.0))
         .alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, "rank", id_col, "cosine")
+    return _topk(scored, k, query_id_col, id_col, "cosine")
+
+
+def _probe_positions(vec: Column, centroids: Sequence[Sequence[float]],
+                     nprobe: int) -> Column:
+    """Top-``nprobe`` centroid positions by cosine for the double array
+    ``vec`` — the one IVF probe expression. The middle struct field
+    ``-cid`` makes ties (after the reverse: sim desc) prefer the LOWEST
+    position, matching :func:`_argmax_centroid`'s assignment
+    tie-break, so tied rows are always in some probe's scan set."""
+    cmat = _array_lit(_normalize_rows(centroids))
+    scored = F.transform(
+        cmat,
+        lambda c, i: F.struct(
+            dot(vec, c).alias("sim"),
+            (-i).cast("int").alias("ncid"),
+            i.cast("int").alias("cid"),
+        ),
+    )
+    return F.transform(
+        F.slice(F.reverse(F.array_sort(scored)), 1, nprobe),
+        lambda s: s["cid"],
     )
 
 
@@ -505,6 +533,28 @@ def knn_ivf(
 #: sizes the join instead of forcing a huge fleet onto the driver)
 _EQUIJOIN_FLEET = 1024
 _BROADCAST_FLEET_CAP = 100_000
+
+
+def _ivf_meta_fields(centroids, status, rows, token, pending_token,
+                     split_cid, versions, dir_ids) -> list:
+    """The IVF meta row's ``(name, kind, value)`` fields — also the
+    IVF-PQ row's, which inserts its codebook fields."""
+    if dir_ids is None:
+        dir_ids = list(range(len(centroids)))
+    return [
+        ("centroids", "array<array<double>>",
+         [[float(x) for x in c] for c in centroids]),
+        ("dim", "int", int(len(centroids[0]))),
+        ("norm", "string", "l2-cosine"),
+        ("status", "string", status),
+        ("rows", "long", int(rows)),
+        ("token", "string", token),
+        ("pending_token", "string", pending_token),
+        ("split_cid", "int",
+         int(split_cid) if split_cid is not None else None),
+        ("versions", "string", _versions_json(versions)),
+        ("dir_ids", "array<int>", [int(d) for d in dir_ids]),
+    ]
 
 
 def _write_ivf_meta(
@@ -534,30 +584,13 @@ def _write_ivf_meta(
     FRESH ids and commit with this one overwrite (a partition id named
     by no committed meta row is invisible to probes and dead by
     construction). Committed through :func:`._meta_io.write_meta`."""
-    from ._meta_io import _versions_json, write_meta
-
-    if dir_ids is None:
-        dir_ids = list(range(len(centroids)))
-    write_meta(spark, path, [
-        ("centroids", "array<array<double>>",
-         [[float(x) for x in c] for c in centroids]),
-        ("dim", "int", int(len(centroids[0]))),
-        ("norm", "string", "l2-cosine"),
-        ("status", "string", status),
-        ("rows", "long", int(rows)),
-        ("token", "string", token),
-        ("pending_token", "string", pending_token),
-        ("split_cid", "int",
-         int(split_cid) if split_cid is not None else None),
-        ("versions", "string", _versions_json(versions)),
-        ("dir_ids", "array<int>", [int(d) for d in dir_ids]),
-    ])
+    write_meta(spark, path, _ivf_meta_fields(
+        centroids, status, rows, token, pending_token, split_cid,
+        versions, dir_ids))
 
 
-def _read_ivf_meta(spark: "SparkSession", path: str) -> dict:
-    from ._meta_io import LIFECYCLE, read_meta
-
-    d = read_meta(spark, path, "IVF", "write_ivf_index")
+def _ivf_meta(d: dict) -> dict:
+    """Post-process a raw IVF or IVF-PQ meta row (:func:`read_meta`)."""
     cents = [[float(x) for x in c] for c in d["centroids"]]
     dir_ids = d.get("dir_ids")
     return {
@@ -572,12 +605,70 @@ def _read_ivf_meta(spark: "SparkSession", path: str) -> dict:
     }
 
 
-def _ivf_data_dir(path: str, m: dict) -> str:
-    """Current physical dir of the data table (version pointer in the
-    meta row — :func:`dedup._vdir`)."""
+def _read_ivf_meta(spark: "SparkSession", path: str) -> dict:
+    return _ivf_meta(read_meta(spark, path, "IVF", "write_ivf_index"))
+
+
+def _ivf_committer(spark: "SparkSession", path: str, m: dict):
+    """The IVF family's commit for the shared kernel: one committed
+    meta row keeping ``m``'s token, written through this module's
+    ``_write_ivf_meta`` as looked up at call time."""
+    return lambda cents, rows, **kw: _write_ivf_meta(
+        spark, path, cents, "committed", rows, m["token"], **kw)
+
+
+def _same_floats(supplied, stored) -> bool:
+    if isinstance(stored, list):
+        return len(supplied) == len(stored) and all(
+            _same_floats(a, b) for a, b in zip(supplied, stored))
+    return float(supplied) == stored
+
+
+def _require_pinned(what: str, supplied, stored):
+    """``stored`` — the meta row's centroid matrix or PQ codebooks —
+    refusing a ``supplied`` value that differs from it: drifted
+    centroids route vectors to (and prune) the wrong partitions,
+    drifted codebooks decode codes against the wrong entries; both
+    silently lose recall. ``supplied=None`` takes the stored value."""
+    if supplied is not None and not _same_floats(supplied, stored):
+        name = what.rsplit(" ", 1)[-1]
+        pinned = "matrix" if name == "centroids" else "PQ codebooks"
+        raise ValueError(
+            f"{what} do not match the {pinned} this index was built "
+            f"with — drifted {name} silently return low-recall "
+            f"neighbors; pass {name}=None to use the pinned ones"
+        )
+    return stored
+
+
+def _table_dir(path: str, m: dict, table: str) -> str:
+    """Current physical dir of ``table`` per the meta row's version
+    pointer (:func:`dedup._vdir`)."""
     from .dedup import _vdir
 
-    return _vdir(path, "data", m["versions"].get("data", 0))
+    return _vdir(path, table, m["versions"].get(table, 0))
+
+
+def _ivf_data_dir(path: str, m: dict) -> str:
+    return _table_dir(path, m, "data")
+
+
+def _live(spark: "SparkSession", path: str, m: dict,
+          table: str) -> DataFrame:
+    """``table``'s rows in the partitions the meta row names — a
+    crashed split's orphan dirs and the null-vector default partition
+    excluded."""
+    return spark.read.parquet(_table_dir(path, m, table)).where(
+        F.col("centroid_id").isin(m["dir_ids"]))
+
+
+def _stored_id_col(df: DataFrame) -> str:
+    """The id column of a stored IVF or IVF-PQ table: every writer puts
+    it first, ahead of the fixed-name payload (``codes``, ``_v``,
+    ``_nv``) and the ``centroid_id`` partition column — and of the IVF
+    vector column, which comes right after it."""
+    return next(c for c in df.columns
+                if c not in ("codes", "_v", "_nv", "centroid_id"))
 
 
 def _dir_of_position(dir_ids: "Sequence[int]"):
@@ -641,26 +732,16 @@ def _write_ivf_index_unlocked(
     still reads data mid-replacement."""
     spark = vectors.sparkSession
     if mode == "append":
-        from ._meta_io import admit_append
-
         m = _read_ivf_meta(spark, path)
         if admit_append(m, path, append_token, "write_ivf_index"):
             return  # this batch's append already committed — a retry
-        if centroids is None:
-            centroids = m["centroids"]
-        elif [[float(x) for x in c] for c in centroids] != m["centroids"]:
-            raise ValueError(
-                "append centroids do not match the index's stored "
-                "centroid matrix — drifted centroids would assign new "
-                "vectors to the wrong partitions; pass centroids=None "
-                "to reuse the stored matrix, or rebuild"
-            )
+        centroids = _require_pinned("append centroids", centroids,
+                                    m["centroids"])
         versions, dir_ids = m["versions"], m["dir_ids"]
         data_dir = _ivf_data_dir(path, m)
         # live rows only: a crashed (never-committed) split may have
         # left orphan centroid_id dirs the meta doesn't reference
-        actual = spark.read.parquet(data_dir).where(
-            F.col("centroid_id").isin(dir_ids)).count()
+        actual = _live(spark, path, m, "data").count()
         if m["status"] == "__appending__" and actual != m["rows"]:
             # the dead append's data job committed but its meta didn't:
             # the retry (token-verified above) must not double-append
@@ -750,148 +831,403 @@ def index_vectors_stream(
                                trigger_available_now)
 
 
-def ivf_index_stats(spark: "SparkSession", path: str) -> dict:
-    """Health report for a persisted IVF index — the
-    "do I need :func:`compact_ivf_index`?" signal. Footer-only except
-    one count-vs-distinct job: meta status/dims, per-centroid-partition
-    file counts (appends add one file per touched partition per batch —
-    ``max_files_per_partition`` growth is what slows pruned probes),
-    and duplicate full rows (retry residue)."""
-    import collections
+# ------------------------------------------ the shared inverted-file kernel
+def _partition_footers(base: str, dir_ids: "Sequence[int]"):
+    """One footer walk over the table at ``base``: ``{physical id:
+    [files, rows, bytes]}`` per LIVE ``centroid_id=`` partition, and the
+    names of the orphan partitions — residue of a crashed
+    (never-committed) split, invisible to probes, collected by the
+    next compaction."""
     import os
 
     import pyarrow.parquet as pq
 
-    from .dedup import _open_listed
+    from .dedup import _list_parquet_files, _open_listed
 
-    m = _read_ivf_meta(spark, path)
-    out = {
-        "status": m["status"], "dim": m["dim"], "norm": m["norm"],
-        "rows": m["rows"], "n_centroids": len(m["centroids"]),
-    }
-    from .dedup import _list_parquet_files
-
-    per_part: collections.Counter = collections.Counter()
-    total_rows = 0
-    n_files = 0
-    base = _ivf_data_dir(path, m)
-    live = {f"centroid_id={d}" for d in m["dir_ids"]}
-    files = _list_parquet_files(base, recursive=True)
-    part_rows: collections.Counter = collections.Counter()
-    orphan_dirs = set()
-    for fs_, fp in files:
-        d = os.path.dirname(fp)
-        part = d.rstrip("/").rsplit("/", 1)[-1]
+    live = {f"centroid_id={d}" for d in dir_ids}
+    parts: dict = {}
+    orphans = set()
+    for fs_, fp in _list_parquet_files(base, recursive=True):
+        part = os.path.dirname(fp).rstrip("/").rsplit("/", 1)[-1]
         if part not in live:
-            # residue of a crashed (never-committed) split — invisible
-            # to probes, collected by the next compact
-            orphan_dirs.add(part)
+            orphans.add(part)
             continue
-        n_files += 1
-        per_part[d] += 1
         with _open_listed(fs_, fp) as fh:
             nr = pq.ParquetFile(fh).metadata.num_rows
-        total_rows += nr
-        part_rows[d] += nr
-    df = spark.read.parquet(base).where(
-        F.col("centroid_id").isin(m["dir_ids"]))
-    dup = df.count() - df.distinct().count()
-    # ROW skew per centroid partition — the :func:`split_ivf_centroid`
-    # trigger: appends against frozen centroids fatten hot partitions,
-    # which degrades pruning (a probe of that centroid reads the whole
-    # fat bucket). footer-only, like the rest of this report.
-    max_pr = max(part_rows.values()) if part_rows else 0
-    mean_pr = (total_rows / len(part_rows)) if part_rows else 0.0
-    # maintenance advisory — the trigger guidance for the three
-    # remedies, cheapest first: many small files → compact; ONE fat
-    # partition → split that cid; MANY fat partitions (sustained
-    # drift) → retrain_ivf_index (split would chase them one at a
-    # time while the matrix no longer fits the data)
-    hot = [d for d, r in part_rows.items() if mean_pr and r > 2 * mean_pr]
-    if len(hot) > max(1, len(per_part) // 4):
+        size = (os.path.getsize(fp) if fs_ is None
+                else fs_.get_file_info(fp).size)
+        s = parts.setdefault(int(part.split("=", 1)[1]), [0, 0, 0])
+        s[0], s[1], s[2] = s[0] + 1, s[1] + nr, s[2] + size
+    return parts, orphans
+
+
+def _partition_health(parts: dict, dir_ids: "Sequence[int]") -> dict:
+    """File and ROW skew per centroid partition (from
+    :func:`_partition_footers`) and the maintenance advisory — the
+    trigger for the three remedies, cheapest first. Appends against
+    frozen centroids fatten hot partitions, which degrades pruning (a
+    probe of that centroid reads the whole fat bucket): MANY fat
+    partitions (sustained drift) → ``"retrain"`` (a split would chase
+    them one at a time while the matrix no longer fits the data); ONE
+    → ``"split:<matrix position>"``; a partition of more than 8 files
+    → ``"compact"`` (a probe opens every file of each partition it
+    probes)."""
+    rows = [s[1] for s in parts.values()]
+    max_pr = max(rows, default=0)
+    mean_pr = sum(rows) / len(rows) if rows else 0.0
+    hot = [d for d, s in parts.items() if mean_pr and s[1] > 2 * mean_pr]
+    max_files = max((s[0] for s in parts.values()), default=0)
+    if len(hot) > max(1, len(parts) // 4):
         hint = "retrain"
     elif len(hot) == 1:
-        # split takes the MATRIX POSITION; map the physical dir back
+        # split takes the MATRIX POSITION: map the physical dir back
         # through the dir_ids indirection
-        phys = int(hot[0].rsplit("=", 1)[-1])
-        hint = f"split:{m['dir_ids'].index(phys)}"
-    elif per_part and max(per_part.values()) > 8:
+        hint = f"split:{dir_ids.index(hot[0])}"
+    elif max_files > 8:
         hint = "compact"
     else:
         hint = None
-    out.update(
-        data_files=n_files,
-        populated_partitions=len(per_part),
-        max_files_per_partition=max(per_part.values()) if per_part else 0,
-        footer_rows=total_rows,
-        duplicate_rows=int(dup),
+    return dict(
+        populated_partitions=len(parts),
+        max_files_per_partition=max_files,
         max_rows_per_partition=int(max_pr),
         mean_rows_per_partition=round(mean_pr, 1),
         partition_row_skew=round(max_pr / mean_pr, 2) if mean_pr else 0.0,
-        orphan_partitions=len(orphan_dirs),
         hot_partitions=len(hot),
         maintenance_hint=hint,
     )
-    return out
+
+
+def _write_parts(df: DataFrame, out_dir: str, n: int,
+                 dynamic: bool = False) -> None:
+    """Write an IVF-family table partitioned by ``centroid_id``: rows
+    hash-routed into ``n`` tasks and sorted by id within each partition
+    (the layout the IVF-PQ rerank's ``id IN (...)`` pushdown prunes at
+    the parquet footer). ``dynamic`` overwrites exactly the partitions
+    ``df`` holds — a crashed attempt's residue included — and never
+    touches another; otherwise ``out_dir`` is replaced whole."""
+    w = df.repartition(n, F.col("centroid_id")) \
+        .sortWithinPartitions("centroid_id", _stored_id_col(df)) \
+        .write.mode("overwrite")
+    if dynamic:
+        w = w.option("partitionOverwriteMode", "dynamic")
+    w.partitionBy("centroid_id").parquet(out_dir)
+
+
+def _reroute(spark: "SparkSession", tables: "Sequence[str]", src: dict,
+             route: Column, out: dict, routed: "Sequence[int]",
+             n: int, dynamic: bool = False) -> None:
+    """Rewrite ``src[t]`` (per table) into ``out[t]`` under new
+    partitions: the vector table (``tables[-1]``) takes
+    ``centroid_id := route``; every other table (the PQ codes, which
+    the pinned codebooks decode wherever a row lives) relabels by id
+    against the routing just written for the ``routed`` partitions."""
+    vec = tables[-1]
+    _write_parts(src[vec].withColumn("centroid_id", route), out[vec], n,
+                 dynamic)
+    for t in tables[:-1]:
+        routing = spark.read.parquet(out[vec]).where(
+            F.col("centroid_id").isin(list(routed)))
+        id_col = _stored_id_col(routing)
+        _write_parts(
+            src[t].drop("centroid_id")
+            .join(routing.select(id_col, "centroid_id"), id_col),
+            out[t], n, dynamic)
+
+
+def _commit_versions(spark: "SparkSession", path: str, m: dict,
+                     tables: "Sequence[str]", write, commit, cents,
+                     dir_ids) -> None:
+    """Write every table into its NEXT version dir (``write({table:
+    dir})``), then THE commit: one meta overwrite flips all pointers
+    with the new row count (token preserved — compaction and retrain
+    never consume a batch), then GC of the older versions. No
+    remove-then-move window: a crash before the flip leaves the old
+    versions fully live (probes work THROUGHOUT) and a retry overwrites
+    the half-written dirs."""
+    from .dedup import _gc_table_versions, _vdir
+
+    new = {t: m["versions"].get(t, 0) + 1 for t in tables}
+    out = {t: _vdir(path, t, v) for t, v in new.items()}
+    write(out)
+    rows = spark.read.parquet(out[tables[0]]).count()
+    commit(cents, rows, versions={**m["versions"], **new}, dir_ids=dir_ids)
+    for t in tables:
+        _gc_table_versions(path, t, new[t])
+
+
+def _compact_tables(spark: "SparkSession", path: str, m: dict,
+                    tables: "Sequence[str]", commit) -> None:
+    """Compaction of an IVF-family index: each table's LIVE partitions
+    (a crashed split's orphans are never resurrected) minus full-row
+    duplicates (retry residue) rewritten at one file per partition
+    into the next version dirs (:func:`_commit_versions`; the flip
+    also retires any orphans). A pre-r10 index left mid-swap
+    (``'__compacting__'``) is finished with the legacy move-based
+    recovery."""
+    if m["status"] == "__compacting__":
+        finish_legacy_swap(path, tables)
+        commit(m["centroids"],
+               spark.read.parquet(f"{path}/{tables[0]}").count())
+        return
+    require_committed(m, path, "compact")
+
+    def write(out: dict) -> None:
+        for t in tables:
+            _write_parts(_live(spark, path, m, t).distinct(), out[t],
+                         len(m["centroids"]))
+
+    _commit_versions(spark, path, m, tables, write, commit,
+                     m["centroids"], m["dir_ids"])
+
+
+def _finish_legacy_split(spark: "SparkSession", path: str, m: dict,
+                         tables: "Sequence[str]", commit) -> None:
+    """LEGACY recovery only (pre-r10 ``'__splitting__'`` indexes): per
+    table, move every prepared ``{table}_split/centroid_id=*`` dir into
+    ``{table}/``, replacing the split partition's old dir, then commit
+    the NEW matrix. Idempotent — the old ``centroid_id=<split_cid>``
+    dir is removed only while its replacement still waits in the
+    staging dir, so a re-run after a crash converges. New splits never
+    enter this state (fresh-dir-id allocation + one meta flip)."""
+    from .dedup import _dir_exists, _list_split_dirs, _mv_dir, _rm_dir
+
+    cid = m["split_cid"]
+    for table in tables:
+        data, split = f"{path}/{table}", f"{path}/{table}_split"
+        cid_pending = f"{split}/centroid_id={cid}"
+        if _dir_exists(cid_pending):
+            _rm_dir(f"{data}/centroid_id={cid}")
+            _mv_dir(cid_pending, f"{data}/centroid_id={cid}")
+        for name in _list_split_dirs(split):
+            _rm_dir(f"{data}/{name}")  # a crashed previous move's residue
+            _mv_dir(f"{split}/{name}", f"{data}/{name}")
+        _rm_dir(split)
+    commit(m["centroids"], spark.read.parquet(f"{path}/{tables[0]}").count())
+
+
+def _split_tables(spark: "SparkSession", path: str, m: dict, cid: int,
+                  k_sub: int, iters: int, tables: "Sequence[str]", commit,
+                  vec_col: str, id_col: "Optional[str]" = None):
+    """Split matrix position ``cid`` of an IVF-family index into
+    ``k_sub`` sub-centroids (see :func:`_split_ivf_centroid_unlocked`):
+    range checks, Lloyd training on the partition's stored vectors,
+    fresh ``dir_ids``, the re-route of every table (:func:`_reroute`)
+    and the one meta flip. Returns the new centroid matrix."""
+    from .dedup import _rm_dir
+
+    if m["status"] == "__splitting__":
+        # legacy (pre-r10) mid-split recovery
+        if m["split_cid"] != cid:
+            raise ValueError(
+                f"index at {path!r} is mid-split of centroid "
+                f"{m['split_cid']} — re-run the split with that cid to "
+                f"finish it (got cid={cid})"
+            )
+        _finish_legacy_split(spark, path, m, tables, commit)
+        return m["centroids"]
+    require_committed(m, path, "split")
+    n = len(m["centroids"])
+    if not (0 <= cid < n):
+        raise ValueError(f"cid {cid} out of range for {n} centroids")
+    if k_sub < 2:
+        raise ValueError("k_sub must be at least 2")
+    dir_ids = m["dir_ids"]
+    old_dir = dir_ids[cid]
+    dirs = {t: _table_dir(path, m, t) for t in tables}
+    parts = {t: spark.read.parquet(d).where(F.col("centroid_id") == old_dir)
+             for t, d in dirs.items()}
+    part = parts[tables[-1]]
+    n_part = part.count()
+    if n_part < k_sub:
+        raise ValueError(
+            f"partition {cid} holds {n_part} vectors — cannot split "
+            f"into {k_sub} sub-centroids"
+        )
+    # deterministic local training: lowest-id seeds, Lloyd `iters`
+    sub = kmeans_centroids(part, k_sub, iters=iters,
+                           id_col=id_col or _stored_id_col(part),
+                           vec_col=vec_col)
+    new_cents = [list(c) for c in m["centroids"]]
+    new_cents[cid] = list(sub[0])
+    new_cents.extend(list(c) for c in sub[1:])
+    # FRESH physical partition ids (deterministic: max+1..): invisible
+    # until the meta flip names them in dir_ids
+    fresh = max(dir_ids) + 1
+    new_dirs = list(range(fresh, fresh + k_sub))
+    new_dir_ids = list(dir_ids)
+    new_dir_ids[cid] = new_dirs[0]
+    new_dir_ids.extend(new_dirs[1:])
+    # re-assign the members among the SUB-centroids only (local argmax,
+    # then map local j -> fresh dir); other partitions never move. An
+    # empty sub-centroid (Lloyd can empty a cluster) writes no dir: the
+    # probe's partition filter finds no rows, the right answer.
+    local = _argmax_centroid(F.col(vec_col), sub)
+    gid = F.when(local == 0, F.lit(new_dirs[0]))
+    for j in range(1, k_sub):
+        gid = gid.when(local == j, F.lit(new_dirs[j]))
+    _reroute(spark, tables, parts, gid.cast("int"), dirs, new_dirs, k_sub,
+             dynamic=True)
+    # THE commit: one meta overwrite installs matrix + indirection
+    # (token preserved — a split never consumes or produces a batch)
+    commit(new_cents, m["rows"], versions=m["versions"],
+           dir_ids=new_dir_ids)
+    # the old fat partitions are now orphaned — best-effort GC (the
+    # next compaction retires them regardless)
+    for d in dirs.values():
+        try:
+            _rm_dir(f"{d}/centroid_id={old_dir}")
+        except Exception:
+            pass
+    return new_cents
+
+
+def _retrain_tables(spark: "SparkSession", path: str, m: dict,
+                    k: "Optional[int]", iters: int, tables: "Sequence[str]",
+                    commit, vec_col: str, id_col: "Optional[str]" = None):
+    """GLOBAL retrain of an IVF-family index (see
+    :func:`_retrain_ivf_index_unlocked`): Lloyd over the stored LIVE
+    vectors — seeded from the current matrix at unchanged ``k``, so a
+    healthy index converges in place; a changed ``k`` starts from
+    lowest-id seeds — then every table re-routed into its next version
+    dir and one meta flip (new matrix, identity ``dir_ids``). Returns
+    the new matrix."""
+    require_committed(m, path, "retrain")
+    live = {t: _live(spark, path, m, t) for t in tables}
+    vecs = live[tables[-1]]
+    k = k if k is not None else len(m["centroids"])
+    seed = m["centroids"] if k == len(m["centroids"]) else None
+    new_cents = kmeans_centroids(
+        vecs, k, iters=iters, id_col=id_col or _stored_id_col(vecs),
+        vec_col=vec_col, seed_centroids=seed)
+    n = len(new_cents)
+    route = _argmax_centroid(F.col(vec_col), new_cents)
+    _commit_versions(
+        spark, path, m, tables,
+        lambda out: _reroute(spark, tables, live, route, out, range(n), n),
+        commit, new_cents, list(range(n)))
+    return new_cents
+
+
+def _ivf_candidates(probe_sets: DataFrame, scan,
+                    dirs: "Sequence[str]", probe_join: str,
+                    prune_min_index_bytes: "Optional[int]",
+                    exclude_self: bool, id_col: str, query_id_col: str,
+                    query_cols: "Sequence[str]", probe_col: str):
+    """The candidate join of an indexed IVF-family probe: ``(cand,
+    probed)``. ``probe_sets`` carries each query's probed PHYSICAL
+    partitions in ``probe_col``; ``scan(probed)`` is the index side
+    read from the table dirs, ``probed`` the sorted partition list its
+    ``centroid_id IN (...)`` scan filter prunes at the file listing, or
+    None (no prune).
+
+    ``probe_join`` picks the join shape (identical results):
+    ``"broadcast"`` joins the scan to the broadcast query set on an
+    ``array_contains(probe_col, centroid_id)`` condition — a
+    BroadcastNestedLoopJoin that evaluates every scanned row against
+    every query, fine for small fleets; ``"equi"`` EXPLODES each
+    query's probe set (``query_cols`` + ``centroid_id``) and hash-joins
+    on ``centroid_id``, so scan rows meet only the queries probing
+    their partition; ``"auto"`` picks by fleet size (the probe-set
+    collect already knows it): equi at ≥ ``_EQUIJOIN_FLEET`` queries,
+    and past ``_BROADCAST_FLEET_CAP`` the broadcast hint is dropped too
+    so AQE sizes the join. SCALE-ADAPTIVE (r11): under ``"auto"``,
+    while every table in ``dirs`` is below ``prune_min_index_bytes``
+    (one scan task's worth of index) the prune cannot cut IO and its
+    collect is an extra action per probe — the whole probe runs as ONE
+    action on the broadcast join."""
+    from .dedup import _PUSHDOWN_MIN_INDEX_BYTES, _dir_bytes_at_least
+
+    if probe_join not in ("auto", "broadcast", "equi"):
+        raise ValueError(f"bad probe_join: {probe_join}")
+    if prune_min_index_bytes is None:
+        prune_min_index_bytes = _PUSHDOWN_MIN_INDEX_BYTES
+    n_queries, probed = 0, None
+    if probe_join != "auto" or any(
+            _dir_bytes_at_least(d, prune_min_index_bytes) for d in dirs):
+        # bounded driver state: |queries| × nprobe ints — the scan filter
+        rows = probe_sets.select(probe_col).collect()
+        n_queries = len(rows)
+        probed = sorted({int(c) for r in rows for c in r[0]})
+    index = scan(probed)
+    if probe_join == "equi" or (
+            probe_join == "auto" and n_queries >= _EQUIJOIN_FLEET):
+        exploded = probe_sets.select(
+            *query_cols, F.explode(probe_col).alias("centroid_id"))
+        if n_queries < _BROADCAST_FLEET_CAP:
+            exploded = F.broadcast(exploded)
+        cand = index.join(exploded, "centroid_id")
+        if exclude_self:
+            cand = cand.where(F.col(id_col) != F.col(query_id_col))
+        return cand, probed
+    cond = F.array_contains(F.col(probe_col), F.col("centroid_id"))
+    if exclude_self:
+        cond = cond & (F.col(id_col) != F.col(query_id_col))
+    return index.join(F.broadcast(probe_sets), cond), probed
+
+
+def _scan_parts(spark: "SparkSession", table_dir: str,
+                probed: "Optional[Sequence[int]]") -> DataFrame:
+    """The table at ``table_dir``, pruned to the ``probed`` partitions
+    (None: unpruned)."""
+    df = spark.read.parquet(table_dir)
+    return df if probed is None else df.where(
+        F.col("centroid_id").isin(probed))
+
+
+def _probe_dirs(query_vec_col: str, m: dict, nprobe: int) -> Column:
+    """Each query's probed PHYSICAL partitions: its top-``nprobe``
+    matrix positions (:func:`_probe_positions`) mapped through the meta
+    row's ``dir_ids`` (identity on a never-split index)."""
+    cents = m["centroids"]
+    nprobe = min(nprobe, len(cents))
+    return F.transform(
+        _let(as_double(F.col(query_vec_col)),
+             lambda q: _probe_positions(q, cents, nprobe)),
+        _dir_of_position(m["dir_ids"]),
+    )
+
+
+# ------------------------------------------- IVF stats and maintenance
+def ivf_index_stats(spark: "SparkSession", path: str) -> dict:
+    """Health report for a persisted IVF index — the
+    "do I need :func:`compact_ivf_index`?" signal. Footer-only except
+    one count-vs-distinct job: meta status/dims, per-centroid-partition
+    file and row counts (appends add one file per touched partition per
+    batch — ``max_files_per_partition`` growth is what slows pruned
+    probes; row skew is the :func:`split_ivf_centroid` trigger),
+    duplicate full rows (retry residue) and the ``maintenance_hint``
+    (:func:`_partition_health`)."""
+    m = _read_ivf_meta(spark, path)
+    parts, orphans = _partition_footers(_ivf_data_dir(path, m),
+                                        m["dir_ids"])
+    df = _live(spark, path, m, "data")
+    return {
+        "status": m["status"], "dim": m["dim"], "norm": m["norm"],
+        "rows": m["rows"], "n_centroids": len(m["centroids"]),
+        "data_files": sum(s[0] for s in parts.values()),
+        "footer_rows": sum(s[1] for s in parts.values()),
+        "duplicate_rows": int(df.count() - df.distinct().count()),
+        "orphan_partitions": len(orphans),
+        **_partition_health(parts, m["dir_ids"]),
+    }
 
 
 def _compact_ivf_index_unlocked(spark: "SparkSession", path: str) -> None:
-    """Rewrite the IVF index's data into one (or few) files per centroid
+    """Rewrite the IVF index's data into one file per centroid
     partition — the maintenance pass a daily-append index eventually
     needs: each ``mode="append"`` adds its own small files under every
     touched ``centroid_id=`` directory, so after months the probe's
     pruned listing still opens hundreds of tiny files per bucket.
-    Compaction reads the stored data (vectors are never re-assigned —
-    the pinned centroids guarantee assignments are stable), drops
-    full-row duplicates — reading LIVE partitions only, so a crashed
-    split's orphan dirs are never resurrected — and writes the result
-    to the NEXT version dir (``data_v<N+1>``, :func:`dedup._vdir`);
-    the commit is ONE meta-row overwrite flipping the pointer. No
-    remove-then-move window: crash-safe on stores without atomic
-    rename, probes keep working THROUGHOUT, and the flip also retires
-    any orphan partitions (they stay behind in the old version dir,
-    which is garbage-collected whole). A pre-r10 index left mid-swap
-    (``'__compacting__'``) is finished with the legacy move-based
-    recovery. Concurrent writers are refused by the single-writer
-    lease (public wrapper)."""
-    from ._meta_io import finish_legacy_swap
-    from .dedup import _gc_table_versions
-
+    Vectors are never re-assigned (the pinned centroids guarantee
+    assignments are stable); full-row duplicates drop and the result
+    lands in the NEXT version dir (``data_v<N+1>``), committed by ONE
+    meta-row overwrite flipping the pointer (:func:`_compact_tables`).
+    Concurrent writers are refused by the single-writer lease (public
+    wrapper)."""
     m = _read_ivf_meta(spark, path)
-
-    if m["status"] == "__compacting__":
-        finish_legacy_swap(path, ("data",))
-        rows = spark.read.parquet(f"{path}/data").count()
-        _write_ivf_meta(spark, path, m["centroids"], "committed", rows,
-                        m["token"])
-        return
-    if m["status"] != "committed":
-        raise ValueError(
-            f"index at {path!r} has status {m['status']!r} — finish the "
-            "in-flight rebuild/append first, then compact"
-        )
-    data = _ivf_data_dir(path, m)
-    new_v = m["versions"].get("data", 0) + 1
-    new_dir = _vdir_similarity(path, new_v)
-    df = spark.read.parquet(data).where(
-        F.col("centroid_id").isin(m["dir_ids"])).distinct()
-    n_cents = len(m["centroids"])
-    df.repartition(n_cents, F.col("centroid_id")) \
-        .write.mode("overwrite").partitionBy("centroid_id").parquet(new_dir)
-    rows = spark.read.parquet(new_dir).count()
-    # THE commit: one meta overwrite flips the pointer (token preserved:
-    # compaction never consumes or produces a batch)
-    _write_ivf_meta(spark, path, m["centroids"], "committed", rows,
-                    m["token"], versions={**m["versions"], "data": new_v},
-                    dir_ids=m["dir_ids"])
-    _gc_table_versions(path, "data", new_v)
-
-
-def _vdir_similarity(path: str, version: int) -> str:
-    from .dedup import _vdir
-
-    return _vdir(path, "data", version)
-
+    _compact_tables(spark, path, m, ("data",),
+                    _ivf_committer(spark, path, m))
 
 
 def write_ivf_index(
@@ -923,35 +1259,6 @@ def compact_ivf_index(spark: "SparkSession", path: str) -> None:
 
     with index_lease(path, "ivf-compact"):
         _compact_ivf_index_unlocked(spark, path)
-
-
-# --------------------------------------- hot-centroid split maintenance
-def _finish_split(spark: "SparkSession", path: str, m: dict) -> None:
-    """LEGACY recovery only (pre-r10 ``'__splitting__'`` indexes): move
-    every prepared ``data_split/centroid_id=*`` directory into
-    ``data/``, replacing the split partition's old directory, then
-    commit the NEW matrix. Idempotent — the old
-    ``centroid_id=<split_cid>`` dir is removed only while its
-    replacement is still pending in data_split. New splits never enter
-    this state (fresh-dir-id allocation + one meta flip)."""
-    from .dedup import _dir_exists, _list_split_dirs, _mv_dir, _rm_dir
-
-    data, split = f"{path}/data", f"{path}/data_split"
-    cid = m["split_cid"]
-    cid_pending = f"{split}/centroid_id={cid}"
-    if _dir_exists(cid_pending):
-        # remove the OLD fat partition only while its replacement still
-        # waits in data_split — after the move, a re-run must NOT
-        # delete the new data
-        _rm_dir(f"{data}/centroid_id={cid}")
-        _mv_dir(cid_pending, f"{data}/centroid_id={cid}")
-    for name in _list_split_dirs(split):
-        _rm_dir(f"{data}/{name}")  # a crashed previous move's residue
-        _mv_dir(f"{split}/{name}", f"{data}/{name}")
-    _rm_dir(split)
-    rows = spark.read.parquet(data).count()
-    _write_ivf_meta(spark, path, m["centroids"], "committed", rows,
-                    m["token"])
 
 
 def _split_ivf_centroid_unlocked(
@@ -994,84 +1301,10 @@ def _split_ivf_centroid_unlocked(
     partition as garbage for the flip-side GC or the next compaction.
     A pre-r10 index left mid-split (``'__splitting__'``) is finished
     with the legacy move-based recovery. Returns the new centroid
-    matrix."""
+    matrix. The steps are the shared kernel's (:func:`_split_tables`)."""
     m = _read_ivf_meta(spark, path)
-    if m["status"] == "__splitting__":
-        # legacy (pre-r10) mid-split recovery
-        if m["split_cid"] != cid:
-            raise ValueError(
-                f"index at {path!r} is mid-split of centroid "
-                f"{m['split_cid']} — re-run split_ivf_centroid with "
-                f"that cid to finish it (got cid={cid})"
-            )
-        _finish_split(spark, path, m)
-        return m["centroids"]
-    if m["status"] != "committed":
-        raise ValueError(
-            f"index at {path!r} has status {m['status']!r} — finish the "
-            "in-flight operation first, then split"
-        )
-    n = len(m["centroids"])
-    if not (0 <= cid < n):
-        raise ValueError(f"cid {cid} out of range for {n} centroids")
-    if k_sub < 2:
-        raise ValueError("k_sub must be at least 2")
-    data_dir = _ivf_data_dir(path, m)
-    dir_ids = m["dir_ids"]
-    old_dir = dir_ids[cid]
-    part = spark.read.parquet(data_dir).where(
-        F.col("centroid_id") == old_dir)
-    n_part = part.count()
-    if n_part < k_sub:
-        raise ValueError(
-            f"partition {cid} holds {n_part} vectors — cannot split "
-            f"into {k_sub} sub-centroids"
-        )
-    # deterministic local training: lowest-id seeds, Lloyd `iters`
-    sub = kmeans_centroids(part, k_sub, iters=iters, id_col=id_col,
-                           vec_col=vec_col)
-    new_cents = [list(c) for c in m["centroids"]]
-    new_cents[cid] = list(sub[0])
-    new_cents.extend(list(c) for c in sub[1:])
-    # FRESH physical partition ids (deterministic: max+1..): invisible
-    # until the meta flip names them in dir_ids
-    fresh = max(dir_ids) + 1
-    new_dirs = list(range(fresh, fresh + k_sub))
-    new_dir_ids = list(dir_ids)
-    new_dir_ids[cid] = new_dirs[0]
-    new_dir_ids.extend(new_dirs[1:])
-    # re-assign the members among the SUB-centroids only (local argmax,
-    # then map local j -> fresh dir); other partitions never move
-    local = _argmax_centroid(F.col(vec_col), sub)
-    gid = F.when(local == 0, F.lit(new_dirs[0]))
-    for j in range(1, k_sub):
-        gid = gid.when(local == j, F.lit(new_dirs[j]))
-    reassigned = part.select(
-        F.col(id_col), F.col(vec_col), F.col("_nv"),
-        gid.cast("int").alias("centroid_id"),
-    )
-    # dynamic partition overwrite: ONE job replaces exactly the touched
-    # (fresh) partition dirs — a crashed attempt's residue included —
-    # and never touches any live partition. An empty sub-centroid
-    # (Lloyd can empty a cluster) simply writes no dir: the probe's
-    # partition filter finds no rows, which is the right answer.
-    reassigned.write.mode("overwrite") \
-        .option("partitionOverwriteMode", "dynamic") \
-        .partitionBy("centroid_id").parquet(data_dir)
-    # THE commit: one meta overwrite installs matrix + indirection
-    # (token preserved — a split never consumes or produces a batch)
-    _write_ivf_meta(spark, path, new_cents, "committed", m["rows"],
-                    m["token"], versions=m["versions"],
-                    dir_ids=new_dir_ids)
-    # the old fat partition is now orphaned — best-effort GC (the next
-    # compaction retires it regardless)
-    from .dedup import _rm_dir
-
-    try:
-        _rm_dir(f"{data_dir}/centroid_id={old_dir}")
-    except Exception:
-        pass
-    return new_cents
+    return _split_tables(spark, path, m, cid, k_sub, iters, ("data",),
+                         _ivf_committer(spark, path, m), vec_col, id_col)
 
 
 def split_ivf_centroid(
@@ -1117,38 +1350,8 @@ def _retrain_ivf_index_unlocked(
     split. ``k`` defaults to the current centroid count (pass more to
     grow capacity with the corpus). Returns the new matrix."""
     m = _read_ivf_meta(spark, path)
-    if m["status"] != "committed":
-        raise ValueError(
-            f"index at {path!r} has status {m['status']!r} — finish the "
-            "in-flight operation first, then retrain"
-        )
-    data = _ivf_data_dir(path, m)
-    live = spark.read.parquet(data).where(
-        F.col("centroid_id").isin(m["dir_ids"]))
-    k = k if k is not None else len(m["centroids"])
-    seed = (m["centroids"] if k == len(m["centroids"])
-            else None)  # a changed k starts from lowest-id seeds
-    new_cents = kmeans_centroids(
-        live, k, iters=iters, id_col=id_col, vec_col=vec_col,
-        seed_centroids=seed)
-    new_v = m["versions"].get("data", 0) + 1
-    new_dir = _vdir_similarity(path, new_v)
-    live.select(
-        F.col(id_col), F.col(vec_col), F.col("_nv"),
-        _argmax_centroid(F.col(vec_col), new_cents).alias("centroid_id"),
-    ).repartition(len(new_cents), F.col("centroid_id")) \
-        .write.mode("overwrite").partitionBy("centroid_id") \
-        .parquet(new_dir)
-    rows = spark.read.parquet(new_dir).count()
-    # THE commit: matrix + identity indirection + version, in one flip
-    _write_ivf_meta(spark, path, new_cents, "committed", rows,
-                    m["token"],
-                    versions={**m["versions"], "data": new_v},
-                    dir_ids=list(range(len(new_cents))))
-    from .dedup import _gc_table_versions
-
-    _gc_table_versions(path, "data", new_v)
-    return new_cents
+    return _retrain_tables(spark, path, m, k, iters, ("data",),
+                           _ivf_committer(spark, path, m), vec_col, id_col)
 
 
 def retrain_ivf_index(
@@ -1193,119 +1396,25 @@ def knn_ivf_indexed(
     the wrong partitions and silently return low-recall neighbors — the
     checked contract replaces the old docstring-only one).
 
-    ``probe_join`` picks the candidate-join shape (identical results):
-    ``"broadcast"`` joins the scan to the broadcast query set on an
-    ``array_contains(probe_cids, centroid_id)`` condition — a
-    BroadcastNestedLoopJoin that evaluates every scanned row against
-    every query, fine for small fleets; ``"equi"`` EXPLODES each
-    query's probe set to (query, centroid_id) rows and hash-joins on
-    ``centroid_id``, so scan rows meet only the queries probing their
-    partition — the shape a many-thousand-query fleet needs; ``"auto"``
-    (default) picks by fleet size (the probe-set collect already knows
-    it): equi at ≥ ``_EQUIJOIN_FLEET`` (1024) queries, and past
-    ``_BROADCAST_FLEET_CAP`` (100k) the broadcast hint is dropped too
-    so AQE sizes the join (a 100k-query × d-float fleet should not be
-    forced onto the driver)."""
+    ``probe_join`` (``"auto"``, ``"broadcast"`` or ``"equi"``) and
+    ``prune_min_index_bytes`` pick the candidate-join shape, with
+    identical results (:func:`_ivf_candidates`)."""
     m = _read_ivf_meta(spark, path)
-    if m["status"] != "committed":
-        raise ValueError(
-            f"IVF index at {path!r} has status {m['status']!r} — a "
-            "rebuild or append died part-way; re-run it to completion, "
-            "then probe"
-        )
-    if centroids is not None and (
-        [[float(x) for x in c] for c in centroids] != m["centroids"]
-    ):
-        raise ValueError(
-            "supplied centroids do not match the matrix this index was "
-            "built with — probing with drifted centroids prunes the "
-            "wrong partitions and silently returns low-recall "
-            "neighbors; pass centroids=None to use the stored matrix"
-        )
-    centroids = m["centroids"]
-    dim = len(centroids[0])
-    cmat = _array_lit(_normalize_rows(centroids))
-    nprobe = min(nprobe, len(centroids))
-
-    def probes(q: Column) -> Column:
-        scored = F.transform(
-            cmat,
-            lambda c, i: F.struct(
-                dot(q, c).alias("sim"),
-                (-i).cast("int").alias("ncid"),
-                i.cast("int").alias("cid"),
-            ),
-        )
-        return F.transform(
-            F.slice(F.reverse(F.array_sort(scored)), 1, nprobe), lambda s: s["cid"]
-        )
-
-    # positions → PHYSICAL partition ids via the meta row's dir_ids
-    # indirection (identity on a never-split index)
-    to_dir = _dir_of_position(m["dir_ids"])
+    require_committed(m, path, "probe")
+    dim = len(_require_pinned("supplied centroids", centroids,
+                              m["centroids"])[0])
     probe_sets = queries.select(
         F.col(query_id_col),
         F.col(query_vec_col),
         l2_norm(query_vec_col, dim).alias("_nq"),
-        F.transform(
-            _let(as_double(F.col(query_vec_col)), probes),
-            lambda p: to_dir(p),
-        ).alias("probe_cids"),
+        _probe_dirs(query_vec_col, m, nprobe).alias("probe_cids"),
     )
-    from .dedup import _PUSHDOWN_MIN_INDEX_BYTES, _dir_bytes_at_least
-
-    if prune_min_index_bytes is None:
-        prune_min_index_bytes = _PUSHDOWN_MIN_INDEX_BYTES
     data_dir = _ivf_data_dir(path, m)
-    if probe_join == "auto" and not _dir_bytes_at_least(
-        data_dir, prune_min_index_bytes
-    ):
-        # SCALE-ADAPTIVE (r11): below one scan task's worth of index the
-        # partition prune cannot cut IO and its probe-set collect is an
-        # extra action per probe — run the whole probe as ONE action on
-        # the small-fleet broadcast join (results identical; at corpus
-        # scale the prune engages exactly as below)
-        index = spark.read.parquet(data_dir)
-        cond = F.array_contains(F.col("probe_cids"), F.col("centroid_id"))
-        if exclude_self:
-            cond = cond & (F.col(id_col) != F.col(query_id_col))
-        cand = index.join(F.broadcast(probe_sets), cond)
-        return _score_ivf_cand(
-            cand, k, id_col, vec_col, query_id_col, query_vec_col, dim)
-    # bounded driver state: |queries| × nprobe ints — the scan filter
-    probe_rows = probe_sets.select("probe_cids").collect()
-    probed = sorted({int(c) for r in probe_rows for c in r[0]})
-    index = spark.read.parquet(data_dir).where(
-        F.col("centroid_id").isin(probed))
-    if probe_join not in ("auto", "broadcast", "equi"):
-        raise ValueError(f"bad probe_join: {probe_join}")
-    use_equi = probe_join == "equi" or (
-        probe_join == "auto" and len(probe_rows) >= _EQUIJOIN_FLEET)
-    if use_equi:
-        exploded = probe_sets.select(
-            query_id_col, query_vec_col, "_nq",
-            F.explode("probe_cids").alias("centroid_id"),
-        )
-        if len(probe_rows) < _BROADCAST_FLEET_CAP:
-            exploded = F.broadcast(exploded)
-        cand = index.join(exploded, "centroid_id")
-        if exclude_self:
-            cand = cand.where(F.col(id_col) != F.col(query_id_col))
-    else:
-        cond = F.array_contains(F.col("probe_cids"), F.col("centroid_id"))
-        if exclude_self:
-            cond = cond & (F.col(id_col) != F.col(query_id_col))
-        cand = index.join(F.broadcast(probe_sets), cond)
-    return _score_ivf_cand(
-        cand, k, id_col, vec_col, query_id_col, query_vec_col, dim)
-
-
-def _score_ivf_cand(
-    cand: DataFrame, k: int, id_col: str, vec_col: str,
-    query_id_col: str, query_vec_col: str, dim: int,
-) -> DataFrame:
-    """Exact-cosine scoring + per-query top-k over an IVF candidate
-    join — the shared tail of every :func:`knn_ivf_indexed` join shape."""
+    cand, _ = _ivf_candidates(
+        probe_sets, lambda probed: _scan_parts(spark, data_dir, probed),
+        (data_dir,), probe_join, prune_min_index_bytes, exclude_self,
+        id_col, query_id_col, (query_id_col, query_vec_col, "_nq"),
+        "probe_cids")
     denom = F.col("_nv") * F.col("_nq")
     scored = cand.select(
         F.col(query_id_col),
@@ -1314,12 +1423,7 @@ def _score_ivf_cand(
         .otherwise(F.lit(0.0))
         .alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, "rank", id_col, "cosine")
-    )
+    return _topk(scored, k, query_id_col, id_col, "cosine")
 
 
 # ----------------------------------------------- random-hyperplane LSH
@@ -1612,7 +1716,8 @@ def pq_codes(vec: Column, codebooks: Sequence[Sequence[Sequence[float]]]) -> Col
     Scores ``-2*dot(s,c) + dot(c,c)`` — the squared distance minus the
     code-independent ``dot(s,s)`` term, which shifts every candidate by the
     same constant and so preserves both the argmin and its ties. array_min
-    over (score, code_id) structs gives lexicographic tie-breaking."""
+    over (score, code_id) structs gives lexicographic tie-breaking. A
+    null vector encodes to null, on both routes."""
     import json as _json
 
     books = [[[float(x) for x in c] for c in b] for b in codebooks]
@@ -1641,7 +1746,7 @@ def pq_codes(vec: Column, codebooks: Sequence[Sequence[Sequence[float]]]) -> Col
 
         return F.transform(cb, per_sub)
 
-    return _let(as_double(vec), enc)
+    return F.when(vec.isNotNull(), _let(as_double(vec), enc))
 
 
 def pq_encode(
@@ -1720,14 +1825,7 @@ def knn_pq(
         .otherwise(F.lit(0.0))
         .alias("approx_cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("approx_cosine"), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, "rank", id_col, "approx_cosine")
-    )
+    return _topk(scored, k, query_id_col, id_col, "approx_cosine")
 
 
 def knn_ivfpq(
@@ -1770,28 +1868,14 @@ def knn_ivfpq(
         F.col(id_col), F.col("_cid"), F.col("_rv"), l2_norm("_rv").alias("_nv")
     )
 
-    cmat = _array_lit(_normalize_rows(centroids))
     nprobe = min(nprobe, len(centroids))
-
-    def probes(q: Column) -> Column:
-        # same tie discipline as knn_ivf: sim desc, ties -> LOWEST cid
-        scored = F.transform(
-            cmat,
-            lambda c, i: F.struct(
-                dot(q, c).alias("sim"),
-                (-i).cast("int").alias("ncid"),
-                i.cast("int").alias("cid"),
-            ),
-        )
-        return F.transform(
-            F.slice(F.reverse(F.array_sort(scored)), 1, nprobe), lambda s: s["cid"]
-        )
-
     small = queries.select(
         F.col(query_id_col),
         as_double(F.col(query_vec_col)).alias("_qv"),
         l2_norm(query_vec_col).alias("_nq"),
-        _let(as_double(F.col(query_vec_col)), probes).alias("_probe_cids"),
+        _let(as_double(F.col(query_vec_col)),
+             lambda q: _probe_positions(q, centroids, nprobe))
+        .alias("_probe_cids"),
     )
     cond = F.array_contains(F.col("_probe_cids"), F.col("_cid"))
     if exclude_self:
@@ -1805,14 +1889,7 @@ def knn_ivfpq(
         .otherwise(F.lit(0.0))
         .alias("approx_cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("approx_cosine"), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, "rank", id_col, "approx_cosine")
-    )
+    return _topk(scored, k, query_id_col, id_col, "approx_cosine")
 
 
 def decontaminate_embeddings(

@@ -56,6 +56,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._meta_io import require_committed
 from .text import ws_tokens
 
 
@@ -318,12 +319,7 @@ def bm25_indexed(
     term-set join over the full postings scan (same result, bounded
     driver), the more-like-this degenerate case."""
     m = _read_text_meta(spark, path)
-    if m["status"] != "committed":
-        raise ValueError(
-            f"text index at {path!r} has status {m['status']!r} — a "
-            "rebuild or append died part-way; re-run it to completion, "
-            "then probe"
-        )
+    require_committed(m, path, "probe")
     id_col = m["id_col"]
     n = float(m["n_docs"])
     avgdl = (m["sum_dl"] / m["n_docs_tok"]) if m["n_docs_tok"] else 1.0
@@ -475,12 +471,7 @@ def _compact_text_index_unlocked(spark, path: str) -> None:
                          "committed", m["n_docs"], m["n_docs_tok"],
                          m["sum_dl"], m["token"])
         return
-    if m["status"] != "committed":
-        raise ValueError(
-            f"index at {path!r} has status {m['status']!r} — finish the "
-            "in-flight append first (re-run the same append), then "
-            "compact"
-        )
+    require_committed(m, path, "compact")
     post = spark.read.parquet(_tdir(path, m["versions"], "postings"))
     id_col = m["id_col"]
     new_vers = {

@@ -983,6 +983,8 @@ def test_jvm_vector_udfs_match_hof(spark):
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     cents = S.sample_centroids(emb, 16)
     books = S.pq_codebooks(emb, m=8, k=16)
+    # plus one null vector: no centroid and no codes on either route
+    emb = emb.unionByName(spark.createDataFrame([(-1, None, 0)], emb.schema))
     # HOF forms, forced by building the columns with no JVM route
     import avro_spark.functions.similarity as sim_mod
 
@@ -998,6 +1000,7 @@ def test_jvm_vector_udfs_match_hof(spark):
                     for r in hof.collect()}
     finally:
         sim_mod._vec_jvm = orig
+    assert hof_rows[-1] == (None, None, None)
     jvm = emb.select(
         "vec_id",
         S._argmax_centroid(F.col("embedding"), cents).alias("cid"),

@@ -480,3 +480,58 @@ def test_committed_rows_leave_out_null_vectors(spark, tmp_path):
     visible = spark.read.parquet(f"{path}/codes").where(
         F.col("centroid_id").isin(m["dir_ids"])).count()
     assert m["rows"] == visible == emb.count()
+
+
+def test_split_and_retrain_keep_ivf_parity(spark, tmp_path):
+    """IVF and IVF-PQ share one inverted-file kernel: built from the
+    same vectors and centroids, the same split and then the same
+    retrain leave both indexes with equal centroid matrices and
+    dir_ids, and the IVF-PQ probe with a full rerank answers exactly
+    like the IVF probe at full nprobe after every step."""
+    emb, cents, books, q, path = _setup(spark, tmp_path, "parity")
+    ivf = str(tmp_path / "parity_ivf")
+    Q.write_ivfpq_index(emb, cents, books, path)
+    S.write_ivf_index(emb, cents, ivf)
+
+    def assert_parity():
+        pm, im = Q._read_ivfpq_meta(spark, path), S._read_ivf_meta(spark, ivf)
+        assert pm["centroids"] == im["centroids"]
+        assert pm["dir_ids"] == im["dir_ids"]
+        n = len(im["centroids"])
+        want = _rows(S.knn_ivf_indexed(spark, ivf, q, None, k=5, nprobe=n))
+        assert want and _rows(Q.knn_ivfpq_indexed(
+            spark, path, q, k=5, nprobe=n, rerank=10_000)) == want
+
+    assert_parity()
+    hot = (S.assign_centroids(emb, cents).groupBy("centroid_id").count()
+           .orderBy(F.desc("count"), "centroid_id").first()[0])
+    S.split_ivf_centroid(spark, ivf, hot, k_sub=3, iters=1)
+    Q.split_ivfpq_centroid(spark, path, hot, k_sub=3, iters=1)
+    assert len(S._read_ivf_meta(spark, ivf)["centroids"]) == len(cents) + 2
+    assert_parity()
+    S.retrain_ivf_index(spark, ivf, iters=1)
+    Q.retrain_ivfpq_index(spark, path, iters=1)
+    assert_parity()
+
+
+def test_stats_compact_hint_follows_ivf_rule(spark, tmp_path):
+    """The maintenance hint says "compact" once any live codes partition
+    holds more than 8 files — the IVF index's rule, because a probe
+    opens every file of each partition it probes — even while the
+    files average far fewer than 8 per partition."""
+    emb, cents, books, q, path = _setup(spark, tmp_path, "hint")
+    Q.write_ivfpq_index(emb, cents, books, path)
+    batch = emb.where("vec_id < 3").coalesce(1)
+    for i in range(1, 9):
+        Q.write_ivfpq_index(
+            batch.withColumn("vec_id", F.col("vec_id") + 10_000 * i),
+            None, None, path, mode="append")
+    st = Q.ivfpq_index_stats(spark, path)
+    assert st["hot_partitions"] == 0
+    assert st["maintenance_hint"] == "compact"
+    assert st["max_files_per_partition"] > 8
+    assert st["codes_files"] <= 8 * st["populated_partitions"]
+    Q.compact_ivfpq_index(spark, path)
+    st2 = Q.ivfpq_index_stats(spark, path)
+    assert st2["max_files_per_partition"] == 1
+    assert st2["maintenance_hint"] is None
