@@ -18,10 +18,12 @@ place that knows its storage side:
   a compaction commits by overwriting the meta row.
 * the ``batches/`` registry rows of the streaming sinks.
 
-Local paths take a driver-side fast path: one metadata row IS driver
-work, not a distributed job (each Spark round-trip costs a job submit,
-task launch and committer, ~0.1-0.3 s, and the index gates make 5-12
-of them per lifecycle). It writes/reads the same parquet bytes with
+Local paths — by the one locality rule of :mod:`avro_spark._fs`, where
+every directory listing, move and delete here also goes — take a
+driver-side fast path: one metadata row IS driver work, not a
+distributed job (each Spark round-trip costs a job submit, task launch
+and committer, ~0.1-0.3 s, and the index gates make 5-12 of them per
+lifecycle). It writes/reads the same parquet bytes with
 pyarrow:
 
 * ``try_write_meta_row``: writes ``part-00000-meta.parquet`` via a
@@ -52,6 +54,8 @@ from __future__ import annotations
 import os
 import uuid
 
+from .. import _fs
+
 __all__ = [
     "LIFECYCLE",
     "admit_append",
@@ -68,62 +72,10 @@ __all__ = [
 _CANONICAL = "part-00000-meta.parquet"
 
 
-#: fs.defaultFS locality per Spark application (py4j round-trip
-#: amortized to one per application; keyed on the applicationId — an
-#: object id can be reused by a restarted context with a different
-#: default FS, an application id cannot)
-_DEFAULT_FS_LOCAL: dict = {}
-
-
-def _default_fs_is_local() -> bool:
-    """True iff the active SparkContext's Hadoop ``fs.defaultFS`` is the
-    local filesystem (or no SparkContext exists at all — plain-driver
-    tooling).
-
-    Spark resolves BARE paths against the default FS, so on a cluster
-    whose default FS is HDFS/S3 a bare index path names a REMOTE
-    directory: writing its meta/registry rows to the driver's local
-    disk would let a restarted query on another driver silently replay
-    every batch (try_read_registry returns an empty set for a missing
-    local dir). Bare paths therefore take the fast path only when the
-    default FS really is file:// — otherwise they fall back to the
-    Spark route, which resolves them exactly as the data tables are.
-    Explicit ``file:`` URIs are unambiguous and skip this check.
-
-    The SparkContext, not the calling thread's active session, is
-    asked: foreachBatch and thread-pool callers often run with no
-    active session, and must neither be guessed local nor lose the
-    fast path when the default FS really is local.
-    """
-    try:
-        from pyspark import SparkContext
-
-        sc = SparkContext._active_spark_context
-        if sc is None:
-            return True
-        key = sc.applicationId
-        hit = _DEFAULT_FS_LOCAL.get(key)
-        if hit is None:
-            fs = sc._jsc.hadoopConfiguration().get("fs.defaultFS") \
-                or "file:///"
-            hit = _DEFAULT_FS_LOCAL[key] = fs.startswith("file:")
-        return hit
-    except Exception:
-        # cannot tell — take the safe (Spark) route
-        return False
-
-
-def _local_dir(uri: str) -> "str | None":
-    """Filesystem path when ``uri`` is reachable by plain ``open()``
-    AND names the same directory Spark would resolve (file: URI, or a
-    bare path while fs.defaultFS is local), else None."""
-    from ..sources.avro_ocf import _is_local, _local_path
-
-    if not _is_local(uri):
-        return None
-    if not uri.startswith("file:") and not _default_fs_is_local():
-        return None
-    return _local_path(uri)
+# the fs.defaultFS lookup behind the fast path's locality rule lives in
+# _fs; bound here under the names this module has always exported
+_DEFAULT_FS_LOCAL = _fs._DEFAULT_FS
+_default_fs_is_local = _fs._default_fs_is_local
 
 
 def _pa_type(kind: str):
@@ -158,11 +110,10 @@ def try_write_meta_row(dir_uri: str, fields) -> bool:
     False (nothing written) for non-local URIs — caller falls back to
     its Spark write.
     """
-    d = _local_dir(dir_uri)
+    d = _fs.local_path(dir_uri)
     if d is None:
         return False
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     os.makedirs(d, exist_ok=True)
     schema = pa.schema([(n, _pa_type(k)) for n, k, _ in fields])
@@ -181,26 +132,23 @@ def try_write_meta_row(dir_uri: str, fields) -> bool:
                 os.remove(os.path.join(d, f))
             except OSError:
                 pass
-    tmp = os.path.join(d, f".tmp-{uuid.uuid4().hex}.parquet")
-    try:
-        pq.write_table(table, tmp, compression="snappy")
-        os.replace(tmp, os.path.join(d, _CANONICAL))
-    finally:
-        if os.path.exists(tmp):
-            os.remove(tmp)
+    _commit_file(table, os.path.join(d, _CANONICAL))
     return True
 
 
-def _dir_parquet_files(d: str) -> "list[str]":
+def _commit_file(table, final: str) -> None:
+    """Write ``table`` to ``final`` through a tmp file and an atomic
+    ``os.replace``: a reader sees the old file or the new one."""
+    import pyarrow.parquet as pq
+
+    tmp = os.path.join(os.path.dirname(final),
+                       f".tmp-{uuid.uuid4().hex}.parquet")
     try:
-        names = os.listdir(d)
-    except (FileNotFoundError, NotADirectoryError):
-        return []
-    return sorted(
-        os.path.join(d, f)
-        for f in names
-        if f.endswith(".parquet") and not f.startswith((".", "_"))
-    )
+        pq.write_table(table, tmp, compression="snappy")
+        os.replace(tmp, final)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
 
 
 def try_read_meta_row(dir_uri: str) -> "dict | None":
@@ -213,16 +161,16 @@ def try_read_meta_row(dir_uri: str) -> "dict | None":
     readable file with ZERO rows returns ``{}`` (the caller's
     head()-is-None "meta is empty" branch).
     """
-    d = _local_dir(dir_uri)
+    d = _fs.local_path(dir_uri)
     if d is None:
         return None
-    files = _dir_parquet_files(d)
+    files = _fs.parquet_files(dir_uri)
     if not files:
         return None
     import pyarrow.parquet as pq
 
-    for f in files:
-        t = pq.read_table(f)
+    for f, _ in files:
+        t = pq.read_table(os.path.join(d, f))
         if t.num_rows:
             return {
                 name: t.column(name)[0].as_py() for name in t.schema.names
@@ -238,15 +186,14 @@ def try_read_registry(uri: str) -> "set[int] | None":
     (pyarrow ArrowInvalid) — the same three-state contract as
     ``_read_batch_registry``.
     """
-    d = _local_dir(uri)
+    d = _fs.local_path(uri)
     if d is None:
         return None
-    if not os.path.isdir(d):
-        return set()
     import pyarrow.parquet as pq
 
     out: set[int] = set()
-    for f in _dir_parquet_files(d):
+    for name, _ in _fs.parquet_files(uri):
+        f = os.path.join(d, name)
         t = pq.read_table(f)
         if t.num_rows == 0:
             continue
@@ -266,25 +213,18 @@ def try_append_registry_row(dir_uri: str, batch_id: int) -> bool:
     """Append one ``(batch_id bigint)`` row as a new uniquely-named
     parquet file — byte-compatible with Spark's append mode. False for
     non-local URIs."""
-    d = _local_dir(dir_uri)
+    d = _fs.local_path(dir_uri)
     if d is None:
         return False
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     os.makedirs(d, exist_ok=True)
     table = pa.Table.from_pydict(
         {"batch_id": [int(batch_id)]},
         schema=pa.schema([("batch_id", pa.int64())]),
     )
-    tmp = os.path.join(d, f".tmp-{uuid.uuid4().hex}.parquet")
-    final = os.path.join(d, f"part-{uuid.uuid4().hex}-reg.parquet")
-    try:
-        pq.write_table(table, tmp, compression="snappy")
-        os.replace(tmp, final)
-    finally:
-        if os.path.exists(tmp):
-            os.remove(tmp)
+    _commit_file(table,
+                 os.path.join(d, f"part-{uuid.uuid4().hex}-reg.parquet"))
     return True
 
 
@@ -433,13 +373,11 @@ def finish_legacy_swap(path: str, tables) -> None:
     its marker guarantees each ``{table}_compact`` dir was whole before
     it landed, so move every remaining one over its base dir. The
     caller commits the meta row at version 0."""
-    from .dedup import _dir_exists, _mv_dir, _rm_dir
-
     for t in tables:
         comp = f"{path}/{t}_compact"
-        if _dir_exists(comp):
-            _rm_dir(f"{path}/{t}")
-            _mv_dir(comp, f"{path}/{t}")
+        if _fs.is_dir(comp):
+            _fs.rm_dir(f"{path}/{t}")
+            _fs.mv_dir(comp, f"{path}/{t}")
 
 
 def _read_batch_registry(spark, uri: str) -> "set[int]":
@@ -460,9 +398,7 @@ def _read_batch_registry(spark, uri: str) -> "set[int]":
         return got
     from pyspark.errors import AnalysisException
 
-    from .dedup import _dir_exists
-
-    if not _dir_exists(uri):
+    if not _fs.is_dir(uri):
         return set()
     try:
         # by NAME, like the driver-side route: a file with extra or

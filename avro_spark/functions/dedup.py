@@ -40,6 +40,7 @@ from ._meta_io import (
     require_committed,
     write_meta,
 )
+from .. import _fs
 from .text import let, normalize_text, ws_tokens
 
 # Mersenne-31 prime: keeps a*h + b < 2^62, safely inside signed int64
@@ -51,33 +52,6 @@ _MERSENNE = (1 << 31) - 1
 #: probes skip it and run as ONE action. At corpus scale the table
 #: crosses the threshold immediately and the pushdown engages as before.
 _PUSHDOWN_MIN_INDEX_BYTES = 32 * 1024 * 1024
-
-
-def _dir_bytes_at_least(uri: str, threshold: int) -> bool:
-    """True when the parquet data under ``uri`` totals >= ``threshold``
-    bytes. Local dirs stat lazily with early exit (a few µs per file);
-    non-local URIs return True — remote listings can be slow, and a
-    remote scan is exactly where pruning pays, so never skip it there.
-    """
-    if threshold <= 0:
-        return True
-    import os
-
-    from ..sources.avro_ocf import _is_local, _local_path
-
-    if not _is_local(uri):
-        return True
-    total = 0
-    for root, _dirs, files in os.walk(_local_path(uri)):
-        for f in files:
-            if f.endswith(".parquet") and not f.startswith((".", "_")):
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-                if total >= threshold:
-                    return True
-    return total >= threshold
 
 
 def portable_hash60(col: Column) -> Column:
@@ -766,7 +740,7 @@ def dedup_against_index(
     )
     sh_dir = _vdir(path, "shingles", m["versions"].get("shingles", 0))
     sh_scan = spark.read.parquet(sh_dir)
-    if candidate_pushdown and not _dir_bytes_at_least(
+    if candidate_pushdown and not _fs.bytes_at_least(
         sh_dir, pushdown_min_index_bytes
     ):
         # SCALE-ADAPTIVE (guide §1.2): below one scan task's worth of
@@ -834,32 +808,6 @@ def _vdir(path: str, table: str, version: int) -> str:
     return f"{path}/{table}" if not version else f"{path}/{table}_v{int(version)}"
 
 
-def _list_child_dirs(uri: str, prefix: str = "") -> "list[str]":
-    """NAMES of child directories under ``uri`` starting with
-    ``prefix`` (empty when ``uri`` itself is gone)."""
-    from ..sources.avro_ocf import _is_local, _local_path
-
-    if _is_local(uri):
-        import pathlib
-
-        base = pathlib.Path(_local_path(uri))
-        if not base.is_dir():
-            return []
-        return sorted(
-            p.name for p in base.iterdir()
-            if p.is_dir() and p.name.startswith(prefix))
-    from pyarrow import fs as pafs
-
-    f, p = pafs.FileSystem.from_uri(uri)
-    infos = f.get_file_info(pafs.FileSelector(p, allow_not_found=True))
-    return sorted(
-        i.path.rstrip("/").rsplit("/", 1)[-1]
-        for i in infos
-        if i.type == pafs.FileType.Directory
-        and i.path.rstrip("/").rsplit("/", 1)[-1].startswith(prefix)
-    )
-
-
 def _gc_table_versions(path: str, table: str, keep: int) -> None:
     """Best-effort removal of every physical dir of ``table`` other
     than the ``keep`` version: superseded committed versions plus the
@@ -871,14 +819,14 @@ def _gc_table_versions(path: str, table: str, keep: int) -> None:
     import re
 
     pat = re.compile(re.escape(table) + r"(_v(\d+))?$")
-    for name in _list_child_dirs(path, table):
+    for name in _fs.child_dirs(path, table):
         mm = pat.fullmatch(name)
         if not mm:
             continue  # e.g. 'shingles_compact' legacy residue — below
         v = int(mm.group(2) or 0)
         if v != keep:
             try:
-                _rm_dir(f"{path}/{name}")
+                _fs.rm_dir(f"{path}/{name}")
             except Exception:
                 pass
     # pre-r10 remove-then-move residue: '{table}_compact' /
@@ -889,124 +837,11 @@ def _gc_table_versions(path: str, table: str, keep: int) -> None:
     # __splitting__ statuses, which a committed flip has replaced.
     for suffix in ("_compact", "_split"):
         legacy = f"{path}/{table}{suffix}"
-        if _dir_exists(legacy):
+        if _fs.is_dir(legacy):
             try:
-                _rm_dir(legacy)
+                _fs.rm_dir(legacy)
             except Exception:
                 pass
-
-
-def _dir_exists(uri: str) -> bool:
-    from ..sources.avro_ocf import _is_local, _local_path
-
-    if _is_local(uri):
-        import os
-
-        return os.path.isdir(_local_path(uri))
-    from pyarrow import fs as pafs
-
-    f, p = pafs.FileSystem.from_uri(uri)
-    return f.get_file_info(p).type == pafs.FileType.Directory
-
-
-def _rm_dir(uri: str) -> None:
-    from ..sources.avro_ocf import _is_local, _local_path
-
-    if _is_local(uri):
-        import shutil
-
-        shutil.rmtree(_local_path(uri), ignore_errors=True)
-        return
-    from pyarrow import fs as pafs
-
-    f, p = pafs.FileSystem.from_uri(uri)
-    try:
-        f.delete_dir(p)
-    except FileNotFoundError:
-        pass
-
-
-def _mv_dir(src: str, dst: str) -> None:
-    from ..sources.avro_ocf import _is_local, _local_path
-
-    if _is_local(src):
-        import os
-
-        os.rename(_local_path(src), _local_path(dst))
-        return
-    from pyarrow import fs as pafs
-
-    f, p_src = pafs.FileSystem.from_uri(src)
-    _, p_dst = pafs.FileSystem.from_uri(dst)
-    f.move(p_src, p_dst)
-
-
-def _list_split_dirs(uri: str) -> "list[str]":
-    """NAMES of the ``centroid_id=*`` child directories under ``uri``
-    (empty when ``uri`` itself is gone). Names, not paths — non-local
-    listings return scheme-less paths that a URI-classifying helper
-    would misread as local, so callers rebuild full URIs as
-    ``f"{uri}/{name}"``."""
-    from ..sources.avro_ocf import _is_local, _local_path
-
-    if _is_local(uri):
-        import pathlib
-
-        base = pathlib.Path(_local_path(uri))
-        if not base.is_dir():
-            return []
-        return sorted(
-            p.name for p in base.glob("centroid_id=*") if p.is_dir())
-    from pyarrow import fs as pafs
-
-    f, p = pafs.FileSystem.from_uri(uri)
-    infos = f.get_file_info(pafs.FileSelector(p, allow_not_found=True))
-    return sorted(
-        i.path.rstrip("/").rsplit("/", 1)[-1]
-        for i in infos
-        if i.type == pafs.FileType.Directory
-        and i.path.rstrip("/").rsplit("/", 1)[-1].startswith("centroid_id=")
-    )
-
-
-def _list_parquet_files(
-    uri: str, recursive: bool = False
-) -> "list[tuple[object, str]]":
-    """(filesystem, path) pairs for every ``*.parquet`` under ``uri``
-    (``recursive`` descends into Hive partition dirs) — filesystem is
-    None for local paths (plain ``open()``). Non-local listings keep
-    the pyarrow FileSystem object alongside each path because
-    ``FileInfo.path`` is SCHEME-LESS (e.g. ``bucket/key`` for s3://) —
-    round-tripping it through a URI-classifying opener would misread it
-    as a local path and fail with FileNotFoundError. The ONE listing
-    helper for all three index-stats reports."""
-    from ..sources.avro_ocf import _is_local, _local_path
-
-    if _is_local(uri):
-        import pathlib
-
-        base = pathlib.Path(_local_path(uri))
-        it = base.rglob("*.parquet") if recursive else base.glob("*.parquet")
-        return sorted((None, str(p)) for p in it)
-    from pyarrow import fs as pafs
-
-    f, p = pafs.FileSystem.from_uri(uri)
-    infos = f.get_file_info(
-        pafs.FileSelector(p, recursive=recursive, allow_not_found=True))
-    return sorted(
-        ((f, i.path) for i in infos
-         if i.is_file and i.path.endswith(".parquet")),
-        key=lambda t: t[1],
-    )
-
-
-def _open_listed(fs, path: str):
-    """Read handle for a :func:`_list_parquet_files` entry: plain
-    ``open()`` for local, the LISTING's FileSystem object otherwise
-    (its paths are scheme-less and must not be re-classified)."""
-    if fs is None:
-        return open(path, "rb")
-    return fs.open_input_file(path)
 
 
 # ------------------------------------------------ single-writer lease
@@ -1017,19 +852,8 @@ def _lease_uri(path: str) -> str:
 def _read_lease(uri: str) -> "dict | None":
     import json
 
-    from ..sources.avro_ocf import _is_local, _local_path
-
-    try:
-        if _is_local(uri):
-            with open(_local_path(uri)) as fh:
-                return json.loads(fh.read())
-        from pyarrow import fs as pafs
-
-        f, p = pafs.FileSystem.from_uri(uri)
-        with f.open_input_file(p) as fh:
-            return json.loads(fh.read().decode("utf-8"))
-    except FileNotFoundError:
-        return None
+    raw = _fs.read_bytes(uri)
+    return None if raw is None else json.loads(raw)
 
 
 def _compare_and_delete_lease(uri: str, expect_token: str) -> bool:
@@ -1037,69 +861,21 @@ def _compare_and_delete_lease(uri: str, expect_token: str) -> bool:
     ``expect_token`` (r10, VERDICT wrong #3 — the plain
     read-check-delete let a writer that overstayed its own TTL delete
     a takeover's fresh lease in the window between its check and its
-    delete). Local filesystems get a genuinely atomic claim:
-    rename-to-private (atomic on POSIX) moves WHATEVER currently holds
-    the canonical name out of play, the private copy is verified, and
-    on a token mismatch it is restored via ``os.link`` — which fails
-    with EEXIST if a newer lease already took the slot (the stolen
-    copy is then superseded and dropped). So a non-matching lease is
-    never deleted. Object stores have no atomic rename through
+    delete). :func:`avro_spark._fs.delete_if` makes the check and the
+    delete one atomic claim on local filesystems, so a non-matching
+    lease is never deleted. Object stores have no atomic rename through
     pyarrow, so there this stays read-check-delete — the lease is
     belt-and-suspenders on top of the marker discipline, not a lock
     service (see :func:`acquire_index_lease`)."""
     import json
 
-    from ..sources.avro_ocf import _is_local, _local_path
-
-    if _is_local(uri):
-        import os
-        import uuid
-
-        lp = _local_path(uri)
-        private = f"{lp}.cad-{uuid.uuid4().hex}"
+    def holds(raw: bytes) -> bool:
         try:
-            os.rename(lp, private)
-        except FileNotFoundError:
+            return json.loads(raw).get("token") == expect_token
+        except ValueError:
             return False
-        try:
-            with open(private) as fh:
-                cur = json.loads(fh.read())
-        except (OSError, ValueError):
-            cur = None
-        if cur is not None and cur.get("token") == expect_token:
-            os.remove(private)
-            return True
-        try:
-            os.link(private, lp)
-        except FileExistsError:
-            pass  # superseded by a newer lease while out of play
-        os.remove(private)
-        return False
-    cur = _read_lease(uri)
-    if cur is None or cur.get("token") != expect_token:
-        return False
-    _rm_lease(uri)
-    return True
 
-
-def _rm_lease(uri: str) -> None:
-    from ..sources.avro_ocf import _is_local, _local_path
-
-    if _is_local(uri):
-        import os
-
-        try:
-            os.remove(_local_path(uri))
-        except FileNotFoundError:
-            pass
-        return
-    from pyarrow import fs as pafs
-
-    f, p = pafs.FileSystem.from_uri(uri)
-    try:
-        f.delete_file(p)
-    except FileNotFoundError:
-        pass
+    return _fs.delete_if(uri, holds)
 
 
 def acquire_index_lease(path: str, op: str, ttl_sec: int = 3600) -> str:
@@ -1124,11 +900,8 @@ def acquire_index_lease(path: str, op: str, ttl_sec: int = 3600) -> str:
     distributed lock service. Returns the lease token for
     :func:`release_index_lease`."""
     import json
-    import os
     import time
     import uuid
-
-    from ..sources.avro_ocf import _is_local, _local_path
 
     uri = _lease_uri(path)
     token = uuid.uuid4().hex
@@ -1136,24 +909,8 @@ def acquire_index_lease(path: str, op: str, ttl_sec: int = 3600) -> str:
         {"token": token, "op": op, "ts": time.time(), "ttl_sec": ttl_sec}
     )
     for _ in range(3):  # initial try + up to 2 stale takeovers/races
-        if _is_local(uri):
-            lp = _local_path(uri)
-            os.makedirs(os.path.dirname(lp), exist_ok=True)
-            try:
-                fd = os.open(lp, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                with os.fdopen(fd, "w") as fh:
-                    fh.write(payload)
-                return token
-            except FileExistsError:
-                pass
-        else:
-            from pyarrow import fs as pafs
-
-            f, p = pafs.FileSystem.from_uri(uri)
-            if f.get_file_info(p).type == pafs.FileType.NotFound:
-                with f.open_output_stream(p) as fh:
-                    fh.write(payload.encode("utf-8"))
-                return token
+        if _fs.create_exclusive(uri, payload.encode("utf-8")):
+            return token
         cur = _read_lease(uri)
         if cur is None:
             continue  # holder released between our create and read
@@ -1211,35 +968,27 @@ def minhash_index_stats(spark, path: str) -> dict:
       overlap another's — 0 right after a build/compaction; growth
       means the candidate pushdown's footer pruning is decaying.
     """
-    import pyarrow.parquet as pq
-
     m = _read_index_meta(spark, path)
     out = dict(m)
     sh_dir = _vdir(path, "shingles", m["versions"].get("shingles", 0))
     bd_dir = _vdir(path, "bands", m["versions"].get("bands", 0))
-    sh_files = _list_parquet_files(sh_dir)
-    bd_files = _list_parquet_files(bd_dir)
+    sh_files = _fs.parquet_footers(sh_dir)
+    bd_files = _fs.parquet_footers(bd_dir)
     ranges = []
-    sh_rows = 0
-    for fs_, fp in sh_files:
-        with _open_listed(fs_, fp) as fh:
-            md = pq.ParquetFile(fh).metadata
-            sh_rows += md.num_rows
-            lo = hi = None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(0).statistics
-                if st is not None and st.has_min_max:
-                    lo = st.min if lo is None else min(lo, st.min)
-                    hi = st.max if hi is None else max(hi, st.max)
-            if lo is not None:
-                ranges.append((lo, hi))
+    for _, _, md in sh_files:
+        lo = hi = None
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(0).statistics
+            if st is not None and st.has_min_max:
+                lo = st.min if lo is None else min(lo, st.min)
+                hi = st.max if hi is None else max(hi, st.max)
+        if lo is not None:
+            ranges.append((lo, hi))
     ranges.sort()
     overlapping = sum(
         1 for (_, hi), (lo, _) in zip(ranges, ranges[1:]) if hi > lo)
-    bd_rows = 0
-    for fs_, fp in bd_files:
-        with _open_listed(fs_, fp) as fh:
-            bd_rows += pq.ParquetFile(fh).metadata.num_rows
+    sh_rows = sum(md.num_rows for _, _, md in sh_files)
+    bd_rows = sum(md.num_rows for _, _, md in bd_files)
     distinct_ids = (
         spark.read.parquet(sh_dir)
         .agg(F.count("id").alias("n"),

@@ -50,6 +50,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import _fs
 from ._meta_io import (
     LIFECYCLE,
     _append_batch_registry,
@@ -299,7 +300,7 @@ def dedup_exact_against_index(
     )
     # a pre-flat index carries a 'bucket' partition column: ignored
     idx = spark.read.parquet(_fps_dir(path, m))
-    from .dedup import _PUSHDOWN_MIN_INDEX_BYTES, _dir_bytes_at_least
+    from .dedup import _PUSHDOWN_MIN_INDEX_BYTES
 
     if pushdown_min_index_bytes is None:
         pushdown_min_index_bytes = _PUSHDOWN_MIN_INDEX_BYTES
@@ -309,7 +310,7 @@ def dedup_exact_against_index(
     # collect is an extra action per probe — attach the batch
     # fingerprints with the broadcast join and run the whole probe as
     # ONE action. Identical answers (pinned by test_pushdown_and_fallback).
-    if _dir_bytes_at_least(_fps_dir(path, m), pushdown_min_index_bytes):
+    if _fs.bytes_at_least(_fps_dir(path, m), pushdown_min_index_bytes):
         cap = min(max_pushdown_fps, max_literal_fps)
         got = (bf.select("fingerprint").distinct()
                .limit(cap + 1).collect())
@@ -379,22 +380,12 @@ def exact_index_stats(spark, path: str) -> dict:
     (fingerprint, id) rows (append-retry residue) and a maintenance
     hint — ``"compact"`` on duplicates or once appends have left more
     than 8 files per range file of a build."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    from .dedup import _list_parquet_files, _open_listed
-
     m = _read_exact_meta(spark, path)
     fps_dir = _fps_dir(path, m)
     # recursive: a pre-flat index nests its files in bucket= dirs
-    files = _list_parquet_files(fps_dir, recursive=True)
-    rows = size = 0
-    for fs_, fp in files:
-        with _open_listed(fs_, fp) as fh:
-            rows += pq.ParquetFile(fh).metadata.num_rows
-        size += (os.path.getsize(fp) if fs_ is None
-                 else fs_.get_file_info(fp).size)
+    files = _fs.parquet_footers(fps_dir, recursive=True)
+    rows = sum(md.num_rows for _, _, md in files)
+    size = sum(s for _, s, _ in files)
     df = spark.read.parquet(fps_dir)
     dup = df.count() - df.dropDuplicates(
         ["fingerprint", m["id_col"]]).count()

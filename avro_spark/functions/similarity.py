@@ -50,6 +50,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import _fs
 from ._meta_io import (
     LIFECYCLE,
     _versions_json,
@@ -840,24 +841,16 @@ def _partition_footers(base: str, dir_ids: "Sequence[int]"):
     next compaction."""
     import os
 
-    import pyarrow.parquet as pq
-
-    from .dedup import _list_parquet_files, _open_listed
-
     live = {f"centroid_id={d}" for d in dir_ids}
     parts: dict = {}
     orphans = set()
-    for fs_, fp in _list_parquet_files(base, recursive=True):
-        part = os.path.dirname(fp).rstrip("/").rsplit("/", 1)[-1]
+    for rel, size, md in _fs.parquet_footers(base, recursive=True):
+        part = os.path.dirname(rel)
         if part not in live:
             orphans.add(part)
             continue
-        with _open_listed(fs_, fp) as fh:
-            nr = pq.ParquetFile(fh).metadata.num_rows
-        size = (os.path.getsize(fp) if fs_ is None
-                else fs_.get_file_info(fp).size)
         s = parts.setdefault(int(part.split("=", 1)[1]), [0, 0, 0])
-        s[0], s[1], s[2] = s[0] + 1, s[1] + nr, s[2] + size
+        s[0], s[1], s[2] = s[0] + 1, s[1] + md.num_rows, s[2] + size
     return parts, orphans
 
 
@@ -990,19 +983,17 @@ def _finish_legacy_split(spark: "SparkSession", path: str, m: dict,
     dir is removed only while its replacement still waits in the
     staging dir, so a re-run after a crash converges. New splits never
     enter this state (fresh-dir-id allocation + one meta flip)."""
-    from .dedup import _dir_exists, _list_split_dirs, _mv_dir, _rm_dir
-
     cid = m["split_cid"]
     for table in tables:
         data, split = f"{path}/{table}", f"{path}/{table}_split"
         cid_pending = f"{split}/centroid_id={cid}"
-        if _dir_exists(cid_pending):
-            _rm_dir(f"{data}/centroid_id={cid}")
-            _mv_dir(cid_pending, f"{data}/centroid_id={cid}")
-        for name in _list_split_dirs(split):
-            _rm_dir(f"{data}/{name}")  # a crashed previous move's residue
-            _mv_dir(f"{split}/{name}", f"{data}/{name}")
-        _rm_dir(split)
+        if _fs.is_dir(cid_pending):
+            _fs.rm_dir(f"{data}/centroid_id={cid}")
+            _fs.mv_dir(cid_pending, f"{data}/centroid_id={cid}")
+        for name in _fs.child_dirs(split, "centroid_id="):
+            _fs.rm_dir(f"{data}/{name}")  # a crashed previous move's residue
+            _fs.mv_dir(f"{split}/{name}", f"{data}/{name}")
+        _fs.rm_dir(split)
     commit(m["centroids"], spark.read.parquet(f"{path}/{tables[0]}").count())
 
 
@@ -1014,8 +1005,6 @@ def _split_tables(spark: "SparkSession", path: str, m: dict, cid: int,
     range checks, Lloyd training on the partition's stored vectors,
     fresh ``dir_ids``, the re-route of every table (:func:`_reroute`)
     and the one meta flip. Returns the new centroid matrix."""
-    from .dedup import _rm_dir
-
     if m["status"] == "__splitting__":
         # legacy (pre-r10) mid-split recovery
         if m["split_cid"] != cid:
@@ -1076,7 +1065,7 @@ def _split_tables(spark: "SparkSession", path: str, m: dict, cid: int,
     # next compaction retires them regardless)
     for d in dirs.values():
         try:
-            _rm_dir(f"{d}/centroid_id={old_dir}")
+            _fs.rm_dir(f"{d}/centroid_id={old_dir}")
         except Exception:
             pass
     return new_cents
@@ -1136,7 +1125,7 @@ def _ivf_candidates(probe_sets: DataFrame, scan,
     (one scan task's worth of index) the prune cannot cut IO and its
     collect is an extra action per probe — the whole probe runs as ONE
     action on the broadcast join."""
-    from .dedup import _PUSHDOWN_MIN_INDEX_BYTES, _dir_bytes_at_least
+    from .dedup import _PUSHDOWN_MIN_INDEX_BYTES
 
     if probe_join not in ("auto", "broadcast", "equi"):
         raise ValueError(f"bad probe_join: {probe_join}")
@@ -1144,7 +1133,7 @@ def _ivf_candidates(probe_sets: DataFrame, scan,
         prune_min_index_bytes = _PUSHDOWN_MIN_INDEX_BYTES
     n_queries, probed = 0, None
     if probe_join != "auto" or any(
-            _dir_bytes_at_least(d, prune_min_index_bytes) for d in dirs):
+            _fs.bytes_at_least(d, prune_min_index_bytes) for d in dirs):
         # bounded driver state: |queries| × nprobe ints — the scan filter
         rows = probe_sets.select(probe_col).collect()
         n_queries = len(rows)

@@ -56,6 +56,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import _fs
 from ._meta_io import require_committed
 from .text import ws_tokens
 
@@ -329,11 +330,11 @@ def bm25_indexed(
             F.array_distinct(ws_tokens(F.lower(F.col(query_text_col))))
         ).alias("term"),
     )
-    from .dedup import _PUSHDOWN_MIN_INDEX_BYTES, _dir_bytes_at_least
+    from .dedup import _PUSHDOWN_MIN_INDEX_BYTES
 
     if pushdown_min_index_bytes is None:
         pushdown_min_index_bytes = _PUSHDOWN_MIN_INDEX_BYTES
-    if not _dir_bytes_at_least(
+    if not _fs.bytes_at_least(
         _tdir(path, m["versions"], "postings"), pushdown_min_index_bytes
     ):
         # SCALE-ADAPTIVE (r11): below one scan task's worth of postings
@@ -522,39 +523,25 @@ def text_index_stats(spark, path: str) -> dict:
     import collections
     import os
 
-    import pyarrow.parquet as pq
-
-    from .dedup import _list_parquet_files, _open_listed
-
     m = _read_text_meta(spark, path)
     out = {
         "status": m["status"], "n_buckets": m["n_buckets"],
         "n_docs": m["n_docs"], "n_docs_tok": m["n_docs_tok"],
         "sum_dl": m["sum_dl"],
     }
-    rows = 0
-    size = 0
     part_rows: collections.Counter = collections.Counter()
     post_dir = _tdir(path, m["versions"], "postings")
-    files = _list_parquet_files(post_dir, recursive=True)
-    for fs_, fp in files:
-        with _open_listed(fs_, fp) as fh:
-            nr = pq.ParquetFile(fh).metadata.num_rows
-        rows += nr
-        part_rows[os.path.dirname(fp)] += nr
-        size += (os.path.getsize(fp) if fs_ is None
-                 else fs_.get_file_info(fp).size)
+    files = _fs.parquet_footers(post_dir, recursive=True)
+    for rel, _, md in files:
+        part_rows[os.path.dirname(rel)] += md.num_rows
+    rows = sum(part_rows.values())
     out["postings_files"] = len(files)
     out["postings_rows"] = rows
-    out["postings_bytes"] = size
-    ts_files = _list_parquet_files(
+    out["postings_bytes"] = sum(s for _, s, _ in files)
+    ts_files = _fs.parquet_footers(
         _tdir(path, m["versions"], "termstats"), recursive=True)
     out["termstats_files"] = len(ts_files)
-    ts_rows = 0
-    for fs_, fp in ts_files:
-        with _open_listed(fs_, fp) as fh:
-            ts_rows += pq.ParquetFile(fh).metadata.num_rows
-    out["termstats_rows"] = ts_rows
+    out["termstats_rows"] = sum(md.num_rows for _, _, md in ts_files)
     max_pr = max(part_rows.values()) if part_rows else 0
     mean_pr = (rows / len(part_rows)) if part_rows else 0.0
     out["max_rows_per_bucket"] = int(max_pr)
@@ -566,7 +553,7 @@ def text_index_stats(spark, path: str) -> dict:
     # bucket routing is hash-pinned so the only remedy is compaction —
     # worth it when retry residue taxes every probe or per-batch
     # appends have shattered the buckets into many small files
-    n_buckets = max(len({os.path.dirname(fp) for _, fp in files}), 1)
+    n_buckets = max(len(part_rows), 1)
     out["maintenance_hint"] = (
         "compact" if dup > 0 or len(files) > 8 * n_buckets else None
     )

@@ -313,13 +313,14 @@ def stream_merge_snapshot(
     against a table format with file-level pruning (the operator is
     format-agnostic — only this demo sink rewrites whole snapshots).
     """
-    import glob
-    import os
-    import shutil
+    import posixpath
 
+    from .. import _fs
     from ..operators.merge import merge_snapshot
 
     spark = changes.sparkSession
+    parent, name = posixpath.split(target_path.rstrip("/"))
+    parent = parent or "."
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         # crash recovery FIRST: a kill between the two renames below
@@ -328,15 +329,15 @@ def stream_merge_snapshot(
         # otherwise the checkpoint-replayed batch would silently rebuild
         # from empty (the exact loss mode the existence check exists to
         # prevent). Inflight scratch dirs from failed writes are junk.
-        olds = sorted(glob.glob(f"{target_path}.__old_*"))
-        if not os.path.exists(target_path) and olds:
-            os.rename(olds.pop(), target_path)
-        for leftover in olds + glob.glob(f"{target_path}.__inflight_*"):
-            shutil.rmtree(leftover, ignore_errors=True)
+        olds = _fs.child_dirs(parent, f"{name}.__old_")
+        if not _fs.is_dir(target_path) and olds:
+            _fs.mv_dir(posixpath.join(parent, olds.pop()), target_path)
+        for leftover in olds + _fs.child_dirs(parent, f"{name}.__inflight_"):
+            _fs.rm_dir(posixpath.join(parent, leftover))
         # explicit existence check, NOT try/except around the read: a
         # transient read failure (permissions, corrupt footer) must fail
         # the batch loudly
-        if os.path.exists(target_path):
+        if _fs.is_dir(target_path):
             base = spark.read.parquet(target_path).select(*base_schema)
         else:
             base = spark.createDataFrame(
@@ -352,10 +353,10 @@ def stream_merge_snapshot(
         tmp = f"{target_path}.__inflight_{batch_id}"
         merged.write.mode("overwrite").parquet(tmp)
         old = f"{target_path}.__old_{batch_id}"
-        if os.path.exists(target_path):
-            os.rename(target_path, old)
-        os.rename(tmp, target_path)
-        shutil.rmtree(old, ignore_errors=True)
+        if _fs.is_dir(target_path):
+            _fs.mv_dir(target_path, old)
+        _fs.mv_dir(tmp, target_path)
+        _fs.rm_dir(old)
 
     writer = changes.writeStream.foreachBatch(apply_batch).outputMode("update")
     if checkpoint:

@@ -863,7 +863,7 @@ def test_nonlocal_storage_keeps_jvm_engine(spark, tmp_path, zoo, monkeypatch):
     storage), engine='auto' used to silently drop to the ~10× slower
     Python engine, and split planning failed outright. Schema
     verification now runs as ONE distributed Spark job (executors open
-    files via _fs_open), so auto KEEPS the JVM block codec. Simulated by
+    files via _fs.open_input), so auto KEEPS the JVM block codec. Simulated by
     failing every driver-side header peek; executor worker processes
     re-import the module unpatched and read normally — exactly the
     cannot-reach-from-driver shape."""
@@ -911,13 +911,13 @@ def test_nonlocal_uris_route_through_pyarrow_fs(spark, tmp_path, zoo, monkeypatc
     JVM-planned."""
     if not _jvm_ready(spark):
         pytest.skip("no JDK")
-    import avro_spark.sources.avro_ocf as ocf_mod
+    from avro_spark import _fs
 
     sch, df = zoo
     d = str(tmp_path / "pafs")
     write_avro_files(df.repartition(2), sch, d, block_records=64)
     want = _collect(read_avro_files(spark, d, sch))
-    monkeypatch.setattr(ocf_mod, "_is_local", lambda uri: False)
+    monkeypatch.setattr(_fs, "local_path", lambda uri: None)
     got_df = read_avro_files(spark, d, sch)
     plan = got_df._sc._jvm.PythonSQLUtils.explainString(
         got_df._jdf.queryExecution(), "simple")
@@ -932,14 +932,14 @@ def test_write_to_nonlocal_storage_via_pyarrow_fs(spark, tmp_path, zoo, monkeypa
     the target judged non-local at plan time, the driver lists/clears
     part files via pyarrow.fs and every EXECUTOR streams its part to
     the final key through filesystem.open_output_stream (no os.replace
-    — object stores have no rename). Forced here by patching _is_local
+    — object stores have no rename). Forced here by patching local_path
     so the plan-time flag routes file:// URIs through the pyarrow
     branch end-to-end; all three modes keep their semantics."""
-    import avro_spark.sources.avro_ocf as ocf_mod
+    from avro_spark import _fs
 
     sch, df = zoo
     d = "file://" + str(tmp_path / "remote_write")
-    monkeypatch.setattr(ocf_mod, "_is_local", lambda uri: False)
+    monkeypatch.setattr(_fs, "local_path", lambda uri: None)
     first = df.where("id < 100")
     summaries = write_avro_files(first.repartition(2), sch, d, engine="python")
     assert len(summaries) == 2
@@ -957,7 +957,7 @@ def test_write_to_nonlocal_storage_via_pyarrow_fs(spark, tmp_path, zoo, monkeypa
         os.path.join(local_d, "part-*.avro")))
     assert remote_sizes == local_sizes
     # overwrite / error / append semantics through the pyarrow listing
-    monkeypatch.setattr(ocf_mod, "_is_local", lambda uri: False)
+    monkeypatch.setattr(_fs, "local_path", lambda uri: None)
     with pytest.raises(AvroSparkError, match="target not empty"):
         write_avro_files(first, sch, d, mode="error")
     write_avro_files(df.where("id >= 100 and id < 150").repartition(1),

@@ -7,6 +7,7 @@ import os
 
 import pytest
 
+from avro_spark import _fs
 from avro_spark.functions import _meta_io as M
 from avro_spark.functions import dedup as D
 
@@ -233,6 +234,36 @@ def test_default_fs_resolved_without_active_session(spark, tmp_path,
         M._DEFAULT_FS_LOCAL.clear()
 
 
+def test_bare_paths_under_remote_default_fs_fail_loudly(spark, tmp_path):
+    """Under a non-local fs.defaultFS a bare index path names cluster
+    storage for EVERY storage decision, not just the meta fast path:
+    the writer lease and the registry's existence check reach for the
+    cluster (pyarrow fails fast here: libhdfs is not loadable) instead
+    of the driver's disk, where a lease would let two drivers both hold
+    one and a missing registry would replay every batch. A bare path is
+    qualified against the default FS; a relative one is refused."""
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    old = hconf.get("fs.defaultFS")
+    idx = str(tmp_path / "remote_idx")
+    M._DEFAULT_FS_LOCAL.clear()
+    try:
+        hconf.set("fs.defaultFS", "hdfs://nn:9000/")
+        with pytest.raises(OSError):
+            D.acquire_index_lease(idx, "append")
+        assert not os.path.exists(D._lease_uri(idx))
+        with pytest.raises(OSError):
+            D._read_batch_registry(spark, f"{idx}/batches")
+        assert _fs.qualify(idx) == f"hdfs://nn:9000{idx}"
+        with pytest.raises(ValueError, match="relative path"):
+            _fs.qualify("remote_idx")
+    finally:
+        if old is None:
+            hconf.unset("fs.defaultFS")
+        else:
+            hconf.set("fs.defaultFS", old)
+        M._DEFAULT_FS_LOCAL.clear()
+
+
 def test_spark_registry_route_reads_batch_id_by_name(spark, tmp_path,
                                                      monkeypatch):
     """The Spark fallback of _read_batch_registry (remote registries)
@@ -310,7 +341,7 @@ def test_family_meta_row_same_on_both_routes(spark, tmp_path, monkeypatch,
     local, remote = str(tmp_path / "local"), str(tmp_path / "spark")
     got_local = write_and_read(spark, local)
     with monkeypatch.context() as mp:
-        mp.setattr(M, "_local_dir", lambda uri: None)
+        mp.setattr(_fs, "local_path", lambda uri: None)
         got_remote = write_and_read(spark, remote)
     a = spark.read.parquet(f"{local}/meta")
     b = spark.read.parquet(f"{remote}/meta")

@@ -197,14 +197,18 @@ def test_stream_json_validation(spark, tmp_path):
     assert got["not json"] == ["invalid JSON"]
 
 
-def test_stream_merge_snapshot(spark, tmp_path):
+@pytest.mark.parametrize("scheme", ["bare", "file_uri"])
+def test_stream_merge_snapshot(spark, tmp_path, scheme):
     """CDC change stream folded into a parquet snapshot via foreachBatch
-    (streaming face of operators/merge.py)."""
+    (streaming face of operators/merge.py), at a bare path and at a
+    file:// URI."""
     import avro_spark.streaming.pipeline as P
 
     src = tmp_path / "changes"
     src.mkdir()
     target = str(tmp_path / "snapshot")
+    if scheme == "file_uri":
+        target = f"file://{target}"
     spark.createDataFrame(
         [(1, "a", "upsert", 1), (2, "b", "upsert", 1)],
         "id long, v string, op string, version long",

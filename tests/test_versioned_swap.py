@@ -4,7 +4,7 @@ Every whole-table replacement (compaction) and every split now commits
 by overwriting the ONE meta row — there is no remove-then-move window
 anywhere on the commit path. These tests enforce that on a path that
 MIMICS no-atomic-rename semantics in the strictest way possible:
-``_mv_dir`` (the only rename primitive in the codebase) is patched to
+``_fs.mv_dir`` (the only rename primitive in the codebase) is patched to
 RAISE, as it effectively would on an object store where a crash inside
 an emulated per-object move strands files on both sides. Every
 build / append / compact / split / probe across all five index
@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 import avro_spark.functions.dedup as D
 import avro_spark.functions.similarity as S
-from avro_spark.functions import _meta_io as M
+from avro_spark import _fs
 from avro_spark.functions import exact_index as X
 from avro_spark.functions import ivfpq_index as Q
 from avro_spark.functions import text_index as T
@@ -37,12 +37,12 @@ def no_rename(monkeypatch):
 
     def _refuse(src, dst):
         raise AssertionError(
-            f"_mv_dir({src!r}, {dst!r}) on a commit path — the "
+            f"mv_dir({src!r}, {dst!r}) on a commit path — the "
             "versioned swap contract forbids renames outside legacy "
             "recovery"
         )
 
-    monkeypatch.setattr(D, "_mv_dir", _refuse)
+    monkeypatch.setattr(_fs, "mv_dir", _refuse)
 
 
 @pytest.fixture(params=["local", "spark"])
@@ -50,7 +50,7 @@ def meta_route(request, monkeypatch):
     """The route every meta row commits through: the driver-local fast
     path, or the Spark route a non-local URI takes."""
     if request.param == "spark":
-        monkeypatch.setattr(M, "_local_dir", lambda uri: None)
+        monkeypatch.setattr(_fs, "local_path", lambda uri: None)
     return request.param
 
 
