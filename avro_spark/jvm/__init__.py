@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .._fs import app_id
 from ..errors import CompileError
 from ..schema import Schema
 from ..schema.nodes import (
@@ -205,17 +206,23 @@ _registered: set[tuple[str, str]] = set()
 
 
 def _session_key(spark: SparkSession) -> str:
-    try:
-        return str(spark._jsparkSession.sessionUUID())
-    except Exception:  # non-classic shells without the JVM handle
-        return spark.sparkContext.applicationId
+    """The JVM session's UUID, remembered on the Python handle (which
+    wraps one JVM session for life)."""
+    key = spark.__dict__.get("_avro_spark_session_key")
+    if key is None:
+        try:
+            key = str(spark._jsparkSession.sessionUUID())
+        except Exception:  # non-classic shells without the JVM handle
+            key = app_id(spark.sparkContext)
+        spark._avro_spark_session_key = key
+    return key
 
 
 def _attach(spark: SparkSession) -> bool:
     jar = ensure_jar()
     if jar is None:
         return False
-    key = (spark.sparkContext.applicationId, "__jar__")
+    key = (app_id(spark.sparkContext), "__jar__")
     if key not in _registered:
         spark.sql(f"ADD JAR '{jar}'")
         _registered.add(key)
@@ -230,26 +237,22 @@ def jvm_codec_available(spark: SparkSession) -> bool:
         return False
 
 
-def _register_encode(spark: SparkSession) -> str:
-    app = _session_key(spark)
-    if (app, _ENC_FN) not in _registered:
-        spark.udf.registerJavaFunction(
-            _ENC_FN, "avrospark.AvroCodecUDF$Encode", T.BinaryType()
-        )
-        _registered.add((app, _ENC_FN))
-    return _ENC_FN
-
-
-def _register_decode(spark: SparkSession, schema: Schema, json_str: str) -> str:
-    fp = hashlib.md5(json_str.encode()).hexdigest()[:12]
-    name = f"avsp_jvm_decode_{fp}"
-    app = _session_key(spark)
+def _register(spark: SparkSession, name: str, cls: str, rtype,
+              app: Optional[str] = None) -> str:
+    """Register Java UDF ``cls`` with return type ``rtype`` as ``name``
+    in ``spark``'s session, once per session key ``app``. Returns
+    ``name``."""
+    app = app or _session_key(spark)
     if (app, name) not in _registered:
         spark.udf.registerJavaFunction(
-            name, "avrospark.AvroCodecUDF$Decode", schema.to_struct_type()
-        )
+            name, f"avrospark.AvroCodecUDF${cls}", rtype)
         _registered.add((app, name))
     return name
+
+
+def _fp_name(prefix: str, *parts: str) -> str:
+    """UDF name content-addressed by its schema JSON (and projection)."""
+    return f"{prefix}_{hashlib.md5(chr(0).join(parts).encode()).hexdigest()[:12]}"
 
 
 _DOT_FN = "avsp_jvm_dot"
@@ -264,23 +267,13 @@ def dot_jvm(spark: SparkSession) -> Optional[str]:
             return None
     except Exception:
         return None
-    app = _session_key(spark)
-    if (app, _DOT_FN) not in _registered:
-        spark.udf.registerJavaFunction(
-            _DOT_FN, "avrospark.AvroCodecUDF$Dot", T.DoubleType()
-        )
-        _registered.add((app, _DOT_FN))
-    return _DOT_FN
+    return _register(spark, _DOT_FN, "Dot", T.DoubleType())
 
 
 _VEC_UDFS = {
-    "avsp_jvm_argmax_centroid": (
-        "avrospark.AvroCodecUDF$ArgmaxCentroid", T.IntegerType()),
-    "avsp_jvm_pq_codes": (
-        "avrospark.AvroCodecUDF$PqCodes", T.ArrayType(T.IntegerType())),
-    "avsp_jvm_pq_reconstruct": (
-        "avrospark.AvroCodecUDF$PqReconstruct",
-        T.ArrayType(T.DoubleType())),
+    "avsp_jvm_argmax_centroid": ("ArgmaxCentroid", T.IntegerType()),
+    "avsp_jvm_pq_codes": ("PqCodes", T.ArrayType(T.IntegerType())),
+    "avsp_jvm_pq_reconstruct": ("PqReconstruct", T.ArrayType(T.DoubleType())),
 }
 
 
@@ -293,12 +286,7 @@ def vec_udf(spark: SparkSession, name: str) -> Optional[str]:
             return None
     except Exception:
         return None
-    app = _session_key(spark)
-    if (app, name) not in _registered:
-        cls, rtype = _VEC_UDFS[name]
-        spark.udf.registerJavaFunction(name, cls, rtype)
-        _registered.add((app, name))
-    return name
+    return _register(spark, name, *_VEC_UDFS[name])
 
 
 _SPLIT_FN = "avsp_jvm_ocf_split"
@@ -326,17 +314,6 @@ JVM_OCF_CODECS = ("null", "deflate", "snappy", "zstandard", "bzip2", "xz")
 _COMPRESS_FN = "avsp_jvm_compress_block"
 
 
-def _register_compress_block(spark: SparkSession) -> str:
-    app = _session_key(spark)
-    if (app, _COMPRESS_FN) not in _registered:
-        spark.udf.registerJavaFunction(
-            _COMPRESS_FN, "avrospark.AvroCodecUDF$CompressBlock",
-            T.BinaryType(),
-        )
-        _registered.add((app, _COMPRESS_FN))
-    return _COMPRESS_FN
-
-
 def compress_blocks_jvm(
     blocks: DataFrame, codec: str, level: "Optional[int]",
     data_col: str = "body", out_col: str = "data",
@@ -348,7 +325,7 @@ def compress_blocks_jvm(
     spark = blocks.sparkSession
     if not _attach(spark):
         raise RuntimeError("JVM codec jar unavailable")
-    fn = _register_compress_block(spark)
+    fn = _register(spark, _COMPRESS_FN, "CompressBlock", T.BinaryType())
     cols = [F.col(c) for c in blocks.columns if c != data_col]
     return blocks.select(
         *cols,
@@ -364,46 +341,6 @@ def _sql_str(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
 
 
-def _register_split_blocks(spark: SparkSession) -> str:
-    app = _session_key(spark)
-    if (app, _SPLIT_FN) not in _registered:
-        spark.udf.registerJavaFunction(
-            _SPLIT_FN, "avrospark.AvroCodecUDF$SplitBlocks", _BLOCK_ROWS_T
-        )
-        _registered.add((app, _SPLIT_FN))
-    return _SPLIT_FN
-
-
-def _register_decode_block(spark: SparkSession, schema: Schema, json_str: str) -> str:
-    fp = hashlib.md5(json_str.encode()).hexdigest()[:12]
-    name = f"avsp_jvm_decblk_{fp}"
-    app = _session_key(spark)
-    if (app, name) not in _registered:
-        spark.udf.registerJavaFunction(
-            name,
-            "avrospark.AvroCodecUDF$DecodeBlock",
-            T.ArrayType(schema.to_struct_type()),
-        )
-        _registered.add((app, name))
-    return name
-
-
-def _register_decode_block_proj(
-    spark: SparkSession, out_struct: T.StructType, json_str: str, keep_csv: str
-) -> str:
-    fp = hashlib.md5(f"{json_str}\x00{keep_csv}".encode()).hexdigest()[:12]
-    name = f"avsp_jvm_decprj_{fp}"
-    app = _session_key(spark)
-    if (app, name) not in _registered:
-        spark.udf.registerJavaFunction(
-            name,
-            "avrospark.AvroCodecUDF$DecodeBlockProj",
-            T.ArrayType(out_struct),
-        )
-        _registered.add((app, name))
-    return name
-
-
 def decode_ocf_blocks_jvm(
     blocks: DataFrame, schema: Schema, codec_col: str = "codec",
     count_col: str = "count", data_col: str = "data",
@@ -417,8 +354,14 @@ def decode_ocf_blocks_jvm(
     ``columns`` pushes the projection INTO the decoder: unrequested
     top-level fields are byte-skipped, never materialized (the Avro
     analogue of parquet column pruning — the bytes are still read, row
-    format, but nothing is allocated or shipped for pruned fields)."""
+    format, but nothing is allocated or shipped for pruned fields).
+
+    The UDF is registered on every call; its explode and field
+    selection are built once per schema content, projection, input
+    columns and session (:func:`avro_spark.plans.compiled.built_columns`)."""
     import json
+
+    from ..plans.compiled import built_columns, schema_key
 
     root = schema.root
     if not isinstance(root, Record):
@@ -428,30 +371,33 @@ def decode_ocf_blocks_jvm(
         raise JvmUnsupported("no JDK available to build the codec jar")
     json_str = json.dumps(plain_avro_json(root))
     spark_t = schema.to_struct_type()
+    app = _session_key(spark)
+    args = [json_str]
     if columns is not None:
         from ..sources.avro_binary import (
             project_struct_type, projection_csv, validate_projection,
         )
 
         spec = validate_projection(root, columns)
-        out_struct = project_struct_type(spark_t, columns)
-        keep_csv = projection_csv(root, spec)
-        fn = _register_decode_block_proj(spark, out_struct, json_str, keep_csv)
-        call = F.call_udf(
-            fn, F.lit(json_str), F.lit(keep_csv), F.col(codec_col),
-            F.col(count_col), F.col(data_col),
-        )
-        spark_t = out_struct
+        spark_t = project_struct_type(spark_t, columns)
+        args.append(projection_csv(root, spec))
+        fn = _register(spark, _fp_name("avsp_jvm_decprj", *args),
+                       "DecodeBlockProj", T.ArrayType(spark_t), app)
     else:
-        fn = _register_decode_block(spark, schema, json_str)
-        call = F.call_udf(
-            fn, F.lit(json_str), F.col(codec_col),
-            F.col(count_col), F.col(data_col),
-        )
-    recs = blocks.select(F.explode(call).alias("r"))
-    return recs.select(
-        *[F.col(f"r.`{f.name}`").alias(f.name) for f in spark_t.fields]
-    )
+        fn = _register(spark, _fp_name("avsp_jvm_decblk", json_str),
+                       "DecodeBlock", T.ArrayType(spark_t), app)
+
+    def build():
+        call = F.call_udf(fn, *map(F.lit, args), F.col(codec_col),
+                          F.col(count_col), F.col(data_col))
+        return [F.explode(call).alias("r"), *[
+            F.col(f"r.`{f.name}`").alias(f.name) for f in spark_t.fields]]
+
+    explode, *fields = built_columns(
+        ("decode_blocks", schema_key(schema),
+         None if columns is None else tuple(columns),
+         codec_col, count_col, data_col, app), build)
+    return blocks.select(explode).select(*fields)
 
 
 def read_ocf_content_jvm(
@@ -466,15 +412,19 @@ def read_ocf_content_jvm(
     per-file guard for STREAMING reads, where plan-time header peeks
     don't exist; batch readers verify canonically at plan time and pass
     the default empty string."""
+    from ..plans.compiled import built_columns
+
     spark = files.sparkSession
     if not _attach(spark):
         raise JvmUnsupported("no JDK available to build the codec jar")
-    split_fn = _register_split_blocks(spark)
-    blocks = files.select(
-        F.explode(
-            F.call_udf(split_fn, F.lit(expect_schema_json), F.col("content"))
-        ).alias("b")
-    ).select("b.codec", "b.count", "b.data")
+    app = _session_key(spark)
+    split_fn = _register(spark, _SPLIT_FN, "SplitBlocks", _BLOCK_ROWS_T, app)
+    explode, *fields = built_columns(
+        ("split_blocks", expect_schema_json, app),
+        lambda: [F.explode(F.call_udf(split_fn, F.lit(expect_schema_json),
+                                      F.col("content"))).alias("b"),
+                 *[F.col(f"b.{c}") for c in ("codec", "count", "data")]])
+    blocks = files.select(explode).select(*fields)
     return decode_ocf_blocks_jvm(blocks, schema, columns=columns)
 
 
@@ -499,7 +449,7 @@ def to_avro_bytes_jvm(df: DataFrame, schema: Schema, column: str = "avro") -> Da
     if not _attach(spark):
         raise JvmUnsupported("no JDK available to build the codec jar")
     json_str = json.dumps(plain_avro_json(root))
-    fn = _register_encode(spark)
+    fn = _register(spark, _ENC_FN, "Encode", T.BinaryType())
     spark_t = schema.to_struct_type()
     # cast each column to the schema's Spark type so the Java side sees
     # exactly the boxed types it expects (e.g. int column vs long field);
@@ -539,21 +489,16 @@ def from_avro_bytes_jvm(
         spec = validate_projection(root, columns)
         spark_t = project_struct_type(spark_t, columns)
         keep_csv = projection_csv(root, spec)
-        fp = hashlib.md5(f"{json_str}\x00{keep_csv}".encode()).hexdigest()[:12]
-        name = f"avsp_jvm_decp_{fp}"
-        app = _session_key(spark)
-        if (app, name) not in _registered:
-            spark.udf.registerJavaFunction(
-                name, "avrospark.AvroCodecUDF$DecodeProj", spark_t
-            )
-            _registered.add((app, name))
+        name = _register(spark, _fp_name("avsp_jvm_decp", json_str, keep_csv),
+                         "DecodeProj", spark_t)
         decoded = df.select(
             F.call_udf(
                 name, F.lit(json_str), F.lit(keep_csv), F.col(column)
             ).alias("r")
         )
     else:
-        fn = _register_decode(spark, schema, json_str)
+        fn = _register(spark, _fp_name("avsp_jvm_decode", json_str), "Decode",
+                       spark_t)
         decoded = df.select(
             F.call_udf(fn, F.lit(json_str), F.col(column)).alias("r")
         )

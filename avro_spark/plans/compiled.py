@@ -15,7 +15,8 @@ detail of the reference runtime we do not reproduce (SURVEY.md §2C C1).
 
 from __future__ import annotations
 
-from typing import Any, Optional, Sequence
+import threading
+from typing import Any, Callable, Hashable, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -28,6 +29,50 @@ from .layout import SERVICE_FIELD_NAME, build_layout
 from .resolution import FieldSource, Resolved, resolve_cached
 
 _SERVICE_TYPES = {"boolean", "int", "long", "float", "double", "string", "bytes"}
+
+#: bound of the built-Column memo of one SparkContext (entries, LRU)
+_BUILT_MAX = 256
+_BUILT_LOCK = threading.Lock()
+
+
+def schema_key(s: Schema) -> tuple:
+    """Content key of a schema handle: its export and create-options.
+    Equal keys parse to equal ASTs, so they plan equal trees."""
+    return repr(s.export()), repr(sorted(s.options.items()))
+
+
+def built_columns(key: Hashable, build: Callable[[], Sequence[Column]]) -> tuple:
+    """``build()``'s Column list, built once per SparkContext and
+    ``key`` — the reference compiles a (writer, reader) pair's closures
+    once and reuses them (init.lua:41-63); rebuilding a JVM Column tree
+    costs one py4j round trip per node. Columns are unresolved
+    expressions, so one list serves any DataFrame whose columns match
+    the key. The memo holds plan state, never results, and is bounded
+    (:data:`_BUILT_MAX`, least recently used out). ``key`` must cover
+    everything the build reads except the unroll limits, which are
+    added here. A build that raises stores nothing."""
+    from pyspark import SparkContext
+
+    from ..schema import spark_types
+    from . import flatten
+
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return tuple(build())
+    key = (key, flatten.MAX_UNROLL, spark_types.UNROLL_WIDTH_TARGET,
+           getattr(flatten._TLS, "budget", None))
+    with _BUILT_LOCK:
+        memo = sc.__dict__.setdefault("_avro_spark_built", {})
+        got = memo.pop(key, None)
+        if got is not None:
+            memo[key] = got
+            return got
+    got = tuple(build())
+    with _BUILT_LOCK:
+        memo[key] = got
+        while len(memo) > _BUILT_MAX:
+            del memo[next(iter(memo))]
+    return got
 
 
 class CompiledSchema:
@@ -86,6 +131,18 @@ class CompiledSchema:
         self.plan: Resolved = resolve_cached(self.writer, self.reader, downgrade)
         if self.plan.kind != "record":  # e.g. writer record vs scalar reader
             raise CompileError("writer and reader must both be records or both roots")
+        self._key: Optional[tuple] = None
+
+    def _memo_key(self, op: str, df: DataFrame) -> tuple:
+        """:func:`built_columns` key of ``op`` over ``df``: the compiled
+        pair's content and options, and ``df``'s column names and types
+        (which fix the fields present)."""
+        if self._key is None:
+            self._key = (
+                schema_key(self.writer), schema_key(self.reader),
+                self.downgrade, self.validate, self.service_fields,
+                self.alpha_nullable_record_xflatten)
+        return op, self._key, df.schema.json()
 
     # ------------------------------------------------------------- naming
     def flat_names(self, which: str = "reader") -> list[str]:
@@ -148,21 +205,29 @@ class CompiledSchema:
             if wf.name in in_types:
                 base = () if self.wrapped_root and wf.name == _ROOT_FIELD else (wf.name,)
                 check_float_inputs(wf.type, in_types[wf.name], base)
-        src_cols = set(df.columns)
-
-        def get_src(wf):
-            if wf.name in src_cols:
-                return F.col(wf.name)
-            return lit_for(wf.type, wf.default)
-
-        cells = flatten_cells(self.plan, get_src, (), self.validate)
         names = self.flat_names("reader")
-        exprs: list[Column] = []
-        for sf_type, sf_val in zip(self.service_fields, service_values):
-            c = sf_val if isinstance(sf_val, Column) else F.lit(sf_val)
-            exprs.append(c.cast(_spark_cast_name(sf_type)))
-        exprs.extend(expr for _name, expr in cells)
-        return df.select(*[e.alias(n) for e, n in zip(exprs, names)])
+        n = len(self.service_fields)
+
+        def build():
+            src_cols = set(df.columns)
+
+            def get_src(wf):
+                if wf.name in src_cols:
+                    return F.col(wf.name)
+                return lit_for(wf.type, wf.default)
+
+            cells = flatten_cells(self.plan, get_src, (), self.validate)
+            return [e.alias(nm) for (_c, e), nm in zip(cells, names[n:])]
+
+        # service values are the caller's Columns: built per call, never
+        # memoized
+        exprs = [
+            (v if isinstance(v, Column) else F.lit(v))
+            .cast(_spark_cast_name(t)).alias(nm)
+            for t, v, nm in zip(self.service_fields, service_values, names)
+        ]
+        cells = built_columns(self._memo_key("flatten", df), build)
+        return df.select(*exprs, *cells)
 
     def unflatten(self, df: DataFrame) -> DataFrame:
         """Flat DataFrame (writer layout, columns matched by position) →
@@ -177,11 +242,16 @@ class CompiledSchema:
                 f"got {len(df.columns)}"
             )
         n = len(self.service_fields)
-        cells = [F.col(f"`{c}`") for c in df.columns[n:]]
-        # flat-cell indices in runtime error messages are 1-based and count
-        # the leading service cells (reference location rendering)
-        fields = unflatten_field_exprs(self.plan, cells, self.validate, base=n + 1)
-        return df.select(*[expr.alias(name) for name, expr in fields])
+
+        def build():
+            cells = [F.col(f"`{c}`") for c in df.columns[n:]]
+            # flat-cell indices in runtime error messages are 1-based and
+            # count the leading service cells (reference location rendering)
+            fields = unflatten_field_exprs(self.plan, cells, self.validate,
+                                           base=n + 1)
+            return [expr.alias(name) for name, expr in fields]
+
+        return df.select(*built_columns(self._memo_key("unflatten", df), build))
 
     def xflatten(
         self,

@@ -34,3 +34,12 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def py4j_round_trips():
+    """Counts py4j round trips: ``with py4j_round_trips() as rt: ...``,
+    then read ``rt.n`` (see ``tools/py4j_round_trips.py``)."""
+    from tools.py4j_round_trips import round_trips
+
+    return round_trips
