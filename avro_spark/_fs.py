@@ -21,16 +21,6 @@ NAMES or paths RELATIVE to the listed URI, never the FileSystem's own
 paths: a remote listing's paths are scheme-less (``bucket/key``), and
 a URI-classifying caller would misread them as local.
 
-**The file-source listing** (:func:`scan_files`) is the exception: it
-returns the URIs of the files a Spark file scan of a path reads, so it
-must match Spark exactly. Parity rule: the same files and the same
-strings as the scan's ``path`` column, for a directory, a file, a list
-and a Hadoop glob — hidden names skipped below each root, ``k=v``
-partition directories read, plain sub-directories not, zero-byte files
-dropped. The OCF readers plan from it without a listing job when
-every root is local; a remote root keeps Spark's listing job, since a
-driver-side listing there would list the prefix a second time.
-
 **Plain ``os`` stays only where it gives a guarantee pyarrow does not:**
 
 * :func:`create_exclusive` — ``O_CREAT|O_EXCL``, an atomic
@@ -49,10 +39,7 @@ driver-side listing there would list the prefix a second time.
 
 from __future__ import annotations
 
-import fnmatch
 import os
-import posixpath
-import re
 import uuid
 
 from pyarrow import fs as pafs
@@ -162,159 +149,12 @@ def child_files(uri: str, prefix: str = "") -> "list[str]":
     return _child_names(uri, prefix, pafs.FileType.File)
 
 
-def _hidden_name(name: str) -> bool:
-    return name.startswith(".") or (name.startswith("_") and "=" not in name)
-
-
 def _hidden(rel: str) -> bool:
     """Spark's file index skips every path component starting with
     ``.`` or ``_`` — a crashed write's ``_temporary/``, checksum
     shadows — except a ``_col=value`` partition directory."""
-    return any(_hidden_name(c) for c in rel.split("/"))
-
-
-def _unlisted(name: str) -> bool:
-    """The names Spark's file listing drops below a root path: hidden
-    ones, except parquet's ``_metadata``/``_common_metadata`` summaries,
-    and in-flight ``._COPYING_`` uploads. The summaries are listed but
-    never scanned (not :func:`_hidden_name`-clean)."""
-    return ((_hidden_name(name) or name.endswith("._COPYING_"))
-            and not name.startswith(("_metadata", "_common_metadata")))
-
-
-def _spark_form(uri: str) -> str:
-    """``uri`` qualified the way Hadoop prints a ``Path``: a bare path
-    becomes ``file:/abs`` (or a URI on a non-local default FS), slashes
-    collapse, ``.``/``..`` resolve, a trailing slash goes, and an empty
-    authority is dropped (``file:///x`` prints as ``file:/x``)."""
-    q = qualify(uri)
-    if _is_bare(q):
-        q = "file:" + os.path.abspath(q)
-    scheme, _, rest = q.partition(":")
-    auth = ""
-    if rest.startswith("//"):
-        auth, slash, rest = rest[2:].partition("/")
-        rest = slash + rest
-    path = posixpath.normpath(re.sub("/+", "/", rest or "/"))
-    return f"{scheme}://{auth}{path}" if auth else f"{scheme}:{path}"
-
-
-def _expand_braces(pattern: str) -> "list[str]":
-    """The alternatives of a Hadoop glob's ``{a,b}`` groups, innermost
-    first."""
-    m = re.search(r"\{([^{}]*)\}", pattern)
-    if m is None:
-        return [pattern]
-    return [q for alt in m.group(1).split(",")
-            for q in _expand_braces(pattern[:m.start()] + alt
-                                    + pattern[m.end():])]
-
-
-def _glob(uri: str) -> "list[str]":
-    """Paths matching a Hadoop glob, component by component: ``*``,
-    ``?``, ``[..]`` (``[^..]`` negates like ``[!..]``), ``{a,b}`` and
-    ``\\`` escapes. Unlike a shell, ``*`` matches a leading dot."""
-    scheme, _, rest = uri.partition(":")
-    out: list = []
-    for pattern in _expand_braces(rest):
-        auth = ""
-        if pattern.startswith("//"):
-            auth, _, pattern = pattern[2:].partition("/")
-            auth = "//" + auth
-        bases = [f"{scheme}:{auth}"]
-        parts = pattern.strip("/").split("/")
-        for k, part in enumerate(parts):
-            if not any(c in part for c in "*?[\\"):
-                bases = [f"{b}/{part}" for b in bases]
-                continue
-            pat = re.sub(r"\\(.)", r"[\1]", part).replace("[^", "[!")
-            bases = [f"{b}/{i.base_name}" for b in bases
-                     for i in _children(b)
-                     if fnmatch.fnmatchcase(i.base_name, pat)
-                     and (k == len(parts) - 1
-                          or i.type == pafs.FileType.Directory)]
-        out.extend(b for b in bases if _info(b).type != pafs.FileType.NotFound)
-    return list(dict.fromkeys(out))
-
-
-def _children(uri: str) -> list:
-    f, p = resolve(uri)
-    return f.get_file_info(pafs.FileSelector(p, allow_not_found=True))
-
-
-def _info(uri: str):
-    f, p = resolve(uri)
-    return f.get_file_info(p)
-
-
-def scan_files(path: "str | list[str]") -> "list[tuple[str, int]]":
-    """``(uri, bytes)`` of every file a Spark file-source scan of
-    ``path`` reads (``spark.read.format("binaryFile").load(path)``),
-    sorted by URI, with no Spark job and no JVM call. URIs print as
-    Spark's ``path`` column does (:func:`_spark_form`), so messages
-    that carry a path read the same.
-
-    The parity rule, root by root (a list, or a Hadoop glob's matches):
-    a root file is scanned unless its own name is :func:`_unlisted`; a
-    root directory is listed recursively, skipping :func:`_unlisted`
-    names below it. If any directory holding data files parses as a
-    ``k=v`` partition directory (walking up to its root), the scan reads
-    exactly the files in those directories; otherwise it reads each
-    root directory's direct files. Zero-byte files and
-    :func:`_hidden_name` files (``_metadata``) are never scanned. A
-    listing Spark refuses (missing path, conflicting partition layout)
-    is not re-checked here: callers build the Spark scan first, and
-    Spark raises there."""
-    roots = []
-    for p in [path] if isinstance(path, str) else path:
-        q = _spark_form(p)
-        if any(c in q for c in "*?[{\\"):
-            roots.extend(sorted(_glob(q)))
-        else:
-            roots.append(q)
-    bases: set = set()
-    by_dir: dict = {}  # directory URI -> {listed file URI: bytes}
-    direct = []  # per root: its directory, or (its parent, itself)
-    for root in roots:
-        f, p = resolve(root)
-        info = f.get_file_info(p)
-        if info.type == pafs.FileType.File:
-            parent = root.rpartition("/")[0]
-            bases.add(parent)
-            if not _unlisted(info.base_name):
-                by_dir.setdefault(parent, {})[root] = info.size
-                direct.append((parent, root))
-        elif info.type == pafs.FileType.Directory:
-            bases.add(root)
-            direct.append((root, None))
-            n = len(p.rstrip("/")) + 1
-            for i in f.get_file_info(pafs.FileSelector(p, recursive=True)):
-                rel = i.path[n:]
-                if i.is_file and not any(map(_unlisted, rel.split("/"))):
-                    d = f"{root}/{rel}".rpartition("/")[0]
-                    by_dir.setdefault(d, {})[f"{root}/{rel}"] = i.size
-
-    def partition_dir(d: str) -> bool:
-        found = False
-        while d not in bases and "/" in d:
-            d, _, name = d.rpartition("/")
-            if "=" in name:
-                found = True
-            elif found:
-                break
-        return found
-
-    def data(uri: str) -> bool:
-        return not _hidden_name(uri.rpartition("/")[2])
-
-    parts = [d for d, files in by_dir.items()
-             if any(map(data, files)) and partition_dir(d)]
-    if parts:
-        picked = [(u, s) for d in parts for u, s in by_dir[d].items()]
-    else:
-        picked = [(u, s) for d, one in direct for u, s in (
-            by_dir.get(d, {}).items() if one is None else [(one, by_dir[d][one])])]
-    return sorted((u, s) for u, s in picked if s > 0 and data(u))
+    return any(c.startswith(".") or (c.startswith("_") and "=" not in c)
+               for c in rel.split("/"))
 
 
 def _parquet_listing(f, p: str, recursive: bool) -> "list[tuple[str, int]]":

@@ -14,6 +14,13 @@ import org.apache.spark.sql.api.java.UDF2;
 import org.apache.spark.sql.api.java.UDF3;
 import org.apache.spark.sql.api.java.UDF4;
 import org.apache.spark.sql.api.java.UDF5;
+import org.apache.spark.sql.catalyst.expressions.Expression;
+import org.apache.spark.sql.classic.Dataset;
+import org.apache.spark.sql.execution.datasources.FileStatusWithMetadata;
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation;
+import org.apache.spark.sql.execution.datasources.LogicalRelation;
+import org.apache.spark.sql.execution.datasources.PartitionDirectory;
+import scala.jdk.javaapi.CollectionConverters;
 
 /**
  * JVM-side Avro binary codec for avro_spark: byte-compatible with the
@@ -1310,6 +1317,31 @@ public final class AvroCodecUDF {
         throw new RuntimeException(
             "trailing bytes in OCF block: " + (raw.length - c.pos));
       return out;
+    }
+  }
+
+  // ------------------------------------------------------------ file listing
+  /** A file-source scan (spark.read...load()) -> every file it reads, from
+   *  its own FileIndex: no job, no second listing. One "length\tpath"
+   *  record per file, records joined by NUL (a path can hold a newline,
+   *  never a NUL); paths print as the scan's path column. A Function, so
+   *  the driver calls it on one cached instance in one round trip. */
+  public static final class ScanFiles
+      implements java.util.function.Function<Dataset<?>, String> {
+    @Override
+    public String apply(Dataset<?> scan) {
+      LogicalRelation rel = (LogicalRelation) scan.queryExecution().analyzed();
+      scala.collection.immutable.Seq<Expression> none =
+          scala.collection.immutable.List$.MODULE$.empty();
+      StringBuilder out = new StringBuilder();
+      for (PartitionDirectory dir : CollectionConverters.asJava(
+          ((HadoopFsRelation) rel.relation()).location().listFiles(none, none))) {
+        for (FileStatusWithMetadata f : CollectionConverters.asJava(dir.files())) {
+          if (out.length() > 0) out.append('\0');
+          out.append(f.getLen()).append('\t').append(f.getPath().toString());
+        }
+      }
+      return out.toString();
     }
   }
 

@@ -7,6 +7,7 @@ compiled once with ``javac`` against the pyspark distribution jars, packed
 into a jar under ``build/``, attached to the *live* session with
 ``ADD JAR`` and registered via ``registerJavaFunction``. No Python worker,
 no Arrow transfer — the encode/decode loop runs next to Tungsten rows.
+The same jar carries the OCF readers' file listing (:func:`scan_files`).
 
 Byte-compatibility contract with the pure-Python codec
 (sources/avro_binary.py): identical output for every schema shape except
@@ -235,6 +236,27 @@ def jvm_codec_available(spark: SparkSession) -> bool:
         return _attach(spark)
     except Exception:
         return False
+
+
+def scan_files(spark: SparkSession, scan: DataFrame
+               ) -> "Optional[list[tuple[str, int]]]":
+    """``[(uri, bytes)]`` of every file the file-source ``scan`` reads,
+    sorted by URI, from its own ``FileIndex`` (``ScanFiles``): no job,
+    no second listing, one py4j round trip warm. None when the jar is
+    unavailable. The helper class is loaded through the session's jar
+    class loader, remembered per SparkContext: ``spark._jvm`` resolves
+    an ``ADD JAR`` class only on the thread that added the jar."""
+    if not _attach(spark):
+        return None
+    sc = spark.sparkContext
+    lister = sc.__dict__.get("_avro_spark_scan_files")
+    if lister is None:
+        loader = spark._jsparkSession.sharedState().jarClassLoader()
+        lister = sc._avro_spark_scan_files = loader.loadClass(
+            "avrospark.AvroCodecUDF$ScanFiles").newInstance()
+    out = lister.apply(scan._jdf)
+    return sorted((uri, int(n)) for n, _, uri in (
+        rec.partition("\t") for rec in out.split("\0") if rec))
 
 
 def _register(spark: SparkSession, name: str, cls: str, rtype,

@@ -10,14 +10,14 @@ Spark integration (no spark-avro jar in this container — this is a pure
 Python path over public APIs):
 
 * **read**: ``spark.read.format("binaryFile")`` reads whole files in
-  parallel (one task per file). Planning lists the same files after
-  the scan is built, so Spark's own path errors come first and every
-  scanned file was listed and header-checked, or has since been
-  deleted and fails the scan loudly. Local files are listed on the
-  driver through :func:`avro_spark._fs.scan_files` — no listing job;
-  other storage lists through a job over the scan. An Arrow-native ``mapInArrow``
-  stage decodes each file's blocks into rows (RecordBatch in/out — no
-  pandas conversion, so nullable int64 stays exact). Parallelism = number of
+  parallel (one task per file). Planning takes its listing from the
+  scan's own file index after the scan is built, on every storage, so
+  Spark's own path errors come first and the listed files are exactly
+  the scanned ones — no listing job, and no second listing of the
+  prefix; only without the codec jar does a job list them. An
+  Arrow-native ``mapInArrow`` stage decodes each file's blocks into
+  rows (RecordBatch in/out — no pandas conversion, so nullable int64
+  stays exact). Parallelism = number of
   files — right when files are written ~128-512 MB (the writers below
   do). For corpora of FEW HUGE files, ``read_avro_files_split`` plans
   each file into byte-range tasks and sync-scans inside them (the
@@ -388,11 +388,10 @@ def read_avro_files(
 ) -> DataFrame:
     """Directory/glob of ``.avro`` OCF files → record-shaped DataFrame.
 
-    Default: one task per file. Local files are listed on the driver
-    (:func:`avro_spark._fs.scan_files`, no Spark job; other storage
-    lists through a job over the scan) and read by the ``binaryFile``
-    source. ``engine="auto"`` runs the container framing AND the
-    per-record decode loop JVM-side
+    Default: one task per file, read by the ``binaryFile`` source and
+    listed from that scan's own file index on every storage (no Spark
+    job; a job only without the codec jar). ``engine="auto"`` runs the
+    container framing AND the per-record decode loop JVM-side
     (jvm.read_ocf_content_jvm — ~10× the Python row codec on this, the
     engine's primary file-ingest path), falling back to the Arrow-batched
     pure-Python decode when there is no JDK, the schema uses ``any``, or
@@ -429,19 +428,18 @@ def read_avro_files(
 
 
 def _list_files(spark: SparkSession, path: "str | list[str]"):
-    """``(binaryFile scan of path, [(uri, bytes)] it reads)``. The scan
-    is built FIRST — Spark lists then and raises its own path errors.
-    Local roots are then listed on the driver
-    (:func:`avro_spark._fs.scan_files`, no job), so every file the scan
-    reads is in the listing unless it was deleted since, which fails the
-    scan loudly. Any non-local root lists through a Spark job over the
-    scan's own file index instead: a driver-side listing there would
-    list the prefix a second time, at a cost not measured yet."""
+    """``(binaryFile scan of path, [(uri, bytes)] it reads)``, sorted by
+    URI. The scan is built FIRST — Spark lists then and raises its own
+    path errors — and the listing is that scan's own file index on every
+    storage (:func:`avro_spark.jvm.scan_files`): the files, sizes and
+    ``path`` strings the scan reads, with no job and no second listing
+    of the prefix. Only without the codec jar does it list through a
+    job over the scan."""
+    from ..jvm import scan_files
+
     files = spark.read.format("binaryFile").load(path)
-    roots = [path] if isinstance(path, str) else path
-    if all(_fs.local_path(p) is not None for p in roots):
-        listing = _fs.scan_files(path)
-    else:
+    listing = scan_files(spark, files)
+    if listing is None:
         listing = sorted((r["path"], r["length"]) for r in
                          files.select("path", "length").collect())
     if not listing:
@@ -452,13 +450,18 @@ def _list_files(spark: SparkSession, path: "str | list[str]"):
 def _peek_header(files: DataFrame, listing) -> "tuple[bytes, str]":
     """(writer-schema JSON, codec) of the listing's first file: a few KB
     straight from the driver — any storage pyarrow.fs reaches
-    (_fs.open_input); only a scheme it cannot reach pulls the scan's
-    first file through Spark."""
+    (_fs.open_input); only a file the driver cannot open is pulled
+    through a one-file Spark scan of exactly that file."""
+    first = listing[0][0]
     try:
-        _hl, _sync, sj, codec = _scan_header(listing[0][0])
+        _hl, _sync, sj, codec = _scan_header(first)
         return sj, codec
     except (OSError, ValueError):  # ValueError: pyarrow unknown scheme
-        blob = bytes(files.select("content").head()["content"])
+        # Spark's own no-glob key (its file-stream source sets it too):
+        # the listed name is literal, even one holding ``*`` or ``[``
+        blob = bytes(files.sparkSession.read.format("binaryFile")
+                     .option("__globPaths__", "false").load(first)
+                     .select("content").head()["content"])
     if blob[:4] != MAGIC:
         raise AvroSparkError("not an Avro object container file (bad magic)")
     meta, _pos = _read_meta_map(blob, 4)

@@ -694,10 +694,11 @@ def test_mixed_schema_guard_survives_unreadable_headers(
     spark, tmp_path, monkeypatch
 ):
     """Two regressions around driver-side header peeks failing (the
-    non-local-storage shape): (1) one unreadable header must not abort
-    verification of the REST of the listing; (2) when any file went
-    unverified, the JVM engine must run SplitBlocks' executor-side
-    byte-compare instead of decoding a foreign layout as garbage."""
+    non-local-storage shape): (1) one header the driver cannot open must
+    not abort verification of the listing, which retries through the
+    distributed header scan; (2) when any file went unverified, the JVM
+    engine must run SplitBlocks' executor-side byte-compare instead of
+    decoding a foreign layout as garbage."""
     import avro_spark.sources.avro_ocf as ocf_mod
 
     s1 = avro_spark.create({"type": "record", "name": "M", "fields": [
@@ -715,19 +716,32 @@ def test_mixed_schema_guard_survives_unreadable_headers(
         os.path.join(d, "part-00001.avro"))
 
     real_scan = ocf_mod._scan_header
+    real_distributed = ocf_mod._scan_headers_distributed
 
-    # (1) header peek fails for ONE file: the other file must still be
-    # checked — its mismatched schema raises at plan time
-    flaky_path = os.path.join(d, "part-00000.avro")
+    # (1) the driver cannot open ONE header, the mismatched file's: the
+    # listing is still checked — that header through the distributed
+    # scan — and the mismatch raises at plan time
+    listed = [u for u, _size in ocf_mod._list_files(spark, d)[1]]
+    flaky_path = next(u for u in listed if u.endswith("/part-00001.avro"))
+    driver = os.getpid()
+    fired, retried = [], []
 
     def scan_skip_first(fpath):
-        if fpath == flaky_path:
+        if fpath == flaky_path and os.getpid() == driver:
+            fired.append(fpath)
             raise OSError("simulated non-local storage")
         return real_scan(fpath)
 
+    def distributed(spark_, paths):
+        retried.append(paths)
+        return real_distributed(spark_, paths)
+
     monkeypatch.setattr(ocf_mod, "_scan_header", scan_skip_first)
-    with pytest.raises(AvroSparkError, match="writer-schema mismatch"):
+    monkeypatch.setattr(ocf_mod, "_scan_headers_distributed", distributed)
+    with pytest.raises(AvroSparkError,
+                       match=f"writer-schema mismatch at {flaky_path}"):
         read_avro_files(spark, d, s1, engine="python")
+    assert fired and retried == [listed]
 
     # (2) NO header is peekable (pure non-local shape): the JVM engine
     # must still fail loudly via the executor-side byte-compare

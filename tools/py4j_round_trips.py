@@ -13,33 +13,48 @@ from __future__ import annotations
 
 import contextlib
 import gc
+import threading
 import types
 
 
 @contextlib.contextmanager
 def round_trips():
-    """Count every ``ClientServerConnection.send_command`` inside the
-    block (the one call each driver->JVM command makes in PySpark's
-    default pinned-thread mode) into ``.n`` of the yielded counter.
-    Pending garbage is collected on entry and cyclic GC is off inside
-    the block, so the py4j deletes of freed JVM handles it counts are
-    the block's own, not whatever a GC pass happens to free."""
-    from py4j.clientserver import ClientServerConnection
+    """Count the block's py4j round trips into ``.n`` of the yielded
+    counter: every ``ClientServerConnection.send_command`` made on the
+    calling thread (the one call each driver->JVM command makes in
+    PySpark's default pinned-thread mode), plus one per JVM handle the
+    block frees. py4j sends those deletes later, from its finalizer
+    thread, so they are counted when queued; that thread's own sends
+    are not counted, since they may be the deletes of handles freed
+    before the block. Pending garbage is collected on entry and cyclic
+    GC is off inside the block, so the deletes counted are the block's
+    own, not whatever a GC pass happens to free."""
+    from py4j.clientserver import ClientServerConnection, JavaClient
 
-    real = ClientServerConnection.send_command
+    real_send = ClientServerConnection.send_command
+    real_delete = JavaClient.garbage_collect_object
+    caller = threading.get_ident()
     counter = types.SimpleNamespace(n=0)
 
     def counted(self, command):
-        counter.n += 1
-        return real(self, command)
+        if threading.get_ident() == caller:
+            counter.n += 1
+        return real_send(self, command)
+
+    def queued(self, target_id, enqueue=True):
+        if enqueue and threading.get_ident() == caller:
+            counter.n += 1
+        return real_delete(self, target_id, enqueue)
 
     gc.collect()
     gc_was_on = gc.isenabled()
     gc.disable()
     ClientServerConnection.send_command = counted
+    JavaClient.garbage_collect_object = queued
     try:
         yield counter
     finally:
-        ClientServerConnection.send_command = real
+        ClientServerConnection.send_command = real_send
+        JavaClient.garbage_collect_object = real_delete
         if gc_was_on:
             gc.enable()
