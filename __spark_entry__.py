@@ -608,8 +608,8 @@ def q_ocf_projected_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     pad}, o_totalprice, tail) and read back columns=["o_orderkey",
     "meta.k.o_custkey", "o_totalprice"] — the skipped `tail` field,
     `meta`'s `pad` sibling AND `k`'s `pad2` sibling two levels down are
-    all byte-advanced, never materialized, on whichever engine (JVM
-    DecodeBlockProj+recursive decodeSub / Python
+    all byte-advanced, never materialized, on whichever engine (the JVM
+    OCF read generator's projected decode plan / Python
     projected_record_decoder) the auto route picks. Oracle: the same
     projection straight off the base table."""
     import tempfile
@@ -1361,8 +1361,8 @@ def q_ocf_evolved_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_streaming_ocf_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING OCF file source (round 5): readStream(binaryFile) over a
     directory of .avro files, decoded in-flight through the same JVM
-    SplitBlocks→DecodeBlock chain as the batch reader (stateless narrow
-    ops — streaming-legal; Python codec fallback without a JDK). Bounded
+    OCF read generator as the batch reader (a stateless narrow op —
+    streaming-legal; Python codec fallback without a JDK). Bounded
     AvailableNow run = the original rows — fully oracle-checkable."""
     import shutil
     import tempfile

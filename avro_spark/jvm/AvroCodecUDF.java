@@ -1,25 +1,35 @@
 package avrospark;
 
 import java.nio.charset.StandardCharsets;
-import java.util.Iterator;
+import java.util.Arrays;
+import java.util.IdentityHashMap;
 import java.util.List;
 import java.util.Map;
 import java.util.concurrent.ConcurrentHashMap;
 
 import org.apache.avro.Schema;
+import org.apache.spark.sql.Column;
 import org.apache.spark.sql.Row;
 import org.apache.spark.sql.RowFactory;
-import org.apache.spark.sql.api.java.UDF1;
 import org.apache.spark.sql.api.java.UDF2;
 import org.apache.spark.sql.api.java.UDF3;
-import org.apache.spark.sql.api.java.UDF4;
-import org.apache.spark.sql.api.java.UDF5;
+import org.apache.spark.sql.catalyst.InternalRow;
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAlias;
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute;
 import org.apache.spark.sql.catalyst.expressions.Expression;
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow;
+import org.apache.spark.sql.catalyst.expressions.UserDefinedGenerator;
+import org.apache.spark.sql.catalyst.util.ArrayBasedMapData;
+import org.apache.spark.sql.catalyst.util.GenericArrayData;
 import org.apache.spark.sql.classic.Dataset;
+import org.apache.spark.sql.classic.ExpressionColumnNode;
 import org.apache.spark.sql.execution.datasources.FileStatusWithMetadata;
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation;
 import org.apache.spark.sql.execution.datasources.LogicalRelation;
 import org.apache.spark.sql.execution.datasources.PartitionDirectory;
+import org.apache.spark.sql.types.DataType;
+import org.apache.spark.sql.types.StructType;
+import org.apache.spark.unsafe.types.UTF8String;
 import scala.jdk.javaapi.CollectionConverters;
 
 /**
@@ -299,6 +309,17 @@ public final class AvroCodecUDF {
     return (acc >>> 1) ^ -(acc & 1);
   }
 
+  /** A union's branch index, range-checked on the RAW long before the
+   *  int cast: a corrupt tag that is a multiple of 2^32 would wrap to a
+   *  valid index and silently decode the wrong branch. */
+  static int unionIndex(Cursor c, int n) {
+    long idx = readLong(c);
+    if (idx < 0 || idx >= n)
+      throw new RuntimeException(
+          "union branch index " + idx + " out of range [0, " + n + ")");
+    return (int) idx;
+  }
+
   static Object decode(Cursor c, Schema s) {
     switch (s.getType()) {
       case NULL:
@@ -382,15 +403,7 @@ public final class AvroCodecUDF {
       }
       case UNION: {
         List<Schema> ts = s.getTypes();
-        // range-check the RAW long BEFORE the int cast: a corrupt tag
-        // that is a multiple of 2^32 would wrap to a valid index and
-        // silently decode the wrong branch
-        long idxL = readLong(c);
-        if (idxL < 0 || idxL >= ts.size())
-          throw new RuntimeException(
-              "union branch index " + idxL + " out of range [0, "
-                  + ts.size() + ")");
-        int idx = (int) idxL;
+        int idx = unionIndex(c, ts.size());
         Schema branch = ts.get(idx);
         int nIdx = nullBranch(ts);
         if (ts.size() == 2 && nIdx >= 0 && !isUnwrap(ts.get(1 - nIdx))) {
@@ -720,12 +733,7 @@ public final class AvroCodecUDF {
     Schema rec = fs;
     if (fs.getType() == Schema.Type.UNION) {
       List<Schema> ts = fs.getTypes();
-      long idxL = readLong(c);  // bound BEFORE the cast (2^32 wraps to 0)
-      if (idxL < 0 || idxL >= ts.size())
-        throw new RuntimeException(
-            "union branch index " + idxL + " out of range [0, "
-                + ts.size() + ")");
-      rec = ts.get((int) idxL);
+      rec = ts.get(unionIndex(c, ts.size()));
       if (rec.getType() == Schema.Type.NULL) return null;
     }
     if (rec.getType() != Schema.Type.RECORD)
@@ -752,7 +760,8 @@ public final class AvroCodecUDF {
 
   /** (schemaJson, keepCsv, Avro binary bytes) → struct row with ONLY the
    *  keepCsv top-level fields (writer schema order), others byte-skipped;
-   *  rejects trailing bytes. The wire-format twin of DecodeBlockProj. */
+   *  rejects trailing bytes. The wire-format twin of the OCF read's
+   *  projected decode plan. */
   public static final class DecodeProj
       implements org.apache.spark.sql.api.java.UDF3<String, String, byte[], Row> {
     @Override
@@ -777,13 +786,15 @@ public final class AvroCodecUDF {
   }
 
   // ----------------------------------------------- OCF container framing
-  // Block-level entry points for the Object Container File path
-  // (sources/avro_ocf.py): SplitBlocks parses one whole file's container
-  // framing into (codec, count, data) block rows; DecodeBlock inflates +
-  // decodes one block into its record rows. Splitting the two keeps
-  // per-task memory bounded by BLOCK size during decode (explode streams
-  // block rows through the generator) while the per-record hot loop runs
-  // entirely JVM-side — the Python engine remains the no-JDK fallback.
+  // The Object Container File read (sources/avro_ocf.py) is ONE Catalyst
+  // generator, OcfRead: its input row is a whole file's bytes, or one
+  // block's (codec, count, data) for the split read. A file's framing is
+  // checked up front (magic, writer schema, block sizes, sync markers);
+  // then one block at a time is inflated and its records decoded, lazily,
+  // straight into Catalyst values. Task memory stays bounded by block
+  // size, and no Row/List object or CatalystTypeConverters pass sits
+  // between the decoder and Spark. The Python engine remains the no-JDK
+  // fallback.
 
   /** Block decompression for ALL SIX Avro-spec codecs: null / deflate
    *  (RFC-1951) / snappy / zstandard / bzip2 / xz (the last two via
@@ -1113,13 +1124,6 @@ public final class AvroCodecUDF {
     return out;
   }
 
-  /** whole OCF file bytes → list of (codec, count, data) block rows;
-   *  data stays COMPRESSED here (decompression is per-block downstream).
-   *  expectSchemaJson, when non-empty, must BYTE-equal the embedded
-   *  avro.schema — the streaming reader's per-file guard (batch readers
-   *  verify canonically at plan time and pass ""). A byte mismatch on a
-   *  canonically-equal foreign rendering is a loud false positive by
-   *  design: the error says how to verify canonically instead. */
   /** (codec, level, rawBlockBody) -> Avro-framed compressed block.
    *  level null or < 0 = the codec's default. Registered as a plain
    *  projection between the Python blocking and writing stages of
@@ -1133,68 +1137,11 @@ public final class AvroCodecUDF {
     }
   }
 
-  public static final class SplitBlocks implements UDF2<String, byte[], java.util.List<Row>> {
-    @Override
-    public java.util.List<Row> call(String expectSchemaJson, byte[] blob) {
-      if (blob.length < 4
-          || blob[0] != 'O' || blob[1] != 'b' || blob[2] != 'j' || blob[3] != 1)
-        throw new RuntimeException("not an Avro object container file (bad magic)");
-      Cursor c = new Cursor(blob);
-      c.pos = 4;
-      String codec = "null";
-      String schemaJson = null;
-      while (true) {  // file metadata map (may be block-size-prefixed)
-        long n = readLong(c);
-        if (n == 0) break;
-        if (n < 0) { n = -n; readLong(c); }
-        for (long i = 0; i < n; i++) {
-          int klen = (int) readLong(c);
-          String k = new String(c.buf, c.pos, klen, StandardCharsets.UTF_8);
-          c.pos += klen;
-          int vlen = (int) readLong(c);
-          if (k.equals("avro.codec"))
-            codec = new String(c.buf, c.pos, vlen, StandardCharsets.UTF_8);
-          if (k.equals("avro.schema"))
-            schemaJson = new String(c.buf, c.pos, vlen, StandardCharsets.UTF_8);
-          c.pos += vlen;
-        }
-      }
-      if (expectSchemaJson != null && !expectSchemaJson.isEmpty()
-          && !expectSchemaJson.equals(schemaJson))
-        throw new RuntimeException(
-            "OCF writer-schema mismatch: the file embeds a different schema "
-                + "rendering than this stream was planned with (silent garbage "
-                + "otherwise). For canonically-equal foreign renderings, read "
-                + "with engine='python', which compares Parsing Canonical Form.");
-      byte[] sync = new byte[16];
-      System.arraycopy(c.buf, c.pos, sync, 0, 16);
-      c.pos += 16;
-      java.util.ArrayList<Row> out = new java.util.ArrayList<>();
-      while (c.pos < blob.length) {
-        long count = readLong(c);
-        long size = readLong(c);
-        if (count < 0 || size < 0 || c.pos + size + 16 > blob.length)
-          throw new RuntimeException(
-              "corrupt OCF: block claims " + count + " records / " + size
-                  + " bytes with " + (blob.length - c.pos) + " bytes left");
-        byte[] data = new byte[(int) size];
-        System.arraycopy(c.buf, c.pos, data, 0, (int) size);
-        c.pos += (int) size;
-        for (int i = 0; i < 16; i++)
-          if (c.buf[c.pos + i] != sync[i])
-            throw new RuntimeException("OCF sync marker mismatch");
-        c.pos += 16;
-        out.add(RowFactory.create(codec, count, data));
-      }
-      return out;
-    }
-  }
-
   // ------------------------------------------------------------- skipping
   /** bounds-checked cursor advance for the skip path: a corrupt size in
    *  [2^31, 2^63) would wrap NEGATIVE under a bare (int) cast and move
    *  the cursor backwards — net-zero progress, an infinite loop. Bound
-   *  against the remaining buffer BEFORE casting (same rule SplitBlocks
+   *  against the remaining buffer BEFORE casting (same rule OcfRead
    *  applies to block sizes). */
   static void skipBytes(Cursor c, long n, String what) {
     if (n < 0 || n > c.buf.length - c.pos)
@@ -1247,15 +1194,9 @@ public final class AvroCodecUDF {
         for (Schema.Field f : s.getFields()) skip(c, f.schema());
         return;
       }
-      case UNION: {
-        long idxL = readLong(c);  // bound BEFORE the cast (2^32 wraps to 0)
-        if (idxL < 0 || idxL >= s.getTypes().size())
-          throw new RuntimeException(
-              "union branch index " + idxL + " out of range [0, "
-                  + s.getTypes().size() + ")");
-        skip(c, s.getTypes().get((int) idxL));
+      case UNION:
+        skip(c, s.getTypes().get(unionIndex(c, s.getTypes().size())));
         return;
-      }
       default:
         throw new RuntimeException("jvm codec cannot skip " + s.getType());
     }
@@ -1266,57 +1207,361 @@ public final class AvroCodecUDF {
     c.pos++;
   }
 
-  /** (schemaJson, keepCsv, codec, count, block payload) → list of decoded
-   *  records carrying ONLY the keepCsv top-level fields (writer schema
-   *  order); the rest are skipped, not materialized. Avro names are
-   *  [A-Za-z0-9_]+ so a comma CSV is unambiguous. */
-  public static final class DecodeBlockProj
-      implements UDF5<String, String, String, Long, byte[], java.util.List<Object>> {
-    @Override
-    public java.util.List<Object> call(
-        String schemaJson, String keepCsv, String codec, Long count,
-        byte[] data) {
-      byte[] raw = decompressBlock(codec, data);
-      Schema s = schemaOf(schemaJson);
-      List<Schema.Field> fields = s.getFields();
-      Object[] take = projPlan(s, schemaJson, keepCsv);
-      int nKeep = projWidth(take);
-      int n = count.intValue();
-      java.util.ArrayList<Object> out = new java.util.ArrayList<>(n);
-      Cursor c = new Cursor(raw);
-      for (int i = 0; i < n; i++) {
-        Object[] vals = new Object[nKeep];
-        int p = 0;
-        for (int j = 0; j < fields.size(); j++) {
-          if (take[j] != Boolean.FALSE)
-            vals[p++] = decodeProjected(c, fields.get(j).schema(), take[j]);
-          else skip(c, fields.get(j).schema());
-        }
-        out.add(RowFactory.create(vals));
+  // ------------------------------------------ OCF read: Catalyst values
+  /** One compiled step of a decode plan: reads one encoded value at the
+   *  cursor and returns it as a Catalyst value. */
+  interface Dec {
+    Object read(Cursor c);
+  }
+
+  /** A record as a GenericInternalRow. A null step byte-skips its field
+   *  (projected reads); only the other steps take an output slot. */
+  static final class RecordDec implements Dec {
+    final Schema[] types;
+    final Dec[] steps;
+    int width = 0;
+
+    RecordDec(Schema rec) {
+      types = rec.getFields().stream().map(Schema.Field::schema).toArray(Schema[]::new);
+      steps = new Dec[types.length];
+    }
+
+    /** Builds the steps: entry(j) is TRUE to decode field j whole, a map
+     *  to keep only that sub-tree of it (nested dotted pruning, as
+     *  decodeSub), null to skip it. */
+    @SuppressWarnings("unchecked")
+    RecordDec fill(java.util.function.IntFunction<Object> entry,
+        IdentityHashMap<Schema, Dec> named) {
+      for (int j = 0; j < steps.length; j++) {
+        Object t = entry.apply(j);
+        if (t == Boolean.TRUE) steps[j] = catalystDec(types[j], named);
+        else if (t != null)
+          steps[j] = projectedField(types[j], (Map<String, Object>) t, named);
+        if (steps[j] != null) width++;
       }
-      if (c.pos != raw.length)
-        throw new RuntimeException(
-            "trailing bytes in OCF block: " + (raw.length - c.pos));
-      return out;
+      return this;
+    }
+
+    @Override
+    public Object read(Cursor c) {
+      Object[] vals = new Object[width];
+      int p = 0;
+      for (int i = 0; i < steps.length; i++) {
+        if (steps[i] == null) skip(c, types[i]);
+        else vals[p++] = steps[i].read(c);
+      }
+      return new GenericInternalRow(vals);
     }
   }
 
-  /** (schemaJson, codec, count, block payload) → list of decoded records */
-  public static final class DecodeBlock
-      implements UDF4<String, String, Long, byte[], java.util.List<Object>> {
-    @Override
-    public java.util.List<Object> call(
-        String schemaJson, String codec, Long count, byte[] data) {
-      byte[] raw = decompressBlock(codec, data);
+  /** Decode plans, built once per (schema JSON, projection CSV) per JVM. */
+  static final ConcurrentHashMap<String, Dec> OCF_PLANS = new ConcurrentHashMap<>();
+
+  static Dec ocfPlan(String schemaJson, String keepCsv) {
+    return OCF_PLANS.computeIfAbsent(schemaJson + "\0" + keepCsv, k -> {
       Schema s = schemaOf(schemaJson);
-      int n = count.intValue();
-      java.util.ArrayList<Object> out = new java.util.ArrayList<>(n);
-      Cursor c = new Cursor(raw);
-      for (int i = 0; i < n; i++) out.add(decode(c, s));
-      if (c.pos != raw.length)
+      IdentityHashMap<Schema, Dec> named = new IdentityHashMap<>();
+      if (keepCsv.isEmpty()) return catalystDec(s, named);
+      Object[] take = projPlan(s, schemaJson, keepCsv);
+      return new RecordDec(s).fill(
+          j -> take[j] == Boolean.FALSE ? null : take[j], named);
+    });
+  }
+
+  /** The whole value of one schema node — decode()'s walk, compiled.
+   *  A record's plan enters `named` (by identity) before its fields are
+   *  built, so a recursive type refers back to its own plan instead of
+   *  expanding forever; every cycle passes through such a record. The
+   *  transparent avrospark.unwrap record reads as its one field. */
+  static Dec catalystDec(Schema s, IdentityHashMap<Schema, Dec> named) {
+    switch (s.getType()) {
+      case NULL:
+        return c -> null;
+      case BOOLEAN:
+        return c -> c.buf[c.pos++] != 0;
+      case INT:
+        return c -> (int) readLong(c);
+      case LONG:
+        return c -> readLong(c);
+      case STRING:
+        return AvroCodecUDF::readUtf8;
+      case ENUM: {
+        java.util.ArrayList<UTF8String> syms = new java.util.ArrayList<>();
+        for (String sym : s.getEnumSymbols()) syms.add(UTF8String.fromString(sym));
+        return c -> syms.get((int) readLong(c));
+      }
+      case ARRAY: {
+        Dec it = catalystDec(s.getElementType(), named);
+        return c -> readArray(c, it);
+      }
+      case MAP: {
+        Dec vt = catalystDec(s.getValueType(), named);
+        return c -> readMap(c, vt);
+      }
+      case RECORD: {
+        if (isUnwrap(s)) return catalystDec(s.getFields().get(0).schema(), named);
+        Dec seen = named.get(s);
+        if (seen != null) return seen;
+        RecordDec rec = new RecordDec(s);
+        named.put(s, rec);
+        return rec.fill(j -> Boolean.TRUE, named);
+      }
+      case UNION: {
+        List<Schema> ts = s.getTypes();
+        Dec[] br = new Dec[ts.size()];
+        for (int i = 0; i < br.length; i++) br[i] = catalystDec(ts.get(i), named);
+        int nIdx = nullBranch(ts);
+        if (br.length == 2 && nIdx >= 0 && !isUnwrap(ts.get(1 - nIdx)))
+          return c -> br[unionIndex(c, 2)].read(c);  // plain nullable value
+        // general union: tagged struct, layout as in decode()
+        int[] slot = new int[br.length];
+        int width = 1;
+        for (int i = 0; i < br.length; i++)
+          if (ts.get(i).getType() != Schema.Type.NULL) slot[i] = width++;
+        int w = width;
+        return c -> {
+          int idx = unionIndex(c, br.length);
+          Object[] vals = new Object[w];
+          vals[0] = idx;
+          if (slot[idx] > 0) vals[slot[idx]] = br[idx].read(c);
+          return new GenericInternalRow(vals);
+        };
+      }
+      default:  // float, double, bytes, fixed: the Row value is the Catalyst one
+        return c -> decode(c, s);
+    }
+  }
+
+  /** decodeSub, compiled: a record or a union of records and null, kept to
+   *  the sub-tree's fields; any other shape raises when a value reaches
+   *  it. */
+  static Dec projectedField(
+      Schema fs, Map<String, Object> tree, IdentityHashMap<Schema, Dec> named) {
+    if (fs.getType() != Schema.Type.UNION) return projectedSub(fs, tree, named);
+    List<Schema> ts = fs.getTypes();
+    Dec[] br = new Dec[ts.size()];
+    for (int i = 0; i < br.length; i++)
+      br[i] = ts.get(i).getType() == Schema.Type.NULL
+          ? c -> null : projectedSub(ts.get(i), tree, named);
+    return c -> br[unionIndex(c, br.length)].read(c);
+  }
+
+  static Dec projectedSub(
+      Schema rec, Map<String, Object> tree, IdentityHashMap<Schema, Dec> named) {
+    if (rec.getType() != Schema.Type.RECORD) {
+      String msg = "nested projection requires a record field, got " + rec.getType();
+      return c -> { throw new RuntimeException(msg); };
+    }
+    List<Schema.Field> fields = rec.getFields();
+    return new RecordDec(rec).fill(j -> tree.get(fields.get(j).name()), named);
+  }
+
+  /** A string as UTF8String: all-ASCII bytes as a view into the block,
+   *  anything else through java.lang.String, which replaces invalid UTF-8
+   *  exactly as the Row decoder did. A length outside the block takes the
+   *  String path too, so it raises the same error as before. */
+  static UTF8String readUtf8(Cursor c) {
+    int n = (int) readLong(c);
+    byte[] b = c.buf;
+    int p = c.pos;
+    if (n >= 0 && n <= b.length - p) {
+      int end = p + n;
+      int i = p;
+      while (i < end && b[i] >= 0) i++;
+      if (i == end) {
+        c.pos = end;
+        return UTF8String.fromBytes(b, p, n);
+      }
+    }
+    UTF8String out = UTF8String.fromString(new String(b, p, n, StandardCharsets.UTF_8));
+    c.pos = p + n;
+    return out;
+  }
+
+  static Object readArray(Cursor c, Dec it) {
+    java.util.ArrayList<Object> out = new java.util.ArrayList<>();
+    while (true) {
+      long n = readLong(c);
+      if (n == 0) return new GenericArrayData(out.toArray());
+      if (n < 0) { n = -n; readLong(c); }
+      for (long i = 0; i < n; i++) out.add(it.read(c));
+    }
+  }
+
+  /** A map as ArrayBasedMapData, collected in a LinkedHashMap as the Row
+   *  decoder did: a repeated key keeps its first position and takes the
+   *  last value. */
+  static Object readMap(Cursor c, Dec vt) {
+    java.util.LinkedHashMap<UTF8String, Object> out = new java.util.LinkedHashMap<>();
+    while (true) {
+      long n = readLong(c);
+      if (n == 0)
+        return new ArrayBasedMapData(new GenericArrayData(out.keySet().toArray()),
+            new GenericArrayData(out.values().toArray()));
+      if (n < 0) { n = -n; readLong(c); }
+      for (long i = 0; i < n; i++) {
+        UTF8String k = readUtf8(c);
+        out.put(k, vt.read(c));
+      }
+    }
+  }
+
+  /** The records of some OCF blocks of one byte array, decoded lazily:
+   *  one block is inflated when the previous one is used up. `blocks`
+   *  holds a (count, offset, size) triple per block. */
+  static final class Records extends scala.collection.AbstractIterator<InternalRow> {
+    final Dec plan;
+    final String codec;
+    final byte[] src;
+    final long[] blocks;
+    int nextBlock = 0;
+    Cursor c;
+    int left = 0;  // records still to read from c
+
+    Records(Dec plan, String codec, byte[] src, long[] blocks) {
+      this.plan = plan;
+      this.codec = codec;
+      this.src = src;
+      this.blocks = blocks;
+    }
+
+    @Override
+    public boolean hasNext() {
+      while (left == 0) {
+        if (nextBlock == blocks.length) return false;
+        int off = (int) blocks[nextBlock + 1];
+        int size = (int) blocks[nextBlock + 2];
+        byte[] data = off == 0 && size == src.length
+            ? src : Arrays.copyOfRange(src, off, off + size);
+        c = new Cursor(decompressBlock(codec, data));
+        left = (int) blocks[nextBlock];
+        nextBlock += 3;
+        if (left <= 0) { left = 0; checkEnd(); }
+      }
+      return true;
+    }
+
+    @Override
+    public InternalRow next() {
+      if (!hasNext()) throw new java.util.NoSuchElementException();
+      InternalRow row = (InternalRow) plan.read(c);
+      if (--left == 0) checkEnd();
+      return row;
+    }
+
+    void checkEnd() {
+      if (c.pos != c.buf.length)
         throw new RuntimeException(
-            "trailing bytes in OCF block: " + (raw.length - c.pos));
-      return out;
+            "trailing bytes in OCF block: " + (c.buf.length - c.pos));
+    }
+  }
+
+  /** Whole OCF file bytes → its records. The whole container framing is
+   *  checked before the first block is decoded. expectSchemaJson, when
+   *  non-empty, must BYTE-equal the embedded avro.schema — the streaming
+   *  reader's per-file guard (batch readers verify canonically at plan
+   *  time and pass ""). A byte mismatch on a canonically-equal foreign
+   *  rendering is a loud false positive by design: the error says how to
+   *  verify canonically instead. */
+  static Records fileRecords(Dec plan, String expectSchemaJson, byte[] blob) {
+    if (blob.length < 4
+        || blob[0] != 'O' || blob[1] != 'b' || blob[2] != 'j' || blob[3] != 1)
+      throw new RuntimeException("not an Avro object container file (bad magic)");
+    Cursor c = new Cursor(blob);
+    c.pos = 4;
+    String codec = "null";
+    String schemaJson = null;
+    while (true) {  // file metadata map (may be block-size-prefixed)
+      long n = readLong(c);
+      if (n == 0) break;
+      if (n < 0) { n = -n; readLong(c); }
+      for (long i = 0; i < n; i++) {
+        int klen = (int) readLong(c);
+        String k = new String(c.buf, c.pos, klen, StandardCharsets.UTF_8);
+        c.pos += klen;
+        int vlen = (int) readLong(c);
+        if (k.equals("avro.codec"))
+          codec = new String(c.buf, c.pos, vlen, StandardCharsets.UTF_8);
+        if (k.equals("avro.schema"))
+          schemaJson = new String(c.buf, c.pos, vlen, StandardCharsets.UTF_8);
+        c.pos += vlen;
+      }
+    }
+    if (!expectSchemaJson.isEmpty() && !expectSchemaJson.equals(schemaJson))
+      throw new RuntimeException(
+          "OCF writer-schema mismatch: the file embeds a different schema "
+              + "rendering than this stream was planned with (silent garbage "
+              + "otherwise). For canonically-equal foreign renderings, read "
+              + "with engine='python', which compares Parsing Canonical Form.");
+    byte[] sync = new byte[16];
+    System.arraycopy(c.buf, c.pos, sync, 0, 16);
+    c.pos += 16;
+    long[] blocks = new long[0];
+    int nb = 0;
+    while (c.pos < blob.length) {
+      long count = readLong(c);
+      long size = readLong(c);
+      if (count < 0 || size < 0 || c.pos + size + 16 > blob.length)
+        throw new RuntimeException(
+            "corrupt OCF: block claims " + count + " records / " + size
+                + " bytes with " + (blob.length - c.pos) + " bytes left");
+      if (nb == blocks.length) blocks = Arrays.copyOf(blocks, 2 * nb + 3);
+      blocks[nb++] = count;
+      blocks[nb++] = c.pos;
+      blocks[nb++] = size;
+      c.pos += (int) size;
+      for (int i = 0; i < 16; i++)
+        if (c.buf[c.pos + i] != sync[i])
+          throw new RuntimeException("OCF sync marker mismatch");
+      c.pos += 16;
+    }
+    return new Records(plan, codec, blob, Arrays.copyOf(blocks, nb));
+  }
+
+  /** The OCF read generator's function: one input row — (content) of a
+   *  whole file, or (codec, count, data) of one block — to its records.
+   *  It holds only strings, so it ships to executors as is; the decode
+   *  plan is built there. */
+  static final class OcfRead
+      extends scala.runtime.AbstractFunction1<Row, scala.collection.IterableOnce<InternalRow>>
+      implements java.io.Serializable {
+    final String schemaJson;
+    final String keepCsv;
+    final String expectSchemaJson;
+
+    OcfRead(String schemaJson, String keepCsv, String expectSchemaJson) {
+      this.schemaJson = schemaJson;
+      this.keepCsv = keepCsv;
+      this.expectSchemaJson = expectSchemaJson;
+    }
+
+    @Override
+    public scala.collection.IterableOnce<InternalRow> apply(Row in) {
+      Dec plan = ocfPlan(schemaJson, keepCsv);
+      if (in.size() == 1) return fileRecords(plan, expectSchemaJson, (byte[]) in.get(0));
+      byte[] data = (byte[]) in.get(2);
+      return new Records(plan, in.getString(0),
+          data, new long[] {in.getLong(1), 0, data.length});
+    }
+  }
+
+  /** Builds the OCF read Column on the driver: (writer schema JSON,
+   *  projection CSV or "", expected schema JSON or "", output StructType
+   *  JSON, NUL-joined input column names) → a Catalyst
+   *  UserDefinedGenerator whose output columns are the record's fields.
+   *  One input column (content) reads whole files; three (codec, count,
+   *  data) read blocks. */
+  public static final class OcfReadColumn {
+    public Column column(String schemaJson, String keepCsv,
+        String expectSchemaJson, String elementSchemaJson, String inputCols) {
+      java.util.ArrayList<Expression> in = new java.util.ArrayList<>();
+      for (String name : inputCols.split("\0")) in.add(UnresolvedAttribute.quoted(name));
+      Expression gen = new UserDefinedGenerator(
+          (StructType) DataType.fromJson(elementSchemaJson),
+          new OcfRead(schemaJson, keepCsv, expectSchemaJson),
+          CollectionConverters.asScala(in).toList());
+      return new Column(ExpressionColumnNode.apply(
+          new UnresolvedAlias(gen, scala.Option.empty())));
     }
   }
 

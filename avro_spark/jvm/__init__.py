@@ -7,7 +7,11 @@ compiled once with ``javac`` against the pyspark distribution jars, packed
 into a jar under ``build/``, attached to the *live* session with
 ``ADD JAR`` and registered via ``registerJavaFunction``. No Python worker,
 no Arrow transfer — the encode/decode loop runs next to Tungsten rows.
-The same jar carries the OCF readers' file listing (:func:`scan_files`).
+The same jar carries the OCF readers' file listing (:func:`scan_files`)
+and their decode: one Catalyst generator that turns whole files or
+blocks straight into Catalyst rows (:func:`read_ocf_content_jvm`,
+:func:`decode_ocf_blocks_jvm`). Those two helpers are loaded through
+the session's jar class loader, not registered.
 
 Byte-compatibility contract with the pure-Python codec
 (sources/avro_binary.py): identical output for every schema shape except
@@ -38,7 +42,7 @@ import os
 import subprocess
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -238,23 +242,29 @@ def jvm_codec_available(spark: SparkSession) -> bool:
         return False
 
 
+def _jar_object(spark: SparkSession, cls: str):
+    """The one instance, per SparkContext, of the codec jar's nested
+    class ``AvroCodecUDF$<cls>``, loaded through the session's jar class
+    loader: ``spark._jvm`` resolves an ``ADD JAR`` class only on the
+    thread that added the jar."""
+    objs = spark.sparkContext.__dict__.setdefault("_avro_spark_jar_objs", {})
+    obj = objs.get(cls)
+    if obj is None:
+        loader = spark._jsparkSession.sharedState().jarClassLoader()
+        obj = objs[cls] = loader.loadClass(
+            f"avrospark.AvroCodecUDF${cls}").newInstance()
+    return obj
+
+
 def scan_files(spark: SparkSession, scan: DataFrame
                ) -> "Optional[list[tuple[str, int]]]":
     """``[(uri, bytes)]`` of every file the file-source ``scan`` reads,
     sorted by URI, from its own ``FileIndex`` (``ScanFiles``): no job,
     no second listing, one py4j round trip warm. None when the jar is
-    unavailable. The helper class is loaded through the session's jar
-    class loader, remembered per SparkContext: ``spark._jvm`` resolves
-    an ``ADD JAR`` class only on the thread that added the jar."""
+    unavailable."""
     if not _attach(spark):
         return None
-    sc = spark.sparkContext
-    lister = sc.__dict__.get("_avro_spark_scan_files")
-    if lister is None:
-        loader = spark._jsparkSession.sharedState().jarClassLoader()
-        lister = sc._avro_spark_scan_files = loader.loadClass(
-            "avrospark.AvroCodecUDF$ScanFiles").newInstance()
-    out = lister.apply(scan._jdf)
+    out = _jar_object(spark, "ScanFiles").apply(scan._jdf)
     return sorted((uri, int(n)) for n, _, uri in (
         rec.partition("\t") for rec in out.split("\0") if rec))
 
@@ -311,19 +321,6 @@ def vec_udf(spark: SparkSession, name: str) -> Optional[str]:
     return _register(spark, name, *_VEC_UDFS[name])
 
 
-_SPLIT_FN = "avsp_jvm_ocf_split"
-
-#: SplitBlocks output: one row per OCF block, payload still compressed
-_BLOCK_ROWS_T = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("codec", T.StringType()),
-            T.StructField("count", T.LongType()),
-            T.StructField("data", T.BinaryType()),
-        ]
-    )
-)
-
 #: block codecs the JVM container path can decompress — all six
 #: Avro-spec codecs (r8): snappy is the from-scratch public-format
 #: implementation mirrored in snappy_codec.py; zstandard uses the
@@ -363,24 +360,14 @@ def _sql_str(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
 
 
-def decode_ocf_blocks_jvm(
-    blocks: DataFrame, schema: Schema, codec_col: str = "codec",
-    count_col: str = "count", data_col: str = "data",
-    columns: "Optional[list[str]]" = None,
-) -> DataFrame:
-    """(codec, count, compressed payload) block rows → record-shaped
-    DataFrame, with decompression + the per-record decode loop entirely
-    JVM-side. The explode generator streams block rows through, so task
-    memory is bounded by BLOCK size, never file or split size.
-
-    ``columns`` pushes the projection INTO the decoder: unrequested
-    top-level fields are byte-skipped, never materialized (the Avro
-    analogue of parquet column pruning — the bytes are still read, row
-    format, but nothing is allocated or shipped for pruned fields).
-
-    The UDF is registered on every call; its explode and field
-    selection are built once per schema content, projection, input
-    columns and session (:func:`avro_spark.plans.compiled.built_columns`)."""
+def _ocf_read(df: DataFrame, schema: Schema, inputs: "tuple[str, ...]",
+              expect_schema_json: str,
+              columns: "Optional[list[str]]") -> DataFrame:
+    """``df`` → the records its ``inputs`` columns hold, through ONE
+    select of the jar's OCF read generator (``OcfReadColumn``). The
+    generator Column is built once per schema content, projection,
+    expected schema and input columns (:func:`avro_spark.plans.compiled.
+    built_columns`): one py4j round trip cold, none warm."""
     import json
 
     from ..plans.compiled import built_columns, schema_key
@@ -388,38 +375,56 @@ def decode_ocf_blocks_jvm(
     root = schema.root
     if not isinstance(root, Record):
         raise CompileError("decode_ocf_blocks_jvm requires a record schema")
-    spark = blocks.sparkSession
+    spark = df.sparkSession
     if not _attach(spark):
         raise JvmUnsupported("no JDK available to build the codec jar")
-    json_str = json.dumps(plain_avro_json(root))
-    spark_t = schema.to_struct_type()
-    app = _session_key(spark)
-    args = [json_str]
-    if columns is not None:
-        from ..sources.avro_binary import (
-            project_struct_type, projection_csv, validate_projection,
-        )
-
-        spec = validate_projection(root, columns)
-        spark_t = project_struct_type(spark_t, columns)
-        args.append(projection_csv(root, spec))
-        fn = _register(spark, _fp_name("avsp_jvm_decprj", *args),
-                       "DecodeBlockProj", T.ArrayType(spark_t), app)
-    else:
-        fn = _register(spark, _fp_name("avsp_jvm_decblk", json_str),
-                       "DecodeBlock", T.ArrayType(spark_t), app)
 
     def build():
-        call = F.call_udf(fn, *map(F.lit, args), F.col(codec_col),
-                          F.col(count_col), F.col(data_col))
-        return [F.explode(call).alias("r"), *[
-            F.col(f"r.`{f.name}`").alias(f.name) for f in spark_t.fields]]
+        spark_t = schema.to_struct_type()
+        keep_csv = ""
+        if columns is not None:
+            from ..sources.avro_binary import (
+                project_struct_type, projection_csv, validate_projection,
+            )
 
-    explode, *fields = built_columns(
-        ("decode_blocks", schema_key(schema),
-         None if columns is None else tuple(columns),
-         codec_col, count_col, data_col, app), build)
-    return blocks.select(explode).select(*fields)
+            spec = validate_projection(root, columns)
+            spark_t = project_struct_type(spark_t, columns)
+            keep_csv = projection_csv(root, spec)
+        # output columns are nullable at the top level, nested fields
+        # keep the schema's flags
+        spark_t = T.StructType([
+            T.StructField(f.name, f.dataType, True, f.metadata)
+            for f in spark_t.fields])
+        jcol = _jar_object(spark, "OcfReadColumn").column(
+            json.dumps(plain_avro_json(root)), keep_csv, expect_schema_json,
+            spark_t.json(), "\0".join(inputs))
+        return [Column(jcol)]
+
+    (gen,) = built_columns(
+        ("ocf_read", schema_key(schema),
+         None if columns is None else tuple(columns), expect_schema_json,
+         inputs), build)
+    return df.select(gen)
+
+
+def decode_ocf_blocks_jvm(
+    blocks: DataFrame, schema: Schema, codec_col: str = "codec",
+    count_col: str = "count", data_col: str = "data",
+    columns: "Optional[list[str]]" = None,
+) -> DataFrame:
+    """(codec, count, compressed payload) block rows → record-shaped
+    DataFrame: one select of the OCF read generator, which inflates each
+    block and decodes its records JVM-side straight into Catalyst rows.
+    Records stream out lazily, so task memory is bounded by BLOCK size,
+    never file or split size.
+
+    ``columns`` pushes the projection INTO the decoder: unrequested
+    fields, nested dotted ones included, are byte-skipped, never
+    materialized (the Avro analogue of parquet column pruning — the
+    bytes are still read, row format, but nothing is allocated or
+    shipped for pruned fields)."""
+    return _ocf_read(blocks, schema, (codec_col, count_col, data_col), "",
+                     columns)
 
 
 def read_ocf_content_jvm(
@@ -427,27 +432,16 @@ def read_ocf_content_jvm(
     columns: "Optional[list[str]]" = None,
 ) -> DataFrame:
     """binaryFile rows (``content`` = whole OCF file bytes) → records,
-    fully JVM-side: SplitBlocks parses the container framing, DecodeBlock
-    runs the record hot loop. ~10× the Python row codec on the engine's
+    fully JVM-side in one select of the OCF read generator: it checks the
+    file's container framing, then inflates and decodes one block at a
+    time into Catalyst rows. ~10× the Python row codec on the engine's
     primary file-ingest path. ``expect_schema_json`` (non-empty) makes
-    SplitBlocks BYTE-compare each file's embedded writer schema — the
+    the generator BYTE-compare each file's embedded writer schema — the
     per-file guard for STREAMING reads, where plan-time header peeks
     don't exist; batch readers verify canonically at plan time and pass
     the default empty string."""
-    from ..plans.compiled import built_columns
-
-    spark = files.sparkSession
-    if not _attach(spark):
-        raise JvmUnsupported("no JDK available to build the codec jar")
-    app = _session_key(spark)
-    split_fn = _register(spark, _SPLIT_FN, "SplitBlocks", _BLOCK_ROWS_T, app)
-    explode, *fields = built_columns(
-        ("split_blocks", expect_schema_json, app),
-        lambda: [F.explode(F.call_udf(split_fn, F.lit(expect_schema_json),
-                                      F.col("content"))).alias("b"),
-                 *[F.col(f"b.{c}") for c in ("codec", "count", "data")]])
-    blocks = files.select(explode).select(*fields)
-    return decode_ocf_blocks_jvm(blocks, schema, columns=columns)
+    return _ocf_read(files, schema, ("content",), expect_schema_json,
+                     columns)
 
 
 def _relaxed(dt: T.DataType) -> T.DataType:

@@ -24,7 +24,10 @@ from pyspark.sql import functions as F
 from ..errors import CompileError
 from ..schema import Schema
 from ..schema.nodes import Primitive, Record, walk
-from .flatten import flatten_cells, lit_for, unflatten_field_exprs, xflatten_ops
+from .flatten import (
+    flatten_cells, lit_for, record_field_exprs, unflatten_field_exprs,
+    xflatten_ops,
+)
 from .layout import SERVICE_FIELD_NAME, build_layout
 from .resolution import FieldSource, Resolved, resolve_cached
 
@@ -73,6 +76,24 @@ def built_columns(key: Hashable, build: Callable[[], Sequence[Column]]) -> tuple
         while len(memo) > _BUILT_MAX:
             del memo[next(iter(memo))]
     return got
+
+
+def convert_records(df: DataFrame, writer: Schema, reader: Schema) -> DataFrame:
+    """Writer-shaped record DataFrame → reader-shaped records in ONE
+    projection, one expression per reader field from the resolution plan
+    (aliases, reordering, promotions, defaults, enum and union remaps) —
+    the conversion ``unflatten(flatten(df))`` makes, without the flat
+    layout between. The Column list is built once per schema pair
+    (:func:`built_columns`)."""
+
+    def build():
+        plan = resolve_cached(writer, reader)
+        if plan.kind != "record":
+            raise CompileError("writer and reader must both be records")
+        return [e.alias(name) for name, e in record_field_exprs(plan)]
+
+    return df.select(*built_columns(
+        ("convert_records", schema_key(writer), schema_key(reader)), build))
 
 
 class CompiledSchema:

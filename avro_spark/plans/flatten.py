@@ -361,6 +361,19 @@ def _field_value(src_spec: FieldSource, get_src: Callable[[Field], Column], vali
     return val
 
 
+def record_field_exprs(plan: Resolved) -> list[tuple[str, Column]]:
+    """Top-level reader fields (name, expr) of a record plan, each read
+    straight from its writer-shaped record column: the record-form
+    conversion, with no flat layout in between. Hidden reader fields are
+    omitted, as in unflatten."""
+    assert plan.kind == "record"
+    with _build_scope(plan):
+        return [(s.reader_field.name,
+                 _field_value(s, lambda wf: F.col(wf.name), True))
+                for s in plan.children["sources"]
+                if not s.reader_field.hidden]
+
+
 # ------------------------------------------------------------------ unions
 def _union_value_type(reader: UnionNode, max_depth: int = 16):
     """Spark type of a general union's flat value cell (branch-field struct
@@ -520,9 +533,16 @@ def _convert_union(plan: Resolved, src: Column, validate: bool,
     # union → union
     r_simple = _simple_union(reader)
     tag, val = _union_parts(plan, src, validate, _seen)
-    if r_simple is not None:
-        return val
-    return F.struct(tag.alias(UNION_TAG), *[val.getField(f).alias(f) for f in _branch_field_names(reader)])
+    if r_simple is None:
+        return F.struct(tag.alias(UNION_TAG), *[val.getField(f).alias(f) for f in _branch_field_names(reader)])
+    if any(hit is None for hit in plan.children["branches"]):
+        # the plain value has no tag cell: check the tag anyway, so a
+        # writer branch the reader lacks raises the tag's versioning
+        # error instead of reading as null
+        val = _checked(val, tag.isNotNull() | src.isNull(),
+                       "union branch not in reader schema (schema versioning)",
+                       r_simple, validate)
+    return val
 
 
 def _branch_field_names(u: UnionNode) -> list[str]:

@@ -391,15 +391,16 @@ def read_avro_files(
     Default: one task per file, read by the ``binaryFile`` source and
     listed from that scan's own file index on every storage (no Spark
     job; a job only without the codec jar). ``engine="auto"`` runs the
-    container framing AND the per-record decode loop JVM-side
-    (jvm.read_ocf_content_jvm — ~10× the Python row codec on this, the
-    engine's primary file-ingest path), falling back to the Arrow-batched
-    pure-Python decode when there is no JDK, the schema uses ``any``, or
-    the (first file's) block codec needs a non-JVM decompressor
-    (bzip2/xz/...). ``engine="python"``/``"jvm"`` force a side; a forced
-    ``"jvm"`` raises when unavailable. Mixed-codec directories route on
-    the FIRST file's codec — a later file outside the JVM's codecs fails
-    loudly (re-read with ``engine="python"``).
+    container framing AND the per-record decode loop JVM-side in one
+    Catalyst generator (jvm.read_ocf_content_jvm — ~10× the Python row
+    codec on this, the engine's primary file-ingest path), falling back
+    to the Arrow-batched pure-Python decode when there is no JDK, the
+    schema uses ``any``, or the (first file's) block codec needs a
+    non-JVM decompressor (bzip2/xz/...). ``engine="python"``/``"jvm"``
+    force a side; a forced ``"jvm"`` raises when unavailable.
+    Mixed-codec directories route on the FIRST file's codec — a later
+    file outside the JVM's codecs fails loudly (re-read with
+    ``engine="python"``).
 
     Pass ``split_bytes`` to read each file as MULTIPLE byte-range tasks
     instead (:func:`read_avro_files_split`) — the Hadoop-style
@@ -516,12 +517,10 @@ def _read_avro_files(
         if fully_verified or not verify_schemas:
             if route_out is not None:
                 route_out["engine"] = "jvm"
-            return read_ocf_content_jvm(
-                files.select("content"), schema, columns=columns
-            )
+            return read_ocf_content_jvm(files, schema, columns=columns)
         if engine == "jvm":
             # forced JVM with files the driver-side peek could not reach
-            # (non-local storage): SplitBlocks byte-compares each file's
+            # (non-local storage): the generator byte-compares each file's
             # embedded writer schema, same as the streaming source. This
             # can false-fail canonically-equal FOREIGN renderings (the
             # error says so and points at engine='python'); the loud
@@ -529,7 +528,7 @@ def _read_avro_files(
             if route_out is not None:
                 route_out["engine"] = "jvm"
             return read_ocf_content_jvm(
-                files.select("content"), schema,
+                files, schema,
                 expect_schema_json=json.dumps(schema.export()),
                 columns=columns,
             )
@@ -669,9 +668,9 @@ def read_avro_files_evolved(
     files with their WRITER schema (peeked from the first header), then
     resolve writer→reader — aliases, reordering, promotions, reader
     defaults — via ``compile(writer, reader)`` (frontend.lua:1001-1041
-    resolution rules). The resolution is two fused narrow projections on
-    top of the engine-routed decode, so the whole read stays one
-    scan-speed stage. Mixed-writer directories fail loudly (the per-file
+    resolution rules). The resolution is one narrow projection on top of
+    the engine-routed decode, so the whole read stays one scan-speed
+    stage. Mixed-writer directories fail loudly (the per-file
     schema check): read each writer-version group separately.
 
     ``columns`` (READER field names; output keeps reader order)
@@ -693,6 +692,7 @@ def read_avro_files_evolved(
     group keeps its own engine routing (a JVM-capable group stays on
     the JVM even when another group's codec forces Python)."""
     from .. import compile as _compile
+    from ..plans.compiled import convert_records
 
     if mixed_writers:
         groups = _group_paths_by_writer(spark, path)
@@ -752,8 +752,7 @@ def read_avro_files_evolved(
             writer_sub = _prune_root_fields(writer, writer_cols)
             reader_sub = _prune_root_fields(
                 reader_schema, [rf.name for rf in wanted_reader])
-            evo = _compile(writer_sub, reader_sub)
-            ident = _compile(reader_sub)
+            _compile(writer_sub, reader_sub)  # raises on incompatible pairs
         except Exception:
             full = read_avro_files_evolved(
                 spark, path, reader_schema,
@@ -764,15 +763,13 @@ def read_avro_files_evolved(
         df = _read_avro_files(
             spark, path, listed, writer, split_bytes, engine,
             verify_schemas, writer_cols, None, codec)
-        return ident.unflatten(evo.flatten(df))
+        return convert_records(df, writer_sub, reader_sub)
     df = _read_avro_files(spark, path, listed, writer, split_bytes, engine,
                           verify_schemas, None, None, codec)
-    # writer records → reader flat (the evolution plan), then reader
-    # flat → reader records (the reader's identity plan): two narrow
-    # projections Catalyst fuses into the decode stage
-    evo = _compile(writer, reader_schema)
-    ident = _compile(reader_schema)
-    return ident.unflatten(evo.flatten(df))
+    _compile(writer, reader_schema)  # raises on incompatible pairs
+    # writer records → reader records: one narrow projection Catalyst
+    # fuses into the decode stage
+    return convert_records(df, writer, reader_schema)
 
 
 #: the binaryFile source's FIXED schema (streaming reads must state it)
@@ -792,8 +789,8 @@ def read_avro_stream(
     """STREAMING OCF source: ``readStream`` over a directory of ``.avro``
     files (binaryFile file-stream — new files picked up per trigger),
     decoded through the same engine-routed chain as
-    :func:`read_avro_files` — JVM ``SplitBlocks``/``DecodeBlock`` under
-    ``engine="auto"`` (stateless narrow ops, streaming-legal), the
+    :func:`read_avro_files` — the JVM OCF read generator under
+    ``engine="auto"`` (a stateless narrow op, streaming-legal), the
     Arrow-batched Python codec otherwise. ``schema`` is REQUIRED:
     streaming sources cannot peek a first file. Compose with
     watermarks/windows downstream; bound test runs with
@@ -811,9 +808,9 @@ def read_avro_stream(
         from ..jvm import read_ocf_content_jvm
 
         # per-file writer-schema guard: streams have no plan-time header
-        # peek, so SplitBlocks byte-compares each file's embedded schema
+        # peek, so the generator byte-compares each file's embedded schema
         return read_ocf_content_jvm(
-            files.select("content"), schema,
+            files, schema,
             expect_schema_json=json.dumps(schema.export()),
             columns=columns,
         )
@@ -1120,7 +1117,7 @@ def _read_avro_files_split(
 
         def emit_blocks(batches):
             # IO-only stage: walk the split's blocks and ship each
-            # still-COMPRESSED payload out; the JVM explode stage does
+            # still-COMPRESSED payload out; the JVM generator does
             # decompression + the per-record decode loop. The Python
             # decoder is compiled only for _find_block_start's one-time
             # candidate validation per split.

@@ -35,8 +35,7 @@ from pyspark.sql import functions as F
 from ..errors import AvroSparkError, CompileError
 from ..schema import Schema
 from .. import fingerprint
-from ..plans.flatten import convert_expr
-from ..plans.resolution import resolve_cached
+from ..plans.compiled import convert_records
 from .avro_binary import from_avro_bytes, to_avro_bytes
 
 MAGIC = b"\x00"
@@ -126,23 +125,8 @@ def from_wire(
     for this_id, writer in registry.items():
         sub = checked.where(sid == this_id).select(body.alias("_b"))
         dec = from_avro_bytes(sub, "_b", writer, engine)
-        conv = _convert_records(dec, writer, reader)
+        conv = dec if writer is reader else convert_records(dec, writer, reader)
         out = conv if out is None else out.unionByName(conv)
     assert out is not None
     return out
 
-
-def _convert_records(df: DataFrame, writer: Schema, reader: Schema) -> DataFrame:
-    """writer-shaped record columns → reader-shaped (record form), via the
-    resolution plan (B1-B8 micro-operators) applied to a struct of the
-    whole row — the same conversion flatten/unflatten use, without the
-    tuple layout."""
-    if writer is reader:
-        return df
-    plan = resolve_cached(writer, reader)
-    src = F.struct(*[F.col(f"`{c}`") for c in df.columns])
-    converted = convert_expr(plan, src, validate=True)
-    rf = reader.root
-    return df.select(
-        *[converted.getField(f.name).alias(f.name) for f in rf.fields]
-    )

@@ -560,7 +560,7 @@ def test_jvm_skip_rejects_wrapping_sizes(spark):
     NEGATIVE under the JVM skip path's bare (int) cast and moved the
     cursor BACKWARDS — net-zero progress, an executor hang on corrupt
     data. The guard now bounds every size against the remaining buffer
-    BEFORE the cast (same rule as SplitBlocks)."""
+    BEFORE the cast (same rule as the OCF read generator)."""
     if not _jvm_ready(spark):
         pytest.skip("no JDK")
     sch = avro_spark.create({

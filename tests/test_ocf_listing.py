@@ -57,9 +57,9 @@ def _listed(spark, path) -> "list[tuple[str, int]]":
 
 
 def _in_thread(spark, fn):
-    """``fn()`` on a new Python thread, with the listing helper's cached
-    handle dropped first so that thread loads it."""
-    spark.sparkContext.__dict__.pop("_avro_spark_scan_files", None)
+    """``fn()`` on a new Python thread, with the codec jar's cached
+    helper handles dropped first so that thread loads them."""
+    spark.sparkContext.__dict__.pop("_avro_spark_jar_objs", None)
     out: dict = {}
 
     def run():

@@ -180,7 +180,7 @@ def _evolved_ingest(spark, path):
 
 def test_warm_evolved_read_plan_is_cheap(spark, v1_dir, py4j_round_trips):
     """A warm evolved read plus flatten starts no Spark job before the
-    action and makes at most 100 py4j round trips."""
+    action and makes at most 60 py4j round trips."""
     _evolved_ingest(spark, v1_dir)
     sc = spark.sparkContext
     group = "avro_spark_warm_read_plan"
@@ -189,7 +189,7 @@ def test_warm_evolved_read_plan_is_cheap(spark, v1_dir, py4j_round_trips):
         with py4j_round_trips() as rt:
             flat = _evolved_ingest(spark, v1_dir)
         jobs = sc.statusTracker().getJobIdsForGroup(group)
-        assert rt.n <= 100, rt.n
+        assert rt.n <= 60, rt.n
         assert list(jobs) == []
         rows = flat.collect()
     finally:

@@ -320,8 +320,8 @@ def test_cms_estimate_no_shuffle(spark):
 
 def test_ocf_whole_file_jvm_read_has_no_python_stage(spark, tmp_path):
     """round 5: engine='auto' whole-file OCF reads run ENTIRELY JVM-side
-    — container framing (SplitBlocks) + per-record decode (DecodeBlock)
-    behind two streamed explodes. Zero Python-worker stages; the only
+    — container framing + per-record decode in one streamed generator
+    (UserDefinedGenerator). Zero Python-worker stages; the only
     acceptable MapInArrow count is 0 (a silent fallback to the ~10×
     slower Python codec would show up here)."""
     from avro_spark import jvm as J
@@ -337,7 +337,7 @@ def test_ocf_whole_file_jvm_read_has_no_python_stage(spark, tmp_path):
     write_avro_files(df, sch, out)
     p = plan_of(read_avro_files(spark, out, sch), mode="simple")
     assert "MapInArrow" not in p and "MapInPandas" not in p
-    assert p.count("Generate") == 2  # SplitBlocks explode + DecodeBlock explode
+    assert p.count("Generate") == 1  # the OCF read generator
     assert "Exchange" not in p  # narrow end-to-end: one task per file
 
 
