@@ -10,7 +10,6 @@ import java.util.concurrent.ConcurrentHashMap;
 import org.apache.avro.Schema;
 import org.apache.spark.sql.Column;
 import org.apache.spark.sql.Row;
-import org.apache.spark.sql.RowFactory;
 import org.apache.spark.sql.api.java.UDF2;
 import org.apache.spark.sql.api.java.UDF3;
 import org.apache.spark.sql.catalyst.InternalRow;
@@ -320,119 +319,6 @@ public final class AvroCodecUDF {
     return (int) idx;
   }
 
-  static Object decode(Cursor c, Schema s) {
-    switch (s.getType()) {
-      case NULL:
-        return null;
-      case BOOLEAN:
-        return c.buf[c.pos++] != 0;
-      case INT:
-        return (int) readLong(c);
-      case LONG:
-        return readLong(c);
-      case FLOAT: {
-        int bits = (c.buf[c.pos] & 0xFF)
-            | (c.buf[c.pos + 1] & 0xFF) << 8
-            | (c.buf[c.pos + 2] & 0xFF) << 16
-            | (c.buf[c.pos + 3] & 0xFF) << 24;
-        c.pos += 4;
-        return Float.intBitsToFloat(bits);
-      }
-      case DOUBLE: {
-        long bits = 0;
-        for (int i = 0; i < 8; i++) bits |= (long) (c.buf[c.pos + i] & 0xFF) << (8 * i);
-        c.pos += 8;
-        return Double.longBitsToDouble(bits);
-      }
-      case STRING: {
-        int n = (int) readLong(c);
-        String out = new String(c.buf, c.pos, n, StandardCharsets.UTF_8);
-        c.pos += n;
-        return out;
-      }
-      case BYTES: {
-        int n = (int) readLong(c);
-        byte[] out = new byte[n];
-        System.arraycopy(c.buf, c.pos, out, 0, n);
-        c.pos += n;
-        return out;
-      }
-      case FIXED: {
-        int n = s.getFixedSize();
-        byte[] out = new byte[n];
-        System.arraycopy(c.buf, c.pos, out, 0, n);
-        c.pos += n;
-        return out;
-      }
-      case ENUM:
-        return s.getEnumSymbols().get((int) readLong(c));
-      case ARRAY: {
-        java.util.ArrayList<Object> out = new java.util.ArrayList<>();
-        Schema it = s.getElementType();
-        while (true) {
-          long n = readLong(c);
-          if (n == 0) return out;
-          if (n < 0) { n = -n; readLong(c); /* skip block byte size */ }
-          for (long i = 0; i < n; i++) out.add(decode(c, it));
-        }
-      }
-      case MAP: {
-        java.util.LinkedHashMap<String, Object> out = new java.util.LinkedHashMap<>();
-        Schema vt = s.getValueType();
-        while (true) {
-          long n = readLong(c);
-          if (n == 0) return out;
-          if (n < 0) { n = -n; readLong(c); }
-          for (long i = 0; i < n; i++) {
-            int klen = (int) readLong(c);
-            String k = new String(c.buf, c.pos, klen, StandardCharsets.UTF_8);
-            c.pos += klen;
-            out.put(k, decode(c, vt));
-          }
-        }
-      }
-      case RECORD: {
-        // transparent wrapper — see encode: the decoded value IS the
-        // single field's value, with no extra Row level
-        if (s.getObjectProp("avrospark.unwrap") != null)
-          return decode(c, s.getFields().get(0).schema());
-        List<Schema.Field> fields = s.getFields();
-        Object[] vals = new Object[fields.size()];
-        for (int i = 0; i < fields.size(); i++) vals[i] = decode(c, fields.get(i).schema());
-        return RowFactory.create(vals);
-      }
-      case UNION: {
-        List<Schema> ts = s.getTypes();
-        int idx = unionIndex(c, ts.size());
-        Schema branch = ts.get(idx);
-        int nIdx = nullBranch(ts);
-        if (ts.size() == 2 && nIdx >= 0 && !isUnwrap(ts.get(1 - nIdx))) {
-          // simple {null, T}, T non-nullable → plain nullable value
-          // (["null", "T*"] stays a tagged struct — general path below)
-          if (branch.getType() == Schema.Type.NULL) return null;
-          return decode(c, branch);
-        }
-        // general union → tagged struct row (layout as in encode). The
-        // null branch is a VALUE carrying its own tag, not an outer NULL:
-        // evolution/flatten plans key on $type$, so decode must emit
-        // {$type$: idx, <all branch fields null>} — the same canonical form
-        // conform/ingest produce and the Python dec_union emits.
-        int nNonNull = 0;
-        for (Schema b : ts) if (b.getType() != Schema.Type.NULL) nNonNull++;
-        Object[] vals = new Object[1 + nNonNull];
-        vals[0] = idx;
-        if (branch.getType() == Schema.Type.NULL) return RowFactory.create(vals);
-        int pos = 1;
-        for (int i = 0; i < idx; i++)
-          if (ts.get(i).getType() != Schema.Type.NULL) pos++;
-        vals[pos] = decode(c, branch);
-        return RowFactory.create(vals);
-      }
-      default:
-        throw new RuntimeException("jvm codec cannot decode " + s.getType());
-    }
-  }
-
   // ----------------------------------------------------------- UDF fronts
   // --------------------------------------------- vector-scoring UDFs
   // Parsed double-matrix/cube caches, keyed by the literal JSON string
@@ -659,136 +545,11 @@ public final class AvroCodecUDF {
     }
   }
 
-  /** (schemaJson, Avro binary bytes) → struct row; rejects trailing bytes */
-  public static final class Decode implements UDF2<String, byte[], Row> {
-    @Override
-    public Row call(String schemaJson, byte[] blob) {
-      Cursor c = new Cursor(blob);
-      Row out = (Row) decode(c, schemaOf(schemaJson));
-      if (c.pos != blob.length)
-        throw new RuntimeException(
-            "trailing bytes after Avro value: " + (blob.length - c.pos));
-      return out;
-    }
-  }
-
-  /** per-(schema, keepCsv) projection plan, computed ONCE, not per
-   *  row/block (the wire front decodes one row per call). Entry per
-   *  top-level field in schema order: Boolean.FALSE = skip,
-   *  Boolean.TRUE = decode fully, Map&lt;String,Object&gt; = decode the
-   *  record field keeping only that RECURSIVE sub-tree (dotted
-   *  "a.b.c" CSV entries, any depth — parquet-style nested pruning,
-   *  mirroring the Python projected_field_steps). The CSV arrives
-   *  canonical from the Python validator: no entry is a prefix of
-   *  another. */
-  static final ConcurrentHashMap<String, Object[]> PROJ =
-      new ConcurrentHashMap<>();
-
-  static Object[] projPlan(Schema s, String schemaJson, String keepCsv) {
-    return PROJ.computeIfAbsent(schemaJson + " " + keepCsv, k -> {
-      // {name: TRUE | nested map} — TRUE = keep the subtree fully
-      java.util.HashMap<String, Object> tree = new java.util.HashMap<>();
-      for (String entry : keepCsv.split(",")) {
-        String[] parts = entry.split("\\.");
-        java.util.HashMap<String, Object> cur = tree;
-        for (int d = 0; d < parts.length; d++) {
-          if (d == parts.length - 1) {
-            cur.put(parts[d], Boolean.TRUE);
-            break;
-          }
-          Object nxt = cur.get(parts[d]);
-          if (nxt == Boolean.TRUE) break;  // shorter entry keeps it all
-          if (nxt == null) {
-            nxt = new java.util.HashMap<String, Object>();
-            cur.put(parts[d], nxt);
-          }
-          @SuppressWarnings("unchecked")
-          java.util.HashMap<String, Object> nxtMap =
-              (java.util.HashMap<String, Object>) nxt;
-          cur = nxtMap;
-        }
-      }
-      List<Schema.Field> fields = s.getFields();
-      Object[] take = new Object[fields.size()];
-      for (int j = 0; j < fields.size(); j++) {
-        Object t = tree.get(fields.get(j).name());
-        take[j] = (t == null) ? Boolean.FALSE : t;
-      }
-      return take;
-    });
-  }
-
-  static int projWidth(Object[] plan) {
-    int n = 0;
-    for (Object t : plan) if (t != Boolean.FALSE) n++;
-    return n;
-  }
-
-  /** decode one record (or nullable-record) field keeping only the
-   *  sub-tree's fields (recursing into nested sub-trees), byte-skipping
-   *  siblings — the Python-side validator guarantees every projected
-   *  level is RECORD or [null, RECORD]. */
-  static Object decodeSub(
-      Cursor c, Schema fs, java.util.Map<String, Object> tree) {
-    Schema rec = fs;
-    if (fs.getType() == Schema.Type.UNION) {
-      List<Schema> ts = fs.getTypes();
-      rec = ts.get(unionIndex(c, ts.size()));
-      if (rec.getType() == Schema.Type.NULL) return null;
-    }
-    if (rec.getType() != Schema.Type.RECORD)
-      throw new RuntimeException(
-          "nested projection requires a record field, got " + rec.getType());
-    List<Schema.Field> fields = rec.getFields();
-    int width = 0;
-    for (Schema.Field f : fields) if (tree.containsKey(f.name())) width++;
-    Object[] vals = new Object[width];
-    int p = 0;
-    for (Schema.Field f : fields) {
-      Object t = tree.get(f.name());
-      if (t == null) skip(c, f.schema());
-      else vals[p++] = decodeProjected(c, f.schema(), t);
-    }
-    return RowFactory.create(vals);
-  }
-
-  @SuppressWarnings("unchecked")
-  static Object decodeProjected(Cursor c, Schema fs, Object plan) {
-    if (plan == Boolean.TRUE) return decode(c, fs);
-    return decodeSub(c, fs, (java.util.Map<String, Object>) plan);
-  }
-
-  /** (schemaJson, keepCsv, Avro binary bytes) → struct row with ONLY the
-   *  keepCsv top-level fields (writer schema order), others byte-skipped;
-   *  rejects trailing bytes. The wire-format twin of the OCF read's
-   *  projected decode plan. */
-  public static final class DecodeProj
-      implements org.apache.spark.sql.api.java.UDF3<String, String, byte[], Row> {
-    @Override
-    public Row call(String schemaJson, String keepCsv, byte[] blob) {
-      Schema s = schemaOf(schemaJson);
-      Object[] take = projPlan(s, schemaJson, keepCsv);
-      List<Schema.Field> fields = s.getFields();
-      int nKeep = projWidth(take);
-      Cursor c = new Cursor(blob);
-      Object[] vals = new Object[nKeep];
-      int p = 0;
-      for (int j = 0; j < fields.size(); j++) {
-        if (take[j] != Boolean.FALSE)
-          vals[p++] = decodeProjected(c, fields.get(j).schema(), take[j]);
-        else skip(c, fields.get(j).schema());
-      }
-      if (c.pos != blob.length)
-        throw new RuntimeException(
-            "trailing bytes after Avro value: " + (blob.length - c.pos));
-      return RowFactory.create(vals);
-    }
-  }
-
   // ----------------------------------------------- OCF container framing
   // The Object Container File read (sources/avro_ocf.py) is ONE Catalyst
-  // generator, OcfRead: its input row is a whole file's bytes, or one
-  // block's (codec, count, data) for the split read. A file's framing is
+  // generator, OcfRead: its input row is a whole file's bytes, one
+  // block's (codec, count, data) for the split read, or one Avro value
+  // (the body from_avro_bytes and from_wire decode). A file's framing is
   // checked up front (magic, writer schema, block sizes, sync markers);
   // then one block at a time is inflated and its records decoded, lazily,
   // straight into Catalyst values. Task memory stays bounded by block
@@ -1227,8 +988,8 @@ public final class AvroCodecUDF {
     }
 
     /** Builds the steps: entry(j) is TRUE to decode field j whole, a map
-     *  to keep only that sub-tree of it (nested dotted pruning, as
-     *  decodeSub), null to skip it. */
+     *  to keep only that sub-tree of it (nested dotted pruning, see
+     *  projPlan), null to skip it. */
     @SuppressWarnings("unchecked")
     RecordDec fill(java.util.function.IntFunction<Object> entry,
         IdentityHashMap<Schema, Dec> named) {
@@ -1261,14 +1022,43 @@ public final class AvroCodecUDF {
     return OCF_PLANS.computeIfAbsent(schemaJson + "\0" + keepCsv, k -> {
       Schema s = schemaOf(schemaJson);
       IdentityHashMap<Schema, Dec> named = new IdentityHashMap<>();
-      if (keepCsv.isEmpty()) return catalystDec(s, named);
-      Object[] take = projPlan(s, schemaJson, keepCsv);
-      return new RecordDec(s).fill(
-          j -> take[j] == Boolean.FALSE ? null : take[j], named);
+      return keepCsv.isEmpty() ? catalystDec(s, named)
+          : projectedSub(s, projPlan(keepCsv), named);
     });
   }
 
-  /** The whole value of one schema node — decode()'s walk, compiled.
+  /** A projection CSV as a tree, {name: TRUE | nested tree}: TRUE keeps
+   *  that field whole, a nested tree keeps only that RECURSIVE sub-tree
+   *  of a record field (dotted "a.b.c" entries, any depth — parquet-style
+   *  nested pruning, mirroring the Python projected_field_steps). The CSV
+   *  arrives canonical from the Python validator: no entry is a prefix of
+   *  another. */
+  static Map<String, Object> projPlan(String keepCsv) {
+    java.util.HashMap<String, Object> tree = new java.util.HashMap<>();
+    for (String entry : keepCsv.split(",")) {
+      String[] parts = entry.split("\\.");
+      java.util.HashMap<String, Object> cur = tree;
+      for (int d = 0; d < parts.length; d++) {
+        if (d == parts.length - 1) {
+          cur.put(parts[d], Boolean.TRUE);
+          break;
+        }
+        Object nxt = cur.get(parts[d]);
+        if (nxt == Boolean.TRUE) break;  // shorter entry keeps it all
+        if (nxt == null) {
+          nxt = new java.util.HashMap<String, Object>();
+          cur.put(parts[d], nxt);
+        }
+        @SuppressWarnings("unchecked")
+        java.util.HashMap<String, Object> nxtMap =
+            (java.util.HashMap<String, Object>) nxt;
+        cur = nxtMap;
+      }
+    }
+    return tree;
+  }
+
+  /** The whole value of one schema node as a Catalyst value, compiled.
    *  A record's plan enters `named` (by identity) before its fields are
    *  built, so a recursive type refers back to its own plan instead of
    *  expanding forever; every cycle passes through such a record. The
@@ -1283,8 +1073,30 @@ public final class AvroCodecUDF {
         return c -> (int) readLong(c);
       case LONG:
         return c -> readLong(c);
+      case FLOAT:
+        return c -> {
+          int bits = (c.buf[c.pos] & 0xFF)
+              | (c.buf[c.pos + 1] & 0xFF) << 8
+              | (c.buf[c.pos + 2] & 0xFF) << 16
+              | (c.buf[c.pos + 3] & 0xFF) << 24;
+          c.pos += 4;
+          return Float.intBitsToFloat(bits);
+        };
+      case DOUBLE:
+        return c -> {
+          long bits = 0;
+          for (int i = 0; i < 8; i++) bits |= (long) (c.buf[c.pos + i] & 0xFF) << (8 * i);
+          c.pos += 8;
+          return Double.longBitsToDouble(bits);
+        };
       case STRING:
         return AvroCodecUDF::readUtf8;
+      case BYTES:
+        return c -> readBytes(c, (int) readLong(c));
+      case FIXED: {
+        int n = s.getFixedSize();
+        return c -> readBytes(c, n);
+      }
       case ENUM: {
         java.util.ArrayList<UTF8String> syms = new java.util.ArrayList<>();
         for (String sym : s.getEnumSymbols()) syms.add(UTF8String.fromString(sym));
@@ -1313,7 +1125,9 @@ public final class AvroCodecUDF {
         int nIdx = nullBranch(ts);
         if (br.length == 2 && nIdx >= 0 && !isUnwrap(ts.get(1 - nIdx)))
           return c -> br[unionIndex(c, 2)].read(c);  // plain nullable value
-        // general union: tagged struct, layout as in decode()
+        // general union: tagged struct ($type$, one slot per non-null
+        // branch). The null branch is a tagged value, not an outer null:
+        // evolution and flatten plans key on $type$.
         int[] slot = new int[br.length];
         int width = 1;
         for (int i = 0; i < br.length; i++)
@@ -1327,14 +1141,14 @@ public final class AvroCodecUDF {
           return new GenericInternalRow(vals);
         };
       }
-      default:  // float, double, bytes, fixed: the Row value is the Catalyst one
-        return c -> decode(c, s);
+      default:
+        throw new RuntimeException("jvm codec cannot decode " + s.getType());
     }
   }
 
-  /** decodeSub, compiled: a record or a union of records and null, kept to
-   *  the sub-tree's fields; any other shape raises when a value reaches
-   *  it. */
+  /** A record or a union of records and null, kept to the sub-tree's
+   *  fields and byte-skipping the rest; any other shape raises when a
+   *  value reaches it. */
   static Dec projectedField(
       Schema fs, Map<String, Object> tree, IdentityHashMap<Schema, Dec> named) {
     if (fs.getType() != Schema.Type.UNION) return projectedSub(fs, tree, named);
@@ -1358,8 +1172,8 @@ public final class AvroCodecUDF {
 
   /** A string as UTF8String: all-ASCII bytes as a view into the block,
    *  anything else through java.lang.String, which replaces invalid UTF-8
-   *  exactly as the Row decoder did. A length outside the block takes the
-   *  String path too, so it raises the same error as before. */
+   *  with U+FFFD. A length outside the block takes the String path too,
+   *  which raises StringIndexOutOfBoundsException. */
   static UTF8String readUtf8(Cursor c) {
     int n = (int) readLong(c);
     byte[] b = c.buf;
@@ -1378,6 +1192,15 @@ public final class AvroCodecUDF {
     return out;
   }
 
+  /** n bytes as a copy, never a view: a bytes or fixed value outlives
+   *  the block it was read from. */
+  static byte[] readBytes(Cursor c, int n) {
+    byte[] out = new byte[n];
+    System.arraycopy(c.buf, c.pos, out, 0, n);
+    c.pos += n;
+    return out;
+  }
+
   static Object readArray(Cursor c, Dec it) {
     java.util.ArrayList<Object> out = new java.util.ArrayList<>();
     while (true) {
@@ -1388,9 +1211,9 @@ public final class AvroCodecUDF {
     }
   }
 
-  /** A map as ArrayBasedMapData, collected in a LinkedHashMap as the Row
-   *  decoder did: a repeated key keeps its first position and takes the
-   *  last value. */
+  /** A map as ArrayBasedMapData, collected in a LinkedHashMap: entries
+   *  keep their wire order, and a repeated key keeps its first position
+   *  and takes the last value. */
   static Object readMap(Cursor c, Dec vt) {
     java.util.LinkedHashMap<UTF8String, Object> out = new java.util.LinkedHashMap<>();
     while (true) {
@@ -1518,26 +1341,44 @@ public final class AvroCodecUDF {
     return new Records(plan, codec, blob, Arrays.copyOf(blocks, nb));
   }
 
+  /** One Avro value's bytes → its record; rejects a null input and
+   *  trailing bytes. */
+  static InternalRow valueRecord(Dec plan, byte[] blob) {
+    if (blob == null) throw new RuntimeException("from_avro_bytes: null input value");
+    Cursor c = new Cursor(blob);
+    InternalRow row = (InternalRow) plan.read(c);
+    if (c.pos != blob.length)
+      throw new RuntimeException(
+          "trailing bytes after Avro value: " + (blob.length - c.pos));
+    return row;
+  }
+
   /** The OCF read generator's function: one input row — (content) of a
-   *  whole file, or (codec, count, data) of one block — to its records.
-   *  It holds only strings, so it ships to executors as is; the decode
-   *  plan is built there. */
+   *  whole file, (codec, count, data) of one block, or, when `value`,
+   *  (bytes) of one Avro value — to its records. It ships to executors
+   *  as strings and a flag; the decode plan is looked up there once per
+   *  copy, not per row (its key is the whole schema JSON). */
   static final class OcfRead
       extends scala.runtime.AbstractFunction1<Row, scala.collection.IterableOnce<InternalRow>>
       implements java.io.Serializable {
     final String schemaJson;
     final String keepCsv;
     final String expectSchemaJson;
+    final boolean value;
+    transient volatile Dec plan;
 
-    OcfRead(String schemaJson, String keepCsv, String expectSchemaJson) {
+    OcfRead(String schemaJson, String keepCsv, String expectSchemaJson, boolean value) {
       this.schemaJson = schemaJson;
       this.keepCsv = keepCsv;
       this.expectSchemaJson = expectSchemaJson;
+      this.value = value;
     }
 
     @Override
     public scala.collection.IterableOnce<InternalRow> apply(Row in) {
-      Dec plan = ocfPlan(schemaJson, keepCsv);
+      Dec plan = this.plan;
+      if (plan == null) this.plan = plan = ocfPlan(schemaJson, keepCsv);
+      if (value) return new scala.Some<>(valueRecord(plan, (byte[]) in.get(0)));
       if (in.size() == 1) return fileRecords(plan, expectSchemaJson, (byte[]) in.get(0));
       byte[] data = (byte[]) in.get(2);
       return new Records(plan, in.getString(0),
@@ -1547,18 +1388,20 @@ public final class AvroCodecUDF {
 
   /** Builds the OCF read Column on the driver: (writer schema JSON,
    *  projection CSV or "", expected schema JSON or "", output StructType
-   *  JSON, NUL-joined input column names) → a Catalyst
+   *  JSON, NUL-joined input column names, value flag) → a Catalyst
    *  UserDefinedGenerator whose output columns are the record's fields.
-   *  One input column (content) reads whole files; three (codec, count,
-   *  data) read blocks. */
+   *  With the flag set, one input column holds one Avro value per row;
+   *  otherwise one input column (content) reads whole files and three
+   *  (codec, count, data) read blocks. */
   public static final class OcfReadColumn {
     public Column column(String schemaJson, String keepCsv,
-        String expectSchemaJson, String elementSchemaJson, String inputCols) {
+        String expectSchemaJson, String elementSchemaJson, String inputCols,
+        boolean value) {
       java.util.ArrayList<Expression> in = new java.util.ArrayList<>();
       for (String name : inputCols.split("\0")) in.add(UnresolvedAttribute.quoted(name));
       Expression gen = new UserDefinedGenerator(
           (StructType) DataType.fromJson(elementSchemaJson),
-          new OcfRead(schemaJson, keepCsv, expectSchemaJson),
+          new OcfRead(schemaJson, keepCsv, expectSchemaJson, value),
           CollectionConverters.asScala(in).toList());
       return new Column(ExpressionColumnNode.apply(
           new UnresolvedAlias(gen, scala.Option.empty())));

@@ -4,14 +4,16 @@ The container ships no spark-avro module jar, but it does ship the Apache
 Avro Java library (``avro-1.12.1.jar`` on Spark's classpath) and a JDK —
 so the hot codec path can still run JVM-side: ``AvroCodecUDF.java`` is
 compiled once with ``javac`` against the pyspark distribution jars, packed
-into a jar under ``build/``, attached to the *live* session with
-``ADD JAR`` and registered via ``registerJavaFunction``. No Python worker,
-no Arrow transfer — the encode/decode loop runs next to Tungsten rows.
-The same jar carries the OCF readers' file listing (:func:`scan_files`)
-and their decode: one Catalyst generator that turns whole files or
-blocks straight into Catalyst rows (:func:`read_ocf_content_jvm`,
-:func:`decode_ocf_blocks_jvm`). Those two helpers are loaded through
-the session's jar class loader, not registered.
+into a jar under ``build/`` and attached to the *live* session with
+``ADD JAR``. No Python worker, no Arrow transfer — the encode/decode loop
+runs next to Tungsten rows. Encode (and the vector and block-compression
+helpers) are UDFs registered via ``registerJavaFunction``. Every decode —
+whole OCF files, OCF blocks and single Avro values — is one Catalyst
+generator that turns its input straight into Catalyst rows
+(:func:`read_ocf_content_jvm`, :func:`decode_ocf_blocks_jvm`,
+:func:`from_avro_bytes_jvm`); it and the file listing
+(:func:`scan_files`) are loaded through the session's jar class loader,
+not registered.
 
 Byte-compatibility contract with the pure-Python codec
 (sources/avro_binary.py): identical output for every schema shape except
@@ -39,6 +41,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 import subprocess
 from typing import Optional
 
@@ -178,12 +181,14 @@ def _pyspark_jars() -> str:
 
 def ensure_jar() -> Optional[str]:
     """Compile AvroCodecUDF.java into build/avro-codec-udf.jar (once;
-    rebuilt when the source is newer). Returns the jar path, or None when
-    no JDK is available."""
+    rebuilt when the source is newer, from an empty class directory so
+    no class deleted from the source survives in the jar). Returns the
+    jar path, or None when no JDK is available."""
     if os.path.exists(_JAR) and os.path.getmtime(_JAR) >= os.path.getmtime(_SRC):
         return _JAR
     classes = os.path.join(_BUILD, "classes")
-    os.makedirs(classes, exist_ok=True)
+    shutil.rmtree(classes, ignore_errors=True)
+    os.makedirs(classes)
     cp = os.path.join(_pyspark_jars(), "*")
     try:
         subprocess.run(
@@ -282,11 +287,6 @@ def _register(spark: SparkSession, name: str, cls: str, rtype,
     return name
 
 
-def _fp_name(prefix: str, *parts: str) -> str:
-    """UDF name content-addressed by its schema JSON (and projection)."""
-    return f"{prefix}_{hashlib.md5(chr(0).join(parts).encode()).hexdigest()[:12]}"
-
-
 _DOT_FN = "avsp_jvm_dot"
 
 
@@ -362,15 +362,21 @@ def _sql_str(s: str) -> str:
 
 def _ocf_read(df: DataFrame, schema: Schema, inputs: "tuple[str, ...]",
               expect_schema_json: str,
-              columns: "Optional[list[str]]") -> DataFrame:
+              columns: "Optional[list[str]]", value: bool = False
+              ) -> DataFrame:
     """``df`` → the records its ``inputs`` columns hold, through ONE
-    select of the jar's OCF read generator (``OcfReadColumn``). The
-    generator Column is built once per schema content, projection,
-    expected schema and input columns (:func:`avro_spark.plans.compiled.
-    built_columns`): one py4j round trip cold, none warm."""
+    select of the jar's OCF read generator (``OcfReadColumn``): whole
+    OCF files, OCF blocks, or, with ``value``, one Avro value per row.
+    The generator Column is built once per schema content, projection,
+    expected schema, input columns and input shape
+    (:func:`avro_spark.plans.compiled.built_columns`): one py4j round
+    trip cold, none warm."""
     import json
 
     from ..plans.compiled import built_columns, schema_key
+    from ..sources.avro_binary import (
+        decoded_type, project_struct_type, projection_csv, validate_projection,
+    )
 
     root = schema.root
     if not isinstance(root, Record):
@@ -383,27 +389,18 @@ def _ocf_read(df: DataFrame, schema: Schema, inputs: "tuple[str, ...]",
         spark_t = schema.to_struct_type()
         keep_csv = ""
         if columns is not None:
-            from ..sources.avro_binary import (
-                project_struct_type, projection_csv, validate_projection,
-            )
-
             spec = validate_projection(root, columns)
             spark_t = project_struct_type(spark_t, columns)
             keep_csv = projection_csv(root, spec)
-        # output columns are nullable at the top level, nested fields
-        # keep the schema's flags
-        spark_t = T.StructType([
-            T.StructField(f.name, f.dataType, True, f.metadata)
-            for f in spark_t.fields])
         jcol = _jar_object(spark, "OcfReadColumn").column(
             json.dumps(plain_avro_json(root)), keep_csv, expect_schema_json,
-            spark_t.json(), "\0".join(inputs))
+            decoded_type(spark_t).json(), "\0".join(inputs), value)
         return [Column(jcol)]
 
     (gen,) = built_columns(
         ("ocf_read", schema_key(schema),
          None if columns is None else tuple(columns), expect_schema_json,
-         inputs), build)
+         inputs, value), build)
     return df.select(gen)
 
 
@@ -484,40 +481,10 @@ def from_avro_bytes_jvm(
     df: DataFrame, column: str, schema: Schema,
     columns: "Optional[list[str]]" = None,
 ) -> DataFrame:
-    """Avro-binary column → record-shaped DataFrame, fully JVM-side.
-    ``columns`` pushes the projection into the decoder (DecodeProj —
-    unrequested fields byte-skip)."""
-    import json
-
-    root = schema.root
-    if not isinstance(root, Record):
+    """Avro-binary column → record-shaped DataFrame, fully JVM-side: one
+    select of the OCF read generator taking one Avro value per row, so
+    the wire decode runs the OCF read's decode plan. ``columns`` pushes
+    the projection into the decoder (unrequested fields byte-skip)."""
+    if not isinstance(schema.root, Record):
         raise CompileError("from_avro_bytes requires a record schema")
-    spark = df.sparkSession
-    if not _attach(spark):
-        raise JvmUnsupported("no JDK available to build the codec jar")
-    json_str = json.dumps(plain_avro_json(root))
-    spark_t = schema.to_struct_type()
-    if columns is not None:
-        from ..sources.avro_binary import (
-            project_struct_type, projection_csv, validate_projection,
-        )
-
-        spec = validate_projection(root, columns)
-        spark_t = project_struct_type(spark_t, columns)
-        keep_csv = projection_csv(root, spec)
-        name = _register(spark, _fp_name("avsp_jvm_decp", json_str, keep_csv),
-                         "DecodeProj", spark_t)
-        decoded = df.select(
-            F.call_udf(
-                name, F.lit(json_str), F.lit(keep_csv), F.col(column)
-            ).alias("r")
-        )
-    else:
-        fn = _register(spark, _fp_name("avsp_jvm_decode", json_str), "Decode",
-                       spark_t)
-        decoded = df.select(
-            F.call_udf(fn, F.lit(json_str), F.col(column)).alias("r")
-        )
-    return decoded.select(
-        *[F.col(f"r.`{f.name}`").alias(f.name) for f in spark_t.fields]
-    )
+    return _ocf_read(df, schema, (column,), "", columns, value=True)

@@ -1050,18 +1050,16 @@ def from_avro_bytes(
         steps = projected_field_steps(root, columns)
     else:
         steps = [(f.name, _compile_decoder(f.type)) for f in root.fields]
-    # Output type METADATA-FREE: to_struct_type() pins enum symbols /
-    # fixed sizes in field metadata, and Spark's Arrow schema check
-    # rejects batches lacking it. Arrow-native output
-    # (RecordBatch.from_pylist against the exact Arrow schema) keeps
-    # decoded int64 EXACT — the earlier pandas_udf returned
-    # pd.DataFrame({name: [int, None, ...]}) columns, which pandas
-    # coerces to float64, silently rounding |v| > 2^53 whenever a null
-    # and a big long share a batch (the decode half of the same bug
+    # Arrow-native output (RecordBatch.from_arrays against the exact
+    # Arrow schema) keeps decoded int64 EXACT — the earlier pandas_udf
+    # returned pd.DataFrame({name: [int, None, ...]}) columns, which
+    # pandas coerces to float64, silently rounding |v| > 2^53 whenever a
+    # null and a big long share a batch (the decode half of the same bug
     # fixed in to_avro_bytes).
-    spark_t = _strip_metadata(schema.to_struct_type())
+    struct = schema.to_struct_type()
     if columns is not None:
-        spark_t = project_struct_type(spark_t, columns)
+        struct = project_struct_type(struct, columns)
+    spark_t = arrow_out_type(struct)
     # the decoded OUTPUT rows cross Arrow IPC out of the Python worker
     # (the check runs on the PROJECTED struct — dropping a too-deep
     # field makes the decode legal)
@@ -1088,6 +1086,8 @@ def from_avro_bytes(
                     (None, fn) if name is None else (next(it).append, fn)
                 )
             for blob in b.column(0).to_pylist():
+                if blob is None:
+                    raise AvroSparkError("from_avro_bytes: null input value")
                 buf = bytes(blob)
                 pos = 0
                 for ap, fn in flat_steps:
@@ -1109,7 +1109,7 @@ def from_avro_bytes(
                 schema=arrow_schema,
             )
 
-    return df.select(F.col(column)).mapInArrow(_decode_batches, schema=spark_t)
+    return arrow_decoded(df.select(F.col(column)), _decode_batches, struct)
 
 
 def _strip_metadata(dt, relax_nulls: bool = False):
@@ -1142,6 +1142,46 @@ def _strip_metadata(dt, relax_nulls: bool = False):
             True if relax_nulls else dt.valueContainsNull,
         )
     return dt
+
+
+def decoded_type(struct):
+    """The schema a decode to ``struct`` reports on either engine: the
+    top-level fields nullable, nested flags and all field metadata
+    kept."""
+    from pyspark.sql import types as T
+
+    return T.StructType([T.StructField(f.name, f.dataType, True, f.metadata)
+                         for f in struct.fields])
+
+
+def arrow_out_type(struct):
+    """The ``mapInArrow`` output type of a Python decode to ``struct``:
+    :func:`decoded_type` without field metadata (Spark's Arrow schema
+    check rejects batches that lack it, and Arrow carries none)."""
+    return _strip_metadata(decoded_type(struct))
+
+
+def arrow_decoded(df: DataFrame, decode, struct) -> DataFrame:
+    """``df.mapInArrow(decode)`` with the JVM decode's schema: ``decode``
+    yields batches of :func:`arrow_out_type` of ``struct``, and one
+    select puts ``struct``'s field metadata back, so a read reports the
+    same schema on either engine. The select's Columns are built once per
+    ``struct`` (:func:`avro_spark.plans.compiled.built_columns`)."""
+    from ..plans.compiled import built_columns
+
+    def build():
+        cols = []
+        for f, bare in zip(struct.fields, _strip_metadata(struct).fields):
+            col = F.col(f"`{f.name.replace('`', '``')}`")
+            if f.dataType != bare.dataType:
+                # nested metadata comes back through a cast, which moves
+                # no data: the two types differ only in metadata
+                col = col.cast(f.dataType)
+            cols.append(col.alias(f.name, metadata=f.metadata))
+        return cols
+
+    cols = built_columns(("arrow_decoded", struct.json()), build)
+    return df.mapInArrow(decode, schema=arrow_out_type(struct)).select(*cols)
 
 
 def native_avro_available(spark) -> bool:

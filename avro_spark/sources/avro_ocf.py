@@ -55,8 +55,10 @@ from .avro_binary import (
     _compile_encoder,
     _normalize,
     _read_long,
-    _strip_metadata,
     _write_long,
+    arrow_decoded,
+    arrow_out_type,
+    project_struct_type,
 )
 
 MAGIC = b"Obj\x01"
@@ -241,14 +243,6 @@ def write_ocf_bytes(
     return bytes(out)
 
 
-def _project_struct(struct, columns: "list[str]"):
-    """StructType restricted to ``columns`` (dotted paths of any depth
-    prune INSIDE record fields), keeping schema order."""
-    from .avro_binary import project_struct_type
-
-    return project_struct_type(struct, columns)
-
-
 def read_ocf_bytes(
     blob: bytes, schema: Optional[Schema] = None,
     columns: "Optional[list[str]]" = None,
@@ -395,8 +389,9 @@ def read_avro_files(
     Catalyst generator (jvm.read_ocf_content_jvm — ~10× the Python row
     codec on this, the engine's primary file-ingest path), falling back
     to the Arrow-batched pure-Python decode when there is no JDK, the
-    schema uses ``any``, or the (first file's) block codec needs a
-    non-JVM decompressor (bzip2/xz/...). ``engine="python"``/``"jvm"``
+    schema uses ``any``, or the (first file's) block codec is outside
+    the JVM's six (``jvm.JVM_OCF_CODECS``: every Avro-spec codec,
+    bzip2 and xz included). ``engine="python"``/``"jvm"``
     force a side; a forced ``"jvm"`` raises when unavailable.
     Mixed-codec directories route on the FIRST file's codec — a later
     file outside the JVM's codecs fails loudly (re-read with
@@ -564,13 +559,14 @@ def _decode_content_python(
         from .avro_binary import validate_projection
 
         validate_projection(schema.root, columns)
-        struct = _project_struct(struct, columns)
+        struct = project_struct_type(struct, columns)
     # decoded records cross Arrow IPC out of the Python worker — fail at
     # plan build, not mid-job (Arrow's 64-level recursion limit). The
     # check runs on the PROJECTED struct: a projection that drops the
     # too-deep field makes the read legal.
     check_arrow_nesting(struct, "read_avro_files(engine='python')")
     schema_export = json.dumps(schema.export())
+    out_t = arrow_out_type(struct)
 
     def decode(batches):
         # Arrow-native output: a pandas [int, None, ...] column coerces
@@ -585,10 +581,7 @@ def _decode_content_python(
         sch = create(json.loads(schema_export))
         expected_cf = canonical_form(sch.root)
         ok: set = set()
-        out_struct = _strip_metadata(sch.to_struct_type())
-        if columns is not None:
-            out_struct = _project_struct(out_struct, columns)
-        arrow_schema = to_arrow_schema(out_struct)
+        arrow_schema = to_arrow_schema(out_t)
         for b in batches:
             for row in b.to_pylist():
                 blob = bytes(row["content"])
@@ -605,9 +598,7 @@ def _decode_content_python(
                 # by exactly the root field names — no copy needed
                 yield pa.RecordBatch.from_pylist(recs, schema=arrow_schema)
 
-    return files.select("path", "content").mapInArrow(
-        decode, schema=_strip_metadata(struct)
-    )
+    return arrow_decoded(files.select("path", "content"), decode, struct)
 
 
 def _prune_root_fields(schema: Schema, names: "list[str]") -> Schema:
@@ -1181,12 +1172,13 @@ def _read_avro_files_split(
     # python block decode: records cross Arrow IPC out of the worker.
     # The nesting check runs on the PROJECTED struct: a projection that
     # drops the too-deep field makes the read legal.
-    out_struct = struct if columns is None else _project_struct(struct, columns)
+    out_struct = struct if columns is None else project_struct_type(struct, columns)
     if columns is not None:
         from .avro_binary import validate_projection
 
         validate_projection(schema.root, columns)
     check_arrow_nesting(out_struct, "read_avro_files_split(engine='python')")
+    out_t = arrow_out_type(out_struct)
 
     def decode(batches):
         # Arrow-native output — exact int64, see read_avro_files.decode
@@ -1205,10 +1197,7 @@ def _read_avro_files_split(
             from .avro_binary import projected_record_decoder
 
             dec = projected_record_decoder(sch.root, columns)
-        a_struct = _strip_metadata(sch.to_struct_type())
-        if columns is not None:
-            a_struct = _project_struct(a_struct, columns)
-        arrow_schema = to_arrow_schema(a_struct)
+        arrow_schema = to_arrow_schema(out_t)
 
         def emit(recs):
             # decoded records are already {field: value} dicts
@@ -1258,7 +1247,7 @@ def _read_avro_files_split(
                     if recs:
                         yield emit(recs)
 
-    return sdf.mapInArrow(decode, schema=_strip_metadata(out_struct))
+    return arrow_decoded(sdf, decode, out_struct)
 
 
 #: pyarrow filesystems where a streamed upload is INVISIBLE until the

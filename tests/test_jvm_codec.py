@@ -106,6 +106,47 @@ def test_map_roundtrip_jvm(spark):
     assert sorted((r.id, dict(r.mm)) for r in rt) == [(1, {"a": 1, "b": 2}), (2, {})]
 
 
+def _zigzag(n):
+    n = (n << 1) ^ (n >> 63)
+    out = bytearray()
+    while n > 0x7F:
+        out.append(n & 0x7F | 0x80)
+        n >>= 7
+    out.append(n)
+    return bytes(out)
+
+
+def test_invalid_utf8_decodes_to_replacement_chars(spark):
+    """Invalid UTF-8 in a string and in map keys decodes to U+FFFD on the
+    JVM engine, map entries in wire order; two keys that become equal
+    keep the first position and take the last value."""
+    if not _jvm_ready(spark):
+        pytest.skip("no JDK")
+    sch = avro_spark.create({"type": "record", "name": "Utf", "fields": [
+        {"name": "s", "type": "string"},
+        {"name": "m", "type": {"type": "map", "values": "int"}}]})
+    entries = [(b"\xfek", 1), (b"ok", 2), (b"\xff", 3), (b"\xfe", 4)]
+    blob = (_zigzag(3) + b"a\xffb" + _zigzag(len(entries))
+            + b"".join(_zigzag(len(k)) + k + _zigzag(v) for k, v in entries)
+            + _zigzag(0))
+    df = spark.createDataFrame([(bytearray(blob),)], "b binary")
+    got = from_avro_bytes(df, "b", sch, engine="jvm").selectExpr(
+        "s", "map_keys(m) AS k", "map_values(m) AS v").collect()
+    assert [tuple(r) for r in got] == [
+        ("a\ufffdb", ["\ufffdk", "ok", "\ufffd"], [1, 2, 4])]
+
+
+def test_null_input_value_fails_on_both_engines(spark):
+    """A null Avro value fails the job with one message on either engine,
+    never a silent null row."""
+    sch = avro_spark.create({"type": "record", "name": "N", "fields": [
+        {"name": "a", "type": "long"}]})
+    df = spark.createDataFrame([(bytearray(b"\x02"),), (None,)], "b binary")
+    for eng in ["python"] + (["jvm"] if _jvm_ready(spark) else []):
+        with pytest.raises(Exception, match="from_avro_bytes: null input value"):
+            from_avro_bytes(df, "b", sch, engine=eng).collect()
+
+
 def test_auto_routes_jvm_no_python_stage(spark, zoo_df):
     """engine='auto' on a supported schema must produce a plan with NO
     Python evaluation stage (the whole point: JVM-side hot path)."""
@@ -118,6 +159,7 @@ def test_auto_routes_jvm_no_python_stage(spark, zoo_df):
     dec = from_avro_bytes(enc, "b", s, engine="auto")
     plan = dec._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan
+    assert "UserDefinedGenerator" in plan
 
 
 GENERAL_UNION = {

@@ -17,6 +17,7 @@ import pytest
 import avro_spark
 from avro_spark import jvm as J
 from avro_spark.errors import AvroSparkError
+from avro_spark.sources.avro_binary import from_avro_bytes, to_avro_bytes
 from avro_spark.sources.avro_ocf import (
     _read_meta_map,
     read_avro_files,
@@ -510,9 +511,9 @@ def test_route_out_records_taken_engine(spark, tmp_path, zoo):
 
 def test_recursive_schema_ocf_cross_engine(spark, tmp_path):
     """Recursive linked-list schema ([null, node] back-edge) through the
-    OCF container on BOTH engines: the JVM path must handle the cyclic
-    schema graph (named-ref JSON + Java parser) exactly like the Python
-    closure-tree codec."""
+    OCF container and the wire codec on BOTH engines: the JVM path must
+    handle the cyclic schema graph (named-ref JSON + Java parser) exactly
+    like the Python closure-tree codec."""
     if not _jvm_ready(spark):
         pytest.skip("no JDK")
     sch = avro_spark.create({
@@ -531,9 +532,56 @@ def test_recursive_schema_ocf_cross_engine(spark, tmp_path):
         d = str(tmp_path / f"rec_{weng}")
         write_avro_files(df.coalesce(1), sch, d, codec="deflate",
                          block_records=16, engine=weng)
+        blobs = to_avro_bytes(df, sch, "b", engine=weng)
         for reng in ("python", "jvm"):
             got = _collect(read_avro_files(spark, d, sch, engine=reng))
             assert got == want, (weng, reng)
+            got = _collect(from_avro_bytes(blobs, "b", sch, engine=reng))
+            assert got == want, ("wire", weng, reng)
+
+
+def test_one_schema_per_read_across_engines(spark, tmp_path):
+    """Every read reports one schema whatever engine decodes it: top-level
+    columns nullable, field metadata (enum, fixed, union tags) kept at
+    every depth, for full and projected reads."""
+    if not _jvm_ready(spark):
+        pytest.skip("no JDK")
+    from avro_spark.sources.avro_ocf import read_avro_stream
+
+    enum = {"type": "enum", "name": "SE", "symbols": ["A", "B"]}
+    sch = avro_spark.create({"type": "record", "name": "S", "fields": [
+        {"name": "id", "type": "long"},
+        {"name": "e", "type": enum},
+        {"name": "fx", "type": {"type": "fixed", "name": "SF", "size": 2}},
+        {"name": "sub", "type": {"type": "record", "name": "SS", "fields": [
+            {"name": "k", "type": "SE"},
+            {"name": "u", "type": ["null", "long", "string"]}]}}]})
+    df = spark.createDataFrame(
+        [(1, "A", b"ab", ("B", (1, 5, None))), (2, "B", b"cd", ("A", (0, None, None)))],
+        sch.to_struct_type())
+    d = str(tmp_path / "one_schema")
+    write_avro_files(df.coalesce(1), sch, d)
+    blobs = to_avro_bytes(df, sch, "b", engine="python")
+    for cols in (None, ["e", "sub.k"]):
+        reads = {
+            "files": lambda eng: read_avro_files(
+                spark, d, sch, engine=eng, columns=cols),
+            "split": lambda eng: read_avro_files_split(
+                spark, d, sch, split_bytes=64, engine=eng, columns=cols),
+            "stream": lambda eng: read_avro_stream(
+                spark, d, sch, engine=eng, columns=cols),
+            "bytes": lambda eng: from_avro_bytes(
+                blobs, "b", sch, engine=eng, columns=cols),
+        }
+        for name, read in reads.items():
+            jvm, py = read("jvm"), read("python")
+            assert py.schema == jvm.schema, (name, cols)
+            assert all(f.nullable for f in jvm.schema.fields), (name, cols)
+            assert jvm.schema["e"].metadata["avro.enum.symbols"] == ["A", "B"]
+            assert (jvm.schema["sub"].dataType["k"].metadata["avro.enum.name"]
+                    == "SE")
+            if name != "stream":
+                assert _collect(py) == _collect(jvm), (name, cols)
 
 
 def test_streaming_ocf_source_both_engines(spark, tmp_path, zoo):

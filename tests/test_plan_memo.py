@@ -200,6 +200,25 @@ def test_warm_evolved_read_plan_is_cheap(spark, v1_dir, py4j_round_trips):
     assert {r["source"] for r in rows} == {"legacy"}
 
 
+def test_warm_wire_decode_plan_is_cheap(spark, py4j_round_trips):
+    """A warm JVM from_avro_bytes takes its decode Column from the memo:
+    at most 12 py4j round trips to build the plan."""
+    from avro_spark import jvm as J
+    from avro_spark.sources.avro_binary import from_avro_bytes, to_avro_bytes
+
+    if not J.jvm_codec_available(spark):
+        pytest.skip("no JDK")
+    v1 = avro_spark.create(_V1)
+    blobs = to_avro_bytes(spark.range(3).selectExpr(
+        "id", "id * 0.5 AS amount", "array('t') AS tags"), v1, "b",
+        engine="jvm")
+    from_avro_bytes(blobs, "b", v1, engine="jvm")
+    with py4j_round_trips() as rt:
+        out = from_avro_bytes(blobs, "b", v1, engine="jvm")
+    assert rt.n <= 12, rt.n
+    assert sorted(r["id"] for r in out.collect()) == [0, 1, 2]
+
+
 def test_warm_read_of_another_writer_decodes_it(spark, v1_dir, tmp_path):
     """The decode memo is keyed by the writer's content: a second
     directory written with a longer writer schema decodes its own
