@@ -21,6 +21,10 @@ NAMES or paths RELATIVE to the listed URI, never the FileSystem's own
 paths: a remote listing's paths are scheme-less (``bucket/key``), and
 a URI-classifying caller would misread them as local.
 
+**Parquet tables** are read through :func:`read_parquet`: a local flat
+table takes its schema from one file's footer, so the read starts no
+schema-inference job.
+
 **Plain ``os`` stays only where it gives a guarantee pyarrow does not:**
 
 * :func:`create_exclusive` — ``O_CREAT|O_EXCL``, an atomic
@@ -185,6 +189,41 @@ def parquet_footers(uri: str, recursive: bool = False) -> list:
         with f.open_input_file(f"{p.rstrip('/')}/{rel}") as fh:
             out.append((rel, size, pq.ParquetFile(fh).metadata))
     return out
+
+
+#: the footer key under which Spark's parquet writer stores the row
+#: schema as Spark type JSON (nullability and field metadata included)
+_SPARK_ROW_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def footer_schema(uri: str):
+    """The Spark schema of the flat parquet table at ``uri``, read
+    driver-side from the footer of its first file; None when ``uri``
+    is not local, holds partition directories or no file, or the file
+    carries no Spark schema (not written by Spark)."""
+    lp = local_path(uri)
+    if lp is None:
+        return None
+    files = _parquet_listing(pafs.LocalFileSystem(), lp, True)
+    if not files or any("/" in rel for rel, _ in files):
+        return None
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    meta = pq.read_metadata(os.path.join(lp, files[0][0])).metadata or {}
+    raw = meta.get(_SPARK_ROW_SCHEMA)
+    return None if raw is None else StructType.fromJson(json.loads(raw))
+
+
+def read_parquet(spark, uri: str):
+    """``spark.read.parquet(uri)`` with no schema-inference job where
+    :func:`footer_schema` knows the schema (Spark makes it nullable,
+    as inference does); otherwise Spark infers it, which runs one job."""
+    schema = footer_schema(uri)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(uri)
 
 
 def bytes_at_least(uri: str, threshold: int) -> bool:

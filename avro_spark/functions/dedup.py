@@ -41,6 +41,8 @@ from ._meta_io import (
     write_meta,
 )
 from .. import _fs
+from ..plans.compiled import built_columns
+from .similarity import _isin_lit, _sql_lit
 from .text import let, normalize_text, ws_tokens
 
 # Mersenne-31 prime: keeps a*h + b < 2^62, safely inside signed int64
@@ -340,21 +342,20 @@ def _band_rows_from_hashes(
     zero shingles drop out, which is final-result-equivalent (their
     Jaccard with anything is 0 < threshold).
 
-    The k min-slots and band structs are built as SQL strings: a 64-slot
-    Column-API construction costs ~400 py4j round trips (~1 s of driver
-    time per call) while the parser ingests the same trees in
+    The k min-slots (one ``struct`` of k aggregates) and the band
+    structs are each ONE SQL string: a Column per slot costs a few py4j
+    round trips each, while the parser ingests the same trees in
     milliseconds. a, b, h < 2^31 so a*h + b < 2^62 — no long overflow."""
     r = num_hashes // bands
     params = _perm_params(num_hashes, seed)
-    sig = exploded.groupBy("_id").agg(
-        *[
-            F.expr(f"min(pmod({a}L * _h + {b}L, {_MERSENNE}L)) AS mh{i}")
-            for i, (a, b) in enumerate(params)
-        ]
+    slots = ", ".join(
+        f"min(pmod({a}L * _h + {b}L, {_MERSENNE}L)) AS mh{i}"
+        for i, (a, b) in enumerate(params)
     )
+    sig = exploded.groupBy("_id").agg(F.expr(f"struct({slots}) AS _mh"))
     band_structs = ",".join(
         "struct({bi} AS band, xxhash64(concat_ws(',', {cols})) AS bucket)".format(
-            bi=bi, cols=",".join(f"mh{bi * r + j}" for j in range(r))
+            bi=bi, cols=",".join(f"_mh.mh{bi * r + j}" for j in range(r))
         )
         for bi in range(bands)
     )
@@ -433,8 +434,9 @@ def _write_minhash_index_unlocked(
     silent-zero-recall class the ``__building__`` rebuild marker
     closes). Recovery is RE-RUNNING THE SAME APPEND to completion — the
     probe absorbs the duplicate rows a retry leaves (band duplicates via
-    candidate distinct, shingle duplicates via a per-id dropDuplicates),
-    so a completed retry restores exactness.
+    candidate distinct, shingle duplicates via a per-id dropDuplicates
+    or, on the pushed-down route, a pair dedupe at the output), so a
+    completed retry restores exactness.
 
     ``append_token`` strengthens the retry story to EXACTLY-ONCE across
     callers that re-run whole batches (the streaming sink's shape): the
@@ -538,8 +540,15 @@ def _write_minhash_index_unlocked(
         # preceded the append — no extra job needed (a replayed batch
         # that skipped the probe merely recomputes cache partitions
         # concurrently once; results are unaffected).
+        one_file = False
         if own_hdocs:
-            hdocs.count()
+            n_docs, n_hashes = hdocs.selectExpr(
+                "count(1)", "sum(size(_hh))").first()
+            # an append that fits one advisory partition (a daily batch)
+            # writes each table as one sorted file, with no range sampling
+            one_file = mode == "append" and _fits_one_file(
+                spark, n_docs * (bands + 1) * _ROW_BYTES
+                + (n_hashes or 0) * 8)
 
         # DATA-SKIPPING LAYOUT: range-partition + sort each table by its
         # probe key so every parquet file/row-group covers a tight key
@@ -550,21 +559,16 @@ def _write_minhash_index_unlocked(
         # of full-scanning a near-corpus-sized table. Appends sort their
         # own batch the same way (per-file stats stay tight per batch).
         def _write_shingles() -> None:
-            hdocs.select(
-                F.col("_id").alias("id"),
-                F.array_sort(F.array_distinct(F.col("_hh"))).alias("shh"),
-            ).repartitionByRange("id").sortWithinPartitions("id") \
-                .write.mode(mode) \
+            _sorted_parts(hdocs.selectExpr(
+                "_id AS id", "array_sort(array_distinct(_hh)) AS shh",
+            ), one_file, "id").write.mode(mode) \
                 .parquet(_vdir(path, "shingles", versions.get("shingles", 0)))
 
         def _write_bands() -> None:
-            _band_rows_from_hashes(
+            _sorted_parts(_band_rows_from_hashes(
                 _explode_mod(hdocs), num_hashes, bands, seed
-            ).select(
-                "band", "bucket", F.col("_id").alias("id")
-            ).repartitionByRange("band", "bucket") \
-                .sortWithinPartitions("band", "bucket") \
-                .write.mode(mode) \
+            ).selectExpr("band", "bucket", "_id AS id"),
+                one_file, "band", "bucket").write.mode(mode) \
                 .parquet(_vdir(path, "bands", versions.get("bands", 0)))
 
         from concurrent.futures import ThreadPoolExecutor
@@ -595,6 +599,30 @@ def _write_minhash_index_unlocked(
             _gc_table_versions(path, t, 0)
 
 
+#: upper bound on the shuffle bytes of one index row besides its
+#: hashed-shingle array (an append's one-file estimate)
+_ROW_BYTES = 64
+
+
+def _fits_one_file(spark, n_bytes: int) -> bool:
+    """True when ``n_bytes`` of shuffle data fit AQE's advisory
+    partition size, i.e. one partition, so one file."""
+    import re
+
+    size = spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    got = re.fullmatch(r"\s*(\d+)\s*([kmgtp]?)b?\s*", size.lower())
+    return got is not None and n_bytes <= int(got.group(1)) << (
+        10 * " kmgtp".index(got.group(2) or " "))
+
+
+def _sorted_parts(df: DataFrame, one_file: bool, *keys: str) -> DataFrame:
+    """``df`` range-partitioned and sorted by ``keys`` within each
+    partition — or, ``one_file``, as one sorted partition, which needs
+    no range-sampling job."""
+    part = df.coalesce(1) if one_file else df.repartitionByRange(*keys)
+    return part.sortWithinPartitions(*keys)
+
+
 def _hashed_docs(
     df: DataFrame, id_col: str, text_col: str, shingle_n: int, fn
 ) -> DataFrame:
@@ -602,19 +630,23 @@ def _hashed_docs(
     once; band rows reduce mod 2^31-1 downstream (:func:`_explode_mod`),
     the verification store keeps the full width. Ids keep their NATIVE
     type (:func:`_native_id`): the index parquet stores whatever id type
-    the corpus has, and probes/appends must bring the same type."""
-    return df.select(
-        _native_id(id_col).alias("_id"),
-        F.transform(
-            shingles(F.col(text_col), shingle_n), lambda g: fn(g)
-        ).alias("_hh"),
-    )
+    the corpus has, and probes/appends must bring the same type. The
+    two Columns are built once per SparkContext (:func:`built_columns`):
+    the shingle tree alone is a few hundred py4j round trips."""
+    return df.select(*built_columns(
+        ("minhash_hashed_docs", id_col, text_col, shingle_n, fn),
+        lambda: (
+            _native_id(id_col).alias("_id"),
+            F.transform(
+                shingles(F.col(text_col), shingle_n), lambda g: fn(g)
+            ).alias("_hh"),
+        ),
+    ))
 
 
 def _explode_mod(hdocs: DataFrame) -> DataFrame:
-    return hdocs.select("_id", F.explode("_hh").alias("_hr")).select(
-        "_id", F.pmod(F.col("_hr"), F.lit(_MERSENNE)).alias("_h")
-    )
+    return hdocs.selectExpr("_id", "explode(_hh) AS _hr").selectExpr(
+        "_id", f"pmod(_hr, {_MERSENNE}) AS _h")
 
 
 def _index_hash(name: str):
@@ -689,15 +721,20 @@ def dedup_against_index(
     on (band, bucket) — a daily batch is small, so AQE broadcasts it
     and the index side streams through unshuffled. Verification then
     needs only the CANDIDATE ids' shingle sets: with
-    ``candidate_pushdown`` (default) the candidate pairs are
-    materialized once (localCheckpoint — they are tiny by LSH design)
-    and the bounded distinct corpus-id set becomes an ``id IN (...)``
-    filter PUSHED INTO the shingles parquet scan — against
+    ``candidate_pushdown`` (default) the candidate pairs come to the
+    driver in ONE bounded collect (they are tiny by LSH design) and
+    return as a local relation (one parser-built ``VALUES`` list), and
+    their distinct corpus-id set becomes an ``id IN (...)`` filter
+    PUSHED INTO the shingles parquet scan — against
     :func:`write_minhash_index`'s range-sorted layout that prunes at
     the row-group/file footer level, so probe IO on the (near
     corpus-sized) shingle store scales with |candidates|, not |index|.
-    More than ``max_pushdown_ids`` distinct candidates falls back to
-    the streaming join — driver state stays bounded, and a Catalyst
+    The verify join then streams the pruned shingle rows past the
+    broadcast candidates and batch shingle sets, and the duplicate
+    pairs a retried append's shingle rows leave collapse at the
+    output. More than ``max_pushdown_ids`` distinct candidates falls
+    back to the streaming join over the candidate pairs, materialized
+    once (localCheckpoint) — driver state stays bounded, and a Catalyst
     ``In`` with tens of thousands of literals bloats the plan and slows
     optimization well before it helps IO, so the default stays at a few
     thousand. Jaccard is
@@ -716,14 +753,11 @@ def dedup_against_index(
     band_rows = _band_rows_from_hashes(
         _explode_mod(hdocs), m["num_hashes"], m["bands"], m["seed"]
     )
-    new_sh = hdocs.select(
-        F.col("_id").alias("new_id"),
-        F.array_sort(F.array_distinct(F.col("_hh"))).alias("shh_new"),
-    )
-    idx_bands = spark.read.parquet(
-        _vdir(path, "bands", m["versions"].get("bands", 0)))
-    new_bands = band_rows.select(
-        "band", "bucket", F.col("_id").alias("new_id"))
+    new_sh = hdocs.selectExpr(
+        "_id AS new_id", "array_sort(array_distinct(_hh)) AS shh_new")
+    idx_bands = _fs.read_parquet(
+        spark, _vdir(path, "bands", m["versions"].get("bands", 0)))
+    new_bands = band_rows.selectExpr("band", "bucket", "_id AS new_id")
     if broadcast_batch:
         # a daily batch is small next to the corpus: broadcasting it
         # lets the bands table stream through with NO shuffle. Pass
@@ -739,36 +773,45 @@ def dedup_against_index(
         .distinct()
     )
     sh_dir = _vdir(path, "shingles", m["versions"].get("shingles", 0))
-    sh_scan = spark.read.parquet(sh_dir)
+    sh_scan = _fs.read_parquet(spark, sh_dir)
     if candidate_pushdown and not _fs.bytes_at_least(
         sh_dir, pushdown_min_index_bytes
     ):
         # SCALE-ADAPTIVE (guide §1.2): below one scan task's worth of
-        # shingle store the pushdown prunes nothing, and its
-        # checkpoint + bounded collect are two extra actions per probe
-        # — run the whole probe as ONE action instead. Results are
-        # identical either way (pinned by
-        # test_candidate_pushdown_prunes_the_shingle_scan).
+        # shingle store the pushdown prunes nothing, and its bounded
+        # collect is an extra action per probe — run the whole probe as
+        # ONE action instead. Results are identical either way (pinned
+        # by test_candidate_pushdown_prunes_the_shingle_scan).
         candidate_pushdown = False
     if candidate_pushdown:
-        # materialize the candidate pairs ONCE (they're what the verify
-        # stage exists to score — tiny by LSH design; localCheckpoint
-        # truncates lineage so the bands join never re-runs), then pull
-        # the BOUNDED pair set to the driver in one cheap take over the
-        # checkpointed partitions. Under the cap the candidates become a
-        # LOCAL relation — the verify join plans against ~KBs of local
-        # rows instead of re-reading the checkpoint, and the distinct
-        # corpus-id set (derived in-driver, no extra distinct job)
+        # ONE bounded collect of the candidate pairs (what the verify
+        # stage exists to score — tiny by LSH design). Under the cap
+        # they return as a LOCAL relation, and their corpus-id set
         # pushes into the shingles scan, where the range-sorted layout
         # turns it into row-group/file pruning.
-        cand = cand.localCheckpoint(eager=True)
         rows = cand.limit(max_pushdown_ids + 1).collect()
         if len(rows) <= max_pushdown_ids:
-            cand = spark.createDataFrame(rows, cand.schema)
-            ids = list({r[0] for r in rows})
-            sh_scan = sh_scan.where(F.col("id").isin(ids))
-        # else: adversarial candidate blow-up — keep the checkpointed
-        # streaming join (driver state stays bounded by the cap)
+            cand_t = cand.schema
+            local = _local_rows(spark, rows, cand_t) if rows else cand.limit(0)
+            sh_scan = sh_scan.where(_isin_lit(
+                "id", {r[0] for r in rows}, cand_t["corpus_id"].dataType))
+            return (
+                sh_scan.select(F.col("id").alias("corpus_id"),
+                               F.col("shh").alias("shh_old"))
+                .join(F.broadcast(local), "corpus_id")
+                .join(F.broadcast(new_sh) if broadcast_batch else new_sh,
+                      "new_id")
+                .select(*_scored_pairs())
+                .where(F.col("jaccard") >= threshold)
+                # a RETRIED append re-appends its shingle rows: each
+                # yields the same pair again, collapsed here
+                .dropDuplicates(["new_id", "corpus_id"])
+            )
+        # adversarial candidate blow-up: materialize the pairs ONCE
+        # (localCheckpoint truncates lineage so the bands join never
+        # re-runs) and keep the streaming join — driver state stays
+        # bounded by the cap
+        cand = cand.localCheckpoint(eager=True)
     # dropDuplicates: a RETRIED append re-appends its rows — one shingle
     # row per id keeps the verify join from emitting duplicate pairs
     # (band-row duplicates are absorbed by the candidate .distinct());
@@ -780,12 +823,34 @@ def dedup_against_index(
     return (
         cand.join(new_sh, "new_id")
         .join(idx_sh, "corpus_id")
-        .select(
-            "new_id", "corpus_id",
-            jaccard(F.col("shh_new"), F.col("shh_old")).alias("jaccard"),
-        )
+        .select(*_scored_pairs())
         .where(F.col("jaccard") >= threshold)
     )
+
+
+def _scored_pairs() -> tuple:
+    """The probe's output Columns ``(new_id, corpus_id, jaccard)``."""
+    return built_columns("minhash_scored_pairs", lambda: (
+        F.col("new_id"), F.col("corpus_id"),
+        jaccard(F.col("shh_new"), F.col("shh_old")).alias("jaccard"),
+    ))
+
+
+def _local_rows(spark, rows, schema) -> DataFrame:
+    """Collected ``rows`` of ``schema`` back as a JVM-side local relation:
+    one parser-built ``VALUES`` list when every value has a literal form
+    (:func:`similarity._sql_lit`). ``createDataFrame(rows)`` would
+    run a Python-worker stage to unpickle them; it stays the route for
+    other types."""
+    types = [f.dataType for f in schema.fields]
+    tuples = []
+    for r in rows:
+        lits = [_sql_lit(v, t) for v, t in zip(r, types)]
+        if None in lits:
+            return spark.createDataFrame(rows, schema)
+        tuples.append(f"({', '.join(lits)})")
+    names = ", ".join(f"`{f.name}`" for f in schema.fields)
+    return spark.sql(f"SELECT * FROM VALUES {', '.join(tuples)} AS t({names})")
 
 
 # ------------------------------------------------- index compaction
@@ -990,7 +1055,7 @@ def minhash_index_stats(spark, path: str) -> dict:
     sh_rows = sum(md.num_rows for _, _, md in sh_files)
     bd_rows = sum(md.num_rows for _, _, md in bd_files)
     distinct_ids = (
-        spark.read.parquet(sh_dir)
+        _fs.read_parquet(spark, sh_dir)
         .agg(F.count("id").alias("n"),
              F.count_distinct("id").alias("d")).head()
     )
@@ -1048,13 +1113,15 @@ def _compact_minhash_index_unlocked(spark, path: str) -> None:
     vers = m["versions"]
     new_vers = {"shingles": vers.get("shingles", 0) + 1,
                 "bands": vers.get("bands", 0) + 1}
-    spark.read.parquet(_vdir(path, "shingles", vers.get("shingles", 0))) \
-        .dropDuplicates(["id"]) \
+
+    def table(t: str) -> DataFrame:
+        return _fs.read_parquet(spark, _vdir(path, t, vers.get(t, 0)))
+
+    table("shingles").dropDuplicates(["id"]) \
         .repartitionByRange("id").sortWithinPartitions("id") \
         .write.mode("overwrite") \
         .parquet(_vdir(path, "shingles", new_vers["shingles"]))
-    spark.read.parquet(_vdir(path, "bands", vers.get("bands", 0))) \
-        .distinct() \
+    table("bands").distinct() \
         .repartitionByRange("band", "bucket") \
         .sortWithinPartitions("band", "bucket") \
         .write.mode("overwrite") \

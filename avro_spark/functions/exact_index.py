@@ -25,7 +25,7 @@ Probe (:func:`dedup_exact_against_index`) = batch fingerprints →
 ``fingerprint IN (...)`` footer pushdown against the sorted files →
 min index id per fingerprint → one broadcast join back to the batch.
 Driver state is bounded by the BATCH's distinct fingerprints (a
-broadcast-join fallback past ``max_literal_fps``).
+broadcast left-semi join past ``max_literal_fps``).
 
 Indexes written before the flat layout (meta row without ``layout``)
 keep fps as Hive ``bucket=<pmod(xxhash64(fp), n_buckets)>`` dirs.
@@ -38,7 +38,7 @@ Crash discipline and concurrency are the family's shared contract
 (identical to the text/IVF-PQ indexes): ``'__appending__'`` marker
 with a ``pending_token`` first, commit last; a committed-token retry
 no-ops; a different batch against a dead append is refused; probes
-absorb retry-duplicate rows via (fingerprint, id) dropDuplicates;
+absorb retry-duplicate rows in the ``min(id)`` per fingerprint;
 ``compact_exact_index`` finish-the-swap; every mutating op under the
 single-writer lease. Ids keep their NATIVE type. No Python UDFs.
 """
@@ -49,8 +49,10 @@ from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from .. import _fs
+from ..plans.compiled import built_columns
 from ._meta_io import (
     LIFECYCLE,
     _append_batch_registry,
@@ -62,7 +64,16 @@ from ._meta_io import (
     require_committed,
     write_meta,
 )
-from .dedup import _gc_table_versions, _native_id, _vdir, content_fingerprint
+from .dedup import (
+    _PUSHDOWN_MIN_INDEX_BYTES,
+    _ROW_BYTES,
+    _fits_one_file,
+    _gc_table_versions,
+    _native_id,
+    _vdir,
+    content_fingerprint,
+)
+from .similarity import _isin_lit
 
 #: meta ``layout`` of the one fps table this module writes; a meta row
 #: without the column is a pre-flat index (Hive ``bucket=`` dirs)
@@ -88,6 +99,17 @@ def _checked_fp(text_col: str) -> "F.Column":
             "first"
         )),
     ).otherwise(content_fingerprint(c))
+
+
+def _fingerprinted(docs: DataFrame, id_col: str,
+                   text_col: str) -> DataFrame:
+    """``(fingerprint, <id>)`` of ``docs``, both NULL-guarded; the
+    Columns are built once per SparkContext (:func:`built_columns`)."""
+    return docs.select(*built_columns(
+        ("exact_fingerprinted", id_col, text_col),
+        lambda: (_checked_fp(text_col).alias("fingerprint"),
+                 _native_id(id_col).alias(id_col)),
+    ))
 
 
 def _write_exact_meta(
@@ -126,13 +148,19 @@ def _write_fps(fps: DataFrame, fps_dir: str, id_col: str, mode: str,
                n_files: "Optional[int]") -> None:
     """The ONE fps writer: range-partition on fingerprint, sort by
     (fingerprint, id) within each file. ``n_files`` range partitions
-    for a build or rewrite (disjoint fingerprint ranges per file);
-    ``None`` for an append, so AQE coalesces a small batch into one
-    file instead of one tiny file per partition. Partition 0 always
-    writes a file, so an EMPTY frame still pins the schema (incl. the
-    native id type) and later reads never hit UNABLE_TO_INFER_SCHEMA."""
-    part = (fps.repartitionByRange(n_files, "fingerprint") if n_files
-            else fps.repartitionByRange("fingerprint"))
+    for a build or rewrite (disjoint fingerprint ranges per file), and
+    1 for an append that fits one file (one sorted partition, no
+    range-sampling job); ``None`` for a bigger append, so AQE coalesces
+    the batch instead of writing one tiny file per partition.
+    Partition 0 always writes a file, so an EMPTY frame still pins the
+    schema (incl. the native id type) and later reads never hit
+    UNABLE_TO_INFER_SCHEMA."""
+    if n_files == 1:
+        part = fps.coalesce(1)
+    elif n_files:
+        part = fps.repartitionByRange(n_files, "fingerprint")
+    else:
+        part = fps.repartitionByRange("fingerprint")
     part.sortWithinPartitions("fingerprint", id_col) \
         .write.mode(mode).parquet(fps_dir)
 
@@ -146,7 +174,8 @@ def _rewrite_flat(spark, path: str, m: dict,
     reading the current version. Compaction and the first append to a
     pre-flat (bucketed) index both go through here."""
     id_col = m["id_col"]
-    rows = spark.read.parquet(_fps_dir(path, m)).select("fingerprint", id_col)
+    rows = _fs.read_parquet(spark, _fps_dir(path, m)).select(
+        "fingerprint", id_col)
     if batch is not None:
         rows = rows.unionByName(batch)
     new_v = m["versions"].get("fps", 0) + 1
@@ -203,10 +232,7 @@ def _write_exact_index_unlocked(
     # ONE fingerprint pass feeds both the write and the doc count
     # (persist, as the text index's tokenize pass does — without it the
     # count re-reads the whole source)
-    fps = docs.select(
-        _checked_fp(text_col).alias("fingerprint"),
-        _native_id(id_col).alias(id_col),
-    ).persist()
+    fps = _fingerprinted(docs, id_col, text_col).persist()
     migrated = mode == "append" and m["layout"] != _FLAT
     try:
         # count FIRST: it materializes the cache as a PRE-WRITE
@@ -224,8 +250,9 @@ def _write_exact_index_unlocked(
         elif mode == "overwrite":
             _write_fps(fps, _vdir(path, "fps", 0), id_col, mode, n_buckets)
         elif n_batch:
+            one = _fits_one_file(spark, n_batch * _ROW_BYTES)
             _write_fps(fps, _vdir(path, "fps", versions.get("fps", 0)),
-                       id_col, mode, None)
+                       id_col, mode, 1 if one else None)
     finally:
         fps.unpersist()
     _write_exact_meta(spark, path, n_buckets, id_col, "committed",
@@ -294,14 +321,9 @@ def dedup_exact_against_index(
             f"probe id_col={id_col!r} does not match the index's "
             f"pinned id column {m['id_col']!r}"
         )
-    bf = batch.select(
-        _native_id(id_col).alias(id_col),
-        _checked_fp(text_col).alias("fingerprint"),
-    )
+    bf = _fingerprinted(batch, id_col, text_col)
     # a pre-flat index carries a 'bucket' partition column: ignored
-    idx = spark.read.parquet(_fps_dir(path, m))
-    from .dedup import _PUSHDOWN_MIN_INDEX_BYTES
-
+    idx = _fs.read_parquet(spark, _fps_dir(path, m))
     if pushdown_min_index_bytes is None:
         pushdown_min_index_bytes = _PUSHDOWN_MIN_INDEX_BYTES
     fplist = None
@@ -317,18 +339,13 @@ def dedup_exact_against_index(
         if len(got) <= cap:
             fplist = [r["fingerprint"] for r in got]
     if fplist is None:
-        idx = idx.join(
-            F.broadcast(bf.select("fingerprint").distinct()), "fingerprint")
-    elif fplist:
-        idx = idx.where(F.col("fingerprint").isin(fplist))
+        idx = idx.join(F.broadcast(bf.select("fingerprint")), "fingerprint",
+                       "left_semi")
     else:
-        idx = idx.limit(0)
-    hits = (
-        idx.select("fingerprint", F.col(id_col).alias("_idx_id"))
-        .dropDuplicates(["fingerprint", "_idx_id"])  # retry residue
-        .groupBy("fingerprint")
-        .agg(F.min("_idx_id").alias("dup_of"))
-    )
+        idx = idx.where(_isin_lit("fingerprint", fplist, StringType()))
+    # the min absorbs retry residue: a re-appended (fingerprint, id)
+    # row changes no minimum
+    hits = idx.groupBy("fingerprint").agg(F.min(id_col).alias("dup_of"))
     return (
         bf.join(F.broadcast(hits), "fingerprint", "left")
         .select(
@@ -386,7 +403,7 @@ def exact_index_stats(spark, path: str) -> dict:
     files = _fs.parquet_footers(fps_dir, recursive=True)
     rows = sum(md.num_rows for _, _, md in files)
     size = sum(s for _, s, _ in files)
-    df = spark.read.parquet(fps_dir)
+    df = _fs.read_parquet(spark, fps_dir)
     dup = df.count() - df.dropDuplicates(
         ["fingerprint", m["id_col"]]).count()
     return {

@@ -59,6 +59,7 @@ from .similarity import (
     _argmax_centroid,
     _compact_tables,
     _dir_of_position,
+    _isin_lit,
     _ivf_candidates,
     _ivf_meta,
     _ivf_meta_fields,
@@ -392,7 +393,8 @@ def knn_ivfpq_indexed(
         ]
         if len(ids) <= max_pushdown_ids:
             # footer-level pruning against the range-sorted sidecar layout
-            raw = raw.where(F.col(id_col).isin(ids))
+            raw = raw.where(_isin_lit(
+                id_col, ids, raw.schema[id_col].dataType))
     raw = raw.select(id_col, "_nv", "_v").dropDuplicates([id_col])
     qn = probe_sets.select(query_id_col, "_qv", "_nq")
     denom2 = F.col("_nv") * F.col("_nq")

@@ -1,7 +1,10 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
+import types
+import uuid
 
 import pytest
 
@@ -43,3 +46,31 @@ def py4j_round_trips():
     from tools.py4j_round_trips import round_trips
 
     return round_trips
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """Counts the Spark jobs a block starts: ``with spark_jobs() as
+    jobs: ...``, then read ``jobs.n``. The block runs under its own job
+    group; on exit the listener bus is drained, so every job the block
+    submitted is known to the status tracker, and the caller's job
+    group and description are restored."""
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description",
+            "spark.job.interruptOnCancel")
+
+    @contextlib.contextmanager
+    def count():
+        saved = {k: sc.getLocalProperty(k) for k in keys}
+        group = f"spark_jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "counted block")
+        counter = types.SimpleNamespace(n=0)
+        try:
+            yield counter
+        finally:
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            counter.n = len(sc.statusTracker().getJobIdsForGroup(group))
+            for k, v in saved.items():
+                sc.setLocalProperty(k, v)
+
+    return count

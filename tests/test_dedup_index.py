@@ -6,6 +6,8 @@ without ever re-signaturing the corpus.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -325,6 +327,134 @@ def test_candidate_pushdown_prunes_the_shingle_scan(spark, tmp_path):
                                    max_pushdown_ids=1,
                                    pushdown_min_index_bytes=0)
     assert _probe_set(capped) == _probe_set(pushed)
+
+
+def _odd_ids(df):
+    """String ids holding a quote, a backslash and non-ASCII characters;
+    ids from 6 up stay plain, so both literal spellings are built."""
+    return df.select(
+        F.when(F.col("doc_id") >= 6,
+               F.concat(F.lit("plain-"), F.col("doc_id")))
+        .otherwise(F.concat(F.lit("o'b\\ï☃-"), F.col("doc_id")))
+        .alias("doc_id"),
+        "text",
+    )
+
+
+def test_escaped_string_ids_push_down(spark, tmp_path):
+    """Candidate ids with ``'``, ``\\`` and non-ASCII characters reach the
+    shingles scan as one parser-built ``IN`` list and come back as a
+    local relation: the pushed-down probe gives the streamed probe's
+    pairs, and ``In(id`` stays in PushedFilters."""
+    corpus, batch = (_odd_ids(d) for d in _docs(spark))
+    idx = str(tmp_path / "odd")
+    D.write_minhash_index(corpus, idx, "doc_id", "text",
+                          num_hashes=16, bands=4)
+    pushed = D.dedup_against_index(spark, batch, idx, "doc_id", "text",
+                                   pushdown_min_index_bytes=0)
+    plan = pushed._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"PushedFilters: \[[^\]]*In\(id", plan), plan[:2000]
+    streamed = D.dedup_against_index(spark, batch, idx, "doc_id", "text",
+                                     candidate_pushdown=False)
+    got = _probe_set(pushed)
+    assert got == _probe_set(streamed)
+    corpus_ids = {c for _, c, _ in got}
+    assert corpus_ids == {"o'b\\ï☃-0", "plain-8"}, got
+    assert dict(pushed.dtypes) == dict(streamed.dtypes)
+
+
+def test_sql_literals_parse_to_their_values(spark):
+    """Each id literal the probes build parses back to its value and
+    type, at the ends of every integral range too."""
+    from pyspark.sql import types as T
+
+    from avro_spark.functions.similarity import _sql_lit
+
+    cases = [(T.LongType(), -(1 << 63)), (T.LongType(), (1 << 63) - 1),
+             (T.IntegerType(), -(1 << 31)), (T.ShortType(), -(1 << 15)),
+             (T.ByteType(), -128), (T.StringType(), "o'b\\ï☃"),
+             (T.StringType(), "\\'"), (T.StringType(), "plain")]
+    sql = ", ".join(_sql_lit(v, t) for t, v in cases)
+    row = spark.sql(f"SELECT {sql}").head()
+    assert list(row) == [v for _, v in cases]
+    assert [f.dataType for f in spark.sql(f"SELECT {sql}").schema] == [
+        t for t, _ in cases]
+    assert _sql_lit(1.5, T.DoubleType()) is None
+    assert _sql_lit(None, T.LongType()) is None
+
+
+def test_pushed_probe_collapses_retry_duplicates(spark, tmp_path):
+    """A retried append leaves duplicate shingle rows; the pushed-down
+    probe collapses the pairs they repeat at its output."""
+    corpus, batch = _docs(spark)
+    kw = dict(num_hashes=16, bands=4, shingle_n=3)
+    idx = str(tmp_path / "retry_pushed")
+    D.write_minhash_index(corpus.where("doc_id <= 4"), idx,
+                          "doc_id", "text", **kw)
+    c2 = corpus.where("doc_id > 4")
+    D.write_minhash_index(c2, idx, "doc_id", "text", mode="append", **kw)
+    D.write_minhash_index(c2, idx, "doc_id", "text", mode="append", **kw)
+    rows = D.dedup_against_index(spark, batch, idx, "doc_id", "text",
+                                 pushdown_min_index_bytes=0).collect()
+    keys = [(r["new_id"], r["corpus_id"]) for r in rows]
+    assert len(keys) == len(set(keys)) and (7, 8) in keys
+
+
+def test_probe_plans_start_no_job(spark, tmp_path, spark_jobs):
+    """Building a MinHash or exact probe plan starts no Spark job
+    before its action: the index tables take their schema from a
+    parquet footer, with no inference job."""
+    from avro_spark.functions import exact_index as X
+
+    corpus, batch = _docs(spark)
+    idx, xidx = str(tmp_path / "mh"), str(tmp_path / "ex")
+    D.write_minhash_index(corpus, idx, "doc_id", "text",
+                          num_hashes=16, bands=4)
+    X.write_exact_index(corpus, xidx, n_buckets=4)
+    with spark_jobs() as jobs:
+        pairs = D.dedup_against_index(spark, batch, idx, "doc_id", "text")
+        dec = X.dedup_exact_against_index(spark, batch, xidx)
+    assert jobs.n == 0
+    assert _probe_set(pairs) == _probe_set(D.dedup_against_index(
+        spark, batch, idx, "doc_id", "text", candidate_pushdown=False))
+    assert {r.doc_id: r.dup_of for r in dec.collect()} == {
+        1: 0, 3: None, 5: None, 7: None}
+
+
+def test_pushed_probe_round_trips_do_not_grow_with_candidates(
+        spark, tmp_path, py4j_round_trips):
+    """One pushed-down probe, plan plus collect, makes as many py4j
+    round trips at 10 candidates as at 100: each id list is one
+    parser-built literal."""
+    def family(k, n):
+        head = " ".join(f"{k}{i}" for i in range(40))
+        return [f"{head} tail{i}" for i in range(n)], f"{head} fresh"
+
+    a_docs, a_new = family("a", 10)
+    b_docs, b_new = family("b", 100)
+    corpus = spark.createDataFrame(list(enumerate(a_docs + b_docs)),
+                                   "doc_id long, text string")
+    idx = str(tmp_path / "rt")
+    D.write_minhash_index(corpus, idx, "doc_id", "text",
+                          num_hashes=16, bands=4)
+
+    def probe(text):
+        b = spark.createDataFrame([(1000, text)], "doc_id long, text string")
+
+        def run():
+            return D.dedup_against_index(
+                spark, b, idx, "doc_id", "text",
+                pushdown_min_index_bytes=0).collect()
+
+        run()
+        with py4j_round_trips() as rt:
+            got = run()
+        return rt.n, got
+
+    n10, got10 = probe(a_new)
+    n100, got100 = probe(b_new)
+    assert (len(got10), len(got100)) == (10, 100)
+    assert n10 == n100 <= 450, (n10, n100)
 
 
 def test_index_layout_is_range_sorted(spark, tmp_path):

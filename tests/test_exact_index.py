@@ -136,6 +136,38 @@ def test_pushdown_and_fallback(spark, tmp_path):
     assert _decisions(adaptive) == _decisions(probed)
 
 
+def _odd_ids(df):
+    """String ids holding a quote, a backslash and non-ASCII
+    characters."""
+    return df.select(
+        F.concat(F.lit("o'b\\ï☃-"), F.col("doc_id")).alias("doc_id"),
+        "text")
+
+
+def test_escaped_string_ids_on_the_pruned_route(spark, tmp_path):
+    """With ids holding ``'``, ``\\`` and non-ASCII characters, the
+    pruned probe (fingerprints pushed as one parser-built ``IN`` list)
+    and the broadcast route give the same decisions, and
+    ``In(fingerprint`` stays in PushedFilters."""
+    docs, batch = _odd_ids(_docs(spark)), _odd_ids(_mutated(spark))
+    idx = str(tmp_path / "odd")
+    X.write_exact_index(docs, idx, n_buckets=8)
+    pruned = X.dedup_exact_against_index(spark, batch, idx,
+                                         pushdown_min_index_bytes=0)
+    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"PushedFilters: \[[^\]]*In\(fingerprint", plan), \
+        plan[:2000]
+    bcast = X.dedup_exact_against_index(spark, batch, idx,
+                                        max_pushdown_fps=1,
+                                        pushdown_min_index_bytes=0)
+    assert "In(fingerprint" not in (
+        bcast._jdf.queryExecution().executedPlan().toString())
+    got = _decisions(pruned)
+    assert got == _decisions(bcast)
+    assert got["o'b\\ï☃-10000"][0] == "o'b\\ï☃-0"
+    assert sum(keep for _, keep in got.values()) == 40
+
+
 def test_string_ids_and_empty_index(spark, tmp_path):
     docs = _docs(spark).select(
         F.concat(F.lit("d-"), F.col("doc_id")).alias("doc_id"), "text")
@@ -507,3 +539,49 @@ def test_null_id_and_null_text_raise_loudly(spark, tmp_path):
                            match=msg):
             X.write_exact_index(bad, str(tmp_path / "nulls2"),
                                 n_buckets=8)
+
+
+@pytest.mark.parametrize("id_type", ["bigint", "int", "string"])
+def test_footer_schema_equals_inferred(spark, tmp_path, spark_jobs, id_type):
+    """Each index table's schema, read from one parquet footer, equals
+    the schema Spark infers (types and nullability), and reading the
+    table with it starts no job."""
+    from avro_spark import _fs
+
+    docs = _docs(spark).limit(50).select(
+        F.col("doc_id").cast(id_type).alias("doc_id"), "text")
+    ex, mh = str(tmp_path / "ex"), str(tmp_path / "mh")
+    X.write_exact_index(docs, ex, n_buckets=2)
+    D.write_minhash_index(docs, mh, "doc_id", "text", num_hashes=16,
+                          bands=4)
+    for d in (f"{ex}/fps", f"{mh}/shingles", f"{mh}/bands"):
+        assert _fs.footer_schema(d) is not None, d
+        with spark_jobs() as jobs:
+            got = _fs.read_parquet(spark, d).schema
+        assert jobs.n == 0, d
+        assert got == spark.read.parquet(d).schema, d
+    assert dict((f.name, f.dataType.simpleString())
+                for f in _fs.footer_schema(f"{ex}/fps"))["doc_id"] \
+        == ("int" if id_type == "int" else id_type)
+
+
+def test_bucketed_and_non_local_tables_infer_their_schema(
+        spark, tmp_path, monkeypatch, spark_jobs):
+    """A pre-flat bucketed fps table (partition directories) and a
+    non-local URI have no footer schema: their reads keep Spark's
+    inference, which runs a job."""
+    from avro_spark import _fs
+
+    docs = _docs(spark).limit(50)
+    old, flat = str(tmp_path / "old"), str(tmp_path / "flat")
+    _write_bucketed_index(spark, docs, old, 4)
+    X.write_exact_index(docs, flat, n_buckets=2)
+    assert _fs.footer_schema(f"{old}/fps") is None
+    with spark_jobs() as jobs:
+        got = _fs.read_parquet(spark, f"{old}/fps")
+    assert jobs.n >= 1 and "bucket" in got.columns
+    monkeypatch.setattr(_fs, "local_path", lambda uri: None)
+    assert _fs.footer_schema(f"{flat}/fps") is None
+    with spark_jobs() as jobs:
+        got = _fs.read_parquet(spark, f"{flat}/fps")
+    assert jobs.n >= 1 and got.count() == 50

@@ -319,7 +319,8 @@ def test_percent_signs_name_files_literally(spark, tmp_path):
         assert route["engine"] == "jvm"
 
 
-def test_non_local_root_plans_with_no_job(spark, tmp_path, monkeypatch):
+def test_non_local_root_plans_with_no_job(spark, tmp_path, monkeypatch,
+                                         spark_jobs):
     """A root that is not local plans like a local one: its listing is
     the scan's own file index, so with ``verify_schemas=False`` no Spark
     job starts before the action, and the read is right."""
@@ -327,14 +328,7 @@ def test_non_local_root_plans_with_no_job(spark, tmp_path, monkeypatch):
     d = str(tmp_path / "d")
     write_avro_files(spark.range(6).selectExpr("id AS a").repartition(3), s, d)
     monkeypatch.setattr(_fs, "local_path", lambda uri: None)
-    sc = spark.sparkContext
-    group = "avro_spark_non_local_plan"
-    sc.setJobGroup(group, "non-local read plan")
-    try:
+    with spark_jobs() as jobs:
         got = read_avro_files_evolved(spark, d, s, verify_schemas=False)
-        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-        rows = got.collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert sorted(r.a for r in rows) == list(range(6))
+    assert jobs.n == 0
+    assert sorted(r.a for r in got.collect()) == list(range(6))

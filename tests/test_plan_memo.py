@@ -178,23 +178,17 @@ def _evolved_ingest(spark, path):
     return plan.flatten(read_avro_files_evolved(spark, path, v2))
 
 
-def test_warm_evolved_read_plan_is_cheap(spark, v1_dir, py4j_round_trips):
+def test_warm_evolved_read_plan_is_cheap(spark, v1_dir, py4j_round_trips,
+                                        spark_jobs):
     """A warm evolved read plus flatten starts no Spark job before the
     action and makes at most 60 py4j round trips."""
     _evolved_ingest(spark, v1_dir)
-    sc = spark.sparkContext
-    group = "avro_spark_warm_read_plan"
-    sc.setJobGroup(group, "warm read plan")
-    try:
+    with spark_jobs() as jobs:
         with py4j_round_trips() as rt:
             flat = _evolved_ingest(spark, v1_dir)
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-        assert rt.n <= 60, rt.n
-        assert list(jobs) == []
-        rows = flat.collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    assert rt.n <= 60, rt.n
+    assert jobs.n == 0
+    rows = flat.collect()
     assert len(rows) == 400
     assert sorted(r["total"] for r in rows)[:2] == [0.0, 0.5]
     assert {r["source"] for r in rows} == {"legacy"}
