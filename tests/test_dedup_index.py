@@ -383,23 +383,6 @@ def test_sql_literals_parse_to_their_values(spark):
     assert _sql_lit(None, T.LongType()) is None
 
 
-def test_pushed_probe_collapses_retry_duplicates(spark, tmp_path):
-    """A retried append leaves duplicate shingle rows; the pushed-down
-    probe collapses the pairs they repeat at its output."""
-    corpus, batch = _docs(spark)
-    kw = dict(num_hashes=16, bands=4, shingle_n=3)
-    idx = str(tmp_path / "retry_pushed")
-    D.write_minhash_index(corpus.where("doc_id <= 4"), idx,
-                          "doc_id", "text", **kw)
-    c2 = corpus.where("doc_id > 4")
-    D.write_minhash_index(c2, idx, "doc_id", "text", mode="append", **kw)
-    D.write_minhash_index(c2, idx, "doc_id", "text", mode="append", **kw)
-    rows = D.dedup_against_index(spark, batch, idx, "doc_id", "text",
-                                 pushdown_min_index_bytes=0).collect()
-    keys = [(r["new_id"], r["corpus_id"]) for r in rows]
-    assert len(keys) == len(set(keys)) and (7, 8) in keys
-
-
 def test_probe_plans_start_no_job(spark, tmp_path, spark_jobs):
     """Building a MinHash or exact probe plan starts no Spark job
     before its action: the index tables take their schema from a
@@ -506,6 +489,12 @@ def test_retried_append_does_not_duplicate_pairs(spark, tmp_path):
     D.write_minhash_index(corpus, clean, "doc_id", "text", **kw)
     assert _probe_set(got) == _probe_set(
         D.dedup_against_index(spark, batch, clean, "doc_id", "text"))
+    # the pushed-down route collapses the repeated pairs at its output
+    pushed = D.dedup_against_index(spark, batch, idx, "doc_id", "text",
+                                   pushdown_min_index_bytes=0).collect()
+    keys = [(r["new_id"], r["corpus_id"]) for r in pushed]
+    assert sorted(keys) == sorted((r["new_id"], r["corpus_id"])
+                                  for r in rows)
 
 
 def test_stream_dedup_exactly_once(spark, tmp_path):
