@@ -434,9 +434,8 @@ def _write_minhash_index_unlocked(
     silent-zero-recall class the ``__building__`` rebuild marker
     closes). Recovery is RE-RUNNING THE SAME APPEND to completion — the
     probe absorbs the duplicate rows a retry leaves (band duplicates via
-    candidate distinct, shingle duplicates via a per-id dropDuplicates
-    or, on the pushed-down route, a pair dedupe at the output), so a
-    completed retry restores exactness.
+    candidate distinct, shingle duplicates via a (new_id, corpus_id)
+    dedupe at the output), so a completed retry restores exactness.
 
     ``append_token`` strengthens the retry story to EXACTLY-ONCE across
     callers that re-run whole batches (the streaming sink's shape): the
@@ -540,15 +539,16 @@ def _write_minhash_index_unlocked(
         # preceded the append — no extra job needed (a replayed batch
         # that skipped the probe merely recomputes cache partitions
         # concurrently once; results are unaffected).
-        one_file = False
+        n_files = None
         if own_hdocs:
             n_docs, n_hashes = hdocs.selectExpr(
                 "count(1)", "sum(size(_hh))").first()
             # an append that fits one advisory partition (a daily batch)
             # writes each table as one sorted file, with no range sampling
-            one_file = mode == "append" and _fits_one_file(
+            if mode == "append" and _fits_one_file(
                 spark, n_docs * (bands + 1) * _ROW_BYTES
-                + (n_hashes or 0) * 8)
+                + (n_hashes or 0) * 8):
+                n_files = 1
 
         # DATA-SKIPPING LAYOUT: range-partition + sort each table by its
         # probe key so every parquet file/row-group covers a tight key
@@ -561,14 +561,14 @@ def _write_minhash_index_unlocked(
         def _write_shingles() -> None:
             _sorted_parts(hdocs.selectExpr(
                 "_id AS id", "array_sort(array_distinct(_hh)) AS shh",
-            ), one_file, "id").write.mode(mode) \
+            ), n_files, ("id",)).write.mode(mode) \
                 .parquet(_vdir(path, "shingles", versions.get("shingles", 0)))
 
         def _write_bands() -> None:
             _sorted_parts(_band_rows_from_hashes(
                 _explode_mod(hdocs), num_hashes, bands, seed
             ).selectExpr("band", "bucket", "_id AS id"),
-                one_file, "band", "bucket").write.mode(mode) \
+                n_files, ("band", "bucket")).write.mode(mode) \
                 .parquet(_vdir(path, "bands", versions.get("bands", 0)))
 
         from concurrent.futures import ThreadPoolExecutor
@@ -599,28 +599,36 @@ def _write_minhash_index_unlocked(
             _gc_table_versions(path, t, 0)
 
 
-#: upper bound on the shuffle bytes of one index row besides its
-#: hashed-shingle array (an append's one-file estimate)
-_ROW_BYTES = 64
+#: estimated shuffle bytes of one index row besides its hashed-shingle
+#: array (an append's one-file estimate). Measured lz4 shuffle bytes per
+#: row (local[2], 4,000 docs of 400 tokens): long ids 29-38 B, 36-char
+#: UUID string ids 45-73 B across the fps, band and shingle tables;
+#: longer string ids can exceed it
+_ROW_BYTES = 96
 
 
 def _fits_one_file(spark, n_bytes: int) -> bool:
     """True when ``n_bytes`` of shuffle data fit AQE's advisory
     partition size, i.e. one partition, so one file."""
-    import re
-
     size = spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-    got = re.fullmatch(r"\s*(\d+)\s*([kmgtp]?)b?\s*", size.lower())
-    return got is not None and n_bytes <= int(got.group(1)) << (
-        10 * " kmgtp".index(got.group(2) or " "))
+    return n_bytes <= spark._jvm.org.apache.spark.network.util \
+        .JavaUtils.byteStringAsBytes(size)
 
 
-def _sorted_parts(df: DataFrame, one_file: bool, *keys: str) -> DataFrame:
-    """``df`` range-partitioned and sorted by ``keys`` within each
-    partition — or, ``one_file``, as one sorted partition, which needs
-    no range-sampling job."""
-    part = df.coalesce(1) if one_file else df.repartitionByRange(*keys)
-    return part.sortWithinPartitions(*keys)
+def _sorted_parts(df: DataFrame, n_files: "int | None", keys: tuple,
+                  then: tuple = ()) -> DataFrame:
+    """The ONE index-table write layout: ``df`` range-partitioned on
+    ``keys`` and sorted by ``keys`` + ``then`` within each partition.
+    ``n_files`` partitions for a build or rewrite; ``None`` lets AQE
+    coalesce them; 1 is one sorted partition, which needs no
+    range-sampling job."""
+    if n_files == 1:
+        part = df.coalesce(1)
+    elif n_files:
+        part = df.repartitionByRange(n_files, *keys)
+    else:
+        part = df.repartitionByRange(*keys)
+    return part.sortWithinPartitions(*keys, *then)
 
 
 def _hashed_docs(
@@ -730,16 +738,16 @@ def dedup_against_index(
     the row-group/file footer level, so probe IO on the (near
     corpus-sized) shingle store scales with |candidates|, not |index|.
     The verify join then streams the pruned shingle rows past the
-    broadcast candidates and batch shingle sets, and the duplicate
-    pairs a retried append's shingle rows leave collapse at the
-    output. More than ``max_pushdown_ids`` distinct candidates falls
-    back to the streaming join over the candidate pairs, materialized
-    once (localCheckpoint) — driver state stays bounded, and a Catalyst
+    broadcast candidates and batch shingle sets. More than
+    ``max_pushdown_ids`` distinct candidates falls back to the
+    streaming join over the candidate pairs, materialized once
+    (localCheckpoint) — driver state stays bounded, and a Catalyst
     ``In`` with tens of thousands of literals bloats the plan and slows
     optimization well before it helps IO, so the default stays at a few
-    thousand. Jaccard is
-    computed over FULL-WIDTH hashed shingle sets (equal to gram Jaccard
-    up to ~2^-60 collisions per pair)."""
+    thousand. On every route the duplicate pairs a retried append's
+    shingle rows leave collapse at the output. Jaccard is computed over
+    FULL-WIDTH hashed shingle sets (equal to gram Jaccard up to ~2^-60
+    collisions per pair)."""
     m = _read_index_meta(spark, path)
     # a half-applied append would silently under-recall its docs
     require_committed(m, path, "probe")
@@ -792,39 +800,31 @@ def dedup_against_index(
         rows = cand.limit(max_pushdown_ids + 1).collect()
         if len(rows) <= max_pushdown_ids:
             cand_t = cand.schema
-            local = _local_rows(spark, rows, cand_t) if rows else cand.limit(0)
+            cand = F.broadcast(
+                _local_rows(spark, rows, cand_t) if rows else cand.limit(0))
+            if broadcast_batch:
+                new_sh = F.broadcast(new_sh)
             sh_scan = sh_scan.where(_isin_lit(
                 "id", {r[0] for r in rows}, cand_t["corpus_id"].dataType))
-            return (
-                sh_scan.select(F.col("id").alias("corpus_id"),
-                               F.col("shh").alias("shh_old"))
-                .join(F.broadcast(local), "corpus_id")
-                .join(F.broadcast(new_sh) if broadcast_batch else new_sh,
-                      "new_id")
-                .select(*_scored_pairs())
-                .where(F.col("jaccard") >= threshold)
-                # a RETRIED append re-appends its shingle rows: each
-                # yields the same pair again, collapsed here
-                .dropDuplicates(["new_id", "corpus_id"])
-            )
-        # adversarial candidate blow-up: materialize the pairs ONCE
-        # (localCheckpoint truncates lineage so the bands join never
-        # re-runs) and keep the streaming join — driver state stays
-        # bounded by the cap
-        cand = cand.localCheckpoint(eager=True)
-    # dropDuplicates: a RETRIED append re-appends its rows — one shingle
-    # row per id keeps the verify join from emitting duplicate pairs
-    # (band-row duplicates are absorbed by the candidate .distinct());
-    # the documented crash recovery is "re-run the same append to
-    # completion", after which the probe is exact again
-    idx_sh = sh_scan.select(
-        F.col("id").alias("corpus_id"), F.col("shh").alias("shh_old")
-    ).dropDuplicates(["corpus_id"])
+        else:
+            # adversarial candidate blow-up: materialize the pairs ONCE
+            # (localCheckpoint truncates lineage so the bands join never
+            # re-runs) and keep the streaming join — driver state stays
+            # bounded by the cap
+            cand = cand.localCheckpoint(eager=True)
     return (
-        cand.join(new_sh, "new_id")
-        .join(idx_sh, "corpus_id")
+        sh_scan.select(F.col("id").alias("corpus_id"),
+                       F.col("shh").alias("shh_old"))
+        .join(cand, "corpus_id")
+        .join(new_sh, "new_id")
         .select(*_scored_pairs())
         .where(F.col("jaccard") >= threshold)
+        # a RETRIED append re-appends its rows: band-row duplicates are
+        # absorbed by the candidate .distinct(), and each duplicate
+        # shingle row yields the same pair again, collapsed here — the
+        # documented crash recovery is "re-run the same append to
+        # completion", after which the probe is exact again
+        .dropDuplicates(["new_id", "corpus_id"])
     )
 
 
@@ -1117,13 +1117,10 @@ def _compact_minhash_index_unlocked(spark, path: str) -> None:
     def table(t: str) -> DataFrame:
         return _fs.read_parquet(spark, _vdir(path, t, vers.get(t, 0)))
 
-    table("shingles").dropDuplicates(["id"]) \
-        .repartitionByRange("id").sortWithinPartitions("id") \
+    _sorted_parts(table("shingles").dropDuplicates(["id"]), None, ("id",)) \
         .write.mode("overwrite") \
         .parquet(_vdir(path, "shingles", new_vers["shingles"]))
-    table("bands").distinct() \
-        .repartitionByRange("band", "bucket") \
-        .sortWithinPartitions("band", "bucket") \
+    _sorted_parts(table("bands").distinct(), None, ("band", "bucket")) \
         .write.mode("overwrite") \
         .parquet(_vdir(path, "bands", new_vers["bands"]))
     # THE commit: one meta overwrite flips both pointers. token

@@ -70,6 +70,7 @@ from .dedup import (
     _fits_one_file,
     _gc_table_versions,
     _native_id,
+    _sorted_parts,
     _vdir,
     content_fingerprint,
 )
@@ -147,21 +148,14 @@ def _fps_dir(path: str, m: dict) -> str:
 def _write_fps(fps: DataFrame, fps_dir: str, id_col: str, mode: str,
                n_files: "Optional[int]") -> None:
     """The ONE fps writer: range-partition on fingerprint, sort by
-    (fingerprint, id) within each file. ``n_files`` range partitions
-    for a build or rewrite (disjoint fingerprint ranges per file), and
-    1 for an append that fits one file (one sorted partition, no
-    range-sampling job); ``None`` for a bigger append, so AQE coalesces
-    the batch instead of writing one tiny file per partition.
-    Partition 0 always writes a file, so an EMPTY frame still pins the
-    schema (incl. the native id type) and later reads never hit
-    UNABLE_TO_INFER_SCHEMA."""
-    if n_files == 1:
-        part = fps.coalesce(1)
-    elif n_files:
-        part = fps.repartitionByRange(n_files, "fingerprint")
-    else:
-        part = fps.repartitionByRange("fingerprint")
-    part.sortWithinPartitions("fingerprint", id_col) \
+    (fingerprint, id) within each file (:func:`dedup._sorted_parts`).
+    ``n_files`` range partitions for a build or rewrite (disjoint
+    fingerprint ranges per file), and 1 for an append that fits one
+    file; ``None`` for a bigger append, so AQE coalesces the batch
+    instead of writing one tiny file per partition. Partition 0 always
+    writes a file, so an EMPTY frame still pins the schema (incl. the
+    native id type) and later reads never hit UNABLE_TO_INFER_SCHEMA."""
+    _sorted_parts(fps, n_files, ("fingerprint",), (id_col,)) \
         .write.mode(mode).parquet(fps_dir)
 
 

@@ -156,10 +156,12 @@ _INT_SUFFIX = {"tinyint": "Y", "smallint": "S", "int": "", "bigint": "L"}
 
 def _sql_lit(v, dtype) -> "str | None":
     """``v`` as SQL literal text of Spark type ``dtype`` (integral or
-    string); None for a null or any other type. A string holding ``'``
-    or ``\\`` is spelled as its UTF-8 bytes (``CAST(X'..' AS STRING)``,
-    folded to a literal by the optimizer), so its text does not depend
-    on ``spark.sql.parser.escapedStringLiterals``."""
+    string); None for a null or any other type. A string holding ``'``,
+    ``\\`` or ``$`` is spelled as its UTF-8 bytes (``CAST(X'..' AS
+    STRING)``, folded to a literal by the optimizer): hex digits read the
+    same under ``spark.sql.parser.escapedStringLiterals`` and give the
+    parser's variable substitution (``${env:...}``, ``${spark...}``, on
+    by default) nothing to rewrite."""
     if v is None:
         return None
     t = dtype.simpleString()
@@ -167,7 +169,7 @@ def _sql_lit(v, dtype) -> "str | None":
         return f"{int(v)}{_INT_SUFFIX[t]}"
     if t != "string":
         return None
-    if "'" in v or "\\" in v:
+    if "'" in v or "\\" in v or "$" in v:
         return f"CAST(X'{v.encode('utf-8').hex()}' AS STRING)"
     return f"'{v}'"
 
@@ -176,12 +178,14 @@ def _isin_lit(col: str, values, dtype) -> Column:
     """``col IN (v, ...)`` for the id lists the index probes push into
     their parquet scans, built by the parser in one py4j call (``isin``
     makes one per value; ``In`` lands in PushedFilters either way).
-    Types outside integral and string keep ``isin``."""
+    Types outside integral and string, and a column name the parser's
+    variable substitution could rewrite (one holding ``$``), keep
+    ``isin``."""
     vals = [v for v in values if v is not None]
     if not vals:
         return F.lit(False)
     lits = [_sql_lit(v, dtype) for v in vals]
-    if lits[0] is None:
+    if lits[0] is None or "$" in col:
         return F.col(col).isin(vals)
     name = col.replace("`", "``")
     return F.expr(f"`{name}` IN ({', '.join(lits)})")

@@ -330,22 +330,25 @@ def test_candidate_pushdown_prunes_the_shingle_scan(spark, tmp_path):
 
 
 def _odd_ids(df):
-    """String ids holding a quote, a backslash and non-ASCII characters;
-    ids from 6 up stay plain, so both literal spellings are built."""
+    """String ids holding a quote, a backslash and non-ASCII characters
+    (0 and 1), or a ``${env:PATH}`` the SQL parser would substitute (7
+    and 8); the rest stay plain, so both literal spellings are built."""
     return df.select(
-        F.when(F.col("doc_id") >= 6,
-               F.concat(F.lit("plain-"), F.col("doc_id")))
-        .otherwise(F.concat(F.lit("o'b\\ï☃-"), F.col("doc_id")))
+        F.when(F.col("doc_id") < 2,
+               F.concat(F.lit("o'b\\ï☃-"), F.col("doc_id")))
+        .when(F.col("doc_id") >= 7,
+              F.concat(F.lit("${env:PATH}-"), F.col("doc_id")))
+        .otherwise(F.concat(F.lit("plain-"), F.col("doc_id")))
         .alias("doc_id"),
         "text",
     )
 
 
 def test_escaped_string_ids_push_down(spark, tmp_path):
-    """Candidate ids with ``'``, ``\\`` and non-ASCII characters reach the
-    shingles scan as one parser-built ``IN`` list and come back as a
-    local relation: the pushed-down probe gives the streamed probe's
-    pairs, and ``In(id`` stays in PushedFilters."""
+    """Candidate ids with ``'``, ``\\``, ``$`` and non-ASCII characters
+    reach the shingles scan as one parser-built ``IN`` list and come
+    back as a local relation: the pushed-down probe gives the streamed
+    probe's pairs, and ``In(id`` stays in PushedFilters."""
     corpus, batch = (_odd_ids(d) for d in _docs(spark))
     idx = str(tmp_path / "odd")
     D.write_minhash_index(corpus, idx, "doc_id", "text",
@@ -359,7 +362,7 @@ def test_escaped_string_ids_push_down(spark, tmp_path):
     got = _probe_set(pushed)
     assert got == _probe_set(streamed)
     corpus_ids = {c for _, c, _ in got}
-    assert corpus_ids == {"o'b\\ï☃-0", "plain-8"}, got
+    assert corpus_ids == {"o'b\\ï☃-0", "${env:PATH}-8"}, got
     assert dict(pushed.dtypes) == dict(streamed.dtypes)
 
 
@@ -373,7 +376,9 @@ def test_sql_literals_parse_to_their_values(spark):
     cases = [(T.LongType(), -(1 << 63)), (T.LongType(), (1 << 63) - 1),
              (T.IntegerType(), -(1 << 31)), (T.ShortType(), -(1 << 15)),
              (T.ByteType(), -128), (T.StringType(), "o'b\\ï☃"),
-             (T.StringType(), "\\'"), (T.StringType(), "plain")]
+             (T.StringType(), "\\'"), (T.StringType(), "${env:PATH}"),
+             (T.StringType(), "${spark.app.name}$"), (T.StringType(), "a$b"),
+             (T.StringType(), "plain")]
     sql = ", ".join(_sql_lit(v, t) for t, v in cases)
     row = spark.sql(f"SELECT {sql}").head()
     assert list(row) == [v for _, v in cases]
@@ -381,6 +386,22 @@ def test_sql_literals_parse_to_their_values(spark):
         t for t, _ in cases]
     assert _sql_lit(1.5, T.DoubleType()) is None
     assert _sql_lit(None, T.LongType()) is None
+
+
+def test_id_lists_survive_variable_substitution(spark):
+    """An ``IN`` list built for a pushdown keeps ids and a column name
+    holding ``${...}`` as they are: the parser's variable substitution
+    (on by default) rewrites neither."""
+    from pyspark.sql import types as T
+
+    from avro_spark.functions.similarity import _isin_lit
+
+    ids = ["${env:PATH}", "${spark.app.name}", "plain"]
+    df = spark.createDataFrame(
+        [(i,) for i in ids + ["other"]],
+        T.StructType([T.StructField("${env:HOME}", T.StringType())]))
+    got = df.where(_isin_lit("${env:HOME}", ids, T.StringType()))
+    assert sorted(r[0] for r in got.collect()) == sorted(ids)
 
 
 def test_probe_plans_start_no_job(spark, tmp_path, spark_jobs):
@@ -471,8 +492,9 @@ def test_index_layout_is_range_sorted(spark, tmp_path):
 
 def test_retried_append_does_not_duplicate_pairs(spark, tmp_path):
     """The documented crash recovery — re-run the same append — must not
-    leave duplicate output pairs (duplicate shingle rows double-joined
-    every candidate before the probe-side dropDuplicates)."""
+    leave duplicate output pairs (duplicate shingle rows double-join
+    every candidate; the probe collapses the pairs at its output) on
+    any route: one action, pushed down, or past the pushdown cap."""
     corpus, batch = _docs(spark)
     kw = dict(num_hashes=16, bands=4, shingle_n=3)
     idx = str(tmp_path / "retry")
@@ -489,12 +511,12 @@ def test_retried_append_does_not_duplicate_pairs(spark, tmp_path):
     D.write_minhash_index(corpus, clean, "doc_id", "text", **kw)
     assert _probe_set(got) == _probe_set(
         D.dedup_against_index(spark, batch, clean, "doc_id", "text"))
-    # the pushed-down route collapses the repeated pairs at its output
-    pushed = D.dedup_against_index(spark, batch, idx, "doc_id", "text",
-                                   pushdown_min_index_bytes=0).collect()
-    keys = [(r["new_id"], r["corpus_id"]) for r in pushed]
-    assert sorted(keys) == sorted((r["new_id"], r["corpus_id"])
-                                  for r in rows)
+    for cap in (5_000, 0):  # pushed down; past the cap (streamed)
+        routed = D.dedup_against_index(
+            spark, batch, idx, "doc_id", "text",
+            pushdown_min_index_bytes=0, max_pushdown_ids=cap).collect()
+        assert sorted((r["new_id"], r["corpus_id"]) for r in routed) \
+            == sorted(keys), cap
 
 
 def test_stream_dedup_exactly_once(spark, tmp_path):
