@@ -2,21 +2,37 @@
 
 All five index families (MinHash, exact, IVF, IVF-PQ, text) share ONE
 crash/concurrency contract (SCALE.md §3b), and this module is the one
-place that knows its storage side:
+place that implements it — the families only say what their meta row
+holds and how their tables are written:
 
 * ``write_meta`` / ``read_meta``: the one-row ``{path}/meta`` table.
   A family declares its row as ``(name, kind, value)`` fields (kind =
   a Spark DDL type); the reader adds the two loud errors ("no <family>
   index meta", "meta is empty") and fills the lifecycle columns older
   layouts lack (:data:`LIFECYCLE`).
-* ``admit_append``: the ``__building__`` / ``__appending__`` /
-  append-token admission check every ``mode="append"`` runs first.
+* ``begin_write`` / ``commit_write``: the ONE build/append
+  transaction. Begin checks the mode, admits an append
+  (``admit_append``: a committed token's blind retry returns at once)
+  and writes the ``__building__`` / ``__appending__`` marker; commit
+  writes the ``committed`` row with the append token and collects
+  the table versions the write superseded.
+* ``compact_versions``: the ONE compaction (and retrain) skeleton —
+  legacy ``'__compacting__'`` swap, ``require_committed``, next
+  version dirs (``_vdir``), one meta flip that keeps the token
+  (``commit_meta``, also a split's commit), then GC
+  (``_gc_table_versions``).
 * ``require_committed``: the refusal every probe, compaction, split
-  and retrain runs first.
-* ``finish_legacy_swap``: the pre-r10 ``'__compacting__'`` dir moves.
-* ``_versions_json`` / ``_versions_of``: the table-version pointer map
-  a compaction commits by overwriting the meta row.
+  and retrain runs first; ``batch_probed``: the streaming sinks'
+  "was this batch already probed" test.
+* ``_versions_json`` / ``_versions_of``: the table-version pointer
+  map's meta column.
+* ``row_counts``: the stats' one-action duplicate-row count.
 * the ``batches/`` registry rows of the streaming sinks.
+
+A family hands these functions its meta row as a dict (its reader's
+shape) and a ``meta(m)`` closure that writes one — a closure that
+looks the family's module-level writer up at call time, so a test
+that patches the writer intercepts every lifecycle write.
 
 Local paths — by the one locality rule of :mod:`avro_spark._fs`, where
 every directory listing, move and delete here also goes — take a
@@ -59,9 +75,14 @@ from .. import _fs
 __all__ = [
     "LIFECYCLE",
     "admit_append",
-    "finish_legacy_swap",
+    "batch_probed",
+    "begin_write",
+    "commit_meta",
+    "commit_write",
+    "compact_versions",
     "read_meta",
     "require_committed",
+    "row_counts",
     "write_meta",
     "try_write_meta_row",
     "try_read_meta_row",
@@ -233,6 +254,12 @@ def try_append_registry_row(dir_uri: str, batch_id: int) -> bool:
 #: readable row is committed; pre-r9: no tokens; pre-r10: no versions)
 LIFECYCLE = ("status", "token", "pending_token", "versions")
 
+#: the status markers: a build or an append writes its marker FIRST
+#: and the committed row LAST; ``__compacting__`` is only ever read —
+#: the pre-r10 compaction marker its legacy recovery still heals
+BUILDING, APPENDING, COMPACTING, COMMITTED = (
+    "__building__", "__appending__", "__compacting__", "committed")
+
 
 def _versions_of(meta_dict: dict) -> "dict[str, int]":
     """Parse the meta row's ``versions`` JSON pointer column (absent on
@@ -323,14 +350,14 @@ def admit_append(m: dict, path: str, append_token, writer: str) -> bool:
     would cancel the pending recovery, whose finish-the-swap would then
     discard the appended rows). Writes nothing."""
     status = m["status"]
-    if status == "__building__":
+    if status == BUILDING:
         raise ValueError(
             "index is mid-rebuild (status '__building__') — rebuild it "
             f"with {writer}(mode='overwrite')"
         )
     if append_token is not None and m["token"] == append_token:
         return True
-    if status == "__appending__":
+    if status == APPENDING:
         pending = m["pending_token"]
         if (pending is not None and append_token is not None
                 and pending != append_token):
@@ -340,7 +367,7 @@ def admit_append(m: dict, path: str, append_token, writer: str) -> bool:
                 f"{append_token!r} — re-run the dead append to "
                 "completion first (appends are sequential)"
             )
-    elif status != "committed":
+    elif status != COMMITTED:
         raise ValueError(
             f"index at {path!r} has status {status!r} — finish the "
             "in-flight maintenance first (re-running it recovers its "
@@ -355,10 +382,10 @@ def require_committed(m: dict, path: str, then: str) -> None:
     rebuild, append or maintenance operation must be re-run to
     completion first (each recovers its own crash). Writes nothing."""
     status = m["status"]
-    if status == "committed":
+    if status == COMMITTED:
         return
-    op = {"__appending__": "append",
-          "__building__": "rebuild"}.get(status, "maintenance operation")
+    op = {APPENDING: "append",
+          BUILDING: "rebuild"}.get(status, "maintenance operation")
     if then == "probe":
         what = f"{'an' if op == 'append' else 'a'} {op} died part-way; " \
                f"re-run the SAME {op} to completion"
@@ -366,6 +393,106 @@ def require_committed(m: dict, path: str, then: str) -> None:
         what = f"finish the in-flight {op} first (re-run the SAME {op})"
     raise ValueError(
         f"index at {path!r} has status {status!r} — {what}, then {then}")
+
+
+def batch_probed(m: dict, token: str) -> bool:
+    """Was streaming batch ``token`` already probed against the index
+    whose meta row is ``m``? True when its append committed, or when
+    the in-flight append is this batch's own dead attempt — a sink
+    writes the batch's probe output before it appends, so a replay
+    reuses that output instead of probing an index that now holds the
+    batch's own rows. A dead append without a pending token (a
+    token-less append) is not this batch's: the probe refuses it."""
+    return m["token"] == token or (
+        m["status"] == APPENDING and m["pending_token"] == token)
+
+
+def begin_write(path: str, mode: str, append_token, writer: str, read,
+                fresh: dict, meta, admit) -> "dict | None":
+    """Open a build (``mode="overwrite"``) or an append of the index at
+    ``path`` — the first half of the one write transaction every
+    family runs (:func:`commit_write` is the second).
+
+    A build starts from ``fresh``, the family's own fields, and writes
+    the ``__building__`` marker: a crash before the commit leaves every
+    probe and append refusing loudly. An append reads the stored row
+    (``read()``), runs :func:`admit_append` (``writer`` names the build
+    function in its errors), then the family's ``admit(m)`` — its
+    parameter pins, returning the row to carry on with, or None when
+    it finished the append itself — and writes the ``__appending__``
+    marker: the PREVIOUS committed token (this batch's lands only at
+    commit), this attempt's ``pending_token`` and the versions.
+    ``meta(m)`` writes row ``m``. Returns the marker row, or None when
+    nothing is left to do (a committed token's blind retry)."""
+    if mode == "overwrite":
+        m = {**fresh, "status": BUILDING, "token": None,
+             "pending_token": None, "versions": {}}
+    elif mode == "append":
+        m = read()
+        if admit_append(m, path, append_token, writer):
+            return None
+        m = admit(m)
+        if m is None:
+            return None
+        m = {**m, "status": APPENDING, "pending_token": append_token}
+    else:
+        raise ValueError(f"bad mode: {mode}")
+    meta(m)
+    return m
+
+
+def commit_write(path: str, mode: str, append_token, meta, m: dict,
+                 tables, **changes) -> None:
+    """Close the write :func:`begin_write` opened: its marker row ``m``
+    with the family's ``changes`` (counters, moved versions) committed
+    — carrying the append token on an append, so blind retries of the
+    same batch no-op against it, and none on a build. Then every table
+    in ``tables`` loses the dirs this write superseded: all but
+    version 0 after a build, the old version of any table an append
+    moved (the exact index's flat migration)."""
+    done = {**m, **changes, "status": COMMITTED, "pending_token": None,
+            "token": append_token if mode == "append" else None}
+    meta(done)
+    for t in tables:
+        keep = done["versions"].get(t, 0)
+        if mode == "overwrite" or keep != m["versions"].get(t, 0):
+            _gc_table_versions(path, t, keep)
+
+
+def commit_meta(meta, m: dict, **changes) -> None:
+    """THE commit of a maintenance operation (compaction, split,
+    retrain): one overwrite of row ``m`` with ``changes``, committed.
+    The append token is kept: maintenance never consumes a batch, and
+    dropping the token would let a blind retry of the last committed
+    append re-append."""
+    meta({**m, **changes, "status": COMMITTED, "pending_token": None})
+
+
+def compact_versions(path: str, m: dict, tables, write, meta) -> None:
+    """Compact (or retrain) the index at ``path`` whose meta row is
+    ``m``: ``write(out)`` writes each table's replacement into its NEXT
+    version dir ``out[table]`` and returns the meta fields it changed
+    (or None); :func:`commit_meta` then flips every pointer in one
+    ``meta`` overwrite, and the superseded versions are collected.
+
+    No remove-then-move window, so crash-safe on stores without atomic
+    rename: a crash before the flip leaves the old versions fully live
+    (probes keep working THROUGHOUT) and a retry overwrites the
+    half-written dirs; a crash after it leaves only dead dirs for the
+    next GC. An index left mid-swap by a pre-r10 compaction
+    (``'__compacting__'``) is finished with the legacy move-based
+    recovery and committed at version 0."""
+    if m["status"] == COMPACTING:
+        finish_legacy_swap(path, tables)
+        commit_meta(meta, m, versions={})
+        return
+    require_committed(m, path, "compact")
+    new = {**m["versions"],
+           **{t: m["versions"].get(t, 0) + 1 for t in tables}}
+    changes = write({t: _vdir(path, t, new[t]) for t in tables})
+    commit_meta(meta, m, **(changes or {}), versions=new)
+    for t in tables:
+        _gc_table_versions(path, t, new[t])
 
 
 def finish_legacy_swap(path: str, tables) -> None:
@@ -378,6 +505,72 @@ def finish_legacy_swap(path: str, tables) -> None:
         if _fs.is_dir(comp):
             _fs.rm_dir(f"{path}/{t}")
             _fs.mv_dir(comp, f"{path}/{t}")
+
+
+# Versioned-table swap (r10): every whole-table replacement (compaction,
+# retrain) writes the new copy to ``{table}_v<N+1>`` and commits by
+# overwriting the ONE meta row with the bumped version pointer — the
+# same single-small-file commit primitive every marker flip already
+# uses. Version 0 is the unversioned base dir ``{table}`` (the build
+# layout, and every pre-r10 index). The old remove-then-move swap
+# needed TWO filesystem operations on a table dir, and a crash between
+# them on a store without atomic rename could drop already-moved
+# objects; with the pointer flip there is no intermediate state — a
+# crash before the flip leaves the old version fully live (probes keep
+# working DURING compaction), a crash after it leaves only garbage
+# dirs for the next lease-holding compact to collect.
+def _vdir(path: str, table: str, version: int) -> str:
+    """Physical directory of logical ``table`` at ``version`` (0 = the
+    unversioned base layout)."""
+    return f"{path}/{table}" if not version else f"{path}/{table}_v{int(version)}"
+
+
+def _gc_table_versions(path: str, table: str, keep: int) -> None:
+    """Best-effort removal of every physical dir of ``table`` other
+    than the ``keep`` version: superseded committed versions plus the
+    residue of crashed compactions. Call only while holding the index's
+    writer lease AFTER a committed pointer flip — a dir that is neither
+    the current version nor lease-protected work-in-progress is dead by
+    construction. Failures are swallowed (GC re-runs on the next
+    compact)."""
+    import re
+
+    pat = re.compile(re.escape(table) + r"(_v(\d+))?$")
+    for name in _fs.child_dirs(path, table):
+        mm = pat.fullmatch(name)
+        if not mm:
+            continue  # e.g. 'shingles_compact' legacy residue — below
+        v = int(mm.group(2) or 0)
+        if v != keep:
+            try:
+                _fs.rm_dir(f"{path}/{name}")
+            except Exception:
+                pass
+    # pre-r10 remove-then-move residue: '{table}_compact' /
+    # '{table}_split' staging dirs left by a crashed legacy operation.
+    # GC runs only on a COMMITTED index under the lease, so any legacy
+    # staging at this point belongs to a superseded operation — the
+    # legacy recovery path only fires from the __compacting__/
+    # __splitting__ statuses, which a committed flip has replaced.
+    for suffix in ("_compact", "_split"):
+        legacy = f"{path}/{table}{suffix}"
+        if _fs.is_dir(legacy):
+            try:
+                _fs.rm_dir(legacy)
+            except Exception:
+                pass
+
+
+def row_counts(df, keys) -> "tuple[int, int]":
+    """``(rows, distinct key tuples)`` of ``df`` in ONE action — the
+    index stats' duplicate-row count (retry residue is ``rows -
+    distinct``). NULL keys group together, as under
+    ``dropDuplicates``."""
+    from pyspark.sql import functions as F
+
+    rows, distinct = df.groupBy(*keys).count().agg(
+        F.sum("count"), F.count(F.lit(1))).head()
+    return int(rows or 0), int(distinct)
 
 
 def _read_batch_registry(spark, uri: str) -> "set[int]":

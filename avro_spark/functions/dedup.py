@@ -33,11 +33,16 @@ from ._meta_io import (
     LIFECYCLE,
     _append_batch_registry,
     _read_batch_registry,
+    _vdir,
     _versions_json,
     admit_append,
-    finish_legacy_swap,
+    batch_probed,
+    begin_write,
+    commit_write,
+    compact_versions,
     read_meta,
     require_committed,
+    row_counts,
     write_meta,
 )
 from .. import _fs
@@ -466,51 +471,34 @@ def _write_minhash_index_unlocked(
         )
     fn = _index_hash(hash_fn)
     spark = df.sparkSession
-    prev_token = None
-    versions: "dict[str, int]" = {}
-    if mode == "append":
-        stored = _read_index_meta(spark, path)
-        m = {k: stored.pop(k) for k in LIFECYCLE}
-        prev_token, versions = m["token"], m["versions"]
-        given = dict(num_hashes=num_hashes, bands=bands,
-                     shingle_n=shingle_n, seed=seed, hash_fn=hash_fn)
+    given = dict(num_hashes=num_hashes, bands=bands, shingle_n=shingle_n,
+                 seed=seed, hash_fn=hash_fn)
+
+    def pinned(m: dict) -> dict:
+        stored = {k: m[k] for k in given}
         if stored != given:
             raise ValueError(
                 f"append parameters {given} do not match the index's "
                 f"stored meta {stored}"
             )
-        if admit_append(m, path, append_token, "write_minhash_index"):
-            return  # this batch's append already committed — a retry
+        return m
 
-    def _write_meta(marker: str, status: str = "committed",
-                    token: "str | None" = None,
-                    pending_token: "str | None" = None) -> None:
-        _write_index_meta_row(spark, path, num_hashes, bands, shingle_n,
-                              seed, marker, status, token, pending_token,
-                              versions)
-
-    if mode == "append":
-        # in-flight marker FIRST, committed LAST: a crash between the
-        # shingle and band appends (two separate parquet jobs) would
-        # otherwise leave docs with shingle rows but no band rows —
-        # probes silently lose recall for exactly those docs. With the
-        # marker they fail loudly until the SAME append is re-run to
-        # completion (the probe absorbs the retry's duplicate rows).
-        # The marker still carries the PREVIOUS committed token (this
-        # batch's lands only at commit) plus this batch's pending_token.
-        _write_meta(hash_fn, status="__appending__", token=prev_token,
-                    pending_token=append_token)
-    elif mode == "overwrite":
-        # transition marker FIRST, real meta LAST: any crash between the
-        # two leaves the meta row naming an invalid hash, so a probe
-        # (or a stale-parameter rebuild that died after bands but before
-        # meta) fails LOUDLY instead of banding with mismatched
-        # parameters and silently finding nothing. Concurrent WRITERS are
-        # refused by the single-writer lease (the public wrapper);
-        # probing DURING a rebuild still reads tables mid-replacement.
-        _write_meta("__building__")
-    else:
-        raise ValueError(f"bad mode: {mode}")
+    # marker FIRST, committed LAST (:func:`_meta_io.begin_write`): a
+    # crash between the shingle and band writes (two separate parquet
+    # jobs) would otherwise leave docs with shingle rows but no band
+    # rows — probes silently lose recall for exactly those docs. With
+    # the marker they fail loudly until the SAME append (or rebuild) is
+    # re-run to completion (the probe absorbs the retry's duplicate
+    # rows). Concurrent WRITERS are refused by the single-writer lease
+    # (the public wrapper); probing DURING a rebuild still reads tables
+    # mid-replacement.
+    meta = _minhash_meta(spark, path)
+    m = begin_write(path, mode, append_token, "write_minhash_index",
+                    lambda: _read_index_meta(spark, path), given, meta,
+                    pinned)
+    if m is None:
+        return  # this batch's append already committed — a retry
+    versions = m["versions"]
     # hash each gram ONCE (md5/xxhash over text is the dominant cost)
     # and persist the hashed form across the two writes — without this
     # the shingles job re-reads, re-shingles, and re-hashes the whole
@@ -588,15 +576,7 @@ def _write_minhash_index_unlocked(
     finally:
         if own_hdocs:
             hdocs.unpersist()
-    # the commit marker (both modes); an append's token lands HERE —
-    # blind retries of the same batch no-op against it
-    _write_meta(hash_fn,
-                token=append_token if mode == "append" else None)
-    if mode == "overwrite":
-        # a rebuild writes the base (v0) dirs: superseded version dirs
-        # from the previous incarnation are dead now — collect them
-        for t in ("shingles", "bands"):
-            _gc_table_versions(path, t, 0)
+    commit_write(path, mode, append_token, meta, m, ("shingles", "bands"))
 
 
 #: estimated shuffle bytes of one index row besides its hashed-shingle
@@ -662,7 +642,8 @@ def _index_hash(name: str):
         return portable_hash60
     if name == "xxhash64":
         return F.xxhash64
-    # "__building__" = a rebuild died between its marker and its commit
+    # earlier code marked a rebuild in hash_fn: one that died between
+    # its marker and its commit still names the marker here
     raise ValueError(
         f"index meta names unknown hash {name!r} — the index is "
         "mid-rebuild or corrupt; rebuild it with write_minhash_index"
@@ -702,6 +683,16 @@ def _read_index_meta(spark, path: str) -> dict:
     d = read_meta(spark, path, "MinHash", "write_minhash_index")
     return {k: d[k] for k in (
         "num_hashes", "bands", "shingle_n", "seed", "hash_fn", *LIFECYCLE)}
+
+
+def _minhash_meta(spark, path: str):
+    """The lifecycle's meta writer (:mod:`._meta_io`): row ``m``, in
+    :func:`_read_index_meta`'s shape, written through this module's
+    ``_write_index_meta_row`` as looked up at call time."""
+    return lambda m: _write_index_meta_row(
+        spark, path, m["num_hashes"], m["bands"], m["shingle_n"],
+        m["seed"], m["hash_fn"], m["status"], m["token"],
+        m["pending_token"], m["versions"])
 
 
 def dedup_against_index(
@@ -853,62 +844,6 @@ def _local_rows(spark, rows, schema) -> DataFrame:
     return spark.sql(f"SELECT * FROM VALUES {', '.join(tuples)} AS t({names})")
 
 
-# ------------------------------------------------- index compaction
-#
-# Versioned-table swap (r10): every whole-table replacement (compaction
-# retrain) writes the new copy to ``{table}_v<N+1>`` and commits by
-# overwriting the ONE meta row with the bumped version pointer — the
-# same single-small-file commit primitive every marker flip already
-# uses. Version 0 is the unversioned base dir ``{table}`` (the build
-# layout, and every pre-r10 index). The old remove-then-move swap
-# needed TWO filesystem operations on a table dir, and a crash between
-# them on a store without atomic rename could drop already-moved
-# objects; with the pointer flip there is no intermediate state — a
-# crash before the flip leaves the old version fully live (probes keep
-# working DURING compaction), a crash after it leaves only garbage
-# dirs for the next lease-holding compact to collect.
-def _vdir(path: str, table: str, version: int) -> str:
-    """Physical directory of logical ``table`` at ``version`` (0 = the
-    unversioned base layout)."""
-    return f"{path}/{table}" if not version else f"{path}/{table}_v{int(version)}"
-
-
-def _gc_table_versions(path: str, table: str, keep: int) -> None:
-    """Best-effort removal of every physical dir of ``table`` other
-    than the ``keep`` version: superseded committed versions plus the
-    residue of crashed compactions. Call only while holding the index's
-    writer lease AFTER a committed pointer flip — a dir that is neither
-    the current version nor lease-protected work-in-progress is dead by
-    construction. Failures are swallowed (GC re-runs on the next
-    compact)."""
-    import re
-
-    pat = re.compile(re.escape(table) + r"(_v(\d+))?$")
-    for name in _fs.child_dirs(path, table):
-        mm = pat.fullmatch(name)
-        if not mm:
-            continue  # e.g. 'shingles_compact' legacy residue — below
-        v = int(mm.group(2) or 0)
-        if v != keep:
-            try:
-                _fs.rm_dir(f"{path}/{name}")
-            except Exception:
-                pass
-    # pre-r10 remove-then-move residue: '{table}_compact' /
-    # '{table}_split' staging dirs left by a crashed legacy operation.
-    # GC runs only on a COMMITTED index under the lease, so any legacy
-    # staging at this point belongs to a superseded operation — the
-    # legacy recovery path only fires from the __compacting__/
-    # __splitting__ statuses, which a committed flip has replaced.
-    for suffix in ("_compact", "_split"):
-        legacy = f"{path}/{table}{suffix}"
-        if _fs.is_dir(legacy):
-            try:
-                _fs.rm_dir(legacy)
-            except Exception:
-                pass
-
-
 # ------------------------------------------------ single-writer lease
 def _lease_uri(path: str) -> str:
     return f"{path.rstrip('/')}/_writer_lease.json"
@@ -1054,16 +989,12 @@ def minhash_index_stats(spark, path: str) -> dict:
         1 for (_, hi), (lo, _) in zip(ranges, ranges[1:]) if hi > lo)
     sh_rows = sum(md.num_rows for _, _, md in sh_files)
     bd_rows = sum(md.num_rows for _, _, md in bd_files)
-    distinct_ids = (
-        _fs.read_parquet(spark, sh_dir)
-        .agg(F.count("id").alias("n"),
-             F.count_distinct("id").alias("d")).head()
-    )
-    dup = int(distinct_ids["n"] - distinct_ids["d"])
+    n, distinct = row_counts(_fs.read_parquet(spark, sh_dir), ["id"])
+    dup = n - distinct
     out.update(
         shingle_files=len(sh_files), shingle_rows=sh_rows,
         band_files=len(bd_files), band_rows=bd_rows,
-        distinct_ids=int(distinct_ids["d"]),
+        distinct_ids=distinct,
         duplicate_rows=dup,
         overlapping_files=overlapping,
         # maintenance advisory (family symmetry with ivf_index_stats):
@@ -1100,41 +1031,22 @@ def _compact_minhash_index_unlocked(spark, path: str) -> None:
     pre-r10 crash (status ``'__compacting__'``) is finished with the
     legacy move-based recovery."""
     m = _read_index_meta(spark, path)
-
-    if m["status"] == "__compacting__":
-        finish_legacy_swap(path, ("shingles", "bands"))
-        _write_index_meta_row(
-            spark, path, m["num_hashes"], m["bands"], m["shingle_n"],
-            m["seed"], m["hash_fn"], "committed", m["token"],
-        )
-        return
-    require_committed(m, path, "compact")
-    _index_hash(m["hash_fn"])  # a dead REBUILD marker refuses here
     vers = m["versions"]
-    new_vers = {"shingles": vers.get("shingles", 0) + 1,
-                "bands": vers.get("bands", 0) + 1}
 
-    def table(t: str) -> DataFrame:
-        return _fs.read_parquet(spark, _vdir(path, t, vers.get(t, 0)))
+    def write(out: dict) -> None:
+        _index_hash(m["hash_fn"])  # an older dead REBUILD refuses here
 
-    _sorted_parts(table("shingles").dropDuplicates(["id"]), None, ("id",)) \
-        .write.mode("overwrite") \
-        .parquet(_vdir(path, "shingles", new_vers["shingles"]))
-    _sorted_parts(table("bands").distinct(), None, ("band", "bucket")) \
-        .write.mode("overwrite") \
-        .parquet(_vdir(path, "bands", new_vers["bands"]))
-    # THE commit: one meta overwrite flips both pointers. token
-    # PRESERVED: compaction never consumes or produces a batch, and
-    # dropping it would let a blind retry of the last committed append
-    # re-append after a compaction
-    _write_index_meta_row(
-        spark, path, m["num_hashes"], m["bands"], m["shingle_n"],
-        m["seed"], m["hash_fn"], "committed", m["token"],
-        versions=new_vers,
-    )
-    for t in ("shingles", "bands"):
-        _gc_table_versions(path, t, new_vers[t])
+        def table(t: str) -> DataFrame:
+            return _fs.read_parquet(spark, _vdir(path, t, vers.get(t, 0)))
 
+        _sorted_parts(table("shingles").dropDuplicates(["id"]), None,
+                      ("id",)).write.mode("overwrite") \
+            .parquet(out["shingles"])
+        _sorted_parts(table("bands").distinct(), None, ("band", "bucket")) \
+            .write.mode("overwrite").parquet(out["bands"])
+
+    compact_versions(path, m, ("shingles", "bands"), write,
+                     _minhash_meta(spark, path))
 
 
 def write_minhash_index(
@@ -1261,7 +1173,7 @@ def _stream_dedup_sink(
             _index_hash(m["hash_fn"]),
         ).persist()
         try:
-            if m["status"] == "__appending__" or m["token"] == token:
+            if batch_probed(m, token):
                 # this batch's previous attempt died mid-append, or its
                 # append COMMITTED but the batch id was never recorded —
                 # either way its pairs are already committed (step 2

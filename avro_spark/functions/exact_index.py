@@ -25,7 +25,7 @@ Probe (:func:`dedup_exact_against_index`) = batch fingerprints →
 ``fingerprint IN (...)`` footer pushdown against the sorted files →
 min index id per fingerprint → one broadcast join back to the batch.
 Driver state is bounded by the BATCH's distinct fingerprints (a
-broadcast left-semi join past ``max_literal_fps``).
+broadcast left-semi join past ``max_pushdown_fps``).
 
 Indexes written before the flat layout (meta row without ``layout``)
 keep fps as Hive ``bucket=<pmod(xxhash64(fp), n_buckets)>`` dirs.
@@ -57,21 +57,23 @@ from ._meta_io import (
     LIFECYCLE,
     _append_batch_registry,
     _read_batch_registry,
+    _vdir,
     _versions_json,
-    admit_append,
-    finish_legacy_swap,
+    batch_probed,
+    begin_write,
+    commit_write,
+    compact_versions,
     read_meta,
     require_committed,
+    row_counts,
     write_meta,
 )
 from .dedup import (
     _PUSHDOWN_MIN_INDEX_BYTES,
     _ROW_BYTES,
     _fits_one_file,
-    _gc_table_versions,
     _native_id,
     _sorted_parts,
-    _vdir,
     content_fingerprint,
 )
 from .similarity import _isin_lit
@@ -139,9 +141,18 @@ def _read_exact_meta(spark, path: str) -> dict:
             "layout": d.get("layout") or _BUCKETED}
 
 
+def _exact_meta(spark, path: str):
+    """The lifecycle's meta writer (:mod:`._meta_io`): row ``m``, in
+    :func:`_read_exact_meta`'s shape, written through this module's
+    ``_write_exact_meta`` as looked up at call time."""
+    return lambda m: _write_exact_meta(
+        spark, path, m["n_buckets"], m["id_col"], m["status"], m["n_docs"],
+        m["token"], m["pending_token"], m["versions"], m["layout"])
+
+
 def _fps_dir(path: str, m: dict) -> str:
     """Current physical dir of the fps table (version pointer in the
-    meta row — :func:`dedup._vdir`)."""
+    meta row — :func:`._meta_io._vdir`)."""
     return _vdir(path, "fps", m["versions"].get("fps", 0))
 
 
@@ -159,24 +170,21 @@ def _write_fps(fps: DataFrame, fps_dir: str, id_col: str, mode: str,
         .write.mode(mode).parquet(fps_dir)
 
 
-def _rewrite_flat(spark, path: str, m: dict,
-                  batch: "Optional[DataFrame]" = None) -> dict:
+def _rewrite_flat(spark, path: str, m: dict, out_dir: str,
+                  batch: "Optional[DataFrame]" = None) -> None:
     """Rewrite the whole fps table — plus ``batch`` rows, if given —
-    flat into the NEXT version dir (``fps_v<N+1>``), dropping
-    retry-duplicate (fingerprint, id) rows. Returns the versions dict
-    whose meta-row commit flips the pointer; until then probes keep
-    reading the current version. Compaction and the first append to a
-    pre-flat (bucketed) index both go through here."""
+    flat into ``out_dir`` (the NEXT version dir, ``fps_v<N+1>``),
+    dropping retry-duplicate (fingerprint, id) rows; until the meta-row
+    commit flips the pointer, probes keep reading the current version.
+    Compaction and the first append to a pre-flat (bucketed) index both
+    go through here."""
     id_col = m["id_col"]
     rows = _fs.read_parquet(spark, _fps_dir(path, m)).select(
         "fingerprint", id_col)
     if batch is not None:
         rows = rows.unionByName(batch)
-    new_v = m["versions"].get("fps", 0) + 1
-    _write_fps(rows.dropDuplicates(["fingerprint", id_col]),
-               _vdir(path, "fps", new_v), id_col, "overwrite",
-               m["n_buckets"])
-    return {**m["versions"], "fps": new_v}
+    _write_fps(rows.dropDuplicates(["fingerprint", id_col]), out_dir,
+               id_col, "overwrite", m["n_buckets"])
 
 
 def _write_exact_index_unlocked(
@@ -191,14 +199,10 @@ def _write_exact_index_unlocked(
     """Materialize the fingerprint index (module docstring has the
     layout and the append/token contract)."""
     spark = docs.sparkSession
-    prev_docs = 0
-    prev_token = None
-    versions: dict = {}
-    if mode == "append":
-        m = _read_exact_meta(spark, path)
-        versions = m["versions"]
-        if admit_append(m, path, append_token, "write_exact_index"):
-            return  # committed retry: structural no-op
+    if mode == "overwrite" and (not n_buckets or n_buckets < 1):
+        raise ValueError("n_buckets must be a positive int")
+
+    def pinned(m: dict) -> dict:
         if n_buckets not in (None, m["n_buckets"]):
             raise ValueError(
                 f"append n_buckets={n_buckets} does not match the "
@@ -210,24 +214,20 @@ def _write_exact_index_unlocked(
                 f"append id_col={id_col!r} does not match the index's "
                 f"pinned id column {m['id_col']!r}"
             )
-        n_buckets = m["n_buckets"]
-        prev_docs = m["n_docs"]
-        prev_token = m["token"]
-        _write_exact_meta(spark, path, n_buckets, id_col, "__appending__",
-                          prev_docs, prev_token, append_token, versions,
-                          m["layout"])
-    elif mode == "overwrite":
-        if not n_buckets or n_buckets < 1:
-            raise ValueError("n_buckets must be a positive int")
-        _write_exact_meta(spark, path, n_buckets, id_col, "__building__",
-                          0)
-    else:
-        raise ValueError(f"bad mode: {mode}")
+        return m
+
+    meta = _exact_meta(spark, path)
+    m = begin_write(path, mode, append_token, "write_exact_index",
+                    lambda: _read_exact_meta(spark, path),
+                    {"n_buckets": n_buckets, "id_col": id_col,
+                     "n_docs": 0, "layout": _FLAT}, meta, pinned)
+    if m is None:
+        return  # committed retry: structural no-op
+    versions = m["versions"]
     # ONE fingerprint pass feeds both the write and the doc count
     # (persist, as the text index's tokenize pass does — without it the
     # count re-reads the whole source)
     fps = _fingerprinted(docs, id_col, text_col).persist()
-    migrated = mode == "append" and m["layout"] != _FLAT
     try:
         # count FIRST: it materializes the cache as a PRE-WRITE
         # snapshot. A batch whose plan PROBES this same index (a
@@ -237,24 +237,23 @@ def _write_exact_index_unlocked(
         # the index — here it silently returned n_batch=0 because
         # every admitted doc suddenly "was" a duplicate of itself.
         n_batch = fps.count()
-        if migrated:
+        if m["layout"] != _FLAT:
             # flat files cannot join bucket= dirs in one table: move the
             # whole pre-flat table, this batch included, to fps_v<N+1>
-            versions = _rewrite_flat(spark, path, m, fps)
+            versions = {**versions, "fps": versions.get("fps", 0) + 1}
+            _rewrite_flat(spark, path, m, _vdir(path, "fps", versions["fps"]),
+                          fps)
         elif mode == "overwrite":
-            _write_fps(fps, _vdir(path, "fps", 0), id_col, mode, n_buckets)
+            _write_fps(fps, _fps_dir(path, m), id_col, mode, n_buckets)
         elif n_batch:
             one = _fits_one_file(spark, n_batch * _ROW_BYTES)
-            _write_fps(fps, _vdir(path, "fps", versions.get("fps", 0)),
-                       id_col, mode, 1 if one else None)
+            _write_fps(fps, _fps_dir(path, m), id_col, mode,
+                       1 if one else None)
     finally:
         fps.unpersist()
-    _write_exact_meta(spark, path, n_buckets, id_col, "committed",
-                      prev_docs + n_batch,
-                      append_token if mode == "append" else None,
-                      versions=versions)
-    if mode == "overwrite" or migrated:
-        _gc_table_versions(path, "fps", versions.get("fps", 0))
+    commit_write(path, mode, append_token, meta, m, ("fps",),
+                 n_docs=m["n_docs"] + n_batch, versions=versions,
+                 layout=_FLAT)
 
 
 def write_exact_index(
@@ -283,8 +282,7 @@ def dedup_exact_against_index(
     path: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_pushdown_fps: int = 5_000,
-    max_literal_fps: int = 256,
+    max_pushdown_fps: int = 256,
     pushdown_min_index_bytes: "Optional[int]" = None,
 ) -> DataFrame:
     """Annotate each batch row with its exact-dup status against the
@@ -297,17 +295,17 @@ def dedup_exact_against_index(
 
     Scale shape (identical answers on every route): the batch's
     distinct fingerprints are collected to the driver — at most
-    ``min(max_pushdown_fps, max_literal_fps)`` of them, bounded driver
-    state — and pushed as ``fingerprint IN (...)`` to the parquet
-    footers of the range-sorted fps files, so the scan reads only the
-    row groups whose fingerprint range holds a batch fingerprint. The
-    literal cap exists because a thousands-literal string ``IN`` costs
-    Catalyst seconds of optimization PER ACTION regardless of data size
-    (measured 3.4-6.3 s at ~2.5k md5 literals vs 1.1 s on the join
-    path, r10). Bigger batches attach fingerprints with a broadcast
-    hash join instead — footer pruning lost, plan cost flat. Raise
-    ``max_literal_fps`` when probing a HUGE index with a mid-sized
-    batch and the footer pruning is worth seconds of driver time."""
+    ``max_pushdown_fps`` of them, bounded driver state — and pushed as
+    ``fingerprint IN (...)`` to the parquet footers of the range-sorted
+    fps files, so the scan reads only the row groups whose fingerprint
+    range holds a batch fingerprint. The cap is low because a
+    thousands-literal string ``IN`` costs Catalyst seconds of
+    optimization PER ACTION regardless of data size (measured 3.4-6.3 s
+    at ~2.5k md5 literals vs 1.1 s on the join path, r10). Bigger
+    batches attach fingerprints with a broadcast hash join instead —
+    footer pruning lost, plan cost flat. Raise ``max_pushdown_fps``
+    when probing a HUGE index with a mid-sized batch and the footer
+    pruning is worth seconds of driver time."""
     m = _read_exact_meta(spark, path)
     require_committed(m, path, "probe")
     if id_col != m["id_col"]:
@@ -327,10 +325,9 @@ def dedup_exact_against_index(
     # fingerprints with the broadcast join and run the whole probe as
     # ONE action. Identical answers (pinned by test_pushdown_and_fallback).
     if _fs.bytes_at_least(_fps_dir(path, m), pushdown_min_index_bytes):
-        cap = min(max_pushdown_fps, max_literal_fps)
         got = (bf.select("fingerprint").distinct()
-               .limit(cap + 1).collect())
-        if len(got) <= cap:
+               .limit(max_pushdown_fps + 1).collect())
+        if len(got) <= max_pushdown_fps:
             fplist = [r["fingerprint"] for r in got]
     if fplist is None:
         idx = idx.join(F.broadcast(bf.select("fingerprint")), "fingerprint",
@@ -362,7 +359,7 @@ def _compact_exact_index_unlocked(spark, path: str) -> None:
     """Collapse append-accumulated small files, drop retry-duplicate
     rows, restore ``n_buckets`` disjoint range files (and move a
     pre-flat index to the flat layout). The compacted table is written
-    to the NEXT version dir (``fps_v<N+1>``, :func:`dedup._vdir`) and
+    to the NEXT version dir (``fps_v<N+1>``, :func:`._meta_io._vdir`) and
     the commit is ONE meta-row overwrite flipping the pointer — no
     remove-then-move window, so the swap is crash-safe on stores
     without atomic rename and probes keep working THROUGHOUT (token
@@ -370,19 +367,11 @@ def _compact_exact_index_unlocked(spark, path: str) -> None:
     is finished with the legacy move-based recovery."""
     m = _read_exact_meta(spark, path)
 
-    if m["status"] == "__compacting__":
-        finish_legacy_swap(path, ("fps",))
-        _write_exact_meta(spark, path, m["n_buckets"], m["id_col"],
-                          "committed", m["n_docs"], m["token"],
-                          layout=m["layout"])
-        return
-    require_committed(m, path, "compact")
-    versions = _rewrite_flat(spark, path, m)
-    # THE commit: one meta overwrite flips the fps pointer
-    _write_exact_meta(spark, path, m["n_buckets"], m["id_col"],
-                      "committed", m["n_docs"], m["token"],
-                      versions=versions)
-    _gc_table_versions(path, "fps", versions["fps"])
+    def write(out: dict) -> dict:
+        _rewrite_flat(spark, path, m, out["fps"])
+        return {"layout": _FLAT}
+
+    compact_versions(path, m, ("fps",), write, _exact_meta(spark, path))
 
 
 def exact_index_stats(spark, path: str) -> dict:
@@ -397,9 +386,9 @@ def exact_index_stats(spark, path: str) -> dict:
     files = _fs.parquet_footers(fps_dir, recursive=True)
     rows = sum(md.num_rows for _, _, md in files)
     size = sum(s for _, s, _ in files)
-    df = _fs.read_parquet(spark, fps_dir)
-    dup = df.count() - df.dropDuplicates(
-        ["fingerprint", m["id_col"]]).count()
+    n, distinct = row_counts(_fs.read_parquet(spark, fps_dir),
+                             ["fingerprint", m["id_col"]])
+    dup = n - distinct
     return {
         "status": m["status"], "n_buckets": m["n_buckets"],
         "n_docs": m["n_docs"],
@@ -453,11 +442,8 @@ def _stream_exact_sink(
             return
         token = f"batch{batch_id}"
         m = _read_exact_meta(spark, index_path)
-        probed_already = m["token"] == token or (
-            m["status"] == "__appending__"
-            and m["pending_token"] == token)
         survivors = exact_dedup(batch_df, id_col, text_col)
-        if not probed_already:
+        if not batch_probed(m, token):
             decisions = dedup_exact_against_index(
                 spark, survivors, index_path, id_col, text_col)
             decisions.write.mode("overwrite").parquet(

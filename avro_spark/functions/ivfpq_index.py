@@ -54,7 +54,14 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._meta_io import admit_append, read_meta, require_committed, write_meta
+from ._meta_io import (
+    begin_write,
+    commit_write,
+    read_meta,
+    require_committed,
+    row_counts,
+    write_meta,
+)
 from .similarity import (
     _argmax_centroid,
     _compact_tables,
@@ -130,13 +137,14 @@ def _read_ivfpq_meta(spark, path: str) -> dict:
     }
 
 
-def _pq_committer(spark, path: str, m: dict):
-    """The IVF-PQ family's commit for the shared kernel: one committed
-    meta row keeping ``m``'s codebooks and token, written through this
-    module's ``_write_ivfpq_meta`` as looked up at call time."""
-    return lambda cents, rows, **kw: _write_ivfpq_meta(
-        spark, path, cents, m["codebooks"], "committed", rows, m["token"],
-        **kw)
+def _pq_meta_writer(spark, path: str):
+    """The lifecycle's meta writer (:mod:`._meta_io`): row ``m``, in
+    :func:`_read_ivfpq_meta`'s shape, written through this module's
+    ``_write_ivfpq_meta`` as looked up at call time."""
+    return lambda m: _write_ivfpq_meta(
+        spark, path, m["centroids"], m["codebooks"], m["status"], m["rows"],
+        m["token"], m["pending_token"], versions=m["versions"],
+        dir_ids=m["dir_ids"])
 
 
 def _write_ivfpq_index_unlocked(
@@ -162,37 +170,32 @@ def _write_ivfpq_index_unlocked(
     are refused loudly). ``append_token`` gives exactly-once blind
     retries, as in the MinHash/IVF indexes."""
     spark = vectors.sparkSession
-    prev_token = None
-    if mode == "append":
-        m = _read_ivfpq_meta(spark, path)
-        if admit_append(m, path, append_token, "write_ivfpq_index"):
-            return  # this batch's append already committed — a retry
-        centroids = _require_pinned("append centroids", centroids,
-                                    m["centroids"])
-        codebooks = _require_pinned("append codebooks", codebooks,
-                                    m["codebooks"])
-        prev_token = m["token"]
-        versions, dir_ids = m["versions"], m["dir_ids"]
-        codes_dir, raw_dir = (_table_dir(path, m, t) for t in _TABLES)
-        # in-flight marker FIRST (carries the PREVIOUS committed token +
-        # this attempt's pending_token), commit LAST — a crash between
-        # the codes and raw writes fails probes loudly, and recovery is
-        # re-running the SAME append (probes absorb duplicate rows)
-        _write_ivfpq_meta(spark, path, centroids, codebooks,
-                          "__appending__", m["rows"], prev_token,
-                          append_token, versions=versions, dir_ids=dir_ids)
-    elif mode == "overwrite":
-        if centroids is None or codebooks is None:
-            raise ValueError(
-                "mode='overwrite' requires a centroid matrix and PQ "
-                "codebooks"
-            )
-        versions, dir_ids = {}, list(range(len(centroids)))
-        codes_dir, raw_dir = f"{path}/codes", f"{path}/raw"
-        _write_ivfpq_meta(spark, path, centroids, codebooks,
-                          "__building__", 0)
-    else:
-        raise ValueError(f"bad mode: {mode}")
+    if mode == "overwrite" and (centroids is None or codebooks is None):
+        raise ValueError(
+            "mode='overwrite' requires a centroid matrix and PQ "
+            "codebooks"
+        )
+
+    def pinned(m: dict) -> dict:
+        _require_pinned("append centroids", centroids, m["centroids"])
+        _require_pinned("append codebooks", codebooks, m["codebooks"])
+        return m
+
+    # marker FIRST (carries the PREVIOUS committed token + this
+    # attempt's pending_token), commit LAST — a crash between the codes
+    # and raw writes fails probes loudly, and recovery is re-running
+    # the SAME append (probes absorb duplicate rows)
+    meta = _pq_meta_writer(spark, path)
+    m = begin_write(path, mode, append_token, "write_ivfpq_index",
+                    lambda: _read_ivfpq_meta(spark, path),
+                    {"centroids": centroids, "codebooks": codebooks,
+                     "rows": 0, "dir_ids": list(range(len(centroids or ())))},
+                    meta, pinned)
+    if m is None:
+        return  # this batch's append already committed — a retry
+    centroids, codebooks, dir_ids = (
+        m["centroids"], m["codebooks"], m["dir_ids"])
+    codes_dir, raw_dir = (_table_dir(path, m, t) for t in _TABLES)
     to_dir = _dir_of_position(dir_ids)
     # ONE pass computes assignment + codes + norms (all narrow); persist
     # so the two table writes don't re-encode the corpus from source
@@ -258,16 +261,7 @@ def _write_ivfpq_index_unlocked(
         # what probes will actually scan
         total = spark.read.parquet(codes_dir).where(
             F.col("centroid_id").isin(dir_ids)).count()
-    _write_ivfpq_meta(spark, path, centroids, codebooks, "committed",
-                      total,
-                      append_token if mode == "append" else None,
-                      versions=versions, dir_ids=dir_ids)
-    if mode == "overwrite":
-        from .dedup import _gc_table_versions
-
-        for t in _TABLES:
-            _gc_table_versions(path, t, 0)
-
+    commit_write(path, mode, append_token, meta, m, _TABLES, rows=total)
 
 
 def write_ivfpq_index(
@@ -444,7 +438,7 @@ def _split_ivfpq_centroid_unlocked(
     legacy move-based recovery. Returns the new centroid matrix."""
     m = _read_ivfpq_meta(spark, path)
     return _split_tables(spark, path, m, cid, k_sub, iters, _TABLES,
-                         _pq_committer(spark, path, m), "_v")
+                         _pq_meta_writer(spark, path), "_v")
 
 
 def split_ivfpq_centroid(
@@ -481,7 +475,7 @@ def _retrain_ivfpq_index_unlocked(
     Returns the new matrix."""
     m = _read_ivfpq_meta(spark, path)
     return _retrain_tables(spark, path, m, k, iters, _TABLES,
-                           _pq_committer(spark, path, m), "_v")
+                           _pq_meta_writer(spark, path), "_v")
 
 
 def retrain_ivfpq_index(
@@ -575,15 +569,15 @@ def ivfpq_index_stats(spark, path: str) -> dict:
         if out["codes_bytes"] else None
     )
     df = _live(spark, path, m, "codes")
-    dup = df.count() - df.dropDuplicates([_stored_id_col(df)]).count()
-    out["duplicate_rows"] = int(dup)
+    n, distinct = row_counts(df, [_stored_id_col(df)])
+    out["duplicate_rows"] = n - distinct
     return out
 
 
 def _compact_ivfpq_index_unlocked(spark, path: str) -> None:
     """Collapse append-accumulated small files and retry duplicates.
     Both compacted tables are written to their NEXT version dirs
-    (``codes_v<N+1>`` / ``raw_v<N+1>``, :func:`dedup._vdir`) — reading
+    (``codes_v<N+1>`` / ``raw_v<N+1>``, :func:`._meta_io._vdir`) — reading
     LIVE partitions only, so a crashed split's orphans are never
     resurrected — and the commit is ONE meta-row overwrite flipping
     the pointers. No remove-then-move window: crash-safe on stores
@@ -593,4 +587,4 @@ def _compact_ivfpq_index_unlocked(spark, path: str) -> None:
     left mid-swap (``'__compacting__'``) is finished with the legacy
     move-based recovery."""
     m = _read_ivfpq_meta(spark, path)
-    _compact_tables(spark, path, m, _TABLES, _pq_committer(spark, path, m))
+    _compact_tables(spark, path, m, _TABLES, _pq_meta_writer(spark, path))

@@ -235,7 +235,11 @@ def _stream_semantic_sink(
     if admit not in ("novel", "all"):
         raise ValueError(f"bad admit: {admit}")
 
-    from ._meta_io import _append_batch_registry, _read_batch_registry
+    from ._meta_io import (
+        _append_batch_registry,
+        _read_batch_registry,
+        batch_probed,
+    )
     from .similarity import _read_ivf_meta, write_ivf_index
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -245,15 +249,12 @@ def _stream_semantic_sink(
             return
         token = f"batch{batch_id}"
         m = _read_ivf_meta(spark, index_path)
-        probed_already = m["token"] == token or (
-            m["status"] == "__appending__"
-            and m["pending_token"] == token)
         within = semantic_dedup(batch_df, m["centroids"], threshold,
                                 id_col, vec_col)
         survivors = batch_df.join(
             F.broadcast(within.where("keep").select(id_col)),
             id_col, "left_semi")
-        if not probed_already:
+        if not batch_probed(m, token):
             decisions = semantic_dedup_against_index(
                 spark, index_path, survivors, threshold, id_col,
                 vec_col, nprobe=nprobe)

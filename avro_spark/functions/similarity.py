@@ -53,11 +53,15 @@ from pyspark.sql import functions as F
 from .. import _fs
 from ._meta_io import (
     LIFECYCLE,
+    _vdir,
     _versions_json,
-    admit_append,
-    finish_legacy_swap,
+    begin_write,
+    commit_meta,
+    commit_write,
+    compact_versions,
     read_meta,
     require_committed,
+    row_counts,
     write_meta,
 )
 
@@ -651,12 +655,22 @@ def _read_ivf_meta(spark: "SparkSession", path: str) -> dict:
     return _ivf_meta(read_meta(spark, path, "IVF", "write_ivf_index"))
 
 
-def _ivf_committer(spark: "SparkSession", path: str, m: dict):
-    """The IVF family's commit for the shared kernel: one committed
-    meta row keeping ``m``'s token, written through this module's
+def _ivf_meta_writer(spark: "SparkSession", path: str):
+    """The lifecycle's meta writer (:mod:`._meta_io`): row ``m``, in
+    :func:`_read_ivf_meta`'s shape, written through this module's
     ``_write_ivf_meta`` as looked up at call time."""
-    return lambda cents, rows, **kw: _write_ivf_meta(
-        spark, path, cents, "committed", rows, m["token"], **kw)
+    return lambda m: _write_ivf_meta(
+        spark, path, m["centroids"], m["status"], m["rows"], m["token"],
+        m["pending_token"], versions=m["versions"], dir_ids=m["dir_ids"])
+
+
+def _recounted(spark: "SparkSession", path: str, tables, meta):
+    """``meta`` with ``rows`` recounted from the first table at the
+    row's own version: the commit of an IVF-family compaction, retrain
+    or legacy recovery, whose rewrite drops retry duplicates."""
+    t = tables[0]
+    return lambda m: meta({**m, "rows": spark.read.parquet(
+        _vdir(path, t, m["versions"].get(t, 0))).count()})
 
 
 def _same_floats(supplied, stored) -> bool:
@@ -685,9 +699,7 @@ def _require_pinned(what: str, supplied, stored):
 
 def _table_dir(path: str, m: dict, table: str) -> str:
     """Current physical dir of ``table`` per the meta row's version
-    pointer (:func:`dedup._vdir`)."""
-    from .dedup import _vdir
-
+    pointer (:func:`._meta_io._vdir`)."""
     return _vdir(path, table, m["versions"].get(table, 0))
 
 
@@ -773,56 +785,44 @@ def _write_ivf_index_unlocked(
     single-writer lease (public wrapper); probing DURING a rebuild
     still reads data mid-replacement."""
     spark = vectors.sparkSession
-    if mode == "append":
-        m = _read_ivf_meta(spark, path)
-        if admit_append(m, path, append_token, "write_ivf_index"):
-            return  # this batch's append already committed — a retry
-        centroids = _require_pinned("append centroids", centroids,
-                                    m["centroids"])
-        versions, dir_ids = m["versions"], m["dir_ids"]
-        data_dir = _ivf_data_dir(path, m)
+    if mode == "overwrite" and centroids is None:
+        raise ValueError("mode='overwrite' requires a centroid matrix")
+    meta = _ivf_meta_writer(spark, path)
+
+    def pinned(m: dict) -> "dict | None":
+        _require_pinned("append centroids", centroids, m["centroids"])
         # live rows only: a crashed (never-committed) split may have
         # left orphan centroid_id dirs the meta doesn't reference
         actual = _live(spark, path, m, "data").count()
-        if m["status"] == "__appending__" and actual != m["rows"]:
+        if m["status"] != "committed" and actual != m["rows"]:
             # the dead append's data job committed but its meta didn't:
-            # the retry (token-verified above) must not double-append
-            _write_ivf_meta(spark, path, centroids, "committed", actual,
-                            append_token, versions=versions,
-                            dir_ids=dir_ids)
-            return
-        # the marker row still carries the PREVIOUS token: this batch's
-        # token only lands at commit; pending_token names THIS attempt
-        _write_ivf_meta(spark, path, centroids, "__appending__", actual,
-                        m["token"], append_token, versions=versions,
-                        dir_ids=dir_ids)
-    elif mode == "overwrite":
-        if centroids is None:
-            raise ValueError("mode='overwrite' requires a centroid matrix")
-        versions, dir_ids = {}, list(range(len(centroids)))
-        data_dir = f"{path}/data"
-        _write_ivf_meta(spark, path, centroids, "__building__", 0)
-    else:
-        raise ValueError(f"bad mode: {mode}")
+            # the retry (token-verified on admission) must not
+            # double-append
+            commit_write(path, mode, append_token, meta, m, (), rows=actual)
+            return None
+        return {**m, "rows": actual}
+
+    m = begin_write(path, mode, append_token, "write_ivf_index",
+                    lambda: _read_ivf_meta(spark, path),
+                    {"centroids": centroids, "rows": 0,
+                     "dir_ids": list(range(len(centroids or ())))},
+                    meta, pinned)
+    if m is None:
+        return  # this batch's append already committed — a retry
+    dir_ids, data_dir = m["dir_ids"], _ivf_data_dir(path, m)
     to_dir = _dir_of_position(dir_ids)
     assigned = vectors.select(
         F.col(id_col),
         as_double(F.col(vec_col)).alias(vec_col),
         l2_norm(vec_col).alias("_nv"),
-        to_dir(_argmax_centroid(F.col(vec_col), centroids))
+        to_dir(_argmax_centroid(F.col(vec_col), m["centroids"]))
         .alias("centroid_id"),
     )
     assigned.write.mode(mode).partitionBy("centroid_id").parquet(data_dir)
     # committed row count via parquet footers only (metadata-count)
     total = spark.read.parquet(data_dir).where(
         F.col("centroid_id").isin(dir_ids)).count()
-    _write_ivf_meta(spark, path, centroids, "committed", total,
-                    append_token if mode == "append" else None,
-                    versions=versions, dir_ids=dir_ids)
-    if mode == "overwrite":
-        from .dedup import _gc_table_versions
-
-        _gc_table_versions(path, "data", 0)
+    commit_write(path, mode, append_token, meta, m, ("data",), rows=total)
 
 
 # ------------------------------------- streaming face of the IVF index
@@ -969,54 +969,25 @@ def _reroute(spark: "SparkSession", tables: "Sequence[str]", src: dict,
             out[t], n, dynamic)
 
 
-def _commit_versions(spark: "SparkSession", path: str, m: dict,
-                     tables: "Sequence[str]", write, commit, cents,
-                     dir_ids) -> None:
-    """Write every table into its NEXT version dir (``write({table:
-    dir})``), then THE commit: one meta overwrite flips all pointers
-    with the new row count (token preserved — compaction and retrain
-    never consume a batch), then GC of the older versions. No
-    remove-then-move window: a crash before the flip leaves the old
-    versions fully live (probes work THROUGHOUT) and a retry overwrites
-    the half-written dirs."""
-    from .dedup import _gc_table_versions, _vdir
-
-    new = {t: m["versions"].get(t, 0) + 1 for t in tables}
-    out = {t: _vdir(path, t, v) for t, v in new.items()}
-    write(out)
-    rows = spark.read.parquet(out[tables[0]]).count()
-    commit(cents, rows, versions={**m["versions"], **new}, dir_ids=dir_ids)
-    for t in tables:
-        _gc_table_versions(path, t, new[t])
-
-
 def _compact_tables(spark: "SparkSession", path: str, m: dict,
-                    tables: "Sequence[str]", commit) -> None:
-    """Compaction of an IVF-family index: each table's LIVE partitions
+                    tables: "Sequence[str]", meta) -> None:
+    """Compaction of an IVF-family index
+    (:func:`._meta_io.compact_versions`): each table's LIVE partitions
     (a crashed split's orphans are never resurrected) minus full-row
-    duplicates (retry residue) rewritten at one file per partition
-    into the next version dirs (:func:`_commit_versions`; the flip
-    also retires any orphans). A pre-r10 index left mid-swap
-    (``'__compacting__'``) is finished with the legacy move-based
-    recovery."""
-    if m["status"] == "__compacting__":
-        finish_legacy_swap(path, tables)
-        commit(m["centroids"],
-               spark.read.parquet(f"{path}/{tables[0]}").count())
-        return
-    require_committed(m, path, "compact")
+    duplicates (retry residue) rewritten at one file per partition into
+    the next version dirs; the flip also retires any orphans."""
 
     def write(out: dict) -> None:
         for t in tables:
             _write_parts(_live(spark, path, m, t).distinct(), out[t],
                          len(m["centroids"]))
 
-    _commit_versions(spark, path, m, tables, write, commit,
-                     m["centroids"], m["dir_ids"])
+    compact_versions(path, m, tables, write,
+                     _recounted(spark, path, tables, meta))
 
 
 def _finish_legacy_split(spark: "SparkSession", path: str, m: dict,
-                         tables: "Sequence[str]", commit) -> None:
+                         tables: "Sequence[str]", meta) -> None:
     """LEGACY recovery only (pre-r10 ``'__splitting__'`` indexes): per
     table, move every prepared ``{table}_split/centroid_id=*`` dir into
     ``{table}/``, replacing the split partition's old dir, then commit
@@ -1035,11 +1006,11 @@ def _finish_legacy_split(spark: "SparkSession", path: str, m: dict,
             _fs.rm_dir(f"{data}/{name}")  # a crashed previous move's residue
             _fs.mv_dir(f"{split}/{name}", f"{data}/{name}")
         _fs.rm_dir(split)
-    commit(m["centroids"], spark.read.parquet(f"{path}/{tables[0]}").count())
+    commit_meta(_recounted(spark, path, tables, meta), m, versions={})
 
 
 def _split_tables(spark: "SparkSession", path: str, m: dict, cid: int,
-                  k_sub: int, iters: int, tables: "Sequence[str]", commit,
+                  k_sub: int, iters: int, tables: "Sequence[str]", meta,
                   vec_col: str, id_col: "Optional[str]" = None):
     """Split matrix position ``cid`` of an IVF-family index into
     ``k_sub`` sub-centroids (see :func:`_split_ivf_centroid_unlocked`):
@@ -1054,7 +1025,7 @@ def _split_tables(spark: "SparkSession", path: str, m: dict, cid: int,
                 f"{m['split_cid']} — re-run the split with that cid to "
                 f"finish it (got cid={cid})"
             )
-        _finish_legacy_split(spark, path, m, tables, commit)
+        _finish_legacy_split(spark, path, m, tables, meta)
         return m["centroids"]
     require_committed(m, path, "split")
     n = len(m["centroids"])
@@ -1100,8 +1071,7 @@ def _split_tables(spark: "SparkSession", path: str, m: dict, cid: int,
              dynamic=True)
     # THE commit: one meta overwrite installs matrix + indirection
     # (token preserved — a split never consumes or produces a batch)
-    commit(new_cents, m["rows"], versions=m["versions"],
-           dir_ids=new_dir_ids)
+    commit_meta(meta, m, centroids=new_cents, dir_ids=new_dir_ids)
     # the old fat partitions are now orphaned — best-effort GC (the
     # next compaction retires them regardless)
     for d in dirs.values():
@@ -1114,7 +1084,7 @@ def _split_tables(spark: "SparkSession", path: str, m: dict, cid: int,
 
 def _retrain_tables(spark: "SparkSession", path: str, m: dict,
                     k: "Optional[int]", iters: int, tables: "Sequence[str]",
-                    commit, vec_col: str, id_col: "Optional[str]" = None):
+                    meta, vec_col: str, id_col: "Optional[str]" = None):
     """GLOBAL retrain of an IVF-family index (see
     :func:`_retrain_ivf_index_unlocked`): Lloyd over the stored LIVE
     vectors — seeded from the current matrix at unchanged ``k``, so a
@@ -1132,10 +1102,13 @@ def _retrain_tables(spark: "SparkSession", path: str, m: dict,
         vec_col=vec_col, seed_centroids=seed)
     n = len(new_cents)
     route = _argmax_centroid(F.col(vec_col), new_cents)
-    _commit_versions(
-        spark, path, m, tables,
-        lambda out: _reroute(spark, tables, live, route, out, range(n), n),
-        commit, new_cents, list(range(n)))
+
+    def write(out: dict) -> dict:
+        _reroute(spark, tables, live, route, out, range(n), n)
+        return {"centroids": new_cents, "dir_ids": list(range(n))}
+
+    compact_versions(path, m, tables, write,
+                     _recounted(spark, path, tables, meta))
     return new_cents
 
 
@@ -1232,12 +1205,13 @@ def ivf_index_stats(spark: "SparkSession", path: str) -> dict:
     parts, orphans = _partition_footers(_ivf_data_dir(path, m),
                                         m["dir_ids"])
     df = _live(spark, path, m, "data")
+    n, distinct = row_counts(df, df.columns)
     return {
         "status": m["status"], "dim": m["dim"], "norm": m["norm"],
         "rows": m["rows"], "n_centroids": len(m["centroids"]),
         "data_files": sum(s[0] for s in parts.values()),
         "footer_rows": sum(s[1] for s in parts.values()),
-        "duplicate_rows": int(df.count() - df.distinct().count()),
+        "duplicate_rows": n - distinct,
         "orphan_partitions": len(orphans),
         **_partition_health(parts, m["dir_ids"]),
     }
@@ -1257,7 +1231,7 @@ def _compact_ivf_index_unlocked(spark: "SparkSession", path: str) -> None:
     wrapper)."""
     m = _read_ivf_meta(spark, path)
     _compact_tables(spark, path, m, ("data",),
-                    _ivf_committer(spark, path, m))
+                    _ivf_meta_writer(spark, path))
 
 
 def write_ivf_index(
@@ -1334,7 +1308,7 @@ def _split_ivf_centroid_unlocked(
     matrix. The steps are the shared kernel's (:func:`_split_tables`)."""
     m = _read_ivf_meta(spark, path)
     return _split_tables(spark, path, m, cid, k_sub, iters, ("data",),
-                         _ivf_committer(spark, path, m), vec_col, id_col)
+                         _ivf_meta_writer(spark, path), vec_col, id_col)
 
 
 def split_ivf_centroid(
@@ -1381,7 +1355,7 @@ def _retrain_ivf_index_unlocked(
     grow capacity with the corpus). Returns the new matrix."""
     m = _read_ivf_meta(spark, path)
     return _retrain_tables(spark, path, m, k, iters, ("data",),
-                           _ivf_committer(spark, path, m), vec_col, id_col)
+                           _ivf_meta_writer(spark, path), vec_col, id_col)
 
 
 def retrain_ivf_index(

@@ -57,7 +57,18 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import _fs
-from ._meta_io import require_committed
+from ._meta_io import (
+    LIFECYCLE,
+    _vdir,
+    _versions_json,
+    begin_write,
+    commit_write,
+    compact_versions,
+    read_meta,
+    require_committed,
+    row_counts,
+    write_meta,
+)
 from .text import ws_tokens
 
 
@@ -86,8 +97,6 @@ def _write_text_meta(
     compaction's atomic commit). Local paths commit driver-side
     (:mod:`._meta_io`, no Spark job); otherwise pure JVM — no
     Python-worker job."""
-    from ._meta_io import _versions_json, write_meta
-
     write_meta(spark, path, [
         ("n_buckets", "int", int(n_buckets)),
         ("id_col", "string", id_col),
@@ -101,19 +110,29 @@ def _write_text_meta(
     ])
 
 
-def _read_text_meta(spark, path: str) -> dict:
-    from ._meta_io import LIFECYCLE, read_meta
+#: the corpus statistics the meta row keeps for the BM25 probe
+_COUNTERS = ("n_docs", "n_docs_tok", "sum_dl")
 
+
+def _read_text_meta(spark, path: str) -> dict:
     d = read_meta(spark, path, "text", "write_text_index")
-    return {k: d[k] for k in ("n_buckets", "id_col", "n_docs",
-                              "n_docs_tok", "sum_dl", *LIFECYCLE)}
+    return {k: d[k] for k in ("n_buckets", "id_col", *_COUNTERS,
+                              *LIFECYCLE)}
+
+
+def _text_meta(spark, path: str):
+    """The lifecycle's meta writer (:mod:`._meta_io`): row ``m``, in
+    :func:`_read_text_meta`'s shape, written through this module's
+    ``_write_text_meta`` as looked up at call time."""
+    return lambda m: _write_text_meta(
+        spark, path, m["n_buckets"], m["id_col"], m["status"], m["n_docs"],
+        m["n_docs_tok"], m["sum_dl"], m["token"], m["pending_token"],
+        m["versions"])
 
 
 def _tdir(path: str, versions: dict, table: str) -> str:
     """Current physical dir of ``table`` (``postings``/``termstats``)
-    per the meta row's version pointers (:func:`dedup._vdir`)."""
-    from .dedup import _vdir
-
+    per the meta row's version pointers (:func:`._meta_io._vdir`)."""
     return _vdir(path, table, versions.get(table, 0))
 
 
@@ -135,15 +154,10 @@ def _write_text_index_unlocked(
     scan, a silent-recall-loss bug). ``append_token`` gives
     exactly-once blind retries, as in the sibling indexes."""
     spark = docs.sparkSession
-    prev = {"n_docs": 0, "n_docs_tok": 0, "sum_dl": 0}
-    prev_token = None
-    versions: dict = {}
-    if mode == "append":
-        from ._meta_io import admit_append
+    if mode == "overwrite" and (not n_buckets or n_buckets < 1):
+        raise ValueError("n_buckets must be a positive int")
 
-        m = _read_text_meta(spark, path)
-        if admit_append(m, path, append_token, "write_text_index"):
-            return  # this batch's append already committed — a retry
+    def pinned(m: dict) -> dict:
         if n_buckets not in (None, m["n_buckets"]):
             raise ValueError(
                 f"append n_buckets={n_buckets} does not match the "
@@ -156,24 +170,20 @@ def _write_text_index_unlocked(
                 f"append id_col={id_col!r} does not match the index's "
                 f"pinned id column {m['id_col']!r}"
             )
-        n_buckets = m["n_buckets"]
-        prev = m
-        prev_token = m["token"]
-        versions = m["versions"]
-        # in-flight marker FIRST (previous committed counters + token,
-        # plus this attempt's pending_token), commit LAST — a crash
-        # mid-append fails probes loudly; recovery is re-running the
-        # SAME append (probes absorb duplicate rows, counters land once)
-        _write_text_meta(spark, path, n_buckets, id_col, "__appending__",
-                         m["n_docs"], m["n_docs_tok"], m["sum_dl"],
-                         prev_token, append_token, versions)
-    elif mode == "overwrite":
-        if not n_buckets or n_buckets < 1:
-            raise ValueError("n_buckets must be a positive int")
-        _write_text_meta(spark, path, n_buckets, id_col, "__building__",
-                         0, 0, 0)
-    else:
-        raise ValueError(f"bad mode: {mode}")
+        return m
+
+    # marker FIRST (previous committed counters + token, plus this
+    # attempt's pending_token), commit LAST — a crash mid-append fails
+    # probes loudly; recovery is re-running the SAME append (probes
+    # absorb duplicate rows, counters land once)
+    meta = _text_meta(spark, path)
+    m = begin_write(path, mode, append_token, "write_text_index",
+                    lambda: _read_text_meta(spark, path),
+                    {"n_buckets": n_buckets, "id_col": id_col,
+                     **dict.fromkeys(_COUNTERS, 0)}, meta, pinned)
+    if m is None:
+        return  # this batch's append already committed — a retry
+    n_buckets, versions = m["n_buckets"], m["versions"]
     # ONE tokenize pass feeds both the statistics aggregate and the
     # postings write (persist, as the IVF-PQ encoder does)
     from .dedup import _native_id
@@ -248,19 +258,9 @@ def _write_text_index_unlocked(
                 .parquet(f"{ts_dir}/bucket=0")
     finally:
         base.unpersist()
-    _write_text_meta(
-        spark, path, n_buckets, id_col, "committed",
-        prev["n_docs"] + st["n_docs"],
-        prev["n_docs_tok"] + st["n_docs_tok"],
-        prev["sum_dl"] + st["sum_dl"],
-        append_token if mode == "append" else None,
-        versions=versions,
-    )
-    if mode == "overwrite":
-        from .dedup import _gc_table_versions
-
-        for t in ("postings", "termstats"):
-            _gc_table_versions(path, t, 0)
+    commit_write(path, mode, append_token, meta, m,
+                 ("postings", "termstats"),
+                 **{k: m[k] + st[k] for k in _COUNTERS})
 
 
 def write_text_index(
@@ -454,65 +454,51 @@ def _compact_text_index_unlocked(spark, path: str) -> None:
     """Collapse append-accumulated small files, drop retry-duplicate
     postings, and restore the range-sorted within-partition layout.
     Both compacted tables are written to their NEXT version dirs
-    (``postings_v<N+1>`` / ``termstats_v<N+1>``, :func:`dedup._vdir`)
+    (``postings_v<N+1>`` / ``termstats_v<N+1>``, :func:`._meta_io._vdir`)
     and the commit is ONE meta-row overwrite flipping the pointers —
     no remove-then-move window, crash-safe on stores without atomic
     rename, and probes keep working THROUGHOUT (counters and the
     append token preserved). A pre-r10 index left mid-swap
     (``'__compacting__'``) is finished with the legacy move-based
     recovery."""
-    from ._meta_io import finish_legacy_swap
-    from .dedup import _gc_table_versions
-
     m = _read_text_meta(spark, path)
+    id_col, n_buckets = m["id_col"], m["n_buckets"]
 
-    if m["status"] == "__compacting__":
-        finish_legacy_swap(path, ("postings", "termstats"))
-        _write_text_meta(spark, path, m["n_buckets"], m["id_col"],
-                         "committed", m["n_docs"], m["n_docs_tok"],
-                         m["sum_dl"], m["token"])
-        return
-    require_committed(m, path, "compact")
-    post = spark.read.parquet(_tdir(path, m["versions"], "postings"))
-    id_col = m["id_col"]
-    new_vers = {
-        "postings": m["versions"].get("postings", 0) + 1,
-        "termstats": m["versions"].get("termstats", 0) + 1,
-    }
-    post_dir = _tdir(path, new_vers, "postings")
-    ts_dir = _tdir(path, new_vers, "termstats")
-    deduped = post.dropDuplicates(["term", id_col])
-    deduped.repartition(m["n_buckets"], F.col("bucket")) \
-        .sortWithinPartitions("bucket", "term", id_col) \
-        .write.mode("overwrite").partitionBy("bucket") \
-        .parquet(post_dir)
-    # termstats compacts to ONE exact row per term, recomputed from
-    # the deduped postings — self-healing for any delta drift and for
-    # indexes that predate the sidecar (compacting adds it)
-    deduped.groupBy("term").agg(
-        F.count("*").cast("long").alias("df")
-    ).select(
-        "term", "df", F.lit("__compacted__").alias("token"),
-        _bucket_expr(F.col("term"), m["n_buckets"]).alias("bucket"),
-    ).repartition(m["n_buckets"], F.col("bucket")) \
-        .sortWithinPartitions("bucket", "term") \
-        .write.mode("overwrite").partitionBy("bucket") \
-        .parquet(ts_dir)
-    if m["sum_dl"] == 0:
-        # zero-postings index: the compacted tables would be fileless
-        # — re-pin the schemas (the build-time hazard, at compact time)
-        deduped.drop("bucket").limit(0).coalesce(1) \
-            .write.mode("overwrite") \
-            .parquet(f"{post_dir}/bucket=0")
-        spark.createDataFrame([], "term string, df long, token string") \
-            .coalesce(1).write.mode("overwrite") \
-            .parquet(f"{ts_dir}/bucket=0")
-    # THE commit: one meta overwrite flips both pointers
-    _write_text_meta(spark, path, m["n_buckets"], m["id_col"],
-                     "committed", m["n_docs"], m["n_docs_tok"],
-                     m["sum_dl"], m["token"], versions=new_vers)
-    for t in ("postings", "termstats"):
-        _gc_table_versions(path, t, new_vers[t])
+    def write(out: dict) -> None:
+        post_dir, ts_dir = out["postings"], out["termstats"]
+        deduped = spark.read.parquet(
+            _tdir(path, m["versions"], "postings")
+        ).dropDuplicates(["term", id_col])
+        deduped.repartition(n_buckets, F.col("bucket")) \
+            .sortWithinPartitions("bucket", "term", id_col) \
+            .write.mode("overwrite").partitionBy("bucket") \
+            .parquet(post_dir)
+        # termstats compacts to ONE exact row per term, recomputed from
+        # the deduped postings — self-healing for any delta drift and
+        # for indexes that predate the sidecar (compacting adds it)
+        deduped.groupBy("term").agg(
+            F.count("*").cast("long").alias("df")
+        ).select(
+            "term", "df", F.lit("__compacted__").alias("token"),
+            _bucket_expr(F.col("term"), n_buckets).alias("bucket"),
+        ).repartition(n_buckets, F.col("bucket")) \
+            .sortWithinPartitions("bucket", "term") \
+            .write.mode("overwrite").partitionBy("bucket") \
+            .parquet(ts_dir)
+        if m["sum_dl"] == 0:
+            # zero-postings index: the compacted tables would be
+            # fileless — re-pin the schemas (the build-time hazard, at
+            # compact time)
+            deduped.drop("bucket").limit(0).coalesce(1) \
+                .write.mode("overwrite") \
+                .parquet(f"{post_dir}/bucket=0")
+            spark.createDataFrame(
+                [], "term string, df long, token string"
+            ).coalesce(1).write.mode("overwrite") \
+                .parquet(f"{ts_dir}/bucket=0")
+
+    compact_versions(path, m, ("postings", "termstats"), write,
+                     _text_meta(spark, path))
 
 
 def text_index_stats(spark, path: str) -> dict:
@@ -546,9 +532,9 @@ def text_index_stats(spark, path: str) -> dict:
     mean_pr = (rows / len(part_rows)) if part_rows else 0.0
     out["max_rows_per_bucket"] = int(max_pr)
     out["bucket_row_skew"] = round(max_pr / mean_pr, 2) if mean_pr else 0.0
-    df = spark.read.parquet(post_dir)
-    dup = df.count() - df.dropDuplicates(["term", m["id_col"]]).count()
-    out["duplicate_rows"] = int(dup)
+    n, distinct = row_counts(spark.read.parquet(post_dir),
+                             ["term", m["id_col"]])
+    dup = out["duplicate_rows"] = n - distinct
     # maintenance advisory (family symmetry with ivf_index_stats):
     # bucket routing is hash-pinned so the only remedy is compaction —
     # worth it when retry residue taxes every probe or per-batch

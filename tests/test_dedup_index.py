@@ -567,15 +567,17 @@ def test_stream_dedup_exactly_once(spark, tmp_path):
     assert spark.read.parquet(pairs).count() == pair_rows
 
     # crash between the append and the batch-id record: meta says
-    # '__appending__', the batch is unrecorded, pairs are committed —
-    # the replay reuses the pairs, re-runs the append, and commits
+    # '__appending__' with this batch's pending token, the batch is
+    # unrecorded, pairs are committed — the replay reuses the pairs,
+    # re-runs the append, and commits
     b3 = batch.withColumn("doc_id", F.col("doc_id") + 200)
     D.dedup_against_index(spark, b3, idx, "doc_id", "text") \
         .write.mode("overwrite").parquet(pairs + "/batch=9")
     spark.createDataFrame(
-        [(16, 4, 3, 1, "xxhash64", "__appending__")],
+        [(16, 4, 3, 1, "xxhash64", "__appending__", "batch7", "batch9")],
         "num_hashes int, bands int, shingle_n int, seed int, "
-        "hash_fn string, status string",
+        "hash_fn string, status string, token string, "
+        "pending_token string",
     ).coalesce(1).write.mode("overwrite").parquet(idx + "/meta")
     sink(b3, 9)  # heals: reuses pairs, appends, records
     assert D._read_index_meta(spark, idx)["status"] == "committed"
@@ -590,6 +592,22 @@ def test_stream_dedup_exactly_once(spark, tmp_path):
     assert _probe_set(D.dedup_against_index(
         spark, probe3, idx, "doc_id", "text")) == _probe_set(
         D.dedup_against_index(spark, probe3, whole, "doc_id", "text"))
+
+
+def test_stream_dedup_refuses_a_tokenless_dead_append(spark, tmp_path):
+    """A dead append WITHOUT a pending token (a token-less append, not
+    this sink's) is not this batch's: the sink must not reuse pairs it
+    never wrote — it refuses like the exact sink, with the probe's
+    "re-run the SAME append" error."""
+    corpus, batch = _docs(spark)
+    kw = dict(num_hashes=16, bands=4, shingle_n=3)
+    idx, pairs = str(tmp_path / "tidx"), str(tmp_path / "tpairs")
+    D.write_minhash_index(corpus, idx, "doc_id", "text", **kw)
+    D._write_index_meta_row(spark, idx, 16, 4, 3, 1, "xxhash64",
+                            "__appending__")
+    sink = D._stream_dedup_sink(idx, pairs, "doc_id", "text")
+    with pytest.raises(ValueError, match="re-run the SAME append"):
+        sink(batch, 0)
 
 
 def test_stream_dedup_admit_novel(spark, tmp_path):

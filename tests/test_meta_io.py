@@ -350,3 +350,32 @@ def test_family_meta_row_same_on_both_routes(spark, tmp_path, monkeypatch,
     assert got_local == got_remote
     # the Spark route really ran: Spark part files, no fast-path file
     assert "part-00000-meta.parquet" not in os.listdir(f"{remote}/meta")
+
+
+def test_lifecycle_protocol_lives_only_in_meta_io():
+    """The marker protocol has ONE home: no other module of the package
+    spells a status marker or runs the legacy swap or the version GC —
+    the families go through ``begin_write`` / ``commit_write`` /
+    ``compact_versions`` instead of copying the steps."""
+    import ast
+    import pathlib
+
+    import avro_spark
+
+    markers = {"__building__", "__appending__", "__compacting__"}
+    steps = {"finish_legacy_swap", "_gc_table_versions"}
+    root = pathlib.Path(avro_spark.__file__).parent
+    home = root / "functions" / "_meta_io.py"
+    found = []
+    for f in sorted(root.rglob("*.py")):
+        if f == home:
+            continue
+        for node in ast.walk(ast.parse(f.read_text(), str(f))):
+            if isinstance(node, ast.Constant) and node.value in markers:
+                found.append(f"{f.name}:{node.lineno} {node.value!r}")
+            elif isinstance(node, ast.Call):
+                fn = node.func
+                name = getattr(fn, "attr", getattr(fn, "id", None))
+                if name in steps:
+                    found.append(f"{f.name}:{node.lineno} {name}()")
+    assert not found, found

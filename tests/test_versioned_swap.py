@@ -168,36 +168,98 @@ def test_vector_lifecycle_never_renames(spark, tmp_path, no_rename,
     assert topk_pq(pq) == want_pq
 
 
-def test_probe_keeps_working_while_compact_is_mid_flight(
-        spark, tmp_path, monkeypatch):
-    """The versioned swap's headline upgrade over the marker
-    discipline: a compaction crash (ANY point before the meta flip)
-    leaves the index bit-for-bit committed — probes never refuse, and
-    the retry overwrites the residue."""
-    idx = str(tmp_path / "midc")
-    kw = dict(num_hashes=16, bands=4, shingle_n=3)
-    D.write_minhash_index(_docs(spark, 0, 60), idx, "doc_id", "text", **kw)
+def _minhash_family(spark, idx):
+    D.write_minhash_index(_docs(spark, 0, 60), idx, "doc_id", "text",
+                          num_hashes=16, bands=4, shingle_n=3)
     batch = _docs(spark, 0, 20).select(
         (F.col("doc_id") + 10_000).alias("doc_id"), "text")
+    return (D, "_write_index_meta_row", D.compact_minhash_index,
+            D._read_index_meta,
+            lambda: {(r.new_id, r.corpus_id) for r in D.dedup_against_index(
+                spark, batch, idx, "doc_id", "text").collect()})
 
-    def probe():
-        return {(r.new_id, r.corpus_id)
-                for r in D.dedup_against_index(spark, batch, idx,
-                                               "doc_id", "text").collect()}
+
+def _exact_family(spark, idx):
+    X.write_exact_index(_docs(spark, 0, 60), idx, n_buckets=4)
+    batch = _docs(spark, 0, 20).select(
+        (F.col("doc_id") + 10_000).alias("doc_id"), "text")
+    return (X, "_write_exact_meta", X.compact_exact_index,
+            X._read_exact_meta,
+            lambda: {r.doc_id: r.dup_of for r in
+                     X.dedup_exact_against_index(spark, batch, idx)
+                     .collect()})
+
+
+def _text_family(spark, idx):
+    T.write_text_index(_docs(spark, 0, 60), idx, n_buckets=4)
+    q = spark.createDataFrame([(0, "the model data")],
+                              "query_id long, query string")
+    return (T, "_write_text_meta", T.compact_text_index,
+            T._read_text_meta,
+            lambda: [(r.query_id, r.rank, r.doc_id)
+                     for r in T.bm25_indexed(spark, idx, q, k=5)
+                     .orderBy("query_id", "rank").collect()])
+
+
+def _vector_queries(spark):
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    q = emb.where(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_embedding"))
+    return emb, q, S.sample_centroids(emb, 3)
+
+
+def _ivf_family(spark, idx):
+    emb, q, cents = _vector_queries(spark)
+    S.write_ivf_index(emb, cents, idx)
+    return (S, "_write_ivf_meta", S.compact_ivf_index, S._read_ivf_meta,
+            lambda: [(r.query_id, r.rank, r.vec_id, round(r.cosine, 9))
+                     for r in S.knn_ivf_indexed(spark, idx, q, None, k=5,
+                                                nprobe=99)
+                     .orderBy("query_id", "rank").collect()])
+
+
+def _ivfpq_family(spark, idx):
+    emb, q, cents = _vector_queries(spark)
+    Q.write_ivfpq_index(emb, cents,
+                        S.pq_codebooks(emb, m=4, k=8, refine_iters=1), idx)
+    return (Q, "_write_ivfpq_meta", Q.compact_ivfpq_index,
+            Q._read_ivfpq_meta,
+            lambda: [(r.query_id, r.rank, r.vec_id, round(r.cosine, 9))
+                     for r in Q.knn_ivfpq_indexed(spark, idx, q, k=5,
+                                                  nprobe=99,
+                                                  rerank=100_000)
+                     .orderBy("query_id", "rank").collect()])
+
+
+@pytest.mark.parametrize("family, versions", [
+    (_minhash_family, {"shingles": 1, "bands": 1}),
+    (_exact_family, {"fps": 1}),
+    (_text_family, {"postings": 1, "termstats": 1}),
+    (_ivf_family, {"data": 1}),
+    (_ivfpq_family, {"codes": 1, "raw": 1}),
+], ids=["minhash", "exact", "text", "ivf", "ivfpq"])
+def test_probe_keeps_working_while_compact_is_mid_flight(
+        spark, tmp_path, monkeypatch, family, versions):
+    """The versioned swap's headline upgrade over the marker
+    discipline, in every family: a compaction crash (ANY point before
+    the meta flip) leaves the index bit-for-bit committed — probes
+    never refuse, and the retry overwrites the residue."""
+    idx = str(tmp_path / "midc")
+    mod, writer, compact, read, probe = family(spark, idx)
     want = probe()
-    real = D._write_index_meta_row
+    assert want
 
     def _die(*a, **k):
         raise RuntimeError("simulated crash before the pointer flip")
 
-    monkeypatch.setattr(D, "_write_index_meta_row", _die)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        D.compact_minhash_index(spark, idx)
-    monkeypatch.setattr(D, "_write_index_meta_row", real)
-    m = D._read_index_meta(spark, idx)
+    with monkeypatch.context() as mp:
+        mp.setattr(mod, writer, _die)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            compact(spark, idx)
+    m = read(spark, idx)
     assert m["status"] == "committed" and m["versions"] == {}
     assert probe() == want          # probes never saw the crash
-    D.compact_minhash_index(spark, idx)   # retry overwrites residue
-    assert D._read_index_meta(spark, idx)["versions"] == {
-        "shingles": 1, "bands": 1}
+    compact(spark, idx)             # retry overwrites residue
+    assert read(spark, idx)["versions"] == versions
     assert probe() == want
